@@ -71,6 +71,10 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     checkpoints are files, not persisted RDDs: ``release_caches`` /
     ``scoped_caches`` see nothing to free (cleanup = checkpoint-dir
     lifecycle), which is the correct ownership shape on a cluster.
+    The eager reliable checkpoint computes the frame in ONE job that
+    writes the checkpoint files (Spark 4.1: no separate count job), so
+    observe nodes below it fire once and no persist is needed in front
+    of it — pinned in tests/test_llm_ops.py.
     """
     spark = df.sparkSession
     mode = spark.conf.get(MATERIALIZE_MODE_KEY, "local")

@@ -35,15 +35,6 @@ from pyspark.sql import functions as F
 
 from .textops import tokens
 
-#: Session conf key selecting how ``fuzzy_join_jaccard`` computes the
-#: common-order document frequency: ``"window"`` (default — one count
-#: window over the shingle hash, the measured local optimum) or ``"agg"``
-#: (cluster profile — partial-aggregable groupBy + broadcast join-back,
-#: the form that survives a stopword-shingle hot key at 100 TB; see the
-#: in-function comment for the r15 A/B numbers behind the default).
-DFREQ_MODE_KEY = "spark.graft.jaccard.dfreq"
-
-
 def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact-duplicate groups: canonical (min) id + multiplicity per
     distinct text. ``sha2`` digest as group key keeps shuffle rows small —
@@ -1920,41 +1911,15 @@ def fuzzy_join_jaccard(
     lp = ls.select(F.lit(0).alias("_side"), "_id", "_sz", F.explode("_sh").alias("_h"))
     rp = rs.select(F.lit(1).alias("_side"), "_id", "_sz", F.explode("_sh").alias("_h"))
     allp = lp.unionByName(rp)
-    # COMMON rarity order: document frequency over BOTH sides' postings.
-    # Two forms, selected by the DFREQ_MODE_KEY session conf (r15,
-    # resolving r14 VERDICT what's-wrong #1 by measurement):
-    #
-    # - "window" (default, measured local optimum): one count window over
-    #   _h — a single full-postings exchange, but a hot stopword shingle's
-    #   entire posting list lands in ONE WindowExec task (AQE can split a
-    #   skewed join partition, never a window partition).
-    # - "agg" (cluster profile): partial-aggregable groupBy("_h").count()
-    #   — map-side combine collapses hot keys before its tiny
-    #   distinct-shingles-sized exchange — joined back with an explicit
-    #   broadcast, so postings are never exchanged by _h at all. This is
-    #   the form that survives a stopword-shingle distribution at 100 TB.
-    #
-    # The r14 VERDICT expected the agg form to be flat locally; the r15
-    # interleaved A/B says otherwise: agg+broadcast 3.16/3.26 s vs window
-    # 2.58/2.69 s min-of-4 at sf0.1 (building + shipping the ~distinct-
-    # shingles broadcast costs more than the window exchange saves at
-    # this scale; a both-sides-broadcast variant that also aggregated the
-    # posting cap was worse still, 3.51/3.64 s — its second consumer of
-    # `prefix` re-runs the window sort even though AQE reuses the
-    # exchange). Defaults keep the measured-fastest plan; the conf flag
-    # is the documented escape hatch, equality of the two forms is
-    # test-pinned (test_fuzzy_join_jaccard_hot_shingle_skew_safe).
+    # COMMON rarity order: document frequency over BOTH sides' postings, one count
+    # window over _h (A/B at sf0.1: groupBy + broadcast join-back 20-30% slower).
     frac = Fraction(str(threshold)).limit_denominator(10**9)
     tn, td = frac.numerator, frac.denominator
     ceil_tm = -F.floor((F.col("_sz") * F.lit(-tn)) / F.lit(td))
     w = Window.partitionBy("_side", "_id").orderBy("_df", "_h")
-    if allp.sparkSession.conf.get(DFREQ_MODE_KEY, "window") == "agg":
-        dfreq = allp.groupBy("_h").agg(F.count("*").cast("long").alias("_df"))
-        with_df = allp.join(F.broadcast(dfreq), "_h")
-    else:
-        with_df = allp.withColumn(
-            "_df", F.count("*").over(Window.partitionBy("_h")).cast("long")
-        )
+    with_df = allp.withColumn(
+        "_df", F.count("*").over(Window.partitionBy("_h")).cast("long")
+    )
     prefix = (
         with_df.withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") <= F.col("_sz") - ceil_tm + 1)

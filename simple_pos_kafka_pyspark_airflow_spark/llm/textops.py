@@ -1368,8 +1368,9 @@ def extract_html_text_rows(
     key synthesizes one with ``monotonically_increasing_id`` BEFORE
     calling — fine in a single consumer chain, where the nondeterminism
     never crosses plan branches; see q_crawl_e2e). Returns
-    ``id_cols + (text, n_lines, n_kept)``, one row per input row —
-    ``split`` always yields at least one line, so no row ever drops."""
+    ``id_cols + (text, n_lines, n_kept)``, one row per input row: a NULL
+    ``html`` explodes (``posexplode_outer``) to one NULL line that adds no
+    text, and the row comes back as the Column form's (NULL, NULL, NULL)."""
     if not id_cols:
         raise ValueError("id_cols must uniquely key the rows")
     frac = Fraction(str(max_link_density)).limit_denominator(10**9)
@@ -1377,13 +1378,14 @@ def extract_html_text_rows(
     keys = list(id_cols)
     lines = df.select(
         *keys,
-        F.posexplode(_html_lines(html)).alias("__pos", "__x"),
+        F.posexplode_outer(_html_lines(html)).alias("__pos", "__x"),
     )
     vis, keep = _html_line_scored(F.col("__x"), min_words, tn, td)
     scored = lines.select(*keys, "__pos", vis.alias("__t"), keep.alias("__k"))
     nonempty = F.col("__t") != ""
+    has_html = F.count("__pos") > 0
     return scored.groupBy(*keys).agg(
-        F.array_join(
+        F.when(has_html, F.array_join(
             F.transform(
                 F.filter(
                     F.array_sort(
@@ -1396,7 +1398,7 @@ def extract_html_text_rows(
                 lambda s: s["__t"],
             ),
             "\n",
-        ).alias("text"),
+        )).alias("text"),
         F.sum(nonempty.cast("long")).cast("long").alias("n_lines"),
         F.sum((nonempty & F.col("__k")).cast("long")).cast("long").alias("n_kept"),
     )

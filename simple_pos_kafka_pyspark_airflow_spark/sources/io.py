@@ -180,14 +180,19 @@ def overwrite_atomic(df: DataFrame, path: str) -> None:
     fs_swap_in(spark, staging, path)
 
 
-def write_staged(df: DataFrame, staging: str) -> None:
-    """Write a staging snapshot, deleting the half-written directory if
-    the write itself fails — otherwise every failed attempt leaks a
-    uuid-named ``.__staging__*`` sibling next to the live table that no
-    recovery path would ever reclaim (a flaky nightly job accretes them
-    without bound)."""
+def write_staged(
+    df: DataFrame, staging: str, partition_by: list[str] | None = None
+) -> None:
+    """Write a staging snapshot (partitioned by ``partition_by`` when
+    given), deleting the half-written directory if the write itself
+    fails — otherwise every failed attempt leaks a uuid-named
+    ``.__staging__*`` sibling next to the live table that no recovery path
+    would ever reclaim (a flaky nightly job accretes them without bound)."""
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
     try:
-        df.write.mode("overwrite").parquet(staging)
+        writer.parquet(staging)
     except Exception:
         fs, p = _fs_for(df.sparkSession, staging)
         if fs.exists(p):

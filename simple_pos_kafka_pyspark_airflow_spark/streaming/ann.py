@@ -63,6 +63,7 @@ from ..sources.io import (
     fs_swap_in,
     overwrite_atomic,
     staging_sibling,
+    write_staged,
 )
 
 
@@ -764,18 +765,7 @@ class IncrementalIvfIndex:
                 ).select(self.id_col, "cell", "pq_code")
             else:
                 new_rows = assigned
-        staging = staging_sibling(self.path)
-        try:
-            new_rows.write.mode("overwrite").partitionBy("cell").parquet(staging)
-        except Exception:
-            from ..sources.io import _fs_for
-
-            fs, p = _fs_for(self.spark, staging)
-            if fs.exists(p):
-                fs.delete(p, True)
-            raise
-        fs_recover_tombstone(self.spark, self.path)
-        fs_swap_in(self.spark, staging, self.path)
+        self._swap_in(new_rows)
         cdf = self.spark.createDataFrame(
             [
                 (int(c), int(p), float(v))
@@ -805,15 +795,14 @@ class IncrementalIvfIndex:
         if not fs_dir_has_data(self.spark, self.path):
             return
         landed = self.spark.read.parquet(self.path).dropDuplicates([self.id_col, "cell"])
-        staging = staging_sibling(self.path)
-        try:
-            landed.write.mode("overwrite").partitionBy("cell").parquet(staging)
-        except Exception:
-            from ..sources.io import _fs_for
+        self._swap_in(landed)
 
-            fs, p = _fs_for(self.spark, staging)
-            if fs.exists(p):
-                fs.delete(p, True)
-            raise
+    def _swap_in(self, rows: DataFrame) -> None:
+        """Replace the index with ``rows``, partitioned by cell, under the
+        atomic snapshot swap: ``sources.io.overwrite_atomic``'s three
+        steps, called through this module's names so the swap step can be
+        replaced to inject a crash between staging and swap."""
+        staging = staging_sibling(self.path)
+        write_staged(rows, staging, ["cell"])
         fs_recover_tombstone(self.spark, self.path)
         fs_swap_in(self.spark, staging, self.path)

@@ -30,28 +30,117 @@ guard made distributed, bounded, and exactly-once.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..llm import dedup as dedup_ops
 from ..llm import textops
 
 
-def _read_landed_index(spark: SparkSession, path: str) -> DataFrame | None:
-    """Shared index discovery for the incremental indexes: probe through
-    the Hadoop FileSystem of the path's own scheme (works on
-    file:/S3A/HDFS/ABFS alike — never a driver-local ``os`` probe, which
-    would return "no index" on an object store and silently skip
-    landed-corpus dedup). Returns None ONLY for a never-committed index:
-    a missing path, an empty directory, or a directory holding nothing
-    but hidden entries (parquet's ``_temporary`` from a crashed first
-    append, ``_SUCCESS`` markers). An existing committed path that then
-    fails to read as parquet is a real error and raises."""
-    from ..sources.io import fs_dir_has_data
+def _tagged(rows: DataFrame, batch_id: int) -> DataFrame:
+    """``rows`` tagged with the ``foreachBatch`` batch id they came from."""
+    return rows.withColumn("_batch", F.lit(int(batch_id)).cast("long"))
 
-    if not fs_dir_has_data(spark, path):
-        return None
-    return spark.read.parquet(path)
+
+class _IndexLog:
+    """The state of one incremental index: a parquet directory of
+    append-only rows. Every index in this module shares this lifecycle,
+    so its replay policy is written once, here.
+
+    - ``_landed``: the committed rows, or None ONLY for a never-committed
+      index — a missing path, an empty directory, or hidden-only debris
+      (parquet's ``_temporary`` from a crashed first append, ``_SUCCESS``
+      markers). Existence is probed through the Hadoop FileSystem of the
+      path's own scheme (file:/S3A/HDFS/ABFS alike), never a driver-local
+      ``os`` probe, which would report "no index" on an object store and
+      silently skip landed-corpus dedup. An existing path that fails to
+      read as parquet raises.
+    - ``_append``: a plain parquet append, tagged with the batch id when
+      one is given. It is not transactional: a batch that ``foreachBatch``
+      replays after a crash between the append and the checkpoint commit
+      lands its rows twice.
+    - Row logs (``value=None``: the minhash and digest indexes) tolerate
+      that because duplicated rows cannot change their decisions — their
+      probes ignore same-id matches. ``compact`` drops duplicate rows on
+      ``keys``.
+    - Count logs (``value`` names the count column) are threshold-
+      sensitive, so every read goes through ``_replayed``: one copy per
+      (keys, batch), so a replayed append counts once. ``_with_history``
+      also leaves the CURRENT batch's own rows out of the history it is
+      judged against; together a replayed batch sees exactly the history
+      its first run saw. ``compact`` folds the history into one row per
+      key under the sentinel batch -1.
+
+    ``compact`` is an atomic snapshot swap (``sources.io.overwrite_atomic``).
+    Run a count log's ``compact`` only at a quiesced point (stream
+    stopped, or the last batch's checkpoint committed): afterwards a replay
+    of a pre-compaction batch can no longer exclude its own rows.
+    """
+
+    def __init__(
+        self, spark: SparkSession, path: str, keys: list[str], value: str | None = None
+    ) -> None:
+        self.spark = spark
+        self.path = path
+        self._keys = list(keys)
+        self._value = value
+
+    def _landed(self) -> DataFrame | None:
+        from ..sources.io import fs_dir_has_data
+
+        if not fs_dir_has_data(self.spark, self.path):
+            return None
+        return self.spark.read.parquet(self.path)
+
+    def _append(self, rows: DataFrame, batch_id: int | None = None) -> None:
+        if batch_id is not None:
+            rows = _tagged(rows, batch_id)
+        rows.write.mode("append").parquet(self.path)
+
+    def _replayed(self, where: Column | None = None) -> DataFrame | None:
+        """Landed rows (optionally filtered) with replayed appends
+        collapsed to one copy per (keys, batch); None when none landed."""
+        landed = self._landed()
+        if landed is None:
+            return None
+        if where is not None:
+            landed = landed.where(where)
+        return landed.dropDuplicates([*self._keys, "_batch"])
+
+    def _history(self, where: Column | None = None) -> DataFrame | None:
+        """Replay-collapsed counts summed per key; None when none landed."""
+        rows = self._replayed(where)
+        if rows is None:
+            return None
+        v = self._value
+        return rows.groupBy(*self._keys).agg(F.sum(v).cast("long").alias(v))
+
+    def _with_history(self, batch_counts: DataFrame, batch_id: int) -> DataFrame:
+        """This batch's counts plus every OTHER batch's landed counts, per
+        key. On a replay the landed log already holds this batch's own
+        rows; counting them too would flip decisions the first run made."""
+        history = self._history(F.col("_batch") != F.lit(batch_id))
+        if history is None:
+            return batch_counts
+        v = self._value
+        combined = batch_counts.unionByName(history)
+        return combined.groupBy(*self._keys).agg(F.sum(v).alias(v))
+
+    def compact(self) -> None:
+        """Rewrite the log collapsed (see the class docstring) under the
+        atomic snapshot swap; a no-op when nothing has landed."""
+        from ..sources.io import overwrite_atomic
+
+        if self._value is None:
+            snapshot = self._landed()
+            if snapshot is not None:
+                snapshot = snapshot.dropDuplicates(self._keys)
+        else:
+            snapshot = self._history()
+            if snapshot is not None:
+                snapshot = snapshot.withColumn("_batch", F.lit(-1).cast("long"))
+        if snapshot is not None:
+            overwrite_atomic(snapshot, self.path)
 
 
 def corpus_ingest(
@@ -132,7 +221,7 @@ def banded_index_rows_from_table(
     )
 
 
-class IncrementalMinhashIndex:
+class IncrementalMinhashIndex(_IndexLog):
     """Near-dup dedup at ingest, incrementally: an LSH band-bucket index of
     everything already landed, appended per micro-batch.
 
@@ -159,22 +248,12 @@ class IncrementalMinhashIndex:
     streaming state store — so the dedup horizon is the whole corpus
     lifetime, unlike watermark-bounded ``dropDuplicatesWithinWatermark``.
 
-    Index discovery goes through the Hadoop FileSystem API of the path's
-    own scheme, so the index may live on S3/HDFS/ABFS — never a
-    driver-local ``os`` probe (a local-only probe would return "no index"
-    on an object store and SILENTLY skip landed-corpus dedup, the worst
-    failure mode for this component).
-
-    Crash/replay discipline: the per-batch append is plain parquet, not a
-    transactional commit — if ``foreachBatch`` replays a batch after a
-    crash between the append and the checkpoint commit, the survivors'
-    index rows land twice. Duplicated index rows cannot change dedup
-    DECISIONS (a replayed doc never matches itself — the probe join
-    excludes ``doc_id`` self-pairs — and duplicate (new, old) witnesses
-    collapse via ``dropDuplicates`` before the Jaccard verify); they only
-    grow the index. Run ``compact()`` periodically to rewrite the index
-    deduplicated (atomic swap), or back the index with a transactional
-    table format (Delta/Iceberg) in production.
+    Discovery, append, replay and compaction are ``_IndexLog``'s row-log
+    lifecycle: a replayed batch's index rows land twice but cannot change
+    decisions (the probe join excludes ``doc_id`` self-pairs, and
+    duplicate (new, old) witnesses collapse before the Jaccard verify);
+    ``compact()`` collapses them per (doc_id, band). Back the index with a
+    transactional table format (Delta/Iceberg) in production.
     """
 
     def __init__(
@@ -188,41 +267,13 @@ class IncrementalMinhashIndex:
         num_hashes: int = 64,
         bands: int = 16,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, ["doc_id", "band"])
         self.text_col = text_col
         self.id_col = id_col
         self.threshold = jaccard_threshold
         self.n_shingle = n_shingle
         self.num_hashes = num_hashes
         self.bands = bands
-
-    def _landed(self) -> DataFrame | None:
-        """The landed index, or None ONLY when no index has ever been
-        written. Existence is probed through the Hadoop FileSystem of the
-        path's scheme (works on file:/S3A/HDFS/ABFS alike); an existing
-        path that then fails to read as parquet is a real error and
-        raises — it must never be silently treated as "no index" (that
-        would skip landed-corpus dedup while still appending rows).
-        A directory holding ONLY hidden entries (``_temporary`` from a
-        crashed, never-committed first append; ``_SUCCESS`` markers) is
-        "write never committed", not "index unreadable": return None so
-        the pipeline proceeds instead of wedging every batch on an
-        unreadable-parquet error."""
-        landed = _read_landed_index(self.spark, self.path)
-        return landed
-
-    def compact(self) -> None:
-        """Rewrite the index with replay-duplicated rows collapsed
-        (atomic snapshot swap; see the class docstring). One shuffle on
-        (doc_id, band) over index rows — tens of bytes per doc-band, not
-        corpus text — so this is cheap relative to the corpus it guards."""
-        from ..sources.io import overwrite_atomic
-
-        landed = self._landed()
-        if landed is None:
-            return
-        overwrite_atomic(landed.dropDuplicates(["doc_id", "band"]), self.path)
 
     @staticmethod
     def _landed_matches(idx: DataFrame, landed: DataFrame) -> DataFrame:
@@ -334,13 +385,13 @@ class IncrementalMinhashIndex:
             )
         else:
             idx_out = idx
-        idx_out.write.mode("append").parquet(self.path)
+        self._append(idx_out)
         idx.unpersist()
         doc_tbl.unpersist()
         return kept
 
 
-class IncrementalDigestIndex:
+class IncrementalDigestIndex(_IndexLog):
     """Corpus-lifetime EXACT dedup at ingest — the tier-1 counterpart of
     ``IncrementalMinhashIndex``: a persistent (digest → doc id) index of
     everything already landed, probed per micro-batch with a plain
@@ -365,12 +416,10 @@ class IncrementalDigestIndex:
     uniformly-distributed digest (no skew by construction). At 100 TB
     store it bucketed by digest so the probe is a co-located join.
 
-    Crash/replay: a replayed batch's append lands its rows twice, which
-    cannot change decisions — the probe ignores matches with the SAME doc
-    id (a replayed doc must not be rejected against its own landed row),
-    and duplicate (digest, id) rows collapse in ``compact()`` under the
-    same atomic snapshot swap the other indexes use. Same FileSystem-API
-    discovery discipline (object-store safe).
+    Discovery, append, replay and compaction are ``_IndexLog``'s row-log
+    lifecycle: the probe ignores matches with the SAME doc id (a replayed
+    doc must not be rejected against its own landed row), and duplicate
+    (digest, id) rows collapse in ``compact()``.
     """
 
     def __init__(
@@ -381,8 +430,7 @@ class IncrementalDigestIndex:
         id_col: str = "doc_id",
         canonical: bool = False,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, ["_dig", id_col])
         self.text_col = text_col
         self.id_col = id_col
         self.canonical = canonical
@@ -392,12 +440,6 @@ class IncrementalDigestIndex:
         if self.canonical:
             text = dedup_ops.canonical_text(text)
         return F.sha2(text, 256)
-
-    def _landed(self) -> DataFrame | None:
-        """Landed (digest, id) rows, or None ONLY when no index was ever
-        written (an existing-but-unreadable path raises; hidden-entry-only
-        debris from a crashed first append counts as never-written)."""
-        return _read_landed_index(self.spark, self.path)
 
     def probe(self, docs: DataFrame) -> DataFrame:
         """READ-ONLY exact-dup lookup: (doc_id, old_id) for every batch
@@ -449,7 +491,7 @@ class IncrementalDigestIndex:
         )
         if rows.isEmpty():
             return
-        rows.write.mode("append").parquet(self.path)
+        self._append(rows)
 
     def _dedup(self, docs: DataFrame, record: bool) -> DataFrame:
         # NULL digest = no dedup key (NULL text, or at the URL tier a
@@ -476,20 +518,8 @@ class IncrementalDigestIndex:
             kept = kept.join(dup_ids, self.id_col, "left_anti")
         kept = kept.unionByName(keyless).localCheckpoint(eager=True)
         if record:
-            kept.select(self.id_col, "_dig").where(
-                F.col("_dig").isNotNull()
-            ).write.mode("append").parquet(self.path)
+            self._append(kept.select(self.id_col, "_dig").where(F.col("_dig").isNotNull()))
         return kept.drop("_dig")
-
-    def compact(self) -> None:
-        """Collapse replay-duplicated (digest, id) rows (atomic snapshot
-        swap) — one shuffle over 40-byte index rows."""
-        from ..sources.io import overwrite_atomic
-
-        landed = self._landed()
-        if landed is None:
-            return
-        overwrite_atomic(landed.dropDuplicates(["_dig", self.id_col]), self.path)
 
 
 class IncrementalUrlIndex(IncrementalDigestIndex):
@@ -505,8 +535,7 @@ class IncrementalUrlIndex(IncrementalDigestIndex):
 
     This is the digest index with the key swapped to
     ``sha2(canonical_url(url_col))`` — everything else (within-batch
-    min-id keep, landed anti-join, replay tolerance via same-id probe
-    exclusion, sentinel-free compaction, FileSystem-API discovery)
+    min-id keep, landed anti-join, the ``_IndexLog`` row-log lifecycle)
     inherits unchanged. ~40 bytes per landed URL; uniformly-distributed
     join key by construction. Slots in FRONT of the text gates in
     ``ingest_corpus_batch`` (``url_index=``): a rejected re-crawl never
@@ -526,7 +555,7 @@ class IncrementalUrlIndex(IncrementalDigestIndex):
         return F.sha2(dedup_ops.canonical_url(F.col(self.text_col)), 256)
 
 
-class IncrementalSpanIndex:
+class IncrementalSpanIndex(_IndexLog):
     """Boilerplate-span removal at ingest, incrementally: a persistent
     (span-digest → distinct-doc count) index accumulated per micro-batch,
     so a span that repeats ACROSS batches is excised as soon as its
@@ -546,15 +575,9 @@ class IncrementalSpanIndex:
     4. the batch's per-digest counts append to the index keyed by
        ``batch_id``.
 
-    Exactly-once under replay WITHOUT a transactional store: index rows
-    carry the ``foreachBatch`` batch id, and the history probe (a) skips
-    rows tagged with the CURRENT batch id — a replayed batch's own landed
-    counts would otherwise count every one of its spans against itself —
-    and (b) collapses ``dropDuplicates([digest, batch_id])`` so replays
-    of earlier batches contribute once. Together a replayed batch sees
-    exactly the history its first run saw. This is a stronger requirement
-    than the minhash index's (where duplicated rows can't change
-    decisions) because counting is threshold-sensitive.
+    Exactly-once under replay WITHOUT a transactional store: this is an
+    ``_IndexLog`` count log, so a replayed batch sees exactly the history
+    its first run saw.
 
     Semantics note: excision is forward-looking — a span that crosses the
     threshold in batch N is removed from batch N onward; copies already
@@ -566,9 +589,7 @@ class IncrementalSpanIndex:
     partial aggregation; at 100 TB it lives partitioned by digest prefix
     on the object store and the probe is a broadcast of the batch's
     distinct digests against it (or a co-located join once the index
-    outgrows broadcast range). Index discovery uses the Hadoop FileSystem
-    API of the path's scheme — same discipline as
-    ``IncrementalMinhashIndex``.
+    outgrows broadcast range).
     """
 
     def __init__(
@@ -581,20 +602,12 @@ class IncrementalSpanIndex:
         min_docs: int = 2,
         delimiter: str | None = None,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, ["_dig"], "_n")
         self.text_col = text_col
         self.id_col = id_col
         self.span_tokens = span_tokens
         self.min_docs = min_docs
         self.delimiter = delimiter
-
-    def _landed(self) -> DataFrame | None:
-        """Landed per-(digest, batch) counts, or None ONLY when no index
-        was ever written (an existing-but-unreadable path raises — it must
-        never silently become 'no history'; hidden-entry-only debris from
-        a crashed first append counts as never-written)."""
-        return _read_landed_index(self.spark, self.path)
 
     def clean_batch(self, docs: DataFrame, batch_id: int) -> DataFrame:
         """Return the batch with corpus-lifetime boilerplate spans excised
@@ -609,28 +622,7 @@ class IncrementalSpanIndex:
         batch_counts = seg.groupBy("_dig").agg(
             F.count_distinct(F.col(self.id_col)).alias("_n")
         )
-        landed = self._landed()
-        if landed is not None:
-            # exclude THIS batch's id from history: on a replay the landed
-            # index already holds this batch's counts, and summing them in
-            # would double-count every span against itself — flipping
-            # excision decisions the first run didn't make. With the
-            # self-id excluded (plus the (digest, batch) collapse for
-            # replays of OTHER batches), a replayed batch sees exactly the
-            # history the original run saw.
-            history = (
-                landed.where(F.col("_batch") != F.lit(batch_id))
-                .dropDuplicates(["_dig", "_batch"])
-                .groupBy("_dig")
-                .agg(F.sum("_n").alias("_n"))
-            )
-            combined = (
-                batch_counts.unionByName(history)
-                .groupBy("_dig")
-                .agg(F.sum("_n").alias("_n"))
-            )
-        else:
-            combined = batch_counts
+        combined = self._with_history(batch_counts, batch_id)
         boiler = combined.where(F.col("_n") >= self.min_docs).select("_dig")
 
         flagged = seg.join(F.broadcast(boiler.withColumn("_b", F.lit(True))), "_dig", "left")
@@ -660,37 +652,12 @@ class IncrementalSpanIndex:
             )
             .localCheckpoint(eager=True)
         )
-        batch_counts.withColumn("_batch", F.lit(batch_id).cast("long")).write.mode(
-            "append"
-        ).parquet(self.path)
+        self._append(batch_counts, batch_id)
         seg.unpersist()
         return out
 
-    def compact(self) -> None:
-        """Rewrite the index with replayed batch rows collapsed and counts
-        pre-aggregated per digest under a single batch key (atomic
-        snapshot swap) — probes after compaction read one row per distinct
-        span digest.
 
-        Run only at a quiesced point (stream stopped, or last batch's
-        checkpoint committed): compaction folds per-batch rows into the
-        sentinel batch ``-1``, after which a replay of a pre-compaction
-        batch can no longer exclude its own contribution from history."""
-        from ..sources.io import overwrite_atomic
-
-        landed = self._landed()
-        if landed is None:
-            return
-        collapsed = (
-            landed.dropDuplicates(["_dig", "_batch"])
-            .groupBy("_dig")
-            .agg(F.sum("_n").alias("_n"))
-            .withColumn("_batch", F.lit(-1).cast("long"))
-        )
-        overwrite_atomic(collapsed, self.path)
-
-
-class IncrementalLineIndex:
+class IncrementalLineIndex(_IndexLog):
     """Cross-page COMMON-LINE boilerplate removal at ingest,
     incrementally: a persistent (group, line-digest → distinct-doc
     count) index accumulated per micro-batch, so a line that repeats
@@ -699,11 +666,8 @@ class IncrementalLineIndex:
     as soon as its CORPUS-LIFETIME count crosses the threshold. The
     streaming twin of ``llm.textops.strip_common_lines`` (which counts
     within the frame it is given and cannot see a footer planted across
-    micro-batches); r13, VERDICT item 4. Same replay discipline as
-    ``IncrementalSpanIndex``: index rows carry the ``foreachBatch``
-    batch id, the history probe skips rows tagged with the CURRENT
-    batch id and collapses ``(group, digest, batch)`` duplicates, so a
-    replayed batch sees exactly the history its first run saw.
+    micro-batches); r13, VERDICT item 4. An ``_IndexLog`` count log
+    keyed by (group, digest), so replays are exactly-once.
 
     Per batch (``clean_batch(docs, batch_id)``):
 
@@ -740,15 +704,11 @@ class IncrementalLineIndex:
         group_col: str = "source",
         min_docs: int = 3,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, ["_grp", "_dig"], "_n")
         self.text_col = text_col
         self.id_col = id_col
         self.group_col = group_col
         self.min_docs = min_docs
-
-    def _landed(self) -> DataFrame | None:
-        return _read_landed_index(self.spark, self.path)
 
     def clean_batch(self, docs: DataFrame, batch_id: int) -> DataFrame:
         """Return ``(id_col, group_col, text_clean, n_dropped)`` with
@@ -770,23 +730,7 @@ class IncrementalLineIndex:
         batch_counts = lines.groupBy("_grp", "_dig").agg(
             F.count_distinct(F.col(self.id_col)).alias("_n")
         )
-        landed = self._landed()
-        if landed is not None:
-            # self-batch exclusion + replay collapse: see the class
-            # docstring / IncrementalSpanIndex for the full argument
-            history = (
-                landed.where(F.col("_batch") != F.lit(batch_id))
-                .dropDuplicates(["_grp", "_dig", "_batch"])
-                .groupBy("_grp", "_dig")
-                .agg(F.sum("_n").alias("_n"))
-            )
-            combined = (
-                batch_counts.unionByName(history)
-                .groupBy("_grp", "_dig")
-                .agg(F.sum("_n").alias("_n"))
-            )
-        else:
-            combined = batch_counts
+        combined = self._with_history(batch_counts, batch_id)
         chrome = combined.where(F.col("_n") >= self.min_docs).select("_grp", "_dig")
 
         # no broadcast hint (r14, ADVICE): the chrome set is CORPUS-
@@ -824,32 +768,12 @@ class IncrementalLineIndex:
             )
             .localCheckpoint(eager=True)
         )
-        batch_counts.withColumn("_batch", F.lit(batch_id).cast("long")).write.mode(
-            "append"
-        ).parquet(self.path)
+        self._append(batch_counts, batch_id)
         lines.unpersist()
         return out
 
-    def compact(self) -> None:
-        """Collapse replayed rows and pre-aggregate counts per (group,
-        digest) under the sentinel batch ``-1`` (atomic snapshot swap).
-        Run only at a quiesced point — same contract as
-        ``IncrementalSpanIndex.compact``."""
-        from ..sources.io import overwrite_atomic
 
-        landed = self._landed()
-        if landed is None:
-            return
-        collapsed = (
-            landed.dropDuplicates(["_grp", "_dig", "_batch"])
-            .groupBy("_grp", "_dig")
-            .agg(F.sum("_n").alias("_n"))
-            .withColumn("_batch", F.lit(-1).cast("long"))
-        )
-        overwrite_atomic(collapsed, self.path)
-
-
-class IncrementalSubstringIndex:
+class IncrementalSubstringIndex(_IndexLog):
     """Exact-substring (ExactSubstr, Lee et al. 2021) dedup at ingest,
     incrementally: a persistent (anchor-gram digest → occurrence count)
     index accumulated per micro-batch, so a ≥L-token span shared with
@@ -873,12 +797,8 @@ class IncrementalSubstringIndex:
     4. the batch's per-digest counts append to the index keyed by
        ``batch_id``.
 
-    Replay discipline is ``IncrementalSpanIndex``'s, because counting
-    is threshold-sensitive: the history probe skips rows tagged with
-    the CURRENT batch id (a replayed batch must not count its own
-    landed grams against itself) and collapses
-    ``dropDuplicates([_g, _batch])`` so replays of earlier batches
-    contribute once — a replayed batch sees exactly the history its
+    Replay discipline is the ``_IndexLog`` count log's, because counting
+    is threshold-sensitive: a replayed batch sees exactly the history its
     first run saw.
 
     Scale: the index shuffles 16-byte digests with map-side partial
@@ -904,15 +824,11 @@ class IncrementalSubstringIndex:
         min_len: int = 50,
         min_count: int = 2,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, ["_g"], "_n")
         self.text_col = text_col
         self.id_col = id_col
         self.min_len = int(min_len)
         self.min_count = int(min_count)
-
-    def _landed(self) -> DataFrame | None:
-        return _read_landed_index(self.spark, self.path)
 
     def clean_batch(self, docs: DataFrame, batch_id: int) -> DataFrame:
         """Return the batch with corpus-lifetime duplicated ≥L-token
@@ -925,52 +841,19 @@ class IncrementalSubstringIndex:
         ).persist(StorageLevel.MEMORY_AND_DISK)
 
         batch_counts = grams.groupBy("_g").agg(F.count("*").alias("_n"))
-        landed = self._landed()
-        if landed is not None:
-            history = (
-                landed.where(F.col("_batch") != F.lit(batch_id))
-                .dropDuplicates(["_g", "_batch"])
-                .groupBy("_g")
-                .agg(F.sum("_n").alias("_n"))
-            )
-            combined = (
-                batch_counts.unionByName(history)
-                .groupBy("_g")
-                .agg(F.sum("_n").alias("_n"))
-            )
-        else:
-            combined = batch_counts
+        combined = self._with_history(batch_counts, batch_id)
         dup = combined.where(F.col("_n") >= self.min_count).select("_g")
         marks = grams.join(F.broadcast(dup), "_g", "left_semi")
         spans = dedup_ops.covered_spans(marks, self.id_col, self.min_len)
         out = dedup_ops.excise_spans(
             docs, spans, self.text_col, self.id_col
         ).localCheckpoint(eager=True)
-        batch_counts.withColumn("_batch", F.lit(batch_id).cast("long")).write.mode(
-            "append"
-        ).parquet(self.path)
+        self._append(batch_counts, batch_id)
         grams.unpersist()
         return out
 
-    def compact(self) -> None:
-        """Fold per-batch gram rows to one row per distinct digest under
-        the sentinel batch −1 (atomic snapshot swap); quiesced points
-        only — pre-compaction replays lose self-exclusion after."""
-        from ..sources.io import overwrite_atomic
 
-        landed = self._landed()
-        if landed is None:
-            return
-        collapsed = (
-            landed.dropDuplicates(["_g", "_batch"])
-            .groupBy("_g")
-            .agg(F.sum("_n").alias("_n"))
-            .withColumn("_batch", F.lit(-1).cast("long"))
-        )
-        overwrite_atomic(collapsed, self.path)
-
-
-class IncrementalCmsIndex:
+class IncrementalCmsIndex(_IndexLog):
     """Corpus-lifetime FREQUENCY tracking at ingest: a persistent
     count-min table (``operators/aggregates.count_min_table``) of a key
     column — token, domain, source — appended per micro-batch. Because a
@@ -987,13 +870,9 @@ class IncrementalCmsIndex:
     per batch, forever, with the sketch's hard never-underestimate
     guarantee (a flood can never hide).
 
-    Crash/replay: batch rows carry ``update_batch``'s ``batch_id``; a
-    replayed append lands byte-identical (batch, d, bucket, c) rows,
-    which every read collapses with ``dropDuplicates`` before summing —
-    so replays change nothing (the span-index discipline). ``compact()``
-    folds history into the sentinel batch −1 under the atomic snapshot
-    swap; run it only at a quiesced point, since pre-compaction batch ids
-    can no longer be distinguished afterwards.
+    Crash/replay: an ``_IndexLog`` count log keyed by (d, bucket) — a
+    replayed append collapses before summing, so replays change nothing;
+    ``compact()`` folds history into one ≤ depth·width snapshot.
     """
 
     def __init__(
@@ -1003,34 +882,16 @@ class IncrementalCmsIndex:
         key_col: str = "key",
         width: int = 1024,
     ) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, ["d", "bucket"], "c")
         self.key_col = key_col
         self.width = width
-
-    def _landed(self) -> DataFrame | None:
-        return _read_landed_index(self.spark, self.path)
-
-    def _merged(self) -> DataFrame | None:
-        """Replay-collapsed, batch-summed (d, bucket, c) sketch."""
-        landed = self._landed()
-        if landed is None:
-            return None
-        return (
-            landed.dropDuplicates(["_batch", "d", "bucket", "c"])
-            .groupBy("d", "bucket")
-            .agg(F.sum("c").alias("c"))
-        )
 
     def update_batch(self, df: DataFrame, batch_id: int) -> None:
         """Append this batch's sketch rows (≤ depth·width, keyed by
         ``batch_id`` for replay collapse)."""
         from ..operators.aggregates import count_min_table
 
-        sketch = count_min_table(df, self.key_col, width=self.width).withColumn(
-            "_batch", F.lit(int(batch_id)).cast("long")
-        )
-        sketch.write.mode("append").parquet(self.path)
+        self._append(count_min_table(df, self.key_col, width=self.width), batch_id)
 
     def estimate(self, keys: DataFrame) -> DataFrame:
         """(key, est_n) frequency estimates against the whole landed
@@ -1038,28 +899,15 @@ class IncrementalCmsIndex:
         seen estimate ≥ 0 from collision noise. Empty-index → est_n 0."""
         from ..operators.aggregates import cms_estimate
 
-        merged = self._merged()
+        merged = self._history()
         if merged is None:
             return keys.select(
                 F.col(self.key_col), F.lit(0).cast("long").alias("est_n")
             )
         return cms_estimate(merged, keys, self.key_col, width=self.width)
 
-    def compact(self) -> None:
-        """Fold per-batch sketch rows into one ≤ depth·width snapshot
-        under the sentinel batch −1 (atomic swap); quiesced points only —
-        replayed pre-compaction appends are indistinguishable after."""
-        from ..sources.io import overwrite_atomic
 
-        merged = self._merged()
-        if merged is None:
-            return
-        overwrite_atomic(
-            merged.withColumn("_batch", F.lit(-1).cast("long")), self.path
-        )
-
-
-class IncrementalWordCountIndex:
+class IncrementalWordCountIndex(_IndexLog):
     """Corpus-lifetime WORD-FREQUENCY table at ingest — the tokenizer's
     feedstock maintained incrementally: BPE retraining
     (``llm.tokenize.bpe_train_from_counts``) runs off this index's
@@ -1070,42 +918,24 @@ class IncrementalWordCountIndex:
     ``IncrementalCmsIndex``'s estimates when the vocabulary fits —
     Zipf makes it a few GB even at web scale.
 
-    Counts merge by ADDITION, so append IS merge (the CMS-index
-    discipline): each batch writes its own (word, count) rows keyed by
-    ``batch_id``; reads collapse replays with ``dropDuplicates`` on
-    (_batch, word) and groupBy-sum; ``compact()`` folds history into
-    the sentinel batch −1 under the atomic snapshot swap (quiesced
-    points only)."""
+    Counts merge by ADDITION, so append IS merge: an ``_IndexLog`` count
+    log keyed by word."""
 
     def __init__(self, spark: SparkSession, path: str, text_col: str = "text") -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, ["word"], "count")
         self.text_col = text_col
-
-    def _landed(self) -> DataFrame | None:
-        return _read_landed_index(self.spark, self.path)
 
     def update_batch(self, df: DataFrame, batch_id: int) -> None:
         """Append this batch's (word, count) rows (vocabulary-of-batch
         sized, keyed by ``batch_id`` for replay collapse)."""
         from ..llm.tokenize import word_count_table
 
-        wc = word_count_table(df, self.text_col).withColumn(
-            "_batch", F.lit(int(batch_id)).cast("long")
-        )
-        wc.write.mode("append").parquet(self.path)
+        self._append(word_count_table(df, self.text_col), batch_id)
 
     def counts(self) -> DataFrame | None:
         """Replay-collapsed, batch-summed (word, count) over the whole
         landed history; None when nothing has landed."""
-        landed = self._landed()
-        if landed is None:
-            return None
-        return (
-            landed.dropDuplicates(["_batch", "word"])
-            .groupBy("word")
-            .agg(F.sum("count").cast("long").alias("count"))
-        )
+        return self._history()
 
     def train(self, n_merges: int = 50, min_count: int = 2) -> list[tuple[str, str]]:
         """Retrain the BPE merge table from the landed counts — identical
@@ -1118,16 +948,6 @@ class IncrementalWordCountIndex:
         if wc is None:
             raise ValueError(f"no landed word counts at {self.path}: ingest first")
         return bpe_train_from_counts(wc, n_merges=n_merges, min_count=min_count)
-
-    def compact(self) -> None:
-        """Fold per-batch rows into one vocabulary-sized snapshot under
-        the sentinel batch −1 (atomic swap); quiesced points only."""
-        from ..sources.io import overwrite_atomic
-
-        wc = self.counts()
-        if wc is None:
-            return
-        overwrite_atomic(wc.withColumn("_batch", F.lit(-1).cast("long")), self.path)
 
 
 class PersistentBloomGate:
@@ -1168,9 +988,11 @@ class PersistentBloomGate:
         id_col: str = "doc_id",
         m_bits: int = 1 << 24,
     ) -> None:
-        """Build the probe set's bitmap and persist it (overwrite —
-        an eval-set release replaces the gate wholesale)."""
+        """Build the probe set's bitmap and persist it (atomic overwrite —
+        an eval-set release replaces the gate wholesale, and a failed
+        refit leaves the previous release readable)."""
         from ..llm.bloom import _CHUNK_BITS, bloom_bitmap
+        from ..sources.io import overwrite_atomic
 
         bitmap = bloom_bitmap(
             probe, text_col, id_col, n=self.n, m_bits=m_bits, n_hashes=self.n_hashes
@@ -1186,9 +1008,10 @@ class PersistentBloomGate:
         # flags nothing) from "never fit" (error)
         if not rows:
             rows = [(-1, b"", m_bits)]
-        self.spark.createDataFrame(
-            rows, schema="chunk int, bits binary, m_bits long"
-        ).write.mode("overwrite").parquet(self.path)
+        overwrite_atomic(
+            self.spark.createDataFrame(rows, schema="chunk int, bits binary, m_bits long"),
+            self.path,
+        )
         self._cache = bitmap
 
     def _bitmap(self):
@@ -1273,12 +1096,12 @@ class CorpusDriftMonitor:
     per-batch job is live-batch-sized plus those bounded tables; the
     reference corpus is read once at ``freeze()`` and never again.
 
-    Crash/replay: ``check_batch`` appends the batch's sketch rows keyed
-    by ``batch_id``; reads collapse replays with ``dropDuplicates``
-    on (_batch, group) (the CMS-index discipline — a replayed append
-    lands identical sketch bytes). Reports are derived, not state:
-    replaying a batch reproduces its report rather than corrupting
-    anything.
+    Crash/replay: the sketches are an ``_IndexLog`` keyed by group, so
+    a replayed append (identical sketch bytes) is read once. Reports are
+    derived, not state: replaying a batch reproduces its report rather
+    than corrupting anything. Each ``freeze`` table is an atomic
+    snapshot write, so a failed re-freeze leaves the previous release
+    readable.
     """
 
     def __init__(
@@ -1300,6 +1123,7 @@ class CorpusDriftMonitor:
         self.n_bins = int(n_bins)
         self.window_batches = int(window_batches)
         self.lg_k = int(lg_k)
+        self._sketches = _IndexLog(spark, f"{self.path}/sketches", [group_col])
 
     # -- state paths -------------------------------------------------
     @property
@@ -1314,22 +1138,18 @@ class CorpusDriftMonitor:
     def _meta_path(self) -> str:
         return f"{self.path}/ref_meta"
 
-    @property
-    def _sketch_path(self) -> str:
-        return f"{self.path}/sketches"
-
     def freeze(self, reference: DataFrame) -> None:
-        """Compute and persist the reference stats (overwrite — one
-        freeze per reference release, like ``PersistentBloomGate.fit``).
+        """Compute and persist the reference stats (atomic overwrite —
+        one freeze per reference release, like ``PersistentBloomGate.fit``).
         ``reference`` must carry ``group_col`` and an integer-lattice
-        ``value_col`` (the ``corpus_ingest`` gated form qualifies)."""
+        ``value_col`` (the ``corpus_ingest`` gated form qualifies). The
+        edges are computed before any write, so a reference that fails to
+        read leaves the previous release whole; each table then swaps in
+        atomically."""
         from ..operators.validation import value_histogram
+        from ..sources.io import overwrite_atomic
 
         g, v = self.group_col, self.value_col
-        counts = reference.groupBy(g, F.col(v).cast("long").alias("value")).agg(
-            F.count("*").cast("long").alias("n")
-        )
-        counts.write.mode("overwrite").parquet(self._counts_path)
         row = reference.agg(
             F.min(F.col(v).cast("double")).alias("_lo"),
             F.max(F.col(v).cast("double")).alias("_hi"),
@@ -1340,11 +1160,16 @@ class CorpusDriftMonitor:
                 f"{v!r} values — an empty reference cannot define edges"
             )
         lo, hi = float(row["_lo"]), float(row["_hi"])
+        counts = reference.groupBy(g, F.col(v).cast("long").alias("value")).agg(
+            F.count("*").cast("long").alias("n")
+        )
+        overwrite_atomic(counts, self._counts_path)
         hist = value_histogram(reference, v, g, self.n_bins, lo=lo, hi=hi)
-        hist.write.mode("overwrite").parquet(self._hist_path)
-        self.spark.createDataFrame(
+        overwrite_atomic(hist, self._hist_path)
+        meta = self.spark.createDataFrame(
             [(lo, hi, self.n_bins)], "lo double, hi double, n_bins int"
-        ).write.mode("overwrite").parquet(self._meta_path)
+        )
+        overwrite_atomic(meta, self._meta_path)
 
     def _frozen_meta(self) -> tuple[float, float]:
         row = self.spark.read.parquet(self._meta_path).first()
@@ -1374,15 +1199,13 @@ class CorpusDriftMonitor:
 
         sk = batch.groupBy(g).agg(
             F.hll_sketch_agg(self.distinct_col, F.lit(self.lg_k)).alias("_sk")
-        ).withColumn("_batch", F.lit(int(batch_id)).cast("long"))
-        sk.write.mode("append").parquet(self._sketch_path)
-        landed = self.spark.read.parquet(self._sketch_path)
+        )
+        self._sketches._append(sk, batch_id)
         uniq = (
-            landed.where(
+            self._sketches._replayed(
                 (F.col("_batch") > int(batch_id) - self.window_batches)
                 & (F.col("_batch") <= int(batch_id))
             )
-            .dropDuplicates(["_batch", g])
             .groupBy(g)
             .agg(
                 F.hll_sketch_estimate(F.hll_union_agg("_sk")).alias(
@@ -1531,9 +1354,7 @@ def ingest_corpus_batch(
         # lands beside the monitor's state — a small per-batch append —
         # so the gate leaves an audit trail without touching the landed
         # corpus rows.
-        report = drift_monitor.check_batch(gated, batch_id).withColumn(
-            "_batch", F.lit(int(batch_id)).cast("long")
-        )
+        report = _tagged(drift_monitor.check_batch(gated, batch_id), batch_id)
         report.write.mode("append").parquet(f"{drift_monitor.path}/reports")
     if fertility_monitor is not None:
         # the tokenizer-side drift gate (same tap point and audit-trail
@@ -1541,9 +1362,7 @@ def ingest_corpus_batch(
         # under the FROZEN merge table vs the frozen reference, one
         # report row per group, appended beside the monitor's state —
         # never a mutation of the landed rows
-        frep = fertility_monitor.check_batch(gated).withColumn(
-            "_batch", F.lit(int(batch_id)).cast("long")
-        )
+        frep = _tagged(fertility_monitor.check_batch(gated), batch_id)
         frep.write.mode("append").parquet(f"{fertility_monitor.path}/reports")
     if bloom_gate is not None:
         # decontamination ahead of every index: a contaminated document
@@ -1563,49 +1382,22 @@ def ingest_corpus_batch(
         # dedup_batch also ingests the survivors' vectors, so the ANN
         # store and the corpus store stay row-aligned.
         kept = ann_index.dedup_batch(kept, threshold=ann_threshold)
-    if span_index is not None:
-        cleaned = span_index.clean_batch(kept, batch_id)
-        kept = (
-            kept.drop(text_col)
-            .join(cleaned.select(id_col, "text_clean", "n_dropped"), id_col)
-            .withColumnRenamed("text_clean", text_col)
+    # excision tiers, in the docstring's order (span, line, substring):
+    # each replaces the text and lands its drop count under its own name,
+    # so every tier's count survives when several run
+    for index, count_col, alias in (
+        (span_index, "n_dropped", "n_dropped"),
+        (line_index, "n_dropped", "n_lines_dropped"),
+        (substring_index, "n_removed", "n_substr_removed"),
+    ):
+        if index is None:
+            continue
+        cleaned = index.clean_batch(kept, batch_id).select(
+            id_col, "text_clean", F.col(count_col).alias(alias)
         )
-    if line_index is not None:
-        # cross-batch common-LINE chrome excision (r13) — runs after the
-        # span index (spans judge the body; lines catch verbatim per-line
-        # chrome like footers) on whatever text the ladder has produced;
-        # its drop count lands under its own name so the span index's
-        # n_dropped survives when both gates run
-        lcleaned = line_index.clean_batch(kept, batch_id)
         kept = (
             kept.drop(text_col)
-            .join(
-                lcleaned.select(
-                    id_col,
-                    "text_clean",
-                    F.col("n_dropped").alias("n_lines_dropped"),
-                ),
-                id_col,
-            )
-            .withColumnRenamed("text_clean", text_col)
-        )
-    if substring_index is not None:
-        # exact-substring excision LAST of the excision tiers (r14):
-        # its output is token-normalized (single-space joined), so the
-        # structure-reading line gate must have already run, and its
-        # per-token-position index rows should only price text the
-        # cheaper excisions passed — see the docstring order note
-        scleaned = substring_index.clean_batch(kept, batch_id)
-        kept = (
-            kept.drop(text_col)
-            .join(
-                scleaned.select(
-                    id_col,
-                    "text_clean",
-                    F.col("n_removed").alias("n_substr_removed"),
-                ),
-                id_col,
-            )
+            .join(cleaned, id_col)
             .withColumnRenamed("text_clean", text_col)
         )
     if url_index is not None:
@@ -1663,27 +1455,31 @@ class TokenizerFertilityMonitor:
         return f"{self.path}/ref_fertility"
 
     def freeze(self, reference: DataFrame, merges: list[tuple[str, str]]) -> None:
-        """Persist the merge table and the reference's per-group token
-        stats (overwrite — one freeze per tokenizer/reference release)."""
+        """Persist the reference's per-group token stats under ``merges``
+        and the merge table itself (atomic overwrites — one freeze per
+        tokenizer/reference release). The stats go first: a reference
+        that fails to compute leaves the previous release whole."""
+        from ..sources.io import overwrite_atomic
+
         if not merges:
             raise ValueError("freeze needs a non-empty merge table")
+        overwrite_atomic(self._group_stats(reference, merges), self._ref_path)
         mdf = self.spark.createDataFrame(
             [(i, l, r) for i, (l, r) in enumerate(merges)], "rank INT, l STRING, r STRING"
         )
-        mdf.coalesce(1).write.mode("overwrite").parquet(self._merges_path)
-        self._group_stats(reference).write.mode("overwrite").parquet(self._ref_path)
+        overwrite_atomic(mdf.coalesce(1), self._merges_path)
 
     def _merges(self) -> list[tuple[str, str]]:
+        from ..sources.io import fs_dir_has_data
+
+        if not fs_dir_has_data(self.spark, self._merges_path):
+            raise ValueError(f"no frozen merge table at {self._merges_path}: freeze() first")
         rows = self.spark.read.parquet(self._merges_path).collect()
         return [(r["l"], r["r"]) for r in sorted(rows, key=lambda r: r["rank"])]
 
-    def _group_stats(self, df: DataFrame) -> DataFrame:
+    def _group_stats(self, df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
         from ..llm.tokenize import bpe_token_stats
-        from ..sources.io import fs_dir_has_data
 
-        merges = self._merges() if fs_dir_has_data(self.spark, self._merges_path) else None
-        if merges is None:
-            raise ValueError(f"no frozen merge table at {self._merges_path}: freeze() first")
         stats = bpe_token_stats(df, merges, self.text_col, self.id_col)
         docs = df.select(self.id_col, self.group_col)
         return (
@@ -1703,9 +1499,7 @@ class TokenizerFertilityMonitor:
 
         if not fs_dir_has_data(self.spark, self._ref_path):
             raise ValueError(f"no frozen reference at {self._ref_path}: freeze() first")
-        # freeze() persists the merge table before the reference stats,
-        # so a present ref table implies a present merge table
-        b = self._group_stats(batch)
+        b = self._group_stats(batch, self._merges())
         ref = self.spark.read.parquet(self._ref_path).select(
             self.group_col,
             F.col("n_words").alias("_rw"),
@@ -1767,7 +1561,7 @@ class TokenizerFertilityMonitor:
         return merges
 
 
-class IncrementalQidIndex:
+class IncrementalQidIndex(_IndexLog):
     """Corpus-lifetime k-ANONYMITY class counts at ingest — the
     structural-privacy gate (``operators.validation.k_anonymity_audit``)
     maintained incrementally, so the release audit never rescans landed
@@ -1782,12 +1576,8 @@ class IncrementalQidIndex:
     audit is the classic leak: 4 uniques in 4 batches look fine four
     times and ship a size-4 class at k=5.)
 
-    Counts merge by ADDITION, so append IS merge (the
-    ``IncrementalWordCountIndex`` discipline): each batch appends its
-    own (qid..., n) rows keyed by ``batch_id``; reads collapse replays
-    with ``dropDuplicates`` on (_batch, qid...) and groupBy-sum;
-    ``compact()`` folds history into the sentinel batch −1 under the
-    atomic snapshot swap (quiesced points only). State is bounded by
+    Counts merge by ADDITION, so append IS merge: an ``_IndexLog``
+    count log keyed by the QID columns. State is bounded by
     QID-combination cardinality, never corpus rows.
 
     ``audit(k)`` returns the identical one-row summary as the batch
@@ -1796,34 +1586,20 @@ class IncrementalQidIndex:
     ingested batches."""
 
     def __init__(self, spark: SparkSession, path: str, qid_cols: list[str]) -> None:
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, qid_cols, "n")
         self.qid_cols = list(qid_cols)
-
-    def _landed(self) -> DataFrame | None:
-        return _read_landed_index(self.spark, self.path)
 
     def update_batch(self, df: DataFrame, batch_id: int) -> None:
         """Append this batch's (qid..., n) class counts (batch-class
         sized, keyed by ``batch_id`` for replay collapse)."""
-        counts = (
-            df.groupBy(*[F.col(c) for c in self.qid_cols])
-            .agg(F.count("*").cast("long").alias("n"))
-            .withColumn("_batch", F.lit(int(batch_id)).cast("long"))
-        )
-        counts.write.mode("append").parquet(self.path)
+        counts = df.groupBy(*self.qid_cols).agg(F.count("*").cast("long").alias("n"))
+        self._append(counts, batch_id)
 
     def classes(self) -> DataFrame | None:
         """Replay-collapsed, batch-summed class table over the landed
         history; None when nothing has landed."""
-        landed = self._landed()
-        if landed is None:
-            return None
-        return (
-            landed.dropDuplicates(["_batch", *self.qid_cols])
-            .groupBy(*self.qid_cols)
-            .agg(F.sum("n").cast("long").alias("class_size"))
-        )
+        history = self._history()
+        return None if history is None else history.withColumnRenamed("n", "class_size")
 
     def audit(self, k: int = 5) -> DataFrame:
         """The one-row release-gate summary over everything landed —
@@ -1836,18 +1612,3 @@ class IncrementalQidIndex:
         if cls is None:
             raise ValueError(f"no landed class counts at {self.path}: ingest first")
         return k_anonymity_summary(cls, "class_size", k)
-
-    def compact(self) -> None:
-        """Fold per-batch rows into one class-table snapshot under the
-        sentinel batch −1 (atomic swap); quiesced points only."""
-        from ..sources.io import overwrite_atomic
-
-        cls = self.classes()
-        if cls is None:
-            return
-        overwrite_atomic(
-            cls.withColumnRenamed("class_size", "n").withColumn(
-                "_batch", F.lit(-1).cast("long")
-            ),
-            self.path,
-        )

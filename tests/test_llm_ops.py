@@ -2427,18 +2427,22 @@ def test_materialize_reliable_mode_needs_a_dir(spark):
         spark.conf.unset(MATERIALIZE_MODE_KEY)
 
 
-def test_materialize_reliable_mode_matches_local(spark, tmp_path):
+def test_materialize_reliable_mode_matches_local(spark, sf_dir, tmp_path):
     """r15 cluster-profile switch: ``spark.graft.materialize=reliable``
     must route the engine's checkpoint sites to reliable ``checkpoint()``
     (fault-tolerant files in the checkpoint dir) and produce results
     IDENTICAL to the default localCheckpoint path — exercised through
     the two iterative consumers the switch exists for (pagerank,
-    dedup_clusters' distributed loop)."""
+    dedup_clusters' distributed loop) and the curation ladder's audited
+    report. A reliable eager checkpoint must compute its frame once:
+    recomputing it for the checkpoint-file write would run the observe
+    nodes under a curation hub twice (a counting UDF pins it)."""
     from simple_pos_kafka_pyspark_airflow_spark.cacheutil import (
         CHECKPOINT_DIR_KEY,
         MATERIALIZE_MODE_KEY,
         materialize,
     )
+    from simple_pos_kafka_pyspark_airflow_spark.llm import curation
     from simple_pos_kafka_pyspark_airflow_spark.llm.dedup import dedup_clusters
     from simple_pos_kafka_pyspark_airflow_spark.operators.graph import pagerank
 
@@ -2449,8 +2453,21 @@ def test_materialize_reliable_mode_matches_local(spark, tmp_path):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(9)], "id_a long, id_b long"
     )
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    cfg = curation.CurationConfig(
+        allowed_langs=("en", "de", "fr", "es", "zh", "und"),
+        min_tokens=3,
+        per_source_cap=40,
+    )
+    calls = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        calls.add(1)
+        return x
+
     pr_local = sorted(map(tuple, pagerank(edges, iters=3).collect()))
     cc_local = sorted(map(tuple, dedup_clusters(pairs, max_driver_edges=0).collect()))
+    _, report_local = curation.curate_corpus(docs, cfg, counts=True)
 
     spark.conf.set(MATERIALIZE_MODE_KEY, "reliable")
     spark.conf.set(CHECKPOINT_DIR_KEY, str(tmp_path / "ck"))
@@ -2464,11 +2481,15 @@ def test_materialize_reliable_mode_matches_local(spark, tmp_path):
         assert probe.count() == 5
         pr_rel = sorted(map(tuple, pagerank(edges, iters=3).collect()))
         cc_rel = sorted(map(tuple, dedup_clusters(pairs, max_driver_edges=0).collect()))
+        hub = materialize(spark.range(50).select(F.udf(counted, "long")("id")))
+        assert hub.count() == 50 and calls.value == 50
+        _, report_rel = curation.curate_corpus(docs, cfg, counts=True)
     finally:
         spark.conf.unset(MATERIALIZE_MODE_KEY)
         spark.conf.unset(CHECKPOINT_DIR_KEY)
     assert pr_rel == pr_local
     assert cc_rel == cc_local
+    assert report_rel == report_local
 
 
 def test_funnel_counts_order_matters(spark):
@@ -3261,24 +3282,14 @@ def test_predicted_lang_codegen_equals_hof_reference(spark, sf_dir):
 
 
 def test_fuzzy_join_jaccard_hot_shingle_skew_safe(spark):
-    """r15 (VERDICT r14 what's-wrong #1): the cluster-profile dfreq mode
-    (``spark.graft.jaccard.dfreq=agg``) must compute document frequency
-    WITHOUT a count window partitioned by the shingle hash — a hot
-    shingle (here in ~30% of docs per side) would land its whole posting
-    list in ONE window task, and AQE can split a skewed join partition
-    but never a window partition. Pin: in agg mode the only _h-alone
-    window is gone (the dfreq comes back via broadcast), and BOTH modes
-    produce identical results that equal brute force on the skewed
-    fixture. (The default stays the window form — measured 20-30%
-    faster locally; the agg form is the 100 TB escape hatch, same
-    pattern as cacheutil.materialize.)"""
+    """A hot shingle (here in ~30% of docs per side) lands its whole
+    posting list in the one document-frequency window task over the
+    shingle hash; the join must still equal brute force on that skewed
+    fixture."""
     import io
     from contextlib import redirect_stdout
 
-    from simple_pos_kafka_pyspark_airflow_spark.llm.dedup import (
-        DFREQ_MODE_KEY,
-        fuzzy_join_jaccard,
-    )
+    from simple_pos_kafka_pyspark_airflow_spark.llm.dedup import fuzzy_join_jaccard
 
     # one stopword trigram ("the end now") planted in 30% of docs per side
     hot = "the end now"
@@ -3299,20 +3310,9 @@ def test_fuzzy_join_jaccard_hot_shingle_skew_safe(spark):
                       for r in out.collect())
         return rows, buf.getvalue()
 
-    got_default, plan_default = run()
-    # default: the dfreq window over _h alone IS present (documented local
-    # optimum) — this test is about the escape hatch, assert it exists
-    assert "windowspecdefinition(_h#" in plan_default
-
-    spark.conf.set(DFREQ_MODE_KEY, "agg")
-    try:
-        got_agg, plan_agg = run()
-    finally:
-        spark.conf.unset(DFREQ_MODE_KEY)
-    assert "windowspecdefinition(_h#" not in plan_agg, (
-        "agg mode must not key a count window by the shingle hash alone"
-    )
-    assert "BroadcastExchange" in plan_agg  # dfreq join-back broadcast
+    got, plan = run()
+    # the dfreq is the count window over _h alone (the measured optimum)
+    assert "windowspecdefinition(_h#" in plan
 
     def shingles(text, n=3):
         toks = text.lower().split()
@@ -3325,7 +3325,7 @@ def test_fuzzy_join_jaccard_hot_shingle_skew_safe(spark):
         for lid, s in L for rid, t in R
         if len(shingles(s) & shingles(t)) / len(shingles(s) | shingles(t)) >= 0.5
     )
-    assert got_default == want and got_agg == want
+    assert got == want
     assert len(want) >= 12  # every i↔100+i twin qualifies
 
 
@@ -3617,8 +3617,13 @@ def test_classify_quality_scores_and_gate(spark):
 
 def test_extract_html_text_edge_cases(spark):
     """Planted extraction behaviors beyond the contract row: each case
-    isolates one rule of the C4/jusText-shape extractor."""
-    from simple_pos_kafka_pyspark_airflow_spark.llm.textops import extract_html_text
+    isolates one rule of the C4/jusText-shape extractor. The row form
+    (``extract_html_text_rows``) must agree case by case, including a
+    NULL ``html`` row, which both forms keep."""
+    from simple_pos_kafka_pyspark_airflow_spark.llm.textops import (
+        extract_html_text,
+        extract_html_text_rows,
+    )
 
     cases = [
         # (html, expected_text, n_lines, n_kept)
@@ -3645,9 +3650,11 @@ def test_extract_html_text_edge_cases(spark):
          "attrs do not leak words", 1, 1),
         # empty / tags-only input
         ("<div></div><p> </p>", "", 0, 0),
+        # NULL html: the row survives with NULL outputs
+        (None, None, None, None),
     ]
     df = spark.createDataFrame(
-        [(i, h) for i, (h, *_ ) in enumerate(cases)], ["i", "html"]
+        [(i, h) for i, (h, *_ ) in enumerate(cases)], "i long, html string"
     )
     e = extract_html_text(F.col("html"))
     got = {
@@ -3658,6 +3665,11 @@ def test_extract_html_text_edge_cases(spark):
     }
     for i, (_, text, nl, nk) in enumerate(cases):
         assert got[i] == (text, nl, nk), (i, got[i], (text, nl, nk))
+    rows = {
+        r["i"]: (r["text"], r["n_lines"], r["n_kept"])
+        for r in extract_html_text_rows(df, F.col("html"), ["i"]).collect()
+    }
+    assert rows == got
 
 
 def test_strip_markup_conservative(spark):

@@ -3209,6 +3209,48 @@ def test_tokenizer_fertility_monitor(spark, tmp_path):
     assert a == b
 
 
+def test_failed_refreeze_leaves_previous_release_readable(spark, sf_dir, tmp_path):
+    """A re-freeze whose reference fails mid-write (an ``assert_true``
+    poison, the staged-write crash pattern) must leave the first release
+    whole: both monitors' ``check_batch`` still answer exactly as they
+    did before the failed attempt."""
+    from simple_pos_kafka_pyspark_airflow_spark.llm import tokenize as tk
+    from simple_pos_kafka_pyspark_airflow_spark.streaming.corpus import (
+        CorpusDriftMonitor,
+        TokenizerFertilityMonitor,
+        corpus_ingest,
+    )
+
+    ref = corpus_ingest(
+        spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "source", "text"),
+        min_quality=0.0,
+        min_tokens=1,
+    )
+    batch = ref.where(F.col("doc_id") % 3 == 0)
+    # poison the columns the freezes read, so pruning cannot skip it
+    boom = F.assert_true(F.col("doc_id") < 0)
+    poison = ref.withColumn("text", F.coalesce(boom.cast("string"), "text")).withColumn(
+        "n_tokens", F.coalesce(boom.cast("int"), "n_tokens")
+    )
+
+    def report(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    drift = CorpusDriftMonitor(spark, str(tmp_path / "drift"), n_bins=4)
+    drift.freeze(ref)
+    want = report(drift.check_batch(batch, 0))
+    with pytest.raises(Exception):
+        drift.freeze(poison)
+    assert report(drift.check_batch(batch, 0)) == want
+
+    fert = TokenizerFertilityMonitor(spark, str(tmp_path / "fert"))
+    fert.freeze(ref, tk.FROZEN_MERGES)
+    want = report(fert.check_batch(batch))
+    with pytest.raises(Exception):
+        fert.freeze(poison, tk.FROZEN_MERGES[:5])
+    assert report(fert.check_batch(batch)) == want
+
+
 def test_fertility_alarm_retrain_refreeze_loop(spark, tmp_path):
     """r14 (VERDICT task 3): the tokenizer loop CLOSES — calm batches
     pass, a drifted corpus flags, ``remediate`` retrains from the landed
