@@ -352,8 +352,8 @@ def main() -> None:
     # like any suite query. Its code never changes across rounds, so any
     # cross-round movement in `calibration` is the HOST, not the engine;
     # adjudicate per-query deltas against calibration drift first
-    # (docs/SCALE.md "Cross-round adjudication") before re-benching old
-    # commits by hand.
+    # (docs/bench/ADJUDICATION.md "Cross-round adjudication") before
+    # re-benching old commits by hand.
     def calib_probe() -> float:
         c0 = time.perf_counter()
         (

@@ -80,7 +80,7 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     mode = spark.conf.get(MATERIALIZE_MODE_KEY, "local")
     if mode == "reliable":
         sc = spark.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
+        if sc.getCheckpointDir() is None:
             ckdir = spark.conf.get(CHECKPOINT_DIR_KEY, None)
             if not ckdir:
                 raise ValueError(

@@ -107,27 +107,13 @@ def cosine_topk_batch(
     (measured at 64 queries × 5000 vectors, sf0.1: 0.8 s Arrow vs 2.7 s
     JVM fold — the gap widens linearly with n_queries).
     """
-    from pyspark.sql.window import Window
-
     if arrow:
         qrows = queries.select(q_id_col, q_vec_col).collect()  # broadcast-small by contract
         if not qrows:
             # the JVM twin yields an empty frame here (empty broadcast
             # side); np.stack([]) would crash — the two documented-
             # interchangeable forms must agree on the degenerate input
-            from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
-
-            return df.sparkSession.createDataFrame(
-                [],
-                StructType(
-                    [
-                        queries.schema[q_id_col],
-                        df.schema[id_col],
-                        StructField("score", DoubleType()),
-                        StructField("rn", IntegerType()),
-                    ]
-                ),
-            )
+            return _empty_topk(df, queries, q_id_col, id_col)
         qids = [r[q_id_col] for r in qrows]
         qmat = np.stack([np.asarray(r[q_vec_col], dtype="float64") for r in qrows])
         q_hat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
@@ -160,12 +146,64 @@ def cosine_topk_batch(
                 F.round(cosine(F.col(vec_col), F.col(q_vec_col)), 6).alias("score"),
             )
         )
+    return top_per_query(scored, k, q_id_col, id_col)
+
+
+def _empty_topk(df: DataFrame, queries: DataFrame, q_id_col: str, id_col: str) -> DataFrame:
+    """The empty (query, id, score, rn) result of a batched top-k."""
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
+
+    return df.sparkSession.createDataFrame(
+        [],
+        StructType(
+            [
+                queries.schema[q_id_col],
+                df.schema[id_col],
+                StructField("score", DoubleType()),
+                StructField("rn", IntegerType()),
+            ]
+        ),
+    )
+
+
+def top_per_query(
+    scored: DataFrame, k: int, q_id_col: str = "query_id", id_col: str = "vec_id"
+) -> DataFrame:
+    """The ``k`` best ``score`` rows per query as (query, id, score, rn):
+    a ``row_number() <= k`` window with the id tiebreak, which Spark
+    plans as ``WindowGroupLimit`` Partial below the exchange and Final
+    above it, so only n_partitions × n_queries × k rows shuffle."""
+    from pyspark.sql.window import Window
+
     w = Window.partitionBy(q_id_col).orderBy(F.col("score").desc(), F.col(id_col))
     return (
         scored.withColumn("rn", F.row_number().over(w).cast("int"))
         .where(F.col("rn") <= k)
         .select(q_id_col, id_col, "score", "rn")
     )
+
+
+def single_query(batch: DataFrame, k: int, id_col: str = "vec_id") -> DataFrame:
+    """The (id, score) rows of a one-query batched top-k, in rank order.
+    ``limit(k)`` (a no-op on rn ≤ k) plans the sort as
+    TakeOrderedAndProject instead of a sampled range exchange."""
+    return batch.orderBy("rn").select(id_col, "score").limit(k)
+
+
+def probe_cells(
+    centroids: list[list[float]], query_vecs: list[list[float]], nprobe: int
+) -> list[list[int]]:
+    """Each query's ``nprobe`` probe cells, best first: the centroids with
+    the highest cosine to the query (O(n_cells × dim) per query, on the
+    driver)."""
+    c = np.array(centroids, dtype="float64")
+    c_hat = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
+    cells = []
+    for qv in query_vecs:
+        q = np.asarray(qv, dtype="float64")
+        q_hat = q / max(float(np.linalg.norm(q)), 1e-12)
+        cells.append([int(x) for x in np.argsort(-(c_hat @ q_hat))[:nprobe]])
+    return cells
 
 
 # ---------------------------------------------------------------------------
@@ -400,27 +438,15 @@ def cosine_topk_ivf(
     cells, so ids dedup before scoring). Here the index is built on the
     fly; at scale it is precomputed and ``cell`` is the partition key, so
     the probe reads ``nprobe·n_assign/n_cells`` of the data — the IVF
-    complement to the hyperplane-LSH path above."""
-    from pyspark import StorageLevel
-
-    # the on-the-fly build reads the input three times (seed pick, refine
-    # assignment, probe assignment) — persist the projected frame so the
-    # upstream lineage executes once, same discipline as the near-dup
-    # signature table (MEMORY_AND_DISK is eviction-safe under pressure)
-    base = df.select(id_col, vec_col).persist(StorageLevel.MEMORY_AND_DISK)
-    centroids = ivf_centroids(base, n_cells, vec_col, id_col)
-    c = np.array(centroids, dtype="float64")
-    c_hat = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-    q = np.array(query_vec, dtype="float64")
-    q_hat = q / max(float(np.linalg.norm(q)), 1e-12)
-    probe = np.argsort(-(c_hat @ q_hat))[:nprobe].tolist()
-    assigned = ivf_assign(base, centroids, vec_col, n_assign=n_assign)
-    pruned = assigned.where(F.col("cell").isin([int(p) for p in probe]))
-    if n_assign > 1:
-        pruned = pruned.dropDuplicates([id_col])
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-    scored = pruned.select(F.col(id_col), F.round(cosine(F.col(vec_col), qcol), 6).alias("score"))
-    return scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
+    complement to the hyperplane-LSH path above. Runs as a one-query
+    ``cosine_topk_ivf_batch``, so both forms share every rule."""
+    queries = df.sparkSession.createDataFrame(
+        [(0, [float(x) for x in query_vec])], "query_id long, query_vec array<double>"
+    )
+    batch = cosine_topk_ivf_batch(
+        df, queries, k, vec_col, id_col, n_cells=n_cells, nprobe=nprobe, n_assign=n_assign
+    )
+    return single_query(batch, k, id_col)
 
 
 def cosine_topk_ivf_batch(
@@ -463,31 +489,24 @@ def cosine_topk_ivf_batch(
         StructField,
         StructType,
     )
-    from pyspark.sql.window import Window
 
+    # the on-the-fly build reads the input three times (seed pick, refine
+    # assignment, probe assignment) — persist the projected frame so the
+    # upstream lineage executes once, same discipline as the near-dup
+    # signature table (MEMORY_AND_DISK is eviction-safe under pressure)
     base = df.select(id_col, vec_col).persist(StorageLevel.MEMORY_AND_DISK)
     centroids = ivf_centroids(base, n_cells, vec_col, id_col)
     qrows = queries.select(q_id_col, q_vec_col).collect()
-    empty_schema = StructType(
-        [
-            queries.schema[q_id_col],
-            df.schema[id_col],
-            StructField("score", DoubleType()),
-            StructField("rn", IntegerType()),
-        ]
-    )
     if not centroids or not qrows:
         # empty corpus (no quantizer) or empty query batch: both
         # degenerate to the empty result frame, matching cosine_topk_batch
-        return df.sparkSession.createDataFrame([], empty_schema)
-    c = np.array(centroids, dtype="float64")
-    c_hat = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-    probe_rows = []
-    for r in qrows:
-        q = np.asarray(r[q_vec_col], dtype="float64")
-        q_hat = q / max(float(np.linalg.norm(q)), 1e-12)
-        for cell in np.argsort(-(c_hat @ q_hat))[:nprobe]:
-            probe_rows.append((r[q_id_col], [float(x) for x in r[q_vec_col]], int(cell)))
+        return _empty_topk(df, queries, q_id_col, id_col)
+    cells = probe_cells(centroids, [r[q_vec_col] for r in qrows], nprobe)
+    probe_rows = [
+        (r[q_id_col], [float(x) for x in r[q_vec_col]], cell)
+        for r, cs in zip(qrows, cells)
+        for cell in cs
+    ]
     probes = df.sparkSession.createDataFrame(
         probe_rows,
         StructType(
@@ -507,12 +526,7 @@ def cosine_topk_ivf_batch(
         id_col,
         F.round(cosine(F.col(vec_col), F.col(q_vec_col)), 6).alias("score"),
     )
-    w = Window.partitionBy(q_id_col).orderBy(F.col("score").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("int"))
-        .where(F.col("rn") <= k)
-        .select(q_id_col, id_col, "score", "rn")
-    )
+    return top_per_query(scored, k, q_id_col, id_col)
 
 
 def quantize_embedding(vec: Column) -> tuple[Column, Column]:
@@ -819,6 +833,38 @@ def pair_cosine_udf():
     return _pair_cos
 
 
+def cell_capped(df: DataFrame, cell: str, max_cell: int | None) -> DataFrame:
+    """``df``'s rows whose ``cell`` holds at most ``max_cell`` rows (all
+    rows when None) — the hot-cell cap of the within-cell pair searches:
+    an over-cap cell's vectors skip the pair search and are all kept, so
+    a degenerate quantizer cannot own one O(n²) task."""
+    if max_cell is None:
+        return df
+    ok = df.groupBy(cell).count().where(F.col("count") <= max_cell).drop("count")
+    return df.join(ok, cell)
+
+
+def within_cell_dups(
+    pool: DataFrame, cell: str, threshold: float, out_col: str
+) -> DataFrame:
+    """The higher id of every same-``cell`` pair of ``pool`` (columns
+    ``_id``, ``_v``, ``cell``) whose cosine reaches ``threshold``, as
+    ``out_col`` — the within-cell self-join of ``semdedup_prune`` and
+    ``IncrementalIvfIndex.dedup_batch`` (lower id kept)."""
+    pair_cos = pair_cosine_udf()
+    a = pool.select(F.col(cell), F.col("_id").alias("_id_a"), F.col("_v").alias("_v_a"))
+    b = pool.select(
+        F.col(cell).alias("_cell_b"),
+        F.col("_id").alias("_id_b"),
+        F.col("_v").alias("_v_b"),
+    )
+    return (
+        a.join(b, (a[cell] == b["_cell_b"]) & (a["_id_a"] < b["_id_b"]))
+        .where(pair_cos(F.col("_v_a"), F.col("_v_b")) >= threshold)
+        .select(F.col("_id_b").alias(out_col))
+    )
+
+
 def semdedup_prune(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -867,28 +913,8 @@ def semdedup_prune(
         .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"), "_cell")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    pool = assigned
-    if max_cell is not None:
-        ok = (
-            assigned.groupBy("_cell").count().where(F.col("count") <= max_cell).drop("count")
-        )
-        pool = assigned.join(ok, "_cell")
-    a = pool.select(
-        F.col("_cell"), F.col("_id").alias("_id_a"), F.col("_v").alias("_v_a")
-    )
-    b = pool.select(
-        F.col("_cell").alias("_cell_b"),
-        F.col("_id").alias("_id_b"),
-        F.col("_v").alias("_v_b"),
-    )
-    _pair_cos = pair_cosine_udf()
-
-    dropped = (
-        a.join(b, (a["_cell"] == b["_cell_b"]) & (a["_id_a"] < b["_id_b"]))
-        .where(_pair_cos(F.col("_v_a"), F.col("_v_b")) >= threshold)
-        .select(F.col("_id_b").alias("_dropped"))
-        .distinct()
-    )
+    pool = cell_capped(assigned, "_cell", max_cell)
+    dropped = within_cell_dups(pool, "_cell", threshold, "_dropped").distinct()
     return (
         df.select(F.col(id_col))
         .join(dropped, F.col(id_col) == F.col("_dropped"), "left")
@@ -1075,6 +1101,21 @@ def pq_encode(
     return df.withColumn(out_col, codes(F.col(vec_col)))
 
 
+def adc_tables(
+    codebooks: list[list[list[float]]], query_vecs: list[list[float]]
+) -> np.ndarray:
+    """Per-query ADC lookup tables, (n_queries, m, ks): ``T[q, s, c]`` is
+    the L2-normalized query's subvector ``s`` dotted with codeword ``c``
+    of subspace ``s``, so a code's ADC score is Σₛ T[q, s, code[s]]."""
+    cb = np.array(codebooks, dtype="float64")  # (m, ks, dsub)
+    m, _, dsub = cb.shape
+    qmat = np.stack([np.asarray(v, dtype="float64") for v in query_vecs])
+    q_hat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
+    return np.stack(
+        [q_hat[:, s * dsub : (s + 1) * dsub] @ cb[s].T for s in range(m)], axis=1
+    )
+
+
 def pq_topk_batch(
     df: DataFrame,
     codebooks: list[list[list[float]]],
@@ -1102,14 +1143,12 @@ def pq_topk_batch(
     ``rescore_from``). Returns (query_id, id, score, rn) with the
     library's determinism: 6-dp rounded exact scores, id tiebreaks."""
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.window import Window
 
     if not codebooks:
         raise ValueError(
             "pq_topk_batch needs trained codebooks (pq_train returned [])"
         )
-    cb = np.array(codebooks, dtype="float64")  # (m, ks, dsub)
-    m, ks, dsub = cb.shape
+    m = len(codebooks)
     qrows = queries.select(q_id_col, q_vec_col).collect()
     if not qrows:
         return (
@@ -1119,12 +1158,7 @@ def pq_topk_batch(
             .limit(0)
         )
     qids = [r[q_id_col] for r in qrows]
-    qmat = np.stack([np.asarray(r[q_vec_col], dtype="float64") for r in qrows])
-    q_hat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-    # ADC tables: T[q, s, c] = q_sub · codeword  -> (nq, m, ks)
-    tables = np.stack(
-        [q_hat[:, s * dsub : (s + 1) * dsub] @ cb[s].T for s in range(m)], axis=1
-    )
+    tables = adc_tables(codebooks, [r[q_vec_col] for r in qrows])
 
     @pandas_udf("array<double>")
     def adc_scores(col: pd.Series) -> pd.Series:
@@ -1139,13 +1173,10 @@ def pq_topk_batch(
     qid_arr = F.array(*[F.lit(q) for q in qids])
     scored = (
         df.select(id_col, adc_scores(F.col(code_col)).alias("_s"))
-        .select(id_col, F.posexplode("_s").alias("_qi", "_adc"))
-        .select(F.element_at(qid_arr, F.col("_qi") + 1).alias(q_id_col), id_col, "_adc")
+        .select(id_col, F.posexplode("_s").alias("_qi", "score"))
+        .select(F.element_at(qid_arr, F.col("_qi") + 1).alias(q_id_col), id_col, "score")
     )
-    w = Window.partitionBy(q_id_col).orderBy(F.col("_adc").desc(), F.col(id_col))
-    cand = scored.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") <= int(rerank)
-    )
+    cand = top_per_query(scored, int(rerank), q_id_col, id_col)
     exact = (
         cand.select(q_id_col, id_col)
         .join(df.select(id_col, vec_col), id_col)
@@ -1156,12 +1187,7 @@ def pq_topk_batch(
             F.round(cosine(F.col(vec_col), F.col(q_vec_col)), 6).alias("score"),
         )
     )
-    w2 = Window.partitionBy(q_id_col).orderBy(F.col("score").desc(), F.col(id_col))
-    return (
-        exact.withColumn("rn", F.row_number().over(w2).cast("int"))
-        .where(F.col("rn") <= k)
-        .select(q_id_col, id_col, "score", "rn")
-    )
+    return top_per_query(exact, k, q_id_col, id_col)
 
 
 # ---------------------------------------------------------------------------

@@ -22,7 +22,8 @@ as ``IncrementalMinhashIndex`` does for text near-dup state:
   ``test_incremental_ivf_probe_partition_pruning``), so a probe reads
   ``nprobe·n_assign/n_cells`` of the index no matter how large it grows.
   Scoring is the exact JVM cosine with the library-wide determinism
-  discipline (6 dp round, id tiebreak).
+  discipline (6 dp round, id tiebreak). ``probe`` is a one-query
+  ``probe_batch``: one implementation of cells, scoring and re-rank.
 
 - **quantized storage** (``store_quantized=True``): index rows carry
   (scale, int8 codes) instead of float32 — ~4× less index on disk and
@@ -49,7 +50,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # pd is module-level on purpose: pandas_udf resolves the (stringified,
@@ -65,6 +66,11 @@ from ..sources.io import (
     staging_sibling,
     write_staged,
 )
+
+
+def _layout(cols: list[str]) -> str:
+    """The stored index layout, read from the index schema."""
+    return "pq" if "pq_code" in cols else "int8" if "q_codes" in cols else "float"
 
 
 class IncrementalIvfIndex:
@@ -133,13 +139,7 @@ class IncrementalIvfIndex:
                 "fit() needs a non-empty bootstrap corpus: zero vectors yield no "
                 "quantizer (an empty first micro-batch must not define the index)"
             )
-        rows = [
-            (int(c), int(p), float(v))
-            for c, row in enumerate(cents)
-            for p, v in enumerate(row)
-        ]
-        cdf = self.spark.createDataFrame(rows, "cell INT, pos INT, value DOUBLE")
-        overwrite_atomic(cdf.coalesce(1), self.centroid_path)
+        cbs = None
         if self.store_pq:
             cbs = simsearch.pq_train(
                 df.select(self.id_col, self.vec_col),
@@ -148,52 +148,64 @@ class IncrementalIvfIndex:
                 vec_col=self.vec_col,
                 id_col=self.id_col,
             )
-            cb_rows = [
-                (int(s), int(c), int(p), float(v))
-                for s, book in enumerate(cbs)
-                for c, word in enumerate(book)
-                for p, v in enumerate(word)
-            ]
-            cb_df = self.spark.createDataFrame(
-                cb_rows, "s INT, c INT, pos INT, value DOUBLE"
-            )
-            overwrite_atomic(cb_df.coalesce(1), self.pq_path)
+        self._save_quantizer(cents, cbs)
         return cents
 
-    def _centroids(self) -> list[list[float]] | None:
-        """The persisted quantizer, or None when never fit. Discovery goes
+    def _save_quantizer(
+        self, cents: list[list[float]], cbs: list[list[list[float]]] | None
+    ) -> None:
+        """Write the centroid table and, for a PQ index, the codebook
+        table, each through the atomic snapshot swap."""
+        cdf = self.spark.createDataFrame(
+            [(c, p, float(v)) for c, row in enumerate(cents) for p, v in enumerate(row)],
+            "cell INT, pos INT, value DOUBLE",
+        )
+        overwrite_atomic(cdf.coalesce(1), self.centroid_path)
+        if cbs is not None:
+            cb_df = self.spark.createDataFrame(
+                [
+                    (s, c, p, float(v))
+                    for s, book in enumerate(cbs)
+                    for c, word in enumerate(book)
+                    for p, v in enumerate(word)
+                ],
+                "s INT, c INT, pos INT, value DOUBLE",
+            )
+            overwrite_atomic(cb_df.coalesce(1), self.pq_path)
+
+    def _read_table(self, path: str, keys: list[str]) -> dict[tuple, list[float]] | None:
+        """A persisted quantizer table's (keys..., pos, value) rows as
+        {key tuple: vector}, or None when never written. Discovery goes
         through the Hadoop FS of the path's scheme (object-store safe,
         same discipline as the other incremental indexes)."""
-        if not fs_dir_has_data(self.spark, self.centroid_path):
+        if not fs_dir_has_data(self.spark, path):
             return None
-        by: dict[int, dict[int, float]] = {}
-        for r in self.spark.read.parquet(self.centroid_path).collect():
-            by.setdefault(r["cell"], {})[r["pos"]] = r["value"]
-        if sorted(by) != list(range(len(by))):
-            raise ValueError(
-                f"corrupt centroid table at {self.centroid_path}: cells {sorted(by)}"
-            )
-        return [[by[c][p] for p in range(len(by[c]))] for c in sorted(by)]
+        by: dict[tuple, dict[int, float]] = {}
+        for r in self.spark.read.parquet(path).collect():
+            by.setdefault(tuple(r[k] for k in keys), {})[r["pos"]] = r["value"]
+        return {key: [vec[p] for p in range(len(vec))] for key, vec in by.items()}
+
+    def _centroids(self) -> list[list[float]] | None:
+        """The persisted quantizer, or None when never fit."""
+        by = self._read_table(self.centroid_path, ["cell"])
+        if by is None:
+            return None
+        cells = sorted(c for c, in by)
+        if cells != list(range(len(by))):
+            raise ValueError(f"corrupt centroid table at {self.centroid_path}: cells {cells}")
+        return [by[(c,)] for c in cells]
 
     def _pq_codebooks(self) -> list[list[list[float]]] | None:
         """The persisted PQ codebooks, or None when never fit with
-        ``store_pq`` (same discovery discipline as ``_centroids``)."""
-        if not fs_dir_has_data(self.spark, self.pq_path):
+        ``store_pq``."""
+        by = self._read_table(self.pq_path, ["s", "c"])
+        if by is None:
             return None
-        by: dict[tuple[int, int], dict[int, float]] = {}
-        for r in self.spark.read.parquet(self.pq_path).collect():
-            by.setdefault((r["s"], r["c"]), {})[r["pos"]] = r["value"]
         n_s = max(k[0] for k in by) + 1
         n_c = max(k[1] for k in by) + 1
         if sorted(by) != [(s, c) for s in range(n_s) for c in range(n_c)]:
             raise ValueError(f"corrupt PQ codebook table at {self.pq_path}")
-        return [
-            [
-                [by[(s, c)][p] for p in range(len(by[(s, c)]))]
-                for c in range(n_c)
-            ]
-            for s in range(n_s)
-        ]
+        return [[by[(s, c)] for c in range(n_c)] for s in range(n_s)]
 
     # -- ingest ------------------------------------------------------------
 
@@ -208,8 +220,7 @@ class IncrementalIvfIndex:
             "pq" if self.store_pq else "int8" if self.store_quantized else "float"
         )
         if fs_dir_has_data(self.spark, self.path):
-            cols = self.spark.read.parquet(self.path).columns
-            stored = "pq" if "pq_code" in cols else "int8" if "q_codes" in cols else "float"
+            stored = _layout(self.spark.read.parquet(self.path).columns)
             if stored != my_layout:
                 # Appending another layout would not fail loudly: probes
                 # auto-detect the layout from the schema, so the minority
@@ -223,24 +234,9 @@ class IncrementalIvfIndex:
                     "path) — mixing layouts makes one layout's vectors "
                     "invisible to probes"
                 )
-        cents = self._centroids()
-        if cents is None:
-            cents = self.fit(df)
-        assigned = simsearch.ivf_assign(
-            df.select(self.id_col, self.vec_col),
-            cents,
-            self.vec_col,
-            out_col="cell",
-            n_assign=self.n_assign,
-        )
-        if self.store_quantized:
-            # Arrow form: quantizing every ingested vector through the
-            # interpreted Column expression would pay rows × dim lambda
-            # dispatches per batch; the numpy pass is bit-identical
-            assigned = simsearch.quantize_embeddings_arrow(assigned, self.vec_col).select(
-                self.id_col, "cell", "q_scale", "q_codes"
-            )
-        elif self.store_pq:
+        cents = self._centroids() or self.fit(df)
+        cbs = None
+        if self.store_pq:
             cbs = self._pq_codebooks()
             if cbs is None:
                 raise ValueError(
@@ -248,10 +244,42 @@ class IncrementalIvfIndex:
                     "index before ingesting (the quantizer fallback fit "
                     "covers them only when fit runs through this writer)"
                 )
-            assigned = simsearch.pq_encode(assigned, cbs, vec_col=self.vec_col).select(
+        rows = self._encode(self._assign(df, cents), my_layout, cbs)
+        rows.write.mode("append").partitionBy("cell").parquet(self.path)
+
+    def _assign(self, df: DataFrame, cents: list[list[float]]) -> DataFrame:
+        """(id, vec, cell): ``df`` assigned to its ``n_assign`` nearest cells."""
+        return simsearch.ivf_assign(
+            df.select(self.id_col, self.vec_col),
+            cents,
+            self.vec_col,
+            out_col="cell",
+            n_assign=self.n_assign,
+        )
+
+    def _encode(
+        self, assigned: DataFrame, layout: str, cbs: list[list[list[float]]] | None
+    ) -> DataFrame:
+        """Index rows in ``layout`` from (id, vec, cell) rows. The int8
+        form quantizes through the Arrow pass: the interpreted Column
+        expression would pay rows × dim lambda dispatches per batch, and
+        the numpy pass is bit-identical."""
+        if layout == "int8":
+            return simsearch.quantize_embeddings_arrow(assigned, self.vec_col).select(
+                self.id_col, "cell", "q_scale", "q_codes"
+            )
+        if layout == "pq":
+            return simsearch.pq_encode(assigned, cbs, vec_col=self.vec_col).select(
                 self.id_col, "cell", "pq_code"
             )
-        assigned.write.mode("append").partitionBy("cell").parquet(self.path)
+        return assigned
+
+    def _stored_vec(self, layout: str) -> Column:
+        """The vector an index row stores: dequantized for int8 (error ≤
+        scale/2 per element), the raw vector for float."""
+        if layout == "int8":
+            return simsearch.dequantize_embedding(F.col("q_codes"), F.col("q_scale"))
+        return F.col(self.vec_col)
 
     def dedup_batch(
         self,
@@ -296,17 +324,9 @@ class IncrementalIvfIndex:
             return df
         from pyspark import StorageLevel
 
-        cents = self._centroids()
-        if cents is None:
-            cents = self.fit(df)
+        cents = self._centroids() or self.fit(df)
         assigned = (
-            simsearch.ivf_assign(
-                df.select(self.id_col, self.vec_col),
-                cents,
-                self.vec_col,
-                out_col="cell",
-                n_assign=self.n_assign,
-            )
+            self._assign(df, cents)
             .select(
                 F.col(self.id_col).alias("_id"),
                 F.col(self.vec_col).alias("_v"),
@@ -314,56 +334,22 @@ class IncrementalIvfIndex:
             )
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        pair_cos = simsearch.pair_cosine_udf()
-
-        pool = assigned
-        if max_cell is not None:
-            ok = (
-                assigned.groupBy("cell")
-                .count()
-                .where(F.col("count") <= max_cell)
-                .drop("count")
-            )
-            pool = assigned.join(ok, "cell")
-        a = pool.select("cell", F.col("_id").alias("_id_a"), F.col("_v").alias("_v_a"))
-        b = pool.select(
-            F.col("cell").alias("_cell_b"),
-            F.col("_id").alias("_id_b"),
-            F.col("_v").alias("_v_b"),
-        )
-        dropped_within = (
-            a.join(b, (a["cell"] == b["_cell_b"]) & (a["_id_a"] < b["_id_b"]))
-            .where(pair_cos(F.col("_v_a"), F.col("_v_b")) >= threshold)
-            .select(F.col("_id_b").alias("_rej"))
-        )
-
-        rejected = dropped_within
+        pool = simsearch.cell_capped(assigned, "cell", max_cell)
+        rejected = simsearch.within_cell_dups(pool, "cell", threshold, "_rej")
         if fs_dir_has_data(self.spark, self.path):
             idx = self.spark.read.parquet(self.path)
-            if "q_codes" in idx.columns:
-                landed_vec = simsearch.dequantize_embedding(
-                    F.col("q_codes"), F.col("q_scale")
-                )
-            else:
-                landed_vec = F.col(self.vec_col)
             landed = idx.select(
                 "cell",
                 F.col(self.id_col).alias("_lid"),
-                landed_vec.alias("_lv"),
+                self._stored_vec(_layout(idx.columns)).alias("_lv"),
             )
-            if max_cell is not None:
-                lok = (
-                    landed.groupBy("cell")
-                    .count()
-                    .where(F.col("count") <= max_cell)
-                    .drop("count")
-                )
-                landed = landed.join(lok, "cell")
+            landed = simsearch.cell_capped(landed, "cell", max_cell)
             # batch side uses the CAPPED pool (r14, ADVICE): the
             # docstring's contract is that max_cell exempts over-cap
             # cells from BOTH pair searches — joining the uncapped
             # `assigned` here priced a hot batch cell against landed
             # rows while the within-batch search had already skipped it
+            pair_cos = simsearch.pair_cosine_udf()
             dropped_landed = (
                 pool.join(landed, "cell")
                 .where(F.col("_id") != F.col("_lid"))  # replay: never self
@@ -455,84 +441,12 @@ class IncrementalIvfIndex:
         against the corpus scan, the IVF-PQ re-rank shape — and the final
         top-k is exact as long as the true top-k survives the candidate
         cut (quantization error would need to demote a true neighbor past
-        ``(overfetch-1)·k`` impostors for a miss)."""
-        cents = self._centroids()
-        if cents is None:
-            raise ValueError(f"no quantizer at {self.centroid_path}: fit() or ingest first")
-        if not fs_dir_has_data(self.spark, self.path):
-            raise ValueError(
-                f"no index rows at {self.path}: the quantizer exists but nothing "
-                "was ever ingested (or the first append crashed before commit)"
-            )
-        c = np.array(cents, dtype="float64")
-        c_hat = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-        q = np.array(query_vec, dtype="float64")
-        q_hat = q / max(float(np.linalg.norm(q)), 1e-12)
-        cells = [int(x) for x in np.argsort(-(c_hat @ q_hat))[:nprobe]]
-        idx = (
-            self.spark.read.parquet(self.path)
-            .where(F.col("cell").isin(cells))
-            .dropDuplicates([self.id_col])
-        )
-        qcol = F.array(*[F.lit(float(x)) for x in query_vec])
-        if "pq_code" in idx.columns:
-            # PQ tier: rank candidates by ADC — the per-subspace lookup
-            # tables are literal arrays, so scoring is pure JVM
-            # element_at gathers over the m-int code column (no vector
-            # bytes read, no Python). ADC is a rank-only approximation:
-            # the exact re-rank is mandatory, per the published pipeline.
-            if rescore_from is None:
-                raise ValueError(
-                    "a PQ index probe requires rescore_from: ADC scores "
-                    "order candidates but are not cosines — the exact "
-                    "re-rank is part of the IVF-PQ pipeline, not optional"
-                )
-            cbs = self._pq_codebooks()
-            if cbs is None:
-                raise ValueError(f"no PQ codebooks at {self.pq_path}")
-            cb = np.array(cbs, dtype="float64")  # (m, ks, dsub)
-            m, _, dsub = cb.shape
-            tables = [q_hat[s * dsub : (s + 1) * dsub] @ cb[s].T for s in range(m)]
-            adc = None
-            for s in range(m):
-                t_arr = F.array(*[F.lit(float(v)) for v in tables[s]])
-                term = F.element_at(
-                    t_arr, (F.element_at("pq_code", s + 1) + 1).cast("int")
-                )
-                adc = term if adc is None else adc + term
-            cand_ids = (
-                idx.select(self.id_col, adc.alias("_adc"))
-                .orderBy(F.col("_adc").desc(), F.col(self.id_col))
-                .limit(overfetch * k)
-                .select(self.id_col)
-            )
-            exact = rescore_from.join(F.broadcast(cand_ids), self.id_col).select(
-                F.col(self.id_col),
-                F.round(simsearch.cosine(F.col(self.vec_col), qcol), 6).alias("score"),
-            )
-            return exact.orderBy(F.col("score").desc(), F.col(self.id_col)).limit(k)
-        quantized = "q_codes" in idx.columns
-        vec = (
-            simsearch.dequantize_embedding(F.col("q_codes"), F.col("q_scale"))
-            if quantized
-            else F.col(self.vec_col)
-        )
-        scored = idx.select(
-            F.col(self.id_col),
-            F.round(simsearch.cosine(vec, qcol), 6).alias("score"),
-        )
-        if rescore_from is None:
-            return scored.orderBy(F.col("score").desc(), F.col(self.id_col)).limit(k)
-        cand_ids = (
-            scored.orderBy(F.col("score").desc(), F.col(self.id_col))
-            .limit(overfetch * k)
-            .select(self.id_col)
-        )
-        exact = rescore_from.join(F.broadcast(cand_ids), self.id_col).select(
-            F.col(self.id_col),
-            F.round(simsearch.cosine(F.col(self.vec_col), qcol), 6).alias("score"),
-        )
-        return exact.orderBy(F.col("score").desc(), F.col(self.id_col)).limit(k)
+        ``(overfetch-1)·k`` impostors for a miss).
+
+        Runs as a one-query ``probe_batch``, so both forms share every
+        rule (cells, layout, scoring, re-rank)."""
+        batch = self.probe_batch([(0, query_vec)], k, nprobe, rescore_from, overfetch)
+        return simsearch.single_query(batch, k, self.id_col)
 
     def probe_batch(
         self,
@@ -544,18 +458,23 @@ class IncrementalIvfIndex:
     ) -> DataFrame:
         """Many probes in ONE index pass — the bulk-decontamination shape.
 
-        Each query still sees only its own ``nprobe`` nearest cells (same
-        semantics as N ``probe`` calls, pinned by test): the scan prunes
-        to the UNION of probed cells (PartitionFilter), then a broadcast
-        (query, cell) pair table restricts each query to its cells, and a
-        per-query ``row_number`` window — bounded by the rank-limit
-        pushdown exactly as in ``cosine_topk_batch`` — yields the top-k.
-        Returns (query_id, id, score, rn)."""
+        Each query sees only its own ``nprobe`` nearest cells: the scan
+        prunes to the UNION of probed cells (PartitionFilter), then a
+        broadcast (query, cell) pair table restricts each query to its
+        cells, and a per-query ``row_number`` window — bounded by the
+        rank-limit pushdown exactly as in ``cosine_topk_batch`` — yields
+        the top-k. ``rescore_from`` re-ranks each query's ``overfetch×k``
+        best candidates by exact cosine on every layout; a PQ index
+        requires it (ADC scores are rank-only). Returns (query_id, id,
+        score, rn)."""
         cents = self._centroids()
         if cents is None:
             raise ValueError(f"no quantizer at {self.centroid_path}: fit() or ingest first")
         if not fs_dir_has_data(self.spark, self.path):
-            raise ValueError(f"no index rows at {self.path}: ingest before probing")
+            raise ValueError(
+                f"no index rows at {self.path}: the quantizer exists but nothing "
+                "was ever ingested (or the first append crashed before commit)"
+            )
         if not queries:
             raise ValueError("probe_batch needs at least one query")
         if len({qid for qid, _ in queries}) != len(queries):
@@ -563,55 +482,41 @@ class IncrementalIvfIndex:
                 "duplicate query ids: each id labels one result group, so a "
                 "repeat would silently fan out the score join"
             )
-        c = np.array(cents, dtype="float64")
-        c_hat = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
-        pairs = []
-        for qid, qv in queries:
-            q = np.array(qv, dtype="float64")
-            q_hat = q / max(float(np.linalg.norm(q)), 1e-12)
-            for cell in np.argsort(-(c_hat @ q_hat))[:nprobe]:
-                pairs.append((int(qid), int(cell)))
-        all_cells = sorted({cell for _, cell in pairs})
+        idx = self.spark.read.parquet(self.path)
+        layout = _layout(idx.columns)
+        if layout == "pq" and rescore_from is None:
+            raise ValueError(
+                "a PQ index probe requires rescore_from: ADC scores order "
+                "candidates but are not cosines — the exact re-rank is part "
+                "of the IVF-PQ pipeline, not optional"
+            )
+        qvecs = [qv for _, qv in queries]
+        pairs = [
+            (int(qid), cell)
+            for (qid, _), cells in zip(queries, simsearch.probe_cells(cents, qvecs, nprobe))
+            for cell in cells
+        ]
         pair_df = self.spark.createDataFrame(pairs, "query_id long, cell int")
         qvec_df = self.spark.createDataFrame(
             [(int(qid), [float(x) for x in qv]) for qid, qv in queries],
             "query_id long, query_vec array<double>",
         )
-
         idx = (
-            self.spark.read.parquet(self.path)
-            .where(F.col("cell").isin(all_cells))
+            idx.where(F.col("cell").isin(sorted({cell for _, cell in pairs})))
             .join(F.broadcast(pair_df), "cell")
             .dropDuplicates(["query_id", self.id_col])
         )
-        from pyspark.sql.window import Window
-
-        if "pq_code" in idx.columns:
-            # PQ tier, batched: per-query ADC tables stacked into one
-            # (nq, m, ks) closure-broadcast array; each (query, code) row
-            # scores through one Arrow gather. Exact re-rank mandatory.
-            if rescore_from is None:
-                raise ValueError(
-                    "a PQ index probe_batch requires rescore_from: ADC "
-                    "scores order candidates but are not cosines"
-                )
+        if layout == "pq":
             cbs = self._pq_codebooks()
             if cbs is None:
                 raise ValueError(f"no PQ codebooks at {self.pq_path}")
-            cb = np.array(cbs, dtype="float64")
-            m, _, dsub = cb.shape
-            qid_list = [int(qid) for qid, _ in queries]
-            qmat = np.stack([np.asarray(qv, dtype="float64") for _, qv in queries])
-            qm_hat = qmat / np.maximum(
-                np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12
-            )
-            tables = np.stack(
-                [qm_hat[:, s * dsub : (s + 1) * dsub] @ cb[s].T for s in range(m)],
-                axis=1,
-            )  # (nq, m, ks)
-            qi_map = {qid: i for i, qid in enumerate(qid_list)}
+            # ADC: the per-query tables stack into one (nq, m, ks)
+            # closure-broadcast array; each (query, code) row scores
+            # through one Arrow gather — no vector bytes read
+            tables = simsearch.adc_tables(cbs, qvecs)
             qi_df = self.spark.createDataFrame(
-                list(qi_map.items()), "query_id long, _qi int"
+                [(int(qid), i) for i, (qid, _) in enumerate(queries)],
+                "query_id long, _qi int",
             )
 
             from pyspark.sql.functions import pandas_udf
@@ -623,51 +528,38 @@ class IncrementalIvfIndex:
                 q_idx = qi.to_numpy().astype("int64")
                 codes = np.stack(code.to_numpy()).astype("int64")
                 out = np.zeros(len(q_idx), dtype="float64")
-                for s in range(m):
+                for s in range(tables.shape[1]):
                     out += tables[q_idx, s, codes[:, s]]
                 return pd.Series(out)
 
-            ranked = (
-                idx.join(F.broadcast(qi_df), "query_id")
-                .select("query_id", self.id_col, adc("_qi", "pq_code").alias("_adc"))
+            scored = idx.join(F.broadcast(qi_df), "query_id").select(
+                "query_id", self.id_col, adc("_qi", "pq_code").alias("score")
             )
-            wa = Window.partitionBy("query_id").orderBy(
-                F.col("_adc").desc(), F.col(self.id_col)
+        else:
+            scored = idx.join(F.broadcast(qvec_df), "query_id").select(
+                "query_id",
+                self.id_col,
+                F.round(
+                    simsearch.cosine(self._stored_vec(layout), F.col("query_vec")), 6
+                ).alias("score"),
             )
-            cand = (
-                ranked.withColumn("_rn", F.row_number().over(wa))
-                .where(F.col("_rn") <= overfetch * k)
-                .select("query_id", self.id_col)
-            )
+        if rescore_from is not None:
+            cand = simsearch.top_per_query(
+                scored, overfetch * k, "query_id", self.id_col
+            ).select("query_id", self.id_col)
             scored = (
-                cand.join(rescore_from.select(self.id_col, self.vec_col), self.id_col)
+                rescore_from.select(self.id_col, self.vec_col)
+                .join(F.broadcast(cand), self.id_col)
                 .join(F.broadcast(qvec_df), "query_id")
                 .select(
                     "query_id",
-                    F.col(self.id_col),
+                    self.id_col,
                     F.round(
                         simsearch.cosine(F.col(self.vec_col), F.col("query_vec")), 6
                     ).alias("score"),
                 )
             )
-        else:
-            quantized = "q_codes" in idx.columns
-            vec = (
-                simsearch.dequantize_embedding(F.col("q_codes"), F.col("q_scale"))
-                if quantized
-                else F.col(self.vec_col)
-            )
-            scored = idx.join(F.broadcast(qvec_df), "query_id").select(
-                "query_id",
-                F.col(self.id_col),
-                F.round(simsearch.cosine(vec, F.col("query_vec")), 6).alias("score"),
-            )
-        w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(self.id_col))
-        return (
-            scored.withColumn("rn", F.row_number().over(w).cast("int"))
-            .where(F.col("rn") <= k)
-            .select("query_id", self.id_col, "score", "rn")
-        )
+        return simsearch.top_per_query(scored, k, "query_id", self.id_col)
 
     # -- maintenance -------------------------------------------------------
 
@@ -711,81 +603,38 @@ class IncrementalIvfIndex:
                 f"rebuild needs a non-empty index at {self.path}: nothing to migrate"
             )
         idx = self.spark.read.parquet(self.path)
-        stored_pq = "pq_code" in idx.columns
-        stored_int8 = "q_codes" in idx.columns
+        layout = _layout(idx.columns)
         rows = idx.drop("cell").dropDuplicates([self.id_col])
-        if vectors is None:
-            if stored_pq:
-                raise ValueError(
-                    "a PQ index stores rank-only codes and no vectors to "
-                    "re-assign from — pass vectors= (the exact corpus, "
-                    "re-embedded if the encoder moved) to rebuild it"
-                )
-            if stored_int8:
-                src = rows.select(
-                    F.col(self.id_col),
-                    simsearch.dequantize_embedding(
-                        F.col("q_codes"), F.col("q_scale")
-                    ).alias(self.vec_col),
-                )
-            else:
-                src = rows.select(self.id_col, self.vec_col)
-        else:
+        if vectors is not None:
             src = vectors.select(self.id_col, self.vec_col)
-        cents = simsearch.ivf_centroids(
-            src, self.n_cells, self.vec_col, self.id_col
-        )
+        elif layout == "pq":
+            raise ValueError(
+                "a PQ index stores rank-only codes and no vectors to "
+                "re-assign from — pass vectors= (the exact corpus, "
+                "re-embedded if the encoder moved) to rebuild it"
+            )
+        else:
+            src = rows.select(self.id_col, self._stored_vec(layout).alias(self.vec_col))
+        cents = simsearch.ivf_centroids(src, self.n_cells, self.vec_col, self.id_col)
         if not cents:
             raise ValueError("rebuild found zero vectors to re-fit the quantizer from")
-        assigned = simsearch.ivf_assign(
-            src, cents, self.vec_col, out_col="cell", n_assign=self.n_assign
-        )
+        assigned = self._assign(src, cents)
         cbs = None
-        if vectors is None:
-            if stored_int8:
-                # migrate: new cell, original (scale, codes) — no
-                # quantize→dequantize round trip touches the payload
-                new_rows = rows.select(self.id_col, "q_scale", "q_codes").join(
-                    assigned.select(self.id_col, "cell"), self.id_col
-                )
-            else:
-                new_rows = assigned
+        if vectors is None and layout == "int8":
+            # migrate: new cell, original (scale, codes) — no
+            # quantize→dequantize round trip touches the payload
+            new_rows = rows.select(self.id_col, "q_scale", "q_codes").join(
+                assigned.select(self.id_col, "cell"), self.id_col
+            )
         else:
-            if stored_int8:
-                new_rows = simsearch.quantize_embeddings_arrow(
-                    assigned, self.vec_col
-                ).select(self.id_col, "cell", "q_scale", "q_codes")
-            elif stored_pq:
+            if layout == "pq":
                 cbs = simsearch.pq_train(
                     src, m=self.pq_m, ks=self.pq_ks,
                     vec_col=self.vec_col, id_col=self.id_col,
                 )
-                new_rows = simsearch.pq_encode(
-                    assigned, cbs, vec_col=self.vec_col
-                ).select(self.id_col, "cell", "pq_code")
-            else:
-                new_rows = assigned
+            new_rows = self._encode(assigned, layout, cbs)
         self._swap_in(new_rows)
-        cdf = self.spark.createDataFrame(
-            [
-                (int(c), int(p), float(v))
-                for c, row in enumerate(cents)
-                for p, v in enumerate(row)
-            ],
-            "cell INT, pos INT, value DOUBLE",
-        )
-        overwrite_atomic(cdf.coalesce(1), self.centroid_path)
-        if cbs is not None:
-            cb_df = self.spark.createDataFrame(
-                [
-                    (int(s), int(c), int(p), float(v))
-                    for s, book in enumerate(cbs)
-                    for c, word in enumerate(book)
-                    for p, v in enumerate(word)
-                ],
-                "s INT, c INT, pos INT, value DOUBLE",
-            )
-            overwrite_atomic(cb_df.coalesce(1), self.pq_path)
+        self._save_quantizer(cents, cbs)
 
     def compact(self) -> None:
         """Rewrite the index with replay-duplicated rows collapsed per

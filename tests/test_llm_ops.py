@@ -1363,10 +1363,39 @@ def _embed_queries(spark, n=4):
     return e, qs
 
 
+def _reference_cosine_topk_ivf(df, query_vec, k=10, n_cells=16, nprobe=4, n_assign=1):
+    """Independent single-query IVF top-k, the reference the batched form
+    is pinned against: driver-side cell ranking, a literal-array JVM
+    cosine over the probed cells, ``orderBy/limit`` top-k."""
+    import numpy as np
+
+    from simple_pos_kafka_pyspark_airflow_spark.llm import simsearch
+
+    base = df.select("vec_id", "embedding")
+    centroids = simsearch.ivf_centroids(base, n_cells)
+    c = np.array(centroids, dtype="float64")
+    c_hat = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
+    q = np.array(query_vec, dtype="float64")
+    q_hat = q / max(float(np.linalg.norm(q)), 1e-12)
+    probe = [int(p) for p in np.argsort(-(c_hat @ q_hat))[:nprobe]]
+    pruned = simsearch.ivf_assign(base, centroids, n_assign=n_assign).where(
+        F.col("cell").isin(probe)
+    )
+    if n_assign > 1:
+        pruned = pruned.dropDuplicates(["vec_id"])
+    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
+    scored = pruned.select(
+        "vec_id", F.round(simsearch.cosine(F.col("embedding"), qcol), 6).alias("score")
+    )
+    return scored.orderBy(F.col("score").desc(), F.col("vec_id")).limit(k)
+
+
 def test_ivf_batch_matches_single_query_form(spark):
     """The batched probe must return exactly what n independent
-    single-query probes return (same quantizer params ⇒ same cells ⇒
-    same candidates ⇒ same rounded-score/id-tiebreak top-k)."""
+    single-query probes (the test-local reference) return (same
+    quantizer params ⇒ same cells ⇒ same candidates ⇒ same
+    rounded-score/id-tiebreak top-k); the library's single-query form,
+    a one-query batch, must equal the reference too."""
     from simple_pos_kafka_pyspark_airflow_spark.llm import simsearch
 
     e, qs = _embed_queries(spark, n=3)
@@ -1377,11 +1406,13 @@ def test_ivf_batch_matches_single_query_form(spark):
         ).collect()
     }
     for q in qs.collect():
-        single = simsearch.cosine_topk_ivf(
+        single = _reference_cosine_topk_ivf(
             e, list(q["query_vec"]), k=5, n_cells=8, nprobe=3
         ).collect()
         for rn, row in enumerate(single, start=1):
             assert batch[(q["query_id"], rn)] == row["vec_id"]
+        lib = simsearch.cosine_topk_ivf(e, list(q["query_vec"]), k=5, n_cells=8, nprobe=3)
+        assert lib.collect() == single
 
 
 def test_ivf_batch_full_probe_equals_exact_batch(spark):
@@ -1397,12 +1428,23 @@ def test_ivf_batch_full_probe_equals_exact_batch(spark):
 
 
 def test_ivf_batch_empty_queries_yields_empty_frame(spark):
+    """An empty query batch or an empty corpus (no quantizer) yields an
+    empty frame with the usual columns, from both IVF forms."""
     from simple_pos_kafka_pyspark_airflow_spark.llm import simsearch
 
     e, qs = _embed_queries(spark)
     out = simsearch.cosine_topk_ivf_batch(e, qs.where(F.lit(False)), k=5)
     assert out.columns == ["query_id", "vec_id", "score", "rn"]
     assert out.count() == 0
+
+    empty = e.where(F.lit(False))
+    out = simsearch.cosine_topk_ivf_batch(empty, qs, k=5)
+    assert out.columns == ["query_id", "vec_id", "score", "rn"]
+    assert out.count() == 0
+    q = list(qs.first()["query_vec"])
+    single = simsearch.cosine_topk_ivf(empty, q, k=5)
+    assert single.columns == ["vec_id", "score"]
+    assert single.count() == 0
 
 
 def test_shard_export_writes_one_file_per_shard(spark, tmp_path):
@@ -2417,7 +2459,7 @@ def test_materialize_reliable_mode_needs_a_dir(spark):
         materialize,
     )
 
-    if not spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
+    if spark.sparkContext.getCheckpointDir() is not None:
         _pytest.skip("session already has a checkpoint dir")
     spark.conf.set(MATERIALIZE_MODE_KEY, "reliable")
     try:

@@ -2017,9 +2017,63 @@ def test_kafka_value_path_documents_into_digest_index(spark, tmp_path):
     ) == [10]
 
 
+def _reference_probe(idx, query_vec, k=10, nprobe=4, rescore_from=None, overfetch=4):
+    """Independent single-query IVF probe, the reference ``probe_batch`` is
+    pinned against: driver-side cell ranking, literal-array JVM cosine,
+    JVM ``element_at`` ADC gathers on a PQ index, and an ``orderBy/limit``
+    candidate cut + exact re-rank when ``rescore_from`` is given."""
+    import numpy as np
+
+    from simple_pos_kafka_pyspark_airflow_spark.llm import simsearch
+
+    cents = idx._centroids()
+    c = np.array(cents, dtype="float64")
+    c_hat = c / np.maximum(np.linalg.norm(c, axis=1, keepdims=True), 1e-12)
+    q = np.array(query_vec, dtype="float64")
+    q_hat = q / max(float(np.linalg.norm(q)), 1e-12)
+    cells = [int(x) for x in np.argsort(-(c_hat @ q_hat))[:nprobe]]
+    rows = (
+        idx.spark.read.parquet(idx.path)
+        .where(F.col("cell").isin(cells))
+        .dropDuplicates([idx.id_col])
+    )
+    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
+    if "pq_code" in rows.columns:
+        cb = np.array(idx._pq_codebooks(), dtype="float64")  # (m, ks, dsub)
+        m, _, dsub = cb.shape
+        tables = [q_hat[s * dsub : (s + 1) * dsub] @ cb[s].T for s in range(m)]
+        score = None
+        for s in range(m):
+            t_arr = F.array(*[F.lit(float(v)) for v in tables[s]])
+            term = F.element_at(t_arr, (F.element_at("pq_code", s + 1) + 1).cast("int"))
+            score = term if score is None else score + term
+    else:
+        vec = (
+            simsearch.dequantize_embedding(F.col("q_codes"), F.col("q_scale"))
+            if "q_codes" in rows.columns
+            else F.col(idx.vec_col)
+        )
+        score = F.round(simsearch.cosine(vec, qcol), 6)
+    scored = rows.select(F.col(idx.id_col), score.alias("score"))
+    if rescore_from is not None:
+        cand_ids = (
+            scored.orderBy(F.col("score").desc(), F.col(idx.id_col))
+            .limit(overfetch * k)
+            .select(idx.id_col)
+        )
+        scored = rescore_from.join(F.broadcast(cand_ids), idx.id_col).select(
+            F.col(idx.id_col),
+            F.round(simsearch.cosine(F.col(idx.vec_col), qcol), 6).alias("score"),
+        )
+    return scored.orderBy(F.col("score").desc(), F.col(idx.id_col)).limit(k)
+
+
 def test_incremental_ivf_probe_batch_matches_per_query_probes(spark, tmp_path):
-    """probe_batch must equal N independent probe() calls query-by-query —
-    same ids, scores, and ranks — on both float and quantized indexes."""
+    """probe_batch must equal N independent single-query probes (the
+    test-local reference) query-by-query — same ids, scores, and ranks —
+    on both float and quantized indexes, and on the int8 index with the
+    exact ``rescore_from`` re-rank as well; ``probe`` must equal the
+    reference too."""
     from simple_pos_kafka_pyspark_airflow_spark.streaming.ann import IncrementalIvfIndex
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -2034,16 +2088,21 @@ def test_incremental_ivf_probe_batch_matches_per_query_probes(spark, tmp_path):
         )
         idx.fit(e)
         idx.ingest_batch(e)
-        batch = {}
-        for r in idx.probe_batch(qs, k=6, nprobe=3).collect():
-            batch.setdefault(r["query_id"], []).append((r["rn"], r["vec_id"], r["score"]))
-        assert sorted(batch) == [0, 1, 2]
-        for qid, qv in qs:
-            want = [
-                (i + 1, r["vec_id"], r["score"])
-                for i, r in enumerate(idx.probe(qv, k=6, nprobe=3).collect())
-            ]
-            assert sorted(batch[qid]) == want, (quant, qid)
+        for rescore in (None, e) if quant else (None,):
+            batch = {}
+            for r in idx.probe_batch(qs, k=6, nprobe=3, rescore_from=rescore).collect():
+                batch.setdefault(r["query_id"], []).append((r["rn"], r["vec_id"], r["score"]))
+            assert sorted(batch) == [0, 1, 2]
+            for qid, qv in qs:
+                want = [
+                    (i + 1, r["vec_id"], r["score"])
+                    for i, r in enumerate(
+                        _reference_probe(idx, qv, k=6, nprobe=3, rescore_from=rescore).collect()
+                    )
+                ]
+                assert sorted(batch[qid]) == want, (quant, rescore is not None, qid)
+                single = idx.probe(qv, k=6, nprobe=3, rescore_from=rescore).collect()
+                assert [(i, s) for _, i, s in want] == [tuple(r) for r in single]
 
 
 def test_incremental_ivf_probe_batch_rejects_duplicate_query_ids(spark, tmp_path):
@@ -3090,7 +3149,8 @@ def test_incremental_ivf_pq_index_tier(spark, tmp_path):
     object (restart) probes identically; (c) PQ probes REQUIRE
     rescore_from and then return high-recall exact-scored results, with
     the planted self-query at rank 1 / cosine 1.0; (d) probe_batch
-    matches per-query probes; (e) layout mixing refuses at ingest."""
+    matches per-query reference probes; (e) layout mixing refuses at
+    ingest."""
     from simple_pos_kafka_pyspark_airflow_spark.llm import simsearch
     from simple_pos_kafka_pyspark_airflow_spark.sources.io import dir_bytes
     from simple_pos_kafka_pyspark_airflow_spark.streaming.ann import IncrementalIvfIndex
@@ -3145,7 +3205,7 @@ def test_incremental_ivf_pq_index_tier(spark, tmp_path):
         single = [
             (i + 1, r["vec_id"], r["score"])
             for i, r in enumerate(
-                pidx.probe(qv, k=5, nprobe=4, rescore_from=e, overfetch=15).collect()
+                _reference_probe(pidx, qv, k=5, nprobe=4, rescore_from=e, overfetch=15).collect()
             )
         ]
         assert sorted(by_q[qid]) == single, qid

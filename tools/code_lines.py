@@ -1,11 +1,12 @@
 #!/usr/bin/env python
 """Count code lines: non-blank lines that are neither comments nor
-docstrings, summed over every ``.py`` file under the given directories.
+docstrings, summed over every ``.py`` file under the given directories
+(a file argument counts as that one file).
 
 Usage:
-    python tools/code_lines.py [dir ...]    # default: the library package
+    python tools/code_lines.py [dir-or-file ...]    # default: the library package
 
-Prints one ``<lines>  <path>`` row per directory and a total.  A line
+Prints one ``<lines>  <path>`` row per argument and a total.  A line
 holding any token besides a comment counts once; every line of a bare
 string statement (module, class, function or attribute docstring) is
 excluded."""
@@ -36,6 +37,8 @@ def file_lines(path: str) -> int:
 
 
 def tree_lines(root: str) -> int:
+    if os.path.isfile(root):
+        return file_lines(root)
     return sum(
         file_lines(os.path.join(d, f))
         for d, _, files in os.walk(root)
