@@ -102,12 +102,13 @@ def scd2_close(
     ``effective_col`` timestamp WITHOUT opening a replacement version —
     the history keeps the full lifespan, the dimension simply ends. The
     complement of ``scd2_apply`` for CDC streams that carry deletes.
-    Same single-pk-shuffle shape; idempotent (an already-closed version
-    is not current, so a replayed delete is a no-op). Multiple delete
-    rows per key (raw CDC events rather than a collapsed diff) close at
-    the LATEST effective time — a deterministic aggregate, where a
-    keep-any collapse would record an arbitrary lifespan end across
-    runs."""
+    One pass over ``history``: a left join on the pk against the
+    (batch-sized, broadcastable) close times, so a history is read once
+    however large it grows. Idempotent (an already-closed version is not
+    current, so a replayed delete is a no-op). Multiple delete rows per
+    key (raw CDC events rather than a collapsed diff) close at the
+    LATEST effective time — a deterministic aggregate, where a keep-any
+    collapse would record an arbitrary lifespan end across runs."""
     from pyspark.sql import functions as F
 
     keys = [pk] if isinstance(pk, str) else list(pk)
@@ -116,17 +117,32 @@ def scd2_close(
         .groupBy(*keys)
         .agg(F.max("__eff").alias("__eff"))
     )
-    current = history.where(F.col(end_col).isNull())
-    closed_now = (
-        current.join(eff, on=keys, how="inner")
-        .withColumn(end_col, F.col("__eff"))
-        .drop("__eff")
+    return history.join(eff, on=keys, how="left").select(
+        *[
+            F.coalesce(F.col(c), F.col("__eff")).alias(c) if c == end_col else F.col(c)
+            for c in history.columns
+        ]
     )
-    untouched_current = current.join(eff.select(*keys), on=keys, how="left_anti")
-    return (
-        history.where(F.col(end_col).isNotNull())
-        .unionByName(closed_now)
-        .unionByName(untouched_current)
+
+
+def scd2_open(
+    updates: DataFrame,
+    dim_cols: list[str],
+    effective_col: str,
+    start_col: str = "valid_from",
+    end_col: str = "valid_to",
+) -> DataFrame:
+    """``updates`` as new open SCD2 versions: the ``dim_cols`` plus
+    ``start_col = effective_col`` and a NULL ``end_col``."""
+    from pyspark.sql import functions as F
+
+    return updates.select(
+        *dim_cols,
+        F.col(effective_col).alias(start_col),
+        # open version: end is null OF THE EFFECTIVE COLUMN'S TYPE, so a
+        # long sequence number works as the version clock, not just
+        # timestamps (unionByName would reject a type mismatch)
+        F.lit(None).cast(updates.schema[effective_col].dataType).alias(end_col),
     )
 
 
@@ -171,14 +187,7 @@ def scd2_apply(
     untouched_current = current.join(upd_keys, on=keys, how="left_anti")
     already_closed = history.where(F.col(end_col).isNotNull())
     dim_cols = [c for c in history.columns if c not in (start_col, end_col)]
-    new_versions = updates.select(
-        *dim_cols,
-        F.col(effective_col).alias(start_col),
-        # open version: end is null OF THE EFFECTIVE COLUMN'S TYPE, so a
-        # long sequence number works as the version clock, not just
-        # timestamps (unionByName would reject a type mismatch)
-        F.lit(None).cast(updates.schema[effective_col].dataType).alias(end_col),
-    )
+    new_versions = scd2_open(updates, dim_cols, effective_col, start_col, end_col)
     return (
         already_closed.unionByName(closed_now)
         .unionByName(untouched_current)

@@ -699,8 +699,9 @@ def q_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "closes the affected open versions at the delete timestamp WITHOUT "
     "opening replacements — the dimension's lifespan simply ends, history "
     "is preserved. The complement of q_scd2 for CDC streams carrying "
-    "deletes (streaming ScdParquetCdcSink composes both); same single pk "
-    "shuffle. Deletes synthesized deterministically (every fourth key "
+    "deletes (streaming ScdParquetCdcSink closes its changed and deleted "
+    "keys through it); one pass over the history, left-joined to the "
+    "close times. Deletes synthesized deterministically (every fourth key "
     "removed at 2001-03-01)",
 )
 def q_scd2_close(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -216,11 +216,24 @@ class IncrementalIvfIndex:
         assignment nor, worse, bootstrap the quantizer from nothing."""
         if df.isEmpty():
             return
+        self._append(self._assign(df, self._centroids() or self.fit(df)), self._landed())
+
+    def _landed(self) -> DataFrame | None:
+        """The landed index rows, or None when nothing has landed."""
+        if fs_dir_has_data(self.spark, self.path):
+            return self.spark.read.parquet(self.path)
+        return None
+
+    def _append(self, assigned: DataFrame, landed: DataFrame | None) -> None:
+        """Append (id, vec, cell) rows to the index in this writer's
+        layout, ``partitionBy(cell)``; ``landed`` is the index as read
+        before the batch. The one write path of both ``ingest_batch`` and
+        ``dedup_batch``."""
         my_layout = (
             "pq" if self.store_pq else "int8" if self.store_quantized else "float"
         )
-        if fs_dir_has_data(self.spark, self.path):
-            stored = _layout(self.spark.read.parquet(self.path).columns)
+        if landed is not None:
+            stored = _layout(landed.columns)
             if stored != my_layout:
                 # Appending another layout would not fail loudly: probes
                 # auto-detect the layout from the schema, so the minority
@@ -234,7 +247,6 @@ class IncrementalIvfIndex:
                     "path) — mixing layouts makes one layout's vectors "
                     "invisible to probes"
                 )
-        cents = self._centroids() or self.fit(df)
         cbs = None
         if self.store_pq:
             cbs = self._pq_codebooks()
@@ -244,7 +256,7 @@ class IncrementalIvfIndex:
                     "index before ingesting (the quantizer fallback fit "
                     "covers them only when fit runs through this writer)"
                 )
-        rows = self._encode(self._assign(df, cents), my_layout, cbs)
+        rows = self._encode(assigned, my_layout, cbs)
         rows.write.mode("append").partitionBy("cell").parquet(self.path)
 
     def _assign(self, df: DataFrame, cents: list[list[float]]) -> DataFrame:
@@ -325,19 +337,19 @@ class IncrementalIvfIndex:
         from pyspark import StorageLevel
 
         cents = self._centroids() or self.fit(df)
-        assigned = (
-            self._assign(df, cents)
-            .select(
-                F.col(self.id_col).alias("_id"),
-                F.col(self.vec_col).alias("_v"),
-                "cell",
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        # assigned ONCE: the pair searches read it and the survivors'
+        # index rows are its rows for the kept ids
+        assigned = self._assign(df, cents).persist(StorageLevel.MEMORY_AND_DISK)
+        pool = simsearch.cell_capped(
+            assigned.select(
+                F.col(self.id_col).alias("_id"), F.col(self.vec_col).alias("_v"), "cell"
+            ),
+            "cell",
+            max_cell,
         )
-        pool = simsearch.cell_capped(assigned, "cell", max_cell)
         rejected = simsearch.within_cell_dups(pool, "cell", threshold, "_rej")
-        if fs_dir_has_data(self.spark, self.path):
-            idx = self.spark.read.parquet(self.path)
+        idx = self._landed()
+        if idx is not None:
             landed = idx.select(
                 "cell",
                 F.col(self.id_col).alias("_lid"),
@@ -366,8 +378,11 @@ class IncrementalIvfIndex:
             )
             .localCheckpoint(eager=True)
         )
+        if not kept.isEmpty():
+            self._append(
+                assigned.join(kept.select(self.id_col), self.id_col, "left_semi"), idx
+            )
         assigned.unpersist()
-        self.ingest_batch(kept)
         return kept
 
     def occupancy_drift(self, df: DataFrame, eps: float = 1e-4) -> DataFrame:

@@ -7,8 +7,8 @@ those files against Postgres and replays the diff as driver-side DELETE +
 UPSERT (``POS_spark_dag.py:155-193``). Two lossy hops.
 
 Here CDC is one hop: the typed event stream is applied directly to the
-warehouse via ``foreachBatch`` over the batch upsert kernel
-(``operators/upsert.py``) — the canonical Structured Streaming CDC shape.
+warehouse via ``foreachBatch`` (versions through the SCD2 kernels of
+``operators/upsert.py``) — the canonical Structured Streaming CDC shape.
 
 Semantics (stronger than the reference, documented per SURVEY.md §7):
 
@@ -21,15 +21,23 @@ Semantics (stronger than the reference, documented per SURVEY.md §7):
   reference's delete-by-absence heuristic; ``apply_snapshot`` still covers
   the snapshot-diff mode.
 
-Scale: each micro-batch does one pk shuffle (the anti join) + one write.
-Warehouse stored bucketed by pk ⇒ the join is co-located. The
+Scale: each micro-batch collapses its events to the final event per key
+ONCE (``latest_per_key``, persisted and counted — the count is the
+idle-trigger check). Every later step is a join against that batch-sized
+frame: the new snapshot is one anti join of the table on the batch's keys
+plus the batch's upserts, and the SCD2 changelog is the batch joined to
+the matching current rows — never a full-snapshot diff. The
 read-modify-write of the whole table is the plain-parquet cost (no Delta
 in this container); the swap is atomic via staged directory rename.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import contextlib
+from functools import reduce
+
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import upsert as upsert_ops
@@ -79,11 +87,60 @@ def apply_cdc_batch(
     snapshot, returning the new snapshot. Pure DataFrame logic — unit-
     testable without any stream running."""
     keys = [pk] if isinstance(pk, str) else list(pk)
-    final = latest_per_key(events, keys, order_col, tiebreak)
+    return _apply_final(table, latest_per_key(events, keys, order_col, tiebreak), keys, order_col)
+
+
+def _apply_final(table: DataFrame, final: DataFrame, keys: list[str], order_col: str) -> DataFrame:
+    """The new snapshot from a batch already collapsed to one final event
+    per key: ``table ⟕anti final-keys ∪ final-upserts``. With one event
+    per key a key is either upserted or deleted, so one anti join on the
+    touched keys both replaces and deletes. An event whose op is neither
+    leaves its key's row untouched."""
+    touched = final.where(F.col(OP_COL).isin(OP_UPSERT, OP_DELETE)).select(*keys)
     upserts = final.where(F.col(OP_COL) == OP_UPSERT).drop(OP_COL, order_col)
-    deletes = final.where(F.col(OP_COL) == OP_DELETE).select(*keys)
-    merged = upsert_ops.merge_delta(table, upserts, pk=keys)
-    return merged.join(deletes, on=keys, how="left_anti")
+    return upserts.unionByName(table.join(touched, on=keys, how="left_anti")).select(
+        *keys, *[c for c in upserts.columns if c not in keys]
+    )
+
+
+def _same(cols: list[str], a: str, b: str) -> Column:
+    """Null-safe equality of ``cols`` between the frames aliased ``a`` and
+    ``b`` (true for no columns)."""
+    return reduce(
+        lambda x, y: x & y,
+        [F.col(f"{a}.{c}").eqNullSafe(F.col(f"{b}.{c}")) for c in cols],
+        F.lit(True),
+    )
+
+
+def _changelog(current: DataFrame, final: DataFrame, keys: list[str]) -> DataFrame:
+    """The batch's NET changes as rows of ``final``: an upsert whose key is
+    new or whose values differ from the current row (null-safe per
+    column), and a delete of a present key. A restated value and a delete
+    of an absent key emit nothing. Only keys with an event can change, so
+    this is ``final ⟕left current`` on the pk — written as a right join
+    from ``current`` so the batch-sized side is the broadcastable one."""
+    j = current.withColumn("__present", F.lit(True)).alias("o").join(
+        final.alias("n"), on=keys, how="right"
+    )
+    present = F.col("__present").isNotNull()
+    same = _same([c for c in current.columns if c not in keys], "n", "o")
+    op = F.col(OP_COL)
+    changed = ((op == OP_UPSERT) & ~(present & same)) | ((op == OP_DELETE) & present)
+    return j.where(changed).select(*keys, *[f"n.{c}" for c in final.columns if c not in keys])
+
+
+@contextlib.contextmanager
+def _computed(df: DataFrame):
+    """Persist ``df``, compute it now (its row count, yielded with it) and
+    unpersist it on exit. Frees only this frame: a diff of the session's
+    persisted RDDs (``cacheutil.scoped_caches``) would also free the
+    blocks of concurrent queries' sinks sharing the session."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df, df.count()
+    finally:
+        df.unpersist()
 
 
 class ParquetCdcSink:
@@ -114,10 +171,14 @@ class ParquetCdcSink:
         return self.spark.createDataFrame([], self.schema)
 
     def foreach_batch(self, events: DataFrame, batch_id: int) -> None:
-        if events.isEmpty():
-            return
-        current = self.read()
-        new_snapshot = apply_cdc_batch(current, events, self.pk, self.order_col)
+        # the final event per key, computed once: its row count is the
+        # idle-trigger check and every plan below reads it from memory
+        with _computed(latest_per_key(events, self.pk, self.order_col)) as (final, n):
+            if n:
+                self._apply(final)
+
+    def _apply(self, final: DataFrame) -> None:
+        new_snapshot = _apply_final(self.read(), final, self.pk, self.order_col)
         # Stage as a SIBLING of the live dir (same filesystem, so the
         # promotion is a rename, never a copy), written BEFORE the live
         # dir is touched (the plan reads the live dir). The swap itself
@@ -136,30 +197,36 @@ class ScdParquetCdcSink(ParquetCdcSink):
 
     Composition per batch (all plain DataFrame ops):
 
-    1. ``apply_cdc_batch`` → the new snapshot (inherited semantics);
-    2. ``diff_snapshots(old, new)`` → the batch's NET changelog. Diffing
-       snapshots rather than versioning raw events is what makes history
-       maintenance idempotent and noise-free: an event that restates the
-       current value emits nothing, and a replayed batch (crash between
-       the two directory swaps, or checkpoint commit failure) diffs to
-       empty or filters to already-present versions — no duplicate chain
-       entries either way;
-    3. upserts → ``scd2_apply`` (close current version at the event's
-       CDC timestamp, open the new one); deletes → ``scd2_close`` (close,
-       nothing opens). New versions are keyed (pk, valid_from): an
-       incoming version whose key already exists in history is a replay
-       and is dropped before apply;
-    4. write both staging dirs, then swap HISTORY first, snapshot second.
+    1. ``latest_per_key`` → the batch's final event per key, computed once
+       and held in memory (the base sink's step);
+    2. the new snapshot: the current table minus the batch's keys, plus
+       its upserts (inherited semantics);
+    3. the batch's NET changelog: the final events joined to the current
+       rows of their keys — an upsert that changes nothing (a restated
+       value) and a delete of an absent key emit nothing. Versioning net
+       changes rather than raw events is what makes history maintenance
+       idempotent and noise-free: a replayed batch (crash between the two
+       directory swaps, or checkpoint commit failure) yields an empty
+       changelog or one whose versions are already present;
+    4. the replay guard drops every upsert whose full version content is
+       already in history; the guarded changelog is computed once;
+    5. ``scd2_close`` closes the open versions of its keys (changed
+       upserts and deletes) at the event's CDC timestamp in one pass over
+       the history, and its upserts append as open versions
+       (``scd2_open``). One row per key makes this equal to
+       ``scd2_close(scd2_apply(history, upserts), deletes)``;
+    6. write both staging dirs, then swap HISTORY first, snapshot second.
        Order matters: if the crash lands between the swaps, the replayed
        batch still sees the OLD snapshot, recomputes the same non-empty
-       diff, and the (pk, valid_from) filter makes the history update a
-       no-op — whereas snapshot-first would replay an empty diff and lose
+       changelog, and the replay guard makes the history update a no-op
+       — whereas snapshot-first would replay an empty changelog and lose
        the batch's versions forever.
 
-    Scale: everything is pk-shuffled exactly like the base sink plus one
-    (pk, valid_from) anti join on the history — co-located when both
-    tables are bucketed by pk. With Delta/Iceberg the two swaps become
-    one transaction; the composition is the stable part.
+    Scale: beyond the base sink's snapshot rewrite, the changelog is a
+    batch-sized join, the guard one anti join on the history, and the
+    close one more pass over the history joined to the batch-sized close
+    times. With Delta/Iceberg the two swaps become one transaction; the
+    composition is the stable part.
     """
 
     def __init__(
@@ -184,14 +251,11 @@ class ScdParquetCdcSink(ParquetCdcSink):
             return self.spark.read.schema(self.history_schema).parquet(self.history_path)
         return self.spark.createDataFrame([], self.history_schema)
 
-    def foreach_batch(self, events: DataFrame, batch_id: int) -> None:
-        if events.isEmpty():
-            return
+    def _apply(self, final: DataFrame) -> None:
         current = self.read()
-        new_snapshot = apply_cdc_batch(current, events, self.pk, self.order_col)
-        changes = diff_snapshots_with_ts(current, new_snapshot, events, self.pk, self.order_col)
+        new_snapshot = _apply_final(current, final, self.pk, self.order_col)
+        changes = _changelog(current, final, self.pk)
         history = self.read_history()
-        upserts = changes.where(F.col(OP_COL) == OP_UPSERT).drop(OP_COL)
         # replay guard: a version is identified by its FULL content (all
         # schema columns, incl. the event timestamp), not just
         # (pk, valid_from) — a legitimate second change that lands with
@@ -203,48 +267,39 @@ class ScdParquetCdcSink(ParquetCdcSink):
         # version at its own valid_from (zero-length lifespan recording
         # the superseded value) and opens the new one — deterministic
         # last-writer-wins, consistent with the snapshot's tiebreak.
+        # Deletes pass the guard: closing a closed version is a no-op.
+        version_cols = [c for c in changes.columns if c != OP_COL]
         hist_versions = history.select(
-            *[c for c in upserts.columns if c != self.order_col],
+            *[c for c in version_cols if c != self.order_col],
             F.col("valid_from").alias(self.order_col),
         ).alias("h")
-        u = upserts.alias("u")
-        same = None
-        for c in upserts.columns:
-            e = F.col(f"u.{c}").eqNullSafe(F.col(f"h.{c}"))
-            same = e if same is None else (same & e)
-        fresh = u.join(hist_versions, same, "left_anti")
-        new_history = upsert_ops.scd2_apply(history, fresh, self.pk, self.order_col)
-        deletes = changes.where(F.col(OP_COL) == OP_DELETE).select(*self.pk, self.order_col)
-        new_history = upsert_ops.scd2_close(new_history, deletes, self.pk, self.order_col)
-
-        snap_staging = staging_sibling(self.path)
-        hist_staging = staging_sibling(self.history_path)
-        # materialize BOTH before touching either live dir (plans read them)
-        write_staged(new_snapshot, snap_staging)
-        try:
-            write_staged(new_history, hist_staging)
-        except Exception:
-            # the snapshot staging already landed — reclaim it too, or the
-            # pair of failed stagings leaks per retry
-            fs, p = _fs_for(self.spark, snap_staging)
-            if fs.exists(p):
-                fs.delete(p, True)
-            raise
-        # swap HISTORY first, snapshot second (see class docstring)
-        fs_swap_in(self.spark, hist_staging, self.history_path)
-        fs_swap_in(self.spark, snap_staging, self.path)
-
-
-def diff_snapshots_with_ts(
-    old: DataFrame,
-    new: DataFrame,
-    events: DataFrame,
-    pk: list[str],
-    order_col: str,
-) -> DataFrame:
-    """``diff_snapshots`` stamped with each changed key's CDC timestamp
-    (the winning event's ``order_col``) — every changed key necessarily
-    has an event in the batch, so the join is lossless."""
-    changes = upsert_ops.diff_snapshots(old, new, pk, op_col=OP_COL)
-    eff = latest_per_key(events, pk, order_col).select(*pk, order_col)
-    return changes.join(eff, on=pk, how="inner")
+        replayed = (F.col(f"u.{OP_COL}") == OP_UPSERT) & _same(version_cols, "u", "h")
+        guarded = changes.alias("u").join(hist_versions, replayed, "left_anti")
+        with _computed(guarded) as (guarded, _):
+            # one row per key, so the closed keys (fresh upserts and
+            # deletes) and the opened versions never collide:
+            # scd2_close(scd2_apply(history, fresh), deletes) in one pass
+            dim_cols = [c for c in history.columns if c not in ("valid_from", "valid_to")]
+            new_history = upsert_ops.scd2_close(
+                history, guarded, self.pk, self.order_col
+            ).unionByName(
+                upsert_ops.scd2_open(
+                    guarded.where(F.col(OP_COL) == OP_UPSERT), dim_cols, self.order_col
+                )
+            )
+            snap_staging = staging_sibling(self.path)
+            hist_staging = staging_sibling(self.history_path)
+            # materialize BOTH before touching either live dir (plans read them)
+            write_staged(new_snapshot, snap_staging)
+            try:
+                write_staged(new_history, hist_staging)
+            except Exception:
+                # the snapshot staging already landed — reclaim it too, or the
+                # pair of failed stagings leaks per retry
+                fs, p = _fs_for(self.spark, snap_staging)
+                if fs.exists(p):
+                    fs.delete(p, True)
+                raise
+            # swap HISTORY first, snapshot second (see class docstring)
+            fs_swap_in(self.spark, hist_staging, self.history_path)
+            fs_swap_in(self.spark, snap_staging, self.path)

@@ -356,7 +356,7 @@ class IncrementalMinhashIndex(_IndexLog):
         )
         components = dedup_ops.dedup_clusters(pairs, id_col=self.id_col)
         batch_drops = components.where(~F.col("keep")).select(self.id_col)
-        kept = docs.join(batch_drops, self.id_col, "left_anti").localCheckpoint(eager=True)
+        kept = docs.join(batch_drops, self.id_col, "left_anti")
 
         idx = (
             banded_index_rows_from_table(
@@ -371,23 +371,28 @@ class IncrementalMinhashIndex(_IndexLog):
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
 
+        # the landed-match Jaccard join runs once: kept's checkpoint
+        # computes dup_ids into memory and the index append reads it back
         landed = self._landed()
+        dup_ids = None
+        idx_out = idx
         if landed is not None:
             dup_ids = (
                 self._landed_matches(idx, landed)
                 .where(jac_ok)
                 .select("doc_id")
                 .distinct()
+                .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            kept = kept.join(dup_ids, self.id_col, "left_anti").localCheckpoint(eager=True)
+            kept = kept.join(dup_ids, self.id_col, "left_anti")
             idx_out = idx.join(
                 dup_ids.withColumnRenamed(self.id_col, "doc_id"), "doc_id", "left_anti"
             )
-        else:
-            idx_out = idx
+        kept = kept.localCheckpoint(eager=True)
         self._append(idx_out)
-        idx.unpersist()
-        doc_tbl.unpersist()
+        for frame in (dup_ids, idx, doc_tbl):
+            if frame is not None:
+                frame.unpersist()
         return kept
 
 

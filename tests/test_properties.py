@@ -184,6 +184,97 @@ def test_scd2_matches_version_replay(spark, batches):
     assert got == want
 
 
+# Fixed batches merged into the random ones, so every example covers each
+# case by construction: keys 10-12 see an insert, an edit, a delete, a
+# restated value, a re-insert after the delete and a second change that
+# lands with the SAME timestamp as the version it supersedes.
+SCD_SCENARIO = [
+    [(10, 1, "upsert", 0), (11, 1, "upsert", 0)],
+    [(10, 2, "upsert", 1), (11, None, "delete", 1), (12, 5, "upsert", 1)],
+    [(11, 3, "upsert", 2), (12, 5, "upsert", 2), (10, 4, "upsert", 1)],
+]
+
+scd_batches_strategy = st.lists(  # (key, value, op, second) per event
+    st.lists(
+        st.tuples(
+            st.integers(0, 3),
+            st.one_of(st.none(), st.integers(0, 3)),
+            st.sampled_from(["upsert", "delete"]),
+            st.integers(0, 4),
+        ),
+        max_size=6,
+    ),
+    min_size=1,
+    max_size=3,
+)
+
+
+def _scd_oracle_batch(snap, history, events):
+    """One batch through a pure-Python last-writer-wins replay: the final
+    event per key is the latest (ts, value, op) — the sink's tiebreak
+    (desc, nulls last) — and only net changes version the history, with
+    a content replay guard and closes at the event's timestamp."""
+    final = {}
+    for k, v, op, ts in events:
+        rank = (ts, v is not None, v if v is not None else 0, op)
+        if k not in final or rank > final[k][0]:
+            final[k] = (rank, v, op, ts)
+    versions = {(k, v, frm) for k, v, frm, _ in history}
+
+    def close(k, ts):
+        history[:] = [(hk, v, f, ts if hk == k and t is None else t) for hk, v, f, t in history]
+
+    for k, (_, v, op, ts) in final.items():
+        if op == "upsert" and (k not in snap or snap[k] != v):
+            snap[k] = v
+            if (k, v, ts) not in versions:  # replay guard: version already landed
+                close(k, ts)
+                history.append((k, v, ts, None))
+        elif op == "delete" and k in snap:
+            del snap[k]
+            close(k, ts)
+
+
+@given(scd_batches_strategy)
+@SETTINGS
+def test_scd2_sink_matches_version_replay(spark, random_batches):
+    """ScdParquetCdcSink over random multi-batch event sequences (inserts,
+    edits, restated values, deletes, re-inserts, same-timestamp second
+    changes, and a replay of the last batch) leaves exactly the snapshot
+    and full version history of a pure-Python replay."""
+    import datetime
+    import tempfile
+
+    t0 = datetime.datetime(2026, 1, 1)
+    n = max(len(SCD_SCENARIO), len(random_batches))
+    batches = [
+        (SCD_SCENARIO[i] if i < len(SCD_SCENARIO) else [])
+        + (random_batches[i] if i < len(random_batches) else [])
+        for i in range(n)
+    ]
+    batches.append(batches[-1])  # redelivery of the last batch
+    ev_schema = f"id long, val long, {cdc.OP_COL} string, ts timestamp"
+    snap: dict = {}
+    history: list = []
+    with tempfile.TemporaryDirectory() as d:
+        sink = cdc.ScdParquetCdcSink(
+            spark, f"{d}/snap", f"{d}/hist", pk="id", order_col="ts",
+            schema="id long, val long",
+        )
+        for b, events in enumerate(batches):
+            rows = [(k, v, op, t0 + datetime.timedelta(seconds=s)) for k, v, op, s in events]
+            sink.foreach_batch(spark.createDataFrame(rows, ev_schema), b)
+            _scd_oracle_batch(snap, history, rows)
+        got_snap = {r["id"]: r["val"] for r in sink.read().collect()}
+        got_hist = [
+            (r["id"], r["val"], r["valid_from"], r["valid_to"])
+            for r in sink.read_history().collect()
+        ]
+    assert got_snap == snap
+    key = lambda r: tuple((x is None, x or 0) for x in r)  # noqa: E731  None-safe sort
+    assert sorted(got_hist, key=key) == sorted(history, key=key)
+
+
 @given(
     st.lists(
         st.tuples(st.integers(0, 300), st.sampled_from(["s0", "s1", "s2"])),

@@ -1498,6 +1498,125 @@ def test_cdc_sink_works_on_file_uri_warehouse(spark, tmp_path):
     assert not os.path.isdir(uri)  # the URI itself is not a local path
 
 
+def _file_scan_roots(df) -> list[str]:
+    """Root paths of every parquet scan in ``df``'s physical plan outside
+    its cached subplans (an in-memory scan is a leaf; the plan it caches
+    is not among the leaves)."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    roots = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "FileSourceScanExec":
+            roots.append(leaf.relation().location().rootPaths().mkString(","))
+    return roots
+
+
+def test_scd2_cdc_sink_history_plan_reads_each_table_at_most_twice(spark, tmp_path, monkeypatch):
+    """The SCD2 sink's history staging plan reads the history directory
+    at most twice and the live snapshot at most once outside its cached
+    subplans: the batch's final events and its guarded changelog are
+    computed once and held in memory, the changelog is a batch-sized join
+    rather than a full-snapshot diff, and the close is one history pass."""
+    t = datetime.datetime
+    ev_schema = f"id long, name string, bal double, {cdc.OP_COL} string, ts timestamp"
+    snap, hist = str(tmp_path / "warehouse"), str(tmp_path / "history")
+    sink = cdc.ScdParquetCdcSink(
+        spark, snap, hist, pk="id", order_col="ts", schema="id long, name string, bal double"
+    )
+    sink.foreach_batch(
+        spark.createDataFrame(
+            [(i, f"n{i}", float(i), "upsert", t(2026, 1, 1)) for i in range(20)], ev_schema
+        ),
+        0,
+    )
+    scans = {}
+    write_staged = cdc.write_staged
+
+    def spy(df, staging, *args):
+        scans[staging] = _file_scan_roots(df)
+        return write_staged(df, staging, *args)
+
+    monkeypatch.setattr(cdc, "write_staged", spy)
+    sink.foreach_batch(
+        spark.createDataFrame(
+            [
+                (1, "x", 1.5, "upsert", t(2026, 1, 2)),
+                (2, None, None, "delete", t(2026, 1, 2)),
+                (30, "new", 3.0, "upsert", t(2026, 1, 2)),
+            ],
+            ev_schema,
+        ),
+        1,
+    )
+    (roots,) = [r for staging, r in scans.items() if os.path.basename(staging).startswith("history")]
+    assert 1 <= sum(r.endswith(hist) for r in roots) <= 2, roots
+    assert sum(r.endswith(snap) for r in roots) <= 1, roots
+
+
+def test_incremental_writes_release_only_their_own_frames(spark, tmp_path):
+    """The CDC sinks and the minhash/ANN ingest tiers free exactly the
+    frames they persisted — never a diff of the session's caches, which
+    would free concurrent queries' blocks: after each sink batch no new
+    RDD stays persisted, after each tier batch only the returned ``kept``
+    checkpoint does, and a frame persisted beforehand survives it all."""
+    from simple_pos_kafka_pyspark_airflow_spark.cacheutil import (
+        persistent_rdd_ids,
+        release_caches,
+    )
+    from simple_pos_kafka_pyspark_airflow_spark.streaming.ann import IncrementalIvfIndex
+    from simple_pos_kafka_pyspark_airflow_spark.streaming.corpus import IncrementalMinhashIndex
+
+    unrelated = spark.range(50).persist()
+    unrelated.count()
+    before = persistent_rdd_ids(spark)
+
+    t = datetime.datetime
+    ev_schema = f"id long, name string, {cdc.OP_COL} string, ts timestamp"
+    sinks = [
+        cdc.ParquetCdcSink(spark, str(tmp_path / "orders"), "id", "ts", "id long, name string"),
+        cdc.ScdParquetCdcSink(
+            spark, str(tmp_path / "customer"), str(tmp_path / "history"), "id", "ts",
+            "id long, name string",
+        ),
+    ]
+    batches = [
+        [(1, "a", "upsert", t(2026, 1, 1)), (2, "b", "upsert", t(2026, 1, 1))],
+        [(1, "a2", "upsert", t(2026, 1, 2)), (2, None, "delete", t(2026, 1, 2))],
+    ]
+    for b, rows in enumerate(batches):
+        for sink in sinks:
+            sink.foreach_batch(spark.createDataFrame(rows, ev_schema), b)
+            assert persistent_rdd_ids(spark) == before, (type(sink).__name__, b)
+
+    base = "the quick brown fox jumps over the lazy dog while rain falls on the quiet town square"
+    fresh = "fresh new words entirely distinct from anything landed so far today"
+    docs = [
+        [(1, base), (2, "completely unrelated content about databases indexes and shuffles")],
+        [(10, base.replace("square", "plaza")), (11, fresh), (12, fresh + " again")],
+    ]
+    vecs = [
+        [(1, _unit(0)), (2, _unit(1))],
+        [(10, _unit(0, eps=0.02, j=4)), (11, _unit(2)), (12, _unit(2, eps=0.02, j=5))],
+    ]
+    minhash = IncrementalMinhashIndex(spark, str(tmp_path / "lsh"), num_hashes=16, bands=8)
+    ann = IncrementalIvfIndex(spark, str(tmp_path / "ivf"), n_cells=2)
+    for b in range(2):  # the second batch probes landed state
+        for tier, batch in (
+            (minhash, spark.createDataFrame(docs[b], "doc_id long, text string")),
+            (ann, spark.createDataFrame(vecs[b], "vec_id long, embedding array<double>")),
+        ):
+            kept = tier.dedup_batch(batch)
+            new = persistent_rdd_ids(spark) - before
+            checkpoint = kept._jdf.queryExecution().logical().rdd().id()
+            assert new == {checkpoint}, (type(tier).__name__, b, new, checkpoint)
+            assert before <= persistent_rdd_ids(spark)
+            release_caches(spark, new)  # the caller owns kept
+
+    assert before <= persistent_rdd_ids(spark)
+    assert unrelated.storageLevel.useMemory
+    unrelated.unpersist()
+
+
 def test_null_payload_tombstone_routes_to_dead_letter(spark):
     """A Kafka tombstone (value=NULL) parses to all-null fields with
     _corrupt ALSO null: it must neither upsert an all-null row into the
