@@ -295,9 +295,6 @@ HEADLINE = [
 #: property, not a scheduling accident (the r6 verdict's join-family
 #: "regression" was exactly this).
 EXTRA_RUNS_UNDER_SEC = 1.5
-#: The heavy queries get the same extra samples: a 2-5 s query spans
-#: more host-load swings per run, so its min-of-3 is no less noisy.
-EXTRA_RUNS_FROM_SEC = 2.0
 EXTRA_RUNS = 2
 
 #: Roaming-stall detection (r13, VERDICT item 3): the host exhibits a
@@ -429,18 +426,14 @@ def main() -> None:
                 ok_runs.append(elapsed)
             else:
                 break  # a failed/cancelled query won't get better; move on
-            # min-of-5 for sub-1.5 s and >= 2 s queries (min-of-3
-            # otherwise): extend the sample once when the observed
-            # minimum is noise-dominated
+            # min-of-5 for sub-second queries (min-of-3 otherwise): extend
+            # the sample once when the observed minimum is noise-dominated
             if (
                 target_runs == n_runs
                 and n_runs > 1
                 and len(runs) == n_runs
                 and ok_runs
-                and (
-                    min(ok_runs) < EXTRA_RUNS_UNDER_SEC
-                    or min(ok_runs) >= EXTRA_RUNS_FROM_SEC
-                )
+                and min(ok_runs) < EXTRA_RUNS_UNDER_SEC
             ):
                 target_runs = n_runs + EXTRA_RUNS
         # Operators persist() their shared frames (doc tables, signature

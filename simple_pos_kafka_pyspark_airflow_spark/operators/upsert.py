@@ -168,28 +168,14 @@ def scd2_apply(
       (``start_col = effective_col``, ``end_col = NULL``);
     - closed history and untouched keys pass through unchanged.
 
-    One pk shuffle (the anti/semi pair shares it); time-travel queries are
-    then plain ``WHERE valid_from <= t AND (valid_to IS NULL OR t <
-    valid_to)`` predicates — pushable, no joins. Assumes one update per
-    key per batch (collapse with ``cdc.latest_per_key`` first otherwise).
+    ``scd2_close`` of the updated keys plus ``scd2_open`` of the update
+    rows: one pass over ``history``, left-joined to the batch-sized
+    close times; time-travel queries are then plain ``WHERE valid_from
+    <= t AND (valid_to IS NULL OR t < valid_to)`` predicates — pushable,
+    no joins. Assumes one update per key per batch (collapse with
+    ``cdc.latest_per_key`` first otherwise).
     """
-    from pyspark.sql import functions as F
-
-    keys = [pk] if isinstance(pk, str) else list(pk)
-    upd_keys = updates.select(*keys).dropDuplicates(keys)
-    eff = updates.select(*keys, F.col(effective_col).alias("__eff"))
-    current = history.where(F.col(end_col).isNull())
-    closed_now = (
-        current.join(eff, on=keys, how="inner")
-        .withColumn(end_col, F.col("__eff"))
-        .drop("__eff")
-    )
-    untouched_current = current.join(upd_keys, on=keys, how="left_anti")
-    already_closed = history.where(F.col(end_col).isNotNull())
     dim_cols = [c for c in history.columns if c not in (start_col, end_col)]
-    new_versions = scd2_open(updates, dim_cols, effective_col, start_col, end_col)
-    return (
-        already_closed.unionByName(closed_now)
-        .unionByName(untouched_current)
-        .unionByName(new_versions)
+    return scd2_close(history, updates, pk, effective_col, start_col, end_col).unionByName(
+        scd2_open(updates, dim_cols, effective_col, start_col, end_col)
     )

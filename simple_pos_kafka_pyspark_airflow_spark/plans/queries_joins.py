@@ -668,7 +668,8 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     notes="slowly-changing-dimension type 2 (operators/upsert.scd2_apply): "
     "an update batch closes the affected open versions (valid_to = "
     "effective ts) and appends new open versions; closed history and "
-    "untouched keys pass through. One pk shuffle per batch; time travel "
+    "untouched keys pass through. scd2_close of the updated keys plus "
+    "scd2_open of the update rows: one pass over the history; time travel "
     "is then a pushable predicate, no joins. Updates synthesized "
     "deterministically (every third key re-priced at 2000-06-01)",
 )

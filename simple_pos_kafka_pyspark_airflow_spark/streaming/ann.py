@@ -340,50 +340,54 @@ class IncrementalIvfIndex:
         # assigned ONCE: the pair searches read it and the survivors'
         # index rows are its rows for the kept ids
         assigned = self._assign(df, cents).persist(StorageLevel.MEMORY_AND_DISK)
-        pool = simsearch.cell_capped(
-            assigned.select(
-                F.col(self.id_col).alias("_id"), F.col(self.vec_col).alias("_v"), "cell"
-            ),
-            "cell",
-            max_cell,
-        )
-        rejected = simsearch.within_cell_dups(pool, "cell", threshold, "_rej")
-        idx = self._landed()
-        if idx is not None:
-            landed = idx.select(
+        try:
+            pool = simsearch.cell_capped(
+                assigned.select(
+                    F.col(self.id_col).alias("_id"), F.col(self.vec_col).alias("_v"), "cell"
+                ),
                 "cell",
-                F.col(self.id_col).alias("_lid"),
-                self._stored_vec(_layout(idx.columns)).alias("_lv"),
+                max_cell,
             )
-            landed = simsearch.cell_capped(landed, "cell", max_cell)
-            # batch side uses the CAPPED pool (r14, ADVICE): the
-            # docstring's contract is that max_cell exempts over-cap
-            # cells from BOTH pair searches — joining the uncapped
-            # `assigned` here priced a hot batch cell against landed
-            # rows while the within-batch search had already skipped it
-            pair_cos = simsearch.pair_cosine_udf()
-            dropped_landed = (
-                pool.join(landed, "cell")
-                .where(F.col("_id") != F.col("_lid"))  # replay: never self
-                .where(pair_cos(F.col("_v"), F.col("_lv")) >= threshold)
-                .select(F.col("_id").alias("_rej"))
-            )
-            rejected = rejected.unionByName(dropped_landed)
+            rejected = simsearch.within_cell_dups(pool, "cell", threshold, "_rej")
+            idx = self._landed()
+            if idx is not None:
+                landed = idx.select(
+                    "cell",
+                    F.col(self.id_col).alias("_lid"),
+                    self._stored_vec(_layout(idx.columns)).alias("_lv"),
+                )
+                landed = simsearch.cell_capped(landed, "cell", max_cell)
+                # batch side uses the CAPPED pool (r14, ADVICE): the
+                # docstring's contract is that max_cell exempts over-cap
+                # cells from BOTH pair searches — joining the uncapped
+                # `assigned` here priced a hot batch cell against landed
+                # rows while the within-batch search had already skipped it
+                pair_cos = simsearch.pair_cosine_udf()
+                dropped_landed = (
+                    pool.join(landed, "cell")
+                    .where(F.col("_id") != F.col("_lid"))  # replay: never self
+                    .where(pair_cos(F.col("_v"), F.col("_lv")) >= threshold)
+                    .select(F.col("_id").alias("_rej"))
+                )
+                rejected = rejected.unionByName(dropped_landed)
 
-        kept = (
-            df.join(
-                rejected.distinct(),
-                F.col(self.id_col) == F.col("_rej"),
-                "left_anti",
+            kept = (
+                df.join(
+                    rejected.distinct(),
+                    F.col(self.id_col) == F.col("_rej"),
+                    "left_anti",
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
-        if not kept.isEmpty():
-            self._append(
-                assigned.join(kept.select(self.id_col), self.id_col, "left_semi"), idx
-            )
-        assigned.unpersist()
-        return kept
+            if not kept.isEmpty():
+                self._append(
+                    assigned.join(kept.select(self.id_col), self.id_col, "left_semi"), idx
+                )
+            return kept
+        finally:
+            # released on a refused or failed append too: a retried
+            # batch must not leave its assignment cached
+            assigned.unpersist()
 
     def occupancy_drift(self, df: DataFrame, eps: float = 1e-4) -> DataFrame:
         """PSI between the LANDED index's cell-occupancy distribution and

@@ -98,9 +98,7 @@ def _apply_final(table: DataFrame, final: DataFrame, keys: list[str], order_col:
     leaves its key's row untouched."""
     touched = final.where(F.col(OP_COL).isin(OP_UPSERT, OP_DELETE)).select(*keys)
     upserts = final.where(F.col(OP_COL) == OP_UPSERT).drop(OP_COL, order_col)
-    return upserts.unionByName(table.join(touched, on=keys, how="left_anti")).select(
-        *keys, *[c for c in upserts.columns if c not in keys]
-    )
+    return upserts.unionByName(table.join(touched, on=keys, how="left_anti"))
 
 
 def _same(cols: list[str], a: str, b: str) -> Column:
@@ -118,10 +116,12 @@ def _changelog(current: DataFrame, final: DataFrame, keys: list[str]) -> DataFra
     new or whose values differ from the current row (null-safe per
     column), and a delete of a present key. A restated value and a delete
     of an absent key emit nothing. Only keys with an event can change, so
-    this is ``final ⟕left current`` on the pk — written as a right join
-    from ``current`` so the batch-sized side is the broadcastable one."""
-    j = current.withColumn("__present", F.lit(True)).alias("o").join(
-        final.alias("n"), on=keys, how="right"
+    this is ``final ⟕left (current ⋉ final-keys)`` on the pk: the semi
+    join's build side is the batch's key set, so the snapshot is scanned
+    but not shuffled, and only its matching rows reach the outer join."""
+    hit = current.join(final.select(*keys), on=keys, how="left_semi")
+    j = final.alias("n").join(
+        hit.withColumn("__present", F.lit(True)).alias("o"), on=keys, how="left"
     )
     present = F.col("__present").isNotNull()
     same = _same([c for c in current.columns if c not in keys], "n", "o")
@@ -222,10 +222,11 @@ class ScdParquetCdcSink(ParquetCdcSink):
        — whereas snapshot-first would replay an empty changelog and lose
        the batch's versions forever.
 
-    Scale: beyond the base sink's snapshot rewrite, the changelog is a
-    batch-sized join, the guard one anti join on the history, and the
-    close one more pass over the history joined to the batch-sized close
-    times. With Delta/Iceberg the two swaps become one transaction; the
+    Scale: beyond the base sink's snapshot rewrite, the changelog is one
+    more snapshot scan semi-joined to the batch's keys, then the batch
+    left-joined to those matching rows; the guard is one anti join on the
+    history, and the close one more pass over the history joined to the
+    batch-sized close times. With Delta/Iceberg the two swaps become one transaction; the
     composition is the stable part.
     """
 

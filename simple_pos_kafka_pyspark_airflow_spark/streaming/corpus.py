@@ -347,53 +347,56 @@ class IncrementalMinhashIndex(_IndexLog):
         doc_tbl = dedup_ops.minhash_doc_table(
             docs, self.text_col, self.id_col, self.n_shingle, self.num_hashes
         ).persist(StorageLevel.MEMORY_AND_DISK)
-
-        # within-batch: connected components over the pair list; each
-        # component keeps its min id (exact cluster-representative policy)
-        pairs = dedup_ops.near_dup_pairs_from_doc_table(
-            doc_tbl, num_hashes=self.num_hashes, bands=self.bands,
-            jaccard_threshold=self.threshold,
-        )
-        components = dedup_ops.dedup_clusters(pairs, id_col=self.id_col)
-        batch_drops = components.where(~F.col("keep")).select(self.id_col)
-        kept = docs.join(batch_drops, self.id_col, "left_anti")
-
-        idx = (
-            banded_index_rows_from_table(
-                doc_tbl.join(
-                    batch_drops.withColumnRenamed(self.id_col, "_id"),
-                    "_id",
-                    "left_anti",
-                ),
-                self.num_hashes,
-                self.bands,
+        idx = dup_ids = None
+        try:
+            # within-batch: connected components over the pair list; each
+            # component keeps its min id (exact cluster-representative policy)
+            pairs = dedup_ops.near_dup_pairs_from_doc_table(
+                doc_tbl, num_hashes=self.num_hashes, bands=self.bands,
+                jaccard_threshold=self.threshold,
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+            components = dedup_ops.dedup_clusters(pairs, id_col=self.id_col)
+            batch_drops = components.where(~F.col("keep")).select(self.id_col)
+            kept = docs.join(batch_drops, self.id_col, "left_anti")
 
-        # the landed-match Jaccard join runs once: kept's checkpoint
-        # computes dup_ids into memory and the index append reads it back
-        landed = self._landed()
-        dup_ids = None
-        idx_out = idx
-        if landed is not None:
-            dup_ids = (
-                self._landed_matches(idx, landed)
-                .where(jac_ok)
-                .select("doc_id")
-                .distinct()
+            idx = (
+                banded_index_rows_from_table(
+                    doc_tbl.join(
+                        batch_drops.withColumnRenamed(self.id_col, "_id"),
+                        "_id",
+                        "left_anti",
+                    ),
+                    self.num_hashes,
+                    self.bands,
+                )
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            kept = kept.join(dup_ids, self.id_col, "left_anti")
-            idx_out = idx.join(
-                dup_ids.withColumnRenamed(self.id_col, "doc_id"), "doc_id", "left_anti"
-            )
-        kept = kept.localCheckpoint(eager=True)
-        self._append(idx_out)
-        for frame in (dup_ids, idx, doc_tbl):
-            if frame is not None:
-                frame.unpersist()
-        return kept
+
+            # the landed-match Jaccard join runs once: kept's checkpoint
+            # computes dup_ids into memory and the index append reads it back
+            landed = self._landed()
+            idx_out = idx
+            if landed is not None:
+                dup_ids = (
+                    self._landed_matches(idx, landed)
+                    .where(jac_ok)
+                    .select("doc_id")
+                    .distinct()
+                    .persist(StorageLevel.MEMORY_AND_DISK)
+                )
+                kept = kept.join(dup_ids, self.id_col, "left_anti")
+                idx_out = idx.join(
+                    dup_ids.withColumnRenamed(self.id_col, "doc_id"), "doc_id", "left_anti"
+                )
+            kept = kept.localCheckpoint(eager=True)
+            self._append(idx_out)
+            return kept
+        finally:
+            # released on a failed append too: a retried batch must not
+            # leave its intermediates cached
+            for frame in (dup_ids, idx, doc_tbl):
+                if frame is not None:
+                    frame.unpersist()
 
 
 class IncrementalDigestIndex(_IndexLog):

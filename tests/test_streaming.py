@@ -1612,6 +1612,22 @@ def test_incremental_writes_release_only_their_own_frames(spark, tmp_path):
             assert before <= persistent_rdd_ids(spark)
             release_caches(spark, new)  # the caller owns kept
 
+    # a failed append (here: injected) still releases the tier's
+    # intermediates; only the kept checkpoint the call never returned is left
+    def refuse(*a, **k):
+        raise ValueError("append refused")
+
+    for tier, batch in (
+        (minhash, spark.createDataFrame([(20, fresh + " later")], "doc_id long, text string")),
+        (ann, spark.createDataFrame([(20, _unit(3))], "vec_id long, embedding array<double>")),
+    ):
+        tier._append = refuse
+        with pytest.raises(ValueError, match="append refused"):
+            tier.dedup_batch(batch)
+        new = persistent_rdd_ids(spark) - before
+        assert len(new) == 1, (type(tier).__name__, new)
+        release_caches(spark, new)
+
     assert before <= persistent_rdd_ids(spark)
     assert unrelated.storageLevel.useMemory
     unrelated.unpersist()
