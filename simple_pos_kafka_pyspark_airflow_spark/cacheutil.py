@@ -7,36 +7,40 @@ per round to truncate lineage. Both leave blocks in the executor block
 manager that only session LRU would otherwise reclaim. That is fine for
 one-shot jobs (bench.py clears per query; a driver exits) but a
 long-lived service accumulates dead blocks and leans on eviction
-(docs/SCALE.md "cache ownership").
+(docs/SCALE.md "Cache ownership").
 
-Two tools, matching the two ownership shapes:
+Library code frees what it created by the frame's own handle:
+``release(df)`` unpersists a ``persist()`` cache or the RDD behind a
+``localCheckpoint``, and ``computed`` persists and counts a frame for a
+``with`` block. Iterative operators (``llm.dedup.dedup_clusters``,
+``operators.graph.pagerank``) release each superseded round as soon as
+the next one is materialized; per-batch sinks and ingest tiers release
+their intermediates in ``finally``. Freeing by handle touches nothing
+else, so concurrent queries sharing one session keep their blocks.
 
-- **operators that materialize internally** (iterative loops) free their
-  superseded rounds THEMSELVES as soon as the next round is
-  materialized — see ``llm.dedup.dedup_clusters``, which keeps at most
-  one round's checkpoint alive using ``persistent_rdd_ids`` diffs;
-- **operators that return lazy plans over persisted inputs** cannot know
-  when the caller's action runs, so the CALLER wraps consumption in
-  ``scoped_caches`` — everything persisted inside the block (by any
-  operator, including localCheckpoint RDDs) is unpersisted on exit.
-
-``scoped_caches`` must enclose the MATERIALIZATION (the action), not
-just the plan construction: unpersisting before the action simply makes
-the action recompute.
+Operators that return lazy plans over persisted inputs cannot know when
+the caller's action runs, so the CALLER frees those. ``scoped_caches``
+(built on ``persistent_rdd_ids`` / ``release_caches``) frees every RDD
+persisted while its block runs — by ANY query in the session — so it is
+for single-tenant code (a script, a test, a one-shot job) only; library
+code never diffs the session's caches. ``scoped_caches`` must enclose
+the MATERIALIZATION (the action), not just the plan construction:
+unpersisting before the action simply makes the action recompute.
 
 One asymmetry to respect: a ``persist()``-backed frame re-computes
 transparently after release (blocks are an optimization), but a
 ``localCheckpoint``-backed frame CANNOT — its lineage was truncated at
 checkpoint time (Spark logs a WARN at release), so re-collecting such a
 frame after its blocks are freed raises instead of recomputing. Consume
-iterative operators' results INSIDE the block (or re-build the plan),
-never re-materialize them after release.
+iterative operators' results before releasing them, never
+re-materialize them after release.
 """
 
 from __future__ import annotations
 
 import contextlib
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 #: Session conf key selecting how ``materialize`` cuts lineage.
@@ -68,9 +72,9 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     job. At 100 TB the pagerank edge list is (nodes+edges)-sized — not
     small — and a multi-hour iterative job must survive executor churn;
     see docs/SCALE.md "Materialization fault tolerance". Reliable
-    checkpoints are files, not persisted RDDs: ``release_caches`` /
-    ``scoped_caches`` see nothing to free (cleanup = checkpoint-dir
-    lifecycle), which is the correct ownership shape on a cluster.
+    checkpoints are files, not persisted RDDs: ``release`` sees nothing
+    to free (cleanup = checkpoint-dir lifecycle), which is the correct
+    ownership shape on a cluster.
     The eager reliable checkpoint computes the frame in ONE job that
     writes the checkpoint files (Spark 4.1: no separate count job), so
     observe nodes below it fire once and no persist is needed in front
@@ -95,6 +99,45 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
             f"unknown {MATERIALIZE_MODE_KEY}={mode!r} (use 'local' or 'reliable')"
         )
     return df.localCheckpoint(eager=eager)
+
+
+def release(*frames: DataFrame | None) -> None:
+    """Free the blocks each frame itself holds: its ``persist()`` cache,
+    or the RDD behind its ``localCheckpoint``. ``None`` entries are
+    skipped, and a reliable checkpoint (files, not blocks) holds nothing
+    to free. Only these frames' blocks go, never another query's.
+    Non-blocking; no job runs."""
+    for df in frames:
+        if df is None:
+            continue
+        if df.storageLevel != StorageLevel.NONE:
+            df.unpersist()
+            continue
+        plan = df._jdf.queryExecution().logical()
+        if plan.nodeName() == "LogicalRDD" and plan.rdd().getStorageLevel().isValid():
+            plan.rdd().unpersist(False)
+
+
+@contextlib.contextmanager
+def computed(df: DataFrame):
+    """Persist ``df``, compute it now (its row count, yielded with it) and
+    ``release`` it on exit, failure included."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df, df.count()
+    finally:
+        release(df)
+
+
+@contextlib.contextmanager
+def released_on_error(df: DataFrame):
+    """For a frame about to be returned: if the block raises, the caller
+    never receives ``df``, so ``release`` it before re-raising."""
+    try:
+        yield df
+    except BaseException:
+        release(df)
+        raise
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
@@ -122,8 +165,10 @@ def release_caches(spark: SparkSession, ids: set[int], blocking: bool = False) -
 def scoped_caches(spark: SparkSession, blocking: bool = False):
     """Free every RDD persisted inside the block on exit — persist() and
     localCheckpoint alike — leaving caches that existed before the block
-    untouched (unlike ``spark.catalog.clearCache()``, which would evict
-    a co-tenant pipeline's warm tables too):
+    untouched. It frees whatever ANY query persisted while the block ran,
+    so it is for single-tenant code (a script, a test, a one-shot job)
+    only; a service sharing its session frees its own frames with
+    ``release``:
 
         with scoped_caches(spark):
             out = near_dup_pairs_minhash(docs, ...)

@@ -16,7 +16,6 @@ isolated and Arrow-batched.
 from __future__ import annotations
 
 from ..llm.dedup import (
-    minhash_signature,
     shingles,
     simhash64,
     token_bag_key,
@@ -59,7 +58,6 @@ __all__ = [
     "fingerprint_portable",
     "hyperplane_signature",
     "lang_scores",
-    "minhash_signature",
     "norm",
     "predicted_lang",
     "punct_ratio",

@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .textops import sliding_grams, tokens
@@ -76,26 +76,24 @@ def _position_array(gram: Column, m_bits: int, n_hashes: int) -> Column:
     )
 
 
-def bloom_bitmap(
-    probe: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    *,
-    n: int = 5,
-    m_bits: int = 1 << 24,
+def bloom_key_bitmap(
+    keys: DataFrame,
+    key_col: str,
+    m_bits: int = 1 << 22,
     n_hashes: int = 4,
 ) -> np.ndarray:
-    """Build the probe set's Bloom bitmap (numpy uint8, ``m_bits/8``
-    bytes). Runs a Spark job: distinct positions → per-chunk bit-packing
-    executor-side → the driver collects only the packed chunks."""
+    """Bloom bitmap (numpy uint8, ``m_bits/8`` bytes) of a key column —
+    the one builder behind the gram bitmap (``bloom_bitmap``) and the
+    join runtime filter (``operators.joins.bloom_semi_reduce``). Runs a
+    Spark job: distinct k-seed positions → per-chunk bit-packing
+    executor-side → the driver collects only the packed 128 KiB chunks,
+    never a position stream. Size ``m_bits ≥ 32·k·|keys|`` keeps
+    per-probe false positives under ~1e-6 at k=4."""
     if m_bits <= 0 or m_bits % 8:
         raise ValueError(f"m_bits must be a positive multiple of 8, got {m_bits}")
-    if n_hashes < 1:
-        raise ValueError(f"n_hashes must be >= 1, got {n_hashes}")
     chunk_bits = min(_CHUNK_BITS, m_bits)
     pos = (
-        _gram_rows(probe, text_col, id_col, "_pid", n)
-        .select(F.explode(_position_array(F.col("_gram"), m_bits, n_hashes)).alias("p"))
+        keys.select(F.explode(_position_array(F.col(key_col), m_bits, n_hashes)).alias("p"))
         .distinct()
         .withColumn("chunk", F.floor(F.col("p") / chunk_bits).cast("int"))
     )
@@ -119,6 +117,52 @@ def bloom_bitmap(
     return bitmap
 
 
+def bloom_member(
+    spark: SparkSession, bitmap: np.ndarray, key: Column, n_hashes: int = 4
+) -> Column:
+    """Boolean membership probe of ``key`` against ``bitmap``: true iff
+    all ``n_hashes`` positions are set (no false negatives — Bloom
+    guarantee). Positions are computed JVM-side; the test is a
+    vectorized numpy gather over a broadcast copy of the bitmap inside
+    one Arrow batch per partition slice, no per-row Python."""
+    from pyspark.sql.functions import pandas_udf
+
+    bitmap = np.ascontiguousarray(np.asarray(bitmap, dtype=np.uint8))
+    m_bits = int(bitmap.size) << 3
+    if m_bits == 0:
+        raise ValueError("bitmap is empty — build it with bloom_bitmap first")
+    bc = spark.sparkContext.broadcast(bitmap)
+
+    @pandas_udf("boolean")
+    def member(pos: pd.Series) -> pd.Series:
+        if pos.empty:
+            return pd.Series([], dtype=bool)
+        bm = bc.value
+        mat = np.stack(pos.to_numpy()).astype(np.int64)  # (batch, k), fixed k
+        bits = (bm[mat >> 3] >> (mat & 7).astype(np.uint8)) & 1
+        return pd.Series(bits.all(axis=1))
+
+    return member(_position_array(key, m_bits, n_hashes))
+
+
+def bloom_bitmap(
+    probe: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    *,
+    n: int = 5,
+    m_bits: int = 1 << 24,
+    n_hashes: int = 4,
+) -> np.ndarray:
+    """Build the probe set's Bloom bitmap (numpy uint8, ``m_bits/8``
+    bytes) over its distinct grams (``bloom_key_bitmap``)."""
+    if n_hashes < 1:
+        raise ValueError(f"n_hashes must be >= 1, got {n_hashes}")
+    return bloom_key_bitmap(
+        _gram_rows(probe, text_col, id_col, "_pid", n), "_gram", m_bits, n_hashes
+    )
+
+
 def bloom_flag(
     corpus: DataFrame,
     bitmap: np.ndarray,
@@ -132,30 +176,10 @@ def bloom_flag(
     one row per document with ≥ n tokens —
     ``(id_col, n_grams, n_bloom_grams, bloom_hit)``.
 
-    The membership test is a vectorized numpy gather over the broadcast
-    bitmap inside one Arrow batch per partition slice; the reduce to
-    per-document rows map-side-combines before the single exchange."""
-    bitmap = np.ascontiguousarray(np.asarray(bitmap, dtype=np.uint8))
-    m_bits = int(bitmap.size) << 3
-    if m_bits == 0:
-        raise ValueError("bitmap is empty — build it with bloom_bitmap first")
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(bitmap)
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def member(pos: pd.Series) -> pd.Series:
-        if pos.empty:
-            return pd.Series([], dtype=bool)
-        bm = bc.value
-        mat = np.stack(pos.to_numpy()).astype(np.int64)  # (batch, k), fixed k
-        bits = (bm[mat >> 3] >> (mat & 7).astype(np.uint8)) & 1
-        return pd.Series(bits.all(axis=1))
-
-    g = _gram_rows(corpus, text_col, id_col, id_col, n).select(
-        id_col, _position_array(F.col("_gram"), m_bits, n_hashes).alias("_pos")
-    )
-    hit = member(F.col("_pos"))
+    The membership test is ``bloom_member``; the reduce to per-document
+    rows map-side-combines before the single exchange."""
+    hit = bloom_member(corpus.sparkSession, bitmap, F.col("_gram"), n_hashes)
+    g = _gram_rows(corpus, text_col, id_col, id_col, n)
     return g.select(id_col, hit.alias("_hit")).groupBy(id_col).agg(
         F.count("*").alias("n_grams"),
         F.sum(F.col("_hit").cast("long")).alias("n_bloom_grams"),

@@ -18,14 +18,16 @@ array ops) — no Python in any per-row path.
 Cache ownership (ADVICE r6, helper r9): operators ``persist()`` frames
 that feed multiple consumers inside ONE returned plan (doc tables,
 signature tables, gram rows) and cannot unpersist them — the plan is
-lazy, the action is the caller's. The CALLER owns cleanup: wrap the
-consuming action in ``cacheutil.scoped_caches(spark)`` (frees exactly
-what the block persisted, co-tenant caches untouched) or call
-``spark.catalog.clearCache()`` (what bench.py does per query; one-shot
-driver/test runs can skip it — blocks are LRU-evicted, never a
-correctness issue). Iterative operators that materialize INTERNALLY
-(``dedup_clusters``) free their superseded rounds themselves and exit
-with only the returned frame's blocks live.
+lazy, the action is the caller's. The CALLER owns cleanup. A
+single-tenant caller wraps the consuming action in
+``cacheutil.scoped_caches(spark)``, or calls
+``spark.catalog.clearCache()`` (what bench.py does per query). Both free
+what OTHER queries cached too, so a session shared with concurrent
+queries leaves these blocks to LRU eviction instead (never a correctness
+issue; one-shot driver/test runs can skip cleanup too). Iterative
+operators that materialize INTERNALLY (``dedup_clusters``) release their
+superseded rounds by handle (``cacheutil.release``) and exit with only
+the returned frame's blocks live.
 """
 
 from __future__ import annotations
@@ -138,23 +140,6 @@ def shingles(text: Column, n: int = 3) -> Column:
         lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
     )
     return F.when(k <= 0, F.array(F.array_join(toks, " "))).otherwise(F.array_distinct(grams))
-
-
-def minhash_signature(shingle_arr: Column, num_hashes: int = 64) -> Column:
-    """k independent min-hashes as ONE nested higher-order expression:
-    outer transform over seed ids, inner transform hashing each shingle
-    with that seed. Deterministic, no random state, JVM-side.
-
-    Column-expression form for unit tests / ad-hoc use. Higher-order
-    functions are CodegenFallback (interpreted, ~µs per lambda call) — for
-    pipelines use ``minhash_signatures_df``, which computes the identical
-    signature through exploded rows + codegen'd min aggregates, ~100×
-    faster. Pass a *materialized attribute* for ``shingle_arr``: an inline
-    expression would be re-evaluated once per seed by the outer lambda."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda i: F.array_min(F.transform(shingle_arr, lambda s: F.xxhash64(s, i))),
-    )
 
 
 def shingle_rows(
@@ -1210,16 +1195,16 @@ def dedup_clusters(
     Cache lifetime (r8 advice): each round's eager checkpoint would
     otherwise leave the PREVIOUS round's blocks cached until session
     LRU — O(rounds) dead RDDs in a long-lived service. Superseded
-    rounds (and, after the loop, the edge list) are unpersisted as soon
-    as the next round has materialized, so the function exits with
-    exactly ONE live checkpoint: the blocks backing the returned frame
-    (the caller frees those with ``cacheutil.scoped_caches`` around its
-    consuming action).
+    rounds (and, after the loop, the edge list) are released by their
+    own handles (``cacheutil.release``) as soon as the next round has
+    materialized, so the function exits with exactly ONE live checkpoint
+    of its own, the blocks backing the returned frame, and frees no other
+    query's caches. The caller owns those blocks (a single-tenant caller
+    can wrap its consuming action in ``cacheutil.scoped_caches``).
     """
-    from ..cacheutil import materialize, persistent_rdd_ids, release_caches
+    from ..cacheutil import materialize, release
 
     spark = pairs.sparkSession
-    pre = persistent_rdd_ids(spark)
     # Checkpoint the directed pair list ONCE and mirror it from the
     # materialized blocks. Checkpointing the union itself would execute
     # the upstream pair subtree (for LSH pairs, the whole corpus scan +
@@ -1230,7 +1215,6 @@ def dedup_clusters(
         pairs.select(F.col("id_a").alias("s"), F.col("id_b").alias("d"))
     )
     edges = p0.unionAll(p0.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    edge_ids = persistent_rdd_ids(spark) - pre
     if edges.isEmpty():
         # no pairs at all — the COMMON case for a streaming micro-batch
         # probing the incremental index. Skip the propagation machinery
@@ -1238,7 +1222,7 @@ def dedup_clusters(
         # convergence probe, ~seconds of per-batch latency for nothing):
         # every document is its own singleton cluster. The returned plan
         # never reads the (empty) edge checkpoint — free it now.
-        release_caches(spark, edge_ids)
+        release(p0)
         if all_ids is None:
             return pairs.select(
                 F.col("id_a").alias(id_col),
@@ -1254,7 +1238,7 @@ def dedup_clusters(
         n_edges = edges.count()
         if n_edges <= max_driver_edges:
             rows = edges.collect()  # hard-bounded by max_driver_edges
-            release_caches(spark, edge_ids)
+            release(p0)
             parent: dict = {}
 
             def find(x):
@@ -1297,25 +1281,21 @@ def dedup_clusters(
             return out.withColumn(
                 "keep", (F.col(id_col) == F.col("cluster_id")).cast("boolean")
             )
-    pre_labels = persistent_rdd_ids(spark)
     labels = materialize(
         edges.select(F.col("s").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
     )
-    label_ids = persistent_rdd_ids(spark) - pre_labels
     for _ in range(max_iter):
         neighbor = (
             edges.join(labels, edges.d == labels.id)
             .select(F.col("s").alias("id"), "label")
         )
-        pre_round = persistent_rdd_ids(spark)
         new_labels = materialize(
             labels.unionByName(neighbor)
             .groupBy("id")
             .agg(F.min("label").alias("label"))
         )
-        new_ids = persistent_rdd_ids(spark) - pre_round
         changed = (
             new_labels.join(labels.withColumnRenamed("label", "old"), "id")
             .where(F.col("label") != F.col("old"))
@@ -1324,12 +1304,12 @@ def dedup_clusters(
         )
         # the convergence probe was this round's LAST read of the old
         # labels — free its blocks before they pile up round over round
-        release_caches(spark, label_ids)
-        labels, label_ids = new_labels, new_ids
+        release(labels)
+        labels = new_labels
         if changed == 0:
             break
     # the returned plan reads only the final labels; the edge list is done
-    release_caches(spark, edge_ids)
+    release(p0)
     out = labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
     if all_ids is not None:
         out = (
@@ -1603,8 +1583,8 @@ def exact_substring_spans(
 
     # the gram table feeds two consumers (the duplicate-count branch and
     # the marks semi-join): persist so tokenize+window+md5 runs once, not
-    # twice (the minhash/span doc-table discipline; caller frees via
-    # cacheutil.scoped_caches)
+    # twice (the minhash/span doc-table discipline; the caller owns
+    # cleanup, per the module docstring)
     grams = anchor_gram_rows(df, text_col, id_col, min_len).persist(
         StorageLevel.MEMORY_AND_DISK
     )

@@ -51,7 +51,7 @@ def filter_rules(
     return {
         "len_ok": (n_tok >= min_tokens) & (n_tok <= max_tokens),
         # r15: the codegen regex form — the interpreted HOF form
-        # (predicted_lang_from_tokens) was ~85% of the gate's per-row
+        # (an F.filter marker scan) was ~85% of the gate's per-row
         # cost because the argmax chain re-evaluates each language's
         # token filter when interpreted; see textops._marker_count
         "lang_ok": predicted_lang_from_text(F.lower(text)).isin(*allowed_langs),

@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..cacheutil import release
+
 # np/pd are module-level on purpose: pandas_udf resolves the (stringified,
 # via __future__ annotations) type hints against this module's globals —
 # function-local imports would make `pd.Series` hints unresolvable.
@@ -898,10 +900,12 @@ def semdedup_prune(
 
     Cache lifetime: the persisted assignment table feeds two consumers
     inside the RETURNED lazy plan (the cell-size cap and both self-join
-    sides), so this function cannot unpersist it — the caller wraps the
-    consuming action in ``cacheutil.scoped_caches(spark)`` to free it
-    deterministically (tested in tests/test_llm_ops.py) instead of
-    riding session LRU.
+    sides), so this function cannot unpersist it. A single-tenant caller
+    frees it by wrapping the consuming action in
+    ``cacheutil.scoped_caches(spark)`` (tested in tests/test_llm_ops.py);
+    that frees whatever ANY query persisted during the block, so in a
+    session shared with concurrent queries the table is left to session
+    LRU instead.
     """
     from pyspark import StorageLevel
 
@@ -1059,6 +1063,7 @@ def pq_train(
             ]
             for s in range(m)
         ]
+    release(nv)
     return codebooks
 
 

@@ -136,14 +136,6 @@ def quality_score(text: Column) -> Column:
     return length_ok + stop_part - punct_penalty + F.lit(0.2)
 
 
-def _marker_test(markers: tuple[str, ...]):
-    """Factory binding the marker tuple so the lambda stays single-param —
-    a 2-arg lambda (even via default args) is treated by PySpark's
-    higher-order functions as (element, index), silently replacing the
-    default with the array-index column."""
-    return lambda t: t.isin(*markers)
-
-
 def lang_scores(text: Column) -> Column:
     """Map of language → marker-hit count; argmax (ties → lexicographic
     language code) is the predicted language. Counts via the codegen
@@ -167,14 +159,6 @@ def predicted_lang(text: Column) -> Column:
     return predicted_lang_from_text(F.lower(text))
 
 
-def _lang_argmax(scores: dict[str, Column]) -> Column:
-    best = F.greatest(*scores.values())
-    expr = F.lit("und")
-    for c in reversed(sorted(scores)):  # reversed: smallest code outermost
-        expr = F.when(scores[c] == best, F.lit(c)).otherwise(expr)
-    return F.when(best <= 0, F.lit("und")).otherwise(expr)
-
-
 def predicted_lang_from_text(lowered_text: Column) -> Column:
     """``predicted_lang`` over an already-lowercased text column — the
     codegen single-evaluation form (r15): per-language occurrence counts
@@ -183,15 +167,16 @@ def predicted_lang_from_text(lowered_text: Column) -> Column:
     exactly once per row. The naive when-chain argmax re-evaluates each
     score under its conditional branches (Spark's subexpression
     elimination skips expressions inside when/if arms), which measured
-    ~4× the five raw regex passes; the interpreted HOF form
-    (``predicted_lang_from_tokens``) was worse still and dominated
+    ~4× the five raw regex passes; the interpreted higher-order
+    ``F.filter`` form was worse still and dominated
     ``apply_corpus_filter`` inside every curation query. Tie-break and
     zero-hit semantics are encoded IN the structs: ``tie_rank`` makes
     the lexicographically-smallest code win equal scores, and a sentinel
     ``(0, +1, 'und')`` entry outranks every zero-score language (real
     tie_ranks are ≤ 0) while losing to any positive score, so the
     all-zero case needs no second look at the array. Pinned equal to
-    the HOF reference form on real + adversarial corpora."""
+    the HOF reference form (kept in tests/test_llm_ops.py) on real +
+    adversarial corpora."""
     codes = sorted(LANG_MARKERS)
     entries = [
         F.struct(
@@ -205,23 +190,6 @@ def predicted_lang_from_text(lowered_text: Column) -> Column:
         F.lit(0).cast("int").alias("s"), F.lit(1).alias("r"), F.lit("und").alias("c")
     )
     return F.array_max(F.array(*entries, sentinel))["c"]
-
-
-def predicted_lang_from_tokens(toks: Column) -> Column:
-    """``predicted_lang`` over an already-materialized (lowercased) token
-    array — the ORIGINAL higher-order-function form, kept as the
-    reference implementation the codegen form is test-pinned against
-    (and for callers that only have the token array). Prefer
-    ``predicted_lang_from_text`` on hot paths: HOF lambdas are
-    CodegenFallback and this expression tree evaluates each language's
-    filter several times per row when interpreted."""
-    codes = sorted(LANG_MARKERS)
-    return _lang_argmax(
-        {
-            c: F.size(F.filter(toks, _marker_test(LANG_MARKERS[c])))
-            for c in codes
-        }
-    )
 
 
 def sliding_grams(toks: Column, n: int) -> Column:

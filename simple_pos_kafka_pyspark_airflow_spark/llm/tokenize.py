@@ -55,6 +55,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cacheutil import release
+
 # ---------------------------------------------------------------------------
 # Python twins — the semantic ground truth (pure, deterministic)
 # ---------------------------------------------------------------------------
@@ -380,10 +382,13 @@ def bpe_train_from_counts(
         for a, b in batch:
             h = F.array_contains("syms", a) & F.array_contains("syms", b)
             hit = h if hit is None else (hit | h)
+        superseded = vocab
         vocab = vocab.select(
             F.when(hit, apply_batch("syms")).otherwise(F.col("syms")).alias("syms"),
             "count",
         ).localCheckpoint(eager=True)
+        release(superseded)
+    release(vocab)
     return merges
 
 

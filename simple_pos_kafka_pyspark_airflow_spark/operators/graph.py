@@ -49,10 +49,8 @@ def pagerank(
     exactly by the contract oracle. Returns ``(node, rank)`` unrounded;
     callers round for display/hashing.
     """
-    from ..cacheutil import materialize, persistent_rdd_ids, release_caches
+    from ..cacheutil import materialize, release
 
-    spark = edges.sparkSession
-    pre = persistent_rdd_ids(spark)
     # Materialize the projected edge list ONCE: nodes, out-weights, the
     # normalized edges AND every power iteration all consume it, and
     # without the checkpoint each consumer replans the full upstream
@@ -69,7 +67,6 @@ def pagerank(
             F.col(weight_col).cast("long").alias("_w"),
         )
     )
-    e_ids = persistent_rdd_ids(spark) - pre
     nodes = (
         e.select(F.col("_src").alias("node"))
         .union(e.select(F.col("_dst").alias("node")))
@@ -87,7 +84,6 @@ def pagerank(
     ranks = nodes.join(F.broadcast(n_nodes)).select(
         "node", (F.lit(1.0) / F.col("_nn")).alias("rank")
     )
-    rank_ids: set[int] = set()
     for _ in range(iters):
         contribs = (
             en.join(ranks, en["_src"] == ranks["node"])
@@ -100,7 +96,7 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("_c").alias("_s"))
         )
-        pre_round = persistent_rdd_ids(spark)
+        superseded = ranks
         ranks = materialize(
             nodes.join(contribs, "node", "left")
             .join(F.broadcast(n_nodes))
@@ -115,13 +111,12 @@ def pagerank(
         )
         # the new checkpoint is materialized — the previous iteration's
         # blocks will never be read again (dedup_clusters discipline)
-        release_caches(spark, rank_ids)
-        rank_ids = persistent_rdd_ids(spark) - pre_round
+        release(superseded)
     if iters > 0:
         # the returned frame is itself checkpointed; the edge blocks are
         # done (checkpoint lineage cannot recompute, so only release when
         # the result no longer reads them)
-        release_caches(spark, e_ids)
+        release(e)
     return ranks
 
 

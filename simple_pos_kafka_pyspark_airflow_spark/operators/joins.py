@@ -18,13 +18,10 @@ Scale notes baked into each helper:
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# pd is module-level on purpose: pandas_udf resolves the (stringified,
-# via __future__ annotations) type hints against this module's globals
-# (the llm.bloom convention).
+from ..llm.bloom import bloom_key_bitmap, bloom_member
 
 
 def anti_by_key(old: DataFrame, new: DataFrame, key: str) -> DataFrame:
@@ -317,54 +314,6 @@ def theta_filter_join(left: DataFrame, right: DataFrame, on: str, predicate: Col
     return left.join(right, on=on, how="inner").where(predicate)
 
 
-def bloom_key_bitmap(
-    keys: DataFrame,
-    key_col: str,
-    m_bits: int = 1 << 22,
-    n_hashes: int = 4,
-):
-    """Bloom bitmap (numpy uint8) of a key column — the key-typed twin of
-    ``llm.bloom.bloom_bitmap`` (same xxhash64 k-seed/pmod positions, same
-    executor-side chunk packing; the driver collects only packed 128 KiB
-    chunks, never a position stream). Size ``m_bits ≥ 32·k·|keys|`` keeps
-    per-probe false positives under ~1e-6 at k=4."""
-    import numpy as np
-
-    from ..llm.bloom import _CHUNK_BITS, _position_array
-
-    if m_bits <= 0 or m_bits % 8:
-        raise ValueError(f"m_bits must be a positive multiple of 8, got {m_bits}")
-    chunk_bits = min(_CHUNK_BITS, m_bits)
-    pos = (
-        keys.select(
-            F.explode(_position_array(F.col(key_col), m_bits, n_hashes)).alias("p")
-        )
-        .distinct()
-        .withColumn("chunk", F.floor(F.col("p") / chunk_bits).cast("int"))
-    )
-
-    def pack(pdf):
-        import numpy as np
-        import pandas as pd
-
-        chunk = int(pdf["chunk"].iloc[0])
-        local = np.zeros(chunk_bits >> 3, dtype=np.uint8)
-        off = pdf["p"].to_numpy().astype(np.int64) - chunk * chunk_bits
-        np.bitwise_or.at(local, off >> 3, (1 << (off & 7)).astype(np.uint8))
-        return pd.DataFrame({"chunk": [chunk], "bits": [local.tobytes()]})
-
-    bitmap = np.zeros(m_bits >> 3, dtype=np.uint8)
-    nbytes = chunk_bits >> 3
-    for row in pos.groupBy("chunk").applyInPandas(pack, "chunk int, bits binary").collect():
-        c = int(row["chunk"])
-        # the last chunk may be shorter when m_bits is not a multiple of
-        # _CHUNK_BITS — trim the packed buffer to the remaining slice
-        start = c * nbytes
-        end = min(start + nbytes, bitmap.size)
-        bitmap[start:end] = np.frombuffer(row["bits"], np.uint8)[: end - start]
-    return bitmap
-
-
 def bloom_semi_reduce(
     fact: DataFrame,
     keys: DataFrame,
@@ -385,17 +334,13 @@ def bloom_semi_reduce(
     survivors (true matches + a ~fill^k false-positive sliver) still go
     through the exact semi join. What changes is the COST: the fact is
     scanned once against a broadcast few-MB bitmap (Arrow-batched numpy
-    gather, the ``llm.bloom.bloom_flag`` discipline) and only survivors
+    gather, ``llm.bloom.bloom_member``) and only survivors
     enter the join's exchange — at a 1e-4 match rate, the shuffle
     carries 1/10⁴ of the fact.
 
     Driver materialization: building the bitmap runs one job over
     ``keys`` and collects ≤ m_bits/2²⁰ packed 128 KiB chunk rows —
     bounded by the BITMAP size, never by the key count."""
-    import pandas as pd
-
-    from ..llm.bloom import _position_array
-
     kk = keys_key or fact_key
     # xxhash64 is TYPE-sensitive (an int and a bigint holding the same
     # value hash differently), so mismatched key types would set bitmap
@@ -410,24 +355,8 @@ def bloom_semi_reduce(
             "columns to a common type first"
         )
     bitmap = bloom_key_bitmap(keys, kk, m_bits=m_bits, n_hashes=n_hashes)
-    mb = int(bitmap.size) << 3
-    spark = fact.sparkSession
-    bc = spark.sparkContext.broadcast(bitmap)
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("boolean")
-    def member(pos: pd.Series) -> pd.Series:
-        import numpy as np
-
-        if pos.empty:
-            return pd.Series([], dtype=bool)
-        bm = bc.value
-        mat = np.stack(pos.to_numpy()).astype(np.int64)
-        bits = (bm[mat >> 3] >> (mat & 7).astype(np.uint8)) & 1
-        return pd.Series(bits.all(axis=1))
-
     survivors = fact.where(
-        member(_position_array(F.col(fact_key), mb, n_hashes))
+        bloom_member(fact.sparkSession, bitmap, F.col(fact_key), n_hashes)
     )
     right = keys.select(F.col(kk).alias(fact_key)).distinct()
     return survivors.join(right, fact_key, "left_semi")

@@ -55,8 +55,9 @@ from pyspark.sql import functions as F
 
 # pd is module-level on purpose: pandas_udf resolves the (stringified,
 # via __future__ annotations) type hints against this module's globals
-# (the operators.joins convention).
+# (the llm.bloom convention).
 
+from ..cacheutil import release, released_on_error
 from ..llm import simsearch
 from ..sources.io import (
     fs_dir_has_data,
@@ -379,15 +380,17 @@ class IncrementalIvfIndex:
                 )
                 .localCheckpoint(eager=True)
             )
-            if not kept.isEmpty():
-                self._append(
-                    assigned.join(kept.select(self.id_col), self.id_col, "left_semi"), idx
-                )
+            with released_on_error(kept):
+                if not kept.isEmpty():
+                    self._append(
+                        assigned.join(kept.select(self.id_col), self.id_col, "left_semi"),
+                        idx,
+                    )
             return kept
         finally:
             # released on a refused or failed append too: a retried
             # batch must not leave its assignment cached
-            assigned.unpersist()
+            release(assigned)
 
     def occupancy_drift(self, df: DataFrame, eps: float = 1e-4) -> DataFrame:
         """PSI between the LANDED index's cell-occupancy distribution and

@@ -33,13 +33,12 @@ in this container); the swap is atomic via staged directory rename.
 
 from __future__ import annotations
 
-import contextlib
 from functools import reduce
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cacheutil import computed
 from ..operators import upsert as upsert_ops
 from ..sources.io import (
     _fs_for,
@@ -130,19 +129,6 @@ def _changelog(current: DataFrame, final: DataFrame, keys: list[str]) -> DataFra
     return j.where(changed).select(*keys, *[f"n.{c}" for c in final.columns if c not in keys])
 
 
-@contextlib.contextmanager
-def _computed(df: DataFrame):
-    """Persist ``df``, compute it now (its row count, yielded with it) and
-    unpersist it on exit. Frees only this frame: a diff of the session's
-    persisted RDDs (``cacheutil.scoped_caches``) would also free the
-    blocks of concurrent queries' sinks sharing the session."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        yield df, df.count()
-    finally:
-        df.unpersist()
-
-
 class ParquetCdcSink:
     """Checkpointable CDC target over plain parquet.
 
@@ -173,7 +159,7 @@ class ParquetCdcSink:
     def foreach_batch(self, events: DataFrame, batch_id: int) -> None:
         # the final event per key, computed once: its row count is the
         # idle-trigger check and every plan below reads it from memory
-        with _computed(latest_per_key(events, self.pk, self.order_col)) as (final, n):
+        with computed(latest_per_key(events, self.pk, self.order_col)) as (final, n):
             if n:
                 self._apply(final)
 
@@ -276,7 +262,7 @@ class ScdParquetCdcSink(ParquetCdcSink):
         ).alias("h")
         replayed = (F.col(f"u.{OP_COL}") == OP_UPSERT) & _same(version_cols, "u", "h")
         guarded = changes.alias("u").join(hist_versions, replayed, "left_anti")
-        with _computed(guarded) as (guarded, _):
+        with computed(guarded) as (guarded, _):
             # one row per key, so the closed keys (fresh upserts and
             # deletes) and the opened versions never collide:
             # scd2_close(scd2_apply(history, fresh), deletes) in one pass

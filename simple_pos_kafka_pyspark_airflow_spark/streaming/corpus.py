@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cacheutil import release, released_on_error
 from ..llm import dedup as dedup_ops
 from ..llm import textops
 
@@ -389,14 +390,13 @@ class IncrementalMinhashIndex(_IndexLog):
                     dup_ids.withColumnRenamed(self.id_col, "doc_id"), "doc_id", "left_anti"
                 )
             kept = kept.localCheckpoint(eager=True)
-            self._append(idx_out)
+            with released_on_error(kept):
+                self._append(idx_out)
             return kept
         finally:
             # released on a failed append too: a retried batch must not
             # leave its intermediates cached
-            for frame in (dup_ids, idx, doc_tbl):
-                if frame is not None:
-                    frame.unpersist()
+            release(dup_ids, idx, doc_tbl)
 
 
 class IncrementalDigestIndex(_IndexLog):
@@ -526,7 +526,10 @@ class IncrementalDigestIndex(_IndexLog):
             kept = kept.join(dup_ids, self.id_col, "left_anti")
         kept = kept.unionByName(keyless).localCheckpoint(eager=True)
         if record:
-            self._append(kept.select(self.id_col, "_dig").where(F.col("_dig").isNotNull()))
+            with released_on_error(kept):
+                self._append(
+                    kept.select(self.id_col, "_dig").where(F.col("_dig").isNotNull())
+                )
         return kept.drop("_dig")
 
 
@@ -626,43 +629,45 @@ class IncrementalSpanIndex(_IndexLog):
         seg = dedup_ops.span_segment_rows(
             docs, self.text_col, self.id_col, self.span_tokens, self.delimiter
         ).persist(StorageLevel.MEMORY_AND_DISK)
-
-        batch_counts = seg.groupBy("_dig").agg(
-            F.count_distinct(F.col(self.id_col)).alias("_n")
-        )
-        combined = self._with_history(batch_counts, batch_id)
-        boiler = combined.where(F.col("_n") >= self.min_docs).select("_dig")
-
-        flagged = seg.join(F.broadcast(boiler.withColumn("_b", F.lit(True))), "_dig", "left")
-        is_boiler = F.coalesce(F.col("_b"), F.lit(False))
-        joiner = self.delimiter if self.delimiter is not None else " "
-        cleaned = flagged.groupBy(self.id_col).agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(~is_boiler, F.struct(F.col("_i"), F.col("_seg")))
-                        )
-                    ),
-                    lambda s: s["_seg"],
-                ),
-                joiner,
-            ).alias("text_clean"),
-            F.sum(is_boiler.cast("int")).cast("int").alias("n_dropped"),
-        )
-        out = (
-            docs.select(self.id_col)
-            .join(cleaned, self.id_col, "left")
-            .select(
-                self.id_col,
-                F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-                F.coalesce("n_dropped", F.lit(0)).alias("n_dropped"),
+        try:
+            batch_counts = seg.groupBy("_dig").agg(
+                F.count_distinct(F.col(self.id_col)).alias("_n")
             )
-            .localCheckpoint(eager=True)
-        )
-        self._append(batch_counts, batch_id)
-        seg.unpersist()
-        return out
+            combined = self._with_history(batch_counts, batch_id)
+            boiler = combined.where(F.col("_n") >= self.min_docs).select("_dig")
+
+            flagged = seg.join(F.broadcast(boiler.withColumn("_b", F.lit(True))), "_dig", "left")
+            is_boiler = F.coalesce(F.col("_b"), F.lit(False))
+            joiner = self.delimiter if self.delimiter is not None else " "
+            cleaned = flagged.groupBy(self.id_col).agg(
+                F.array_join(
+                    F.transform(
+                        F.array_sort(
+                            F.collect_list(
+                                F.when(~is_boiler, F.struct(F.col("_i"), F.col("_seg")))
+                            )
+                        ),
+                        lambda s: s["_seg"],
+                    ),
+                    joiner,
+                ).alias("text_clean"),
+                F.sum(is_boiler.cast("int")).cast("int").alias("n_dropped"),
+            )
+            out = (
+                docs.select(self.id_col)
+                .join(cleaned, self.id_col, "left")
+                .select(
+                    self.id_col,
+                    F.coalesce("text_clean", F.lit("")).alias("text_clean"),
+                    F.coalesce("n_dropped", F.lit(0)).alias("n_dropped"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            with released_on_error(out):
+                self._append(batch_counts, batch_id)
+            return out
+        finally:
+            release(seg)
 
 
 class IncrementalLineIndex(_IndexLog):
@@ -735,50 +740,53 @@ class IncrementalLineIndex(_IndexLog):
             .withColumn("_dig", F.xxhash64("_line"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        batch_counts = lines.groupBy("_grp", "_dig").agg(
-            F.count_distinct(F.col(self.id_col)).alias("_n")
-        )
-        combined = self._with_history(batch_counts, batch_id)
-        chrome = combined.where(F.col("_n") >= self.min_docs).select("_grp", "_dig")
-
-        # no broadcast hint (r14, ADVICE): the chrome set is CORPUS-
-        # LIFETIME and unbounded (every ≥min_docs line per group — huge
-        # for real web corpora), so forcing it driver-side would blow the
-        # broadcast limit exactly when the index matters most.  AQE picks
-        # broadcast on its own while the set is small — the batch twin
-        # strip_common_lines uses the same plain join.
-        flagged = lines.join(
-            chrome.withColumn("_b", F.lit(True)), ["_grp", "_dig"], "left"
-        )
-        is_chrome = F.coalesce(F.col("_b"), F.lit(False))
-        cleaned = flagged.groupBy(self.id_col).agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(~is_chrome, F.struct(F.col("_pos"), F.col("_line")))
-                        )
-                    ),
-                    lambda s: s["_line"],
-                ),
-                "\n",
-            ).alias("text_clean"),
-            F.sum(is_chrome.cast("long")).cast("long").alias("n_dropped"),
-        )
-        out = (
-            docs.select(self.id_col, self.group_col)
-            .join(cleaned, self.id_col, "left")
-            .select(
-                self.id_col,
-                self.group_col,
-                F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-                F.coalesce("n_dropped", F.lit(0)).cast("long").alias("n_dropped"),
+        try:
+            batch_counts = lines.groupBy("_grp", "_dig").agg(
+                F.count_distinct(F.col(self.id_col)).alias("_n")
             )
-            .localCheckpoint(eager=True)
-        )
-        self._append(batch_counts, batch_id)
-        lines.unpersist()
-        return out
+            combined = self._with_history(batch_counts, batch_id)
+            chrome = combined.where(F.col("_n") >= self.min_docs).select("_grp", "_dig")
+
+            # no broadcast hint (r14, ADVICE): the chrome set is CORPUS-
+            # LIFETIME and unbounded (every ≥min_docs line per group — huge
+            # for real web corpora), so forcing it driver-side would blow the
+            # broadcast limit exactly when the index matters most.  AQE picks
+            # broadcast on its own while the set is small — the batch twin
+            # strip_common_lines uses the same plain join.
+            flagged = lines.join(
+                chrome.withColumn("_b", F.lit(True)), ["_grp", "_dig"], "left"
+            )
+            is_chrome = F.coalesce(F.col("_b"), F.lit(False))
+            cleaned = flagged.groupBy(self.id_col).agg(
+                F.array_join(
+                    F.transform(
+                        F.array_sort(
+                            F.collect_list(
+                                F.when(~is_chrome, F.struct(F.col("_pos"), F.col("_line")))
+                            )
+                        ),
+                        lambda s: s["_line"],
+                    ),
+                    "\n",
+                ).alias("text_clean"),
+                F.sum(is_chrome.cast("long")).cast("long").alias("n_dropped"),
+            )
+            out = (
+                docs.select(self.id_col, self.group_col)
+                .join(cleaned, self.id_col, "left")
+                .select(
+                    self.id_col,
+                    self.group_col,
+                    F.coalesce("text_clean", F.lit("")).alias("text_clean"),
+                    F.coalesce("n_dropped", F.lit(0)).cast("long").alias("n_dropped"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            with released_on_error(out):
+                self._append(batch_counts, batch_id)
+            return out
+        finally:
+            release(lines)
 
 
 class IncrementalSubstringIndex(_IndexLog):
@@ -847,18 +855,20 @@ class IncrementalSubstringIndex(_IndexLog):
         grams = dedup_ops.anchor_gram_rows(
             docs, self.text_col, self.id_col, self.min_len
         ).persist(StorageLevel.MEMORY_AND_DISK)
-
-        batch_counts = grams.groupBy("_g").agg(F.count("*").alias("_n"))
-        combined = self._with_history(batch_counts, batch_id)
-        dup = combined.where(F.col("_n") >= self.min_count).select("_g")
-        marks = grams.join(F.broadcast(dup), "_g", "left_semi")
-        spans = dedup_ops.covered_spans(marks, self.id_col, self.min_len)
-        out = dedup_ops.excise_spans(
-            docs, spans, self.text_col, self.id_col
-        ).localCheckpoint(eager=True)
-        self._append(batch_counts, batch_id)
-        grams.unpersist()
-        return out
+        try:
+            batch_counts = grams.groupBy("_g").agg(F.count("*").alias("_n"))
+            combined = self._with_history(batch_counts, batch_id)
+            dup = combined.where(F.col("_n") >= self.min_count).select("_g")
+            marks = grams.join(F.broadcast(dup), "_g", "left_semi")
+            spans = dedup_ops.covered_spans(marks, self.id_col, self.min_len)
+            out = dedup_ops.excise_spans(
+                docs, spans, self.text_col, self.id_col
+            ).localCheckpoint(eager=True)
+            with released_on_error(out):
+                self._append(batch_counts, batch_id)
+            return out
+        finally:
+            release(grams)
 
 
 class IncrementalCmsIndex(_IndexLog):

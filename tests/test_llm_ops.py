@@ -14,6 +14,45 @@ from pyspark.sql import functions as F
 from simple_pos_kafka_pyspark_airflow_spark.llm import dedup, textops
 
 
+def minhash_signature(shingle_arr, num_hashes: int = 64):
+    """Reference form of the MinHash signature: k independent min-hashes
+    as ONE nested higher-order expression (outer transform over seed ids,
+    inner transform hashing each shingle with that seed). The pipelines
+    compute the identical signature through exploded rows and codegen
+    min aggregates (``dedup.minhash_signatures_df``)."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+        lambda i: F.array_min(F.transform(shingle_arr, lambda s: F.xxhash64(s, i))),
+    )
+
+
+def _marker_test(markers: tuple[str, ...]):
+    """Binds the marker tuple so the lambda stays single-param — a 2-arg
+    lambda (even via default args) is treated by PySpark's higher-order
+    functions as (element, index)."""
+    return lambda t: t.isin(*markers)
+
+
+def _lang_argmax(scores: dict):
+    best = F.greatest(*scores.values())
+    expr = F.lit("und")
+    for c in reversed(sorted(scores)):  # reversed: smallest code outermost
+        expr = F.when(scores[c] == best, F.lit(c)).otherwise(expr)
+    return F.when(best <= 0, F.lit("und")).otherwise(expr)
+
+
+def predicted_lang_from_tokens(toks):
+    """Reference form of ``textops.predicted_lang_from_text`` over a
+    lowercased token array: per-language ``F.filter`` marker counts and a
+    when-chain argmax (ties → smallest code, zero hits → 'und')."""
+    return _lang_argmax(
+        {
+            c: F.size(F.filter(toks, _marker_test(textops.LANG_MARKERS[c])))
+            for c in sorted(textops.LANG_MARKERS)
+        }
+    )
+
+
 def test_minhash_signature_not_degenerate(spark):
     """The 64 seeded min-hashes of a multi-shingle doc must not all be
     equal (they were, when seed i was silently replaced by the array
@@ -22,7 +61,7 @@ def test_minhash_signature_not_degenerate(spark):
         [("the quick brown fox jumps over the lazy dog and runs away fast",)], ["text"]
     )
     sig = df.select(
-        dedup.minhash_signature(dedup.shingles(F.col("text"), 3), 64).alias("sig")
+        minhash_signature(dedup.shingles(F.col("text"), 3), 64).alias("sig")
     ).first()["sig"]
     assert len(sig) == 64
     assert len(set(sig)) > 32, "minhash seeds are not independent"
@@ -36,7 +75,7 @@ def test_minhash_similar_docs_share_more_minhashes(spark):
     sigs = {
         r["id"]: r["sig"]
         for r in df.select(
-            "id", dedup.minhash_signature(dedup.shingles(F.col("text"), 3), 64).alias("sig")
+            "id", minhash_signature(dedup.shingles(F.col("text"), 3), 64).alias("sig")
         ).collect()
     }
     agree_ab = sum(x == y for x, y in zip(sigs[1], sigs[2]))
@@ -3280,8 +3319,8 @@ def test_predicted_lang_codegen_equals_hof_reference(spark, sf_dir):
     """r15: language id and marker counting moved from interpreted
     higher-order F.filter scans to one codegen regexp_count pass per
     language with a single-evaluation struct-array argmax. Pin the new
-    form bit-equal to the retained HOF reference
-    (predicted_lang_from_tokens) on the real corpus AND on adversarial
+    form bit-equal to the HOF reference
+    (predicted_lang_from_tokens, above) on the real corpus AND on adversarial
     token boundaries (punctuation-glued markers, repeated single-char
     markers sharing one delimiter, tabs/newlines, ties, the all-zero →
     'und' sentinel), and stopword_ratio exactly unchanged."""
@@ -3289,7 +3328,7 @@ def test_predicted_lang_codegen_equals_hof_reference(spark, sf_dir):
     toks = textops.tokens(F.lower(F.col("text")))
     cmp = docs.select(
         textops.predicted_lang_from_text(F.lower(F.col("text"))).alias("new"),
-        textops.predicted_lang_from_tokens(toks).alias("old"),
+        predicted_lang_from_tokens(toks).alias("old"),
     )
     assert cmp.where(F.col("new") != F.col("old")).count() == 0
 
@@ -3306,7 +3345,7 @@ def test_predicted_lang_codegen_equals_hof_reference(spark, sf_dir):
     c2 = adv.select(
         "doc_id",
         textops.predicted_lang_from_text(F.lower(F.col("text"))).alias("new"),
-        textops.predicted_lang_from_tokens(
+        predicted_lang_from_tokens(
             textops.tokens(F.lower(F.col("text")))
         ).alias("old"),
     )

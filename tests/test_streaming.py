@@ -1554,17 +1554,25 @@ def test_scd2_cdc_sink_history_plan_reads_each_table_at_most_twice(spark, tmp_pa
 
 
 def test_incremental_writes_release_only_their_own_frames(spark, tmp_path):
-    """The CDC sinks and the minhash/ANN ingest tiers free exactly the
-    frames they persisted — never a diff of the session's caches, which
-    would free concurrent queries' blocks: after each sink batch no new
-    RDD stays persisted, after each tier batch only the returned ``kept``
-    checkpoint does, and a frame persisted beforehand survives it all."""
+    """The CDC sinks and the minhash, span, line, substring and ANN
+    ingest tiers free exactly the frames they persisted — never a diff of
+    the session's caches, which would free concurrent queries' blocks:
+    after each sink batch no new RDD stays persisted, after each tier
+    batch only the returned checkpoint does, after a failed append
+    (digest tier included) none does, and a frame persisted beforehand
+    survives it all."""
     from simple_pos_kafka_pyspark_airflow_spark.cacheutil import (
         persistent_rdd_ids,
         release_caches,
     )
     from simple_pos_kafka_pyspark_airflow_spark.streaming.ann import IncrementalIvfIndex
-    from simple_pos_kafka_pyspark_airflow_spark.streaming.corpus import IncrementalMinhashIndex
+    from simple_pos_kafka_pyspark_airflow_spark.streaming.corpus import (
+        IncrementalDigestIndex,
+        IncrementalLineIndex,
+        IncrementalMinhashIndex,
+        IncrementalSpanIndex,
+        IncrementalSubstringIndex,
+    )
 
     unrelated = spark.range(50).persist()
     unrelated.count()
@@ -1598,35 +1606,54 @@ def test_incremental_writes_release_only_their_own_frames(spark, tmp_path):
         [(1, _unit(0)), (2, _unit(1))],
         [(10, _unit(0, eps=0.02, j=4)), (11, _unit(2)), (12, _unit(2, eps=0.02, j=5))],
     ]
+
+    def texts(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
     minhash = IncrementalMinhashIndex(spark, str(tmp_path / "lsh"), num_hashes=16, bands=8)
+    span = IncrementalSpanIndex(spark, str(tmp_path / "span"))
+    line = IncrementalLineIndex(spark, str(tmp_path / "line"), min_docs=2)
+    substring = IncrementalSubstringIndex(spark, str(tmp_path / "substr"), min_len=3)
     ann = IncrementalIvfIndex(spark, str(tmp_path / "ivf"), n_cells=2)
+    tiers = [  # (tier, batch rows, call)
+        (minhash, docs, lambda rows, b: minhash.dedup_batch(texts(rows))),
+        (span, docs, lambda rows, b: span.clean_batch(texts(rows), b)),
+        (
+            line,
+            docs,
+            lambda rows, b: line.clean_batch(texts(rows).withColumn("source", F.lit("web")), b),
+        ),
+        (substring, docs, lambda rows, b: substring.clean_batch(texts(rows), b)),
+        (
+            ann,
+            vecs,
+            lambda rows, b: ann.dedup_batch(
+                spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+            ),
+        ),
+    ]
     for b in range(2):  # the second batch probes landed state
-        for tier, batch in (
-            (minhash, spark.createDataFrame(docs[b], "doc_id long, text string")),
-            (ann, spark.createDataFrame(vecs[b], "vec_id long, embedding array<double>")),
-        ):
-            kept = tier.dedup_batch(batch)
+        for tier, batches, call in tiers:
+            kept = call(batches[b], b)
             new = persistent_rdd_ids(spark) - before
             checkpoint = kept._jdf.queryExecution().logical().rdd().id()
             assert new == {checkpoint}, (type(tier).__name__, b, new, checkpoint)
             assert before <= persistent_rdd_ids(spark)
             release_caches(spark, new)  # the caller owns kept
 
-    # a failed append (here: injected) still releases the tier's
-    # intermediates; only the kept checkpoint the call never returned is left
+    # a failed append (here: injected) releases the tier's intermediates
+    # and the checkpoint the call never returned: nothing is left
     def refuse(*a, **k):
         raise ValueError("append refused")
 
-    for tier, batch in (
-        (minhash, spark.createDataFrame([(20, fresh + " later")], "doc_id long, text string")),
-        (ann, spark.createDataFrame([(20, _unit(3))], "vec_id long, embedding array<double>")),
-    ):
+    digest = IncrementalDigestIndex(spark, str(tmp_path / "digest"))
+    tiers.append((digest, docs, lambda rows, b: digest.dedup_batch(texts(rows))))
+    for tier, _, call in tiers:
         tier._append = refuse
+        rows = [(20, _unit(3))] if tier is ann else [(20, fresh + " later")]
         with pytest.raises(ValueError, match="append refused"):
-            tier.dedup_batch(batch)
-        new = persistent_rdd_ids(spark) - before
-        assert len(new) == 1, (type(tier).__name__, new)
-        release_caches(spark, new)
+            call(rows, 2)
+        assert persistent_rdd_ids(spark) - before == set(), type(tier).__name__
 
     assert before <= persistent_rdd_ids(spark)
     assert unrelated.storageLevel.useMemory
