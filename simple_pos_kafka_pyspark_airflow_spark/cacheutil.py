@@ -2,9 +2,10 @@
 
 Several operators ``persist()`` frames that feed multiple consumers
 inside one returned (lazy) plan — doc tables, signature tables, IVF
-assignments — and iterative operators ``localCheckpoint(eager=True)``
-per round to truncate lineage. Both leave blocks in the executor block
-manager that only session LRU would otherwise reclaim. That is fine for
+assignments — and every eager checkpoint (iterative rounds that truncate
+lineage, ingest-tier outputs) goes through ``materialize``. Both leave
+blocks in the executor block manager that only session LRU would
+otherwise reclaim. That is fine for
 one-shot jobs (bench.py clears per query; a driver exits) but a
 long-lived service accumulates dead blocks and leans on eviction
 (docs/SCALE.md "Cache ownership").
@@ -52,10 +53,15 @@ CHECKPOINT_DIR_KEY = "spark.graft.checkpoint.dir"
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize an intermediate frame and truncate its lineage — the
-    single switch point for the engine's eager checkpoint sites
+    single switch point for every eager checkpoint in the library
     (pagerank's edge list and per-iteration ranks, ``dedup_clusters``'s
-    pair list and label rounds, the curation ladder's hubs, the graph
-    queries' undirected edge sets).
+    pair list, label rounds and result, the curation ladder's hubs, the
+    graph queries' undirected edge sets, the returned frame of each
+    ``streaming.corpus`` ingest tier, the IVF dedup tier and
+    ``ingest_corpus_batch``'s excised batch, ``bpe_train_from_counts``'s
+    vocabulary rounds and ``pq_train``'s normalized vectors). No other
+    module calls ``localCheckpoint`` or ``checkpoint``
+    (tests/test_cache_ownership.py guards it).
 
     Default (``spark.graft.materialize`` unset or ``"local"``):
     ``localCheckpoint`` — blocks live on executors with NO lineage, so

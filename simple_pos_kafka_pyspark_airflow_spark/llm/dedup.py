@@ -1197,10 +1197,11 @@ def dedup_clusters(
     LRU — O(rounds) dead RDDs in a long-lived service. Superseded
     rounds (and, after the loop, the edge list) are released by their
     own handles (``cacheutil.release``) as soon as the next round has
-    materialized, so the function exits with exactly ONE live checkpoint
-    of its own, the blocks backing the returned frame, and frees no other
-    query's caches. The caller owns those blocks (a single-tenant caller
-    can wrap its consuming action in ``cacheutil.scoped_caches``).
+    materialized, and the result is checkpointed in its output shape
+    before the final round is released. The distributed path therefore
+    returns a frame that IS its one live checkpoint: the caller frees it
+    with ``cacheutil.release(result)`` once consumed, and no other
+    query's caches are touched.
     """
     from ..cacheutil import materialize, release
 
@@ -1317,7 +1318,12 @@ def dedup_clusters(
             .join(out, id_col, "left")
             .withColumn("cluster_id", F.coalesce(F.col("cluster_id"), F.col(id_col)))
         )
-    return out.withColumn("keep", (F.col(id_col) == F.col("cluster_id")).cast("boolean"))
+    # the result is its own checkpoint, so the caller frees it by handle
+    out = materialize(
+        out.withColumn("keep", (F.col(id_col) == F.col("cluster_id")).cast("boolean"))
+    )
+    release(labels)
+    return out
 
 
 # ---------------------------------------------------------------------------

@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import cacheutil
 from ..cacheutil import release
 
 # np/pd are module-level on purpose: pandas_udf resolves the (stringified,
@@ -1029,7 +1030,7 @@ def pq_train(
         return pd.Series(x.tolist())
 
     nv = df.select(F.col(id_col).alias("_id"), normalize(F.col(vec_col)).alias("_v"))
-    nv = nv.localCheckpoint(eager=True)  # train loop re-reads it per iter
+    nv = cacheutil.materialize(nv)  # train loop re-reads it per iter
 
     seeds = (
         nv.orderBy(F.xxhash64(F.col("_id")), F.col("_id")).limit(ks).collect()

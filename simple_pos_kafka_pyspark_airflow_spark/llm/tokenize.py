@@ -18,9 +18,10 @@ corpus-sized groupBy. Each merge round is then
   3. merge apply: rewrite the symbol arrays of the words that contain
      the chosen pair (Arrow-batched pandas UDF over the pair-containing
      subset; everything else passes through untouched);
-  4. ``localCheckpoint`` to truncate the iterative lineage (the same
-     discipline as ``dedup.dedup_clusters`` — Catalyst re-analysis of an
-     unbounded loop plan costs more than the data at small rounds).
+  4. an eager checkpoint (``cacheutil.materialize``) to truncate the
+     iterative lineage (the same discipline as ``dedup.dedup_clusters`` —
+     Catalyst re-analysis of an unbounded loop plan costs more than the
+     data at small rounds).
 
 The corpus itself is touched exactly ONCE (the initial word count);
 everything after is O(n_merges) vocabulary-sized rounds. This is the
@@ -55,6 +56,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import cacheutil
 from ..cacheutil import release
 
 # ---------------------------------------------------------------------------
@@ -326,7 +328,7 @@ def bpe_train_from_counts(
         F.array_remove(F.split("word", ""), "").alias("syms"),
         F.col("count"),
     )
-    vocab = vocab.localCheckpoint(eager=True)
+    vocab = cacheutil.materialize(vocab)
 
     k = 1 if max_batch <= 1 else max(2, topk_window)
     merges: list[tuple[str, str]] = []
@@ -383,10 +385,12 @@ def bpe_train_from_counts(
             h = F.array_contains("syms", a) & F.array_contains("syms", b)
             hit = h if hit is None else (hit | h)
         superseded = vocab
-        vocab = vocab.select(
-            F.when(hit, apply_batch("syms")).otherwise(F.col("syms")).alias("syms"),
-            "count",
-        ).localCheckpoint(eager=True)
+        vocab = cacheutil.materialize(
+            vocab.select(
+                F.when(hit, apply_batch("syms")).otherwise(F.col("syms")).alias("syms"),
+                "count",
+            )
+        )
         release(superseded)
     release(vocab)
     return merges

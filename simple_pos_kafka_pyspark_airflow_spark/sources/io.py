@@ -165,17 +165,20 @@ def staging_sibling(path: str) -> str:
     return f"{path.rstrip('/')}.__staging__{uuid.uuid4().hex[:8]}"
 
 
-def overwrite_atomic(df: DataFrame, path: str) -> None:
+def overwrite_atomic(
+    df: DataFrame, path: str, partition_by: list[str] | None = None
+) -> None:
     """Full-snapshot overwrite with the same crash discipline as
-    ``streaming.cdc.ParquetCdcSink``: write to staging, tombstone-rename the
-    live dir, move staging in, drop the tombstone. Readers never observe a
+    ``streaming.cdc.ParquetCdcSink``: write to staging (partitioned by
+    ``partition_by`` when given), tombstone-rename the live dir, move
+    staging in, drop the tombstone. Readers never observe a
     half-written table; a crash leaves either the old or the new snapshot
     (plus at worst a tombstone the next writer reclaims). All directory
     surgery goes through the Hadoop FileSystem of the path's own scheme
     (``fs_swap_in``) — local paths, ``file:`` URIs, HDFS and ABFS alike."""
     spark = df.sparkSession
     staging = staging_sibling(path)
-    write_staged(df, staging)
+    write_staged(df, staging, partition_by)
     fs_recover_tombstone(spark, path)
     fs_swap_in(spark, staging, path)
 

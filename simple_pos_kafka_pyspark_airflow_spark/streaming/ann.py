@@ -34,13 +34,17 @@ as ``IncrementalMinhashIndex`` does for text near-dup state:
   returns exactly the brute-force answer as long as the true top-k
   survives the candidate cut.
 
-Crash/replay: the per-batch append is plain parquet, so a replayed
-``foreachBatch`` batch lands its rows twice. Duplicate rows cannot
-change probe RESULTS (probes dedup on the vector id before scoring, and
-a vector's replicated rows carry the identical embedding) — they only
-grow the index; ``compact()`` rewrites it deduplicated per (id, cell)
-under the same atomic swap. Back the index with a transactional table
-format in production if replays are frequent.
+Crash/replay: the index is a ``streaming.corpus._IndexLog`` row log
+keyed on (id, cell) and partitioned by ``cell`` — the same discovery,
+append and compaction as the minhash and digest indexes. The per-batch
+append is plain parquet, so a replayed ``foreachBatch`` batch lands its
+rows twice. Duplicate rows cannot change probe RESULTS (probes dedup on
+the vector id before scoring, and a vector's replicated rows carry the
+identical embedding) — they only grow the index; ``compact()`` rewrites
+it deduplicated per (id, cell), still partitioned by cell, under the
+atomic snapshot swap (``sources.io.overwrite_atomic``), and ``rebuild``
+swaps its new index in the same way. Back the index with a
+transactional table format in production if replays are frequent.
 
 The reference has no similarity surface at all; this extends the north
 star (SURVEY.md §2.11) to the streaming half of the ANN story.
@@ -50,6 +54,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -57,16 +62,11 @@ from pyspark.sql import functions as F
 # via __future__ annotations) type hints against this module's globals
 # (the llm.bloom convention).
 
+from .. import cacheutil
 from ..cacheutil import release, released_on_error
 from ..llm import simsearch
-from ..sources.io import (
-    fs_dir_has_data,
-    fs_recover_tombstone,
-    fs_swap_in,
-    overwrite_atomic,
-    staging_sibling,
-    write_staged,
-)
+from ..sources.io import fs_dir_has_data, overwrite_atomic
+from .corpus import _IndexLog
 
 
 def _layout(cols: list[str]) -> str:
@@ -74,7 +74,7 @@ def _layout(cols: list[str]) -> str:
     return "pq" if "pq_code" in cols else "int8" if "q_codes" in cols else "float"
 
 
-class IncrementalIvfIndex:
+class IncrementalIvfIndex(_IndexLog):
     def __init__(
         self,
         spark: SparkSession,
@@ -109,8 +109,7 @@ class IncrementalIvfIndex:
         index never mixes forms with another's flag."""
         if store_quantized and store_pq:
             raise ValueError("store_quantized and store_pq are mutually exclusive tiers")
-        self.spark = spark
-        self.path = path.rstrip("/")
+        super().__init__(spark, path.rstrip("/"), [id_col, "cell"], partition_by=["cell"])
         self.centroid_path = self.path + "_centroids"
         self.pq_path = self.path + "_pq_codebooks"
         self.n_cells = n_cells
@@ -217,19 +216,13 @@ class IncrementalIvfIndex:
         assignment nor, worse, bootstrap the quantizer from nothing."""
         if df.isEmpty():
             return
-        self._append(self._assign(df, self._centroids() or self.fit(df)), self._landed())
+        assigned = self._assign(df, self._centroids() or self.fit(df))
+        self._append(self._index_rows(assigned, self._landed()))
 
-    def _landed(self) -> DataFrame | None:
-        """The landed index rows, or None when nothing has landed."""
-        if fs_dir_has_data(self.spark, self.path):
-            return self.spark.read.parquet(self.path)
-        return None
-
-    def _append(self, assigned: DataFrame, landed: DataFrame | None) -> None:
-        """Append (id, vec, cell) rows to the index in this writer's
-        layout, ``partitionBy(cell)``; ``landed`` is the index as read
-        before the batch. The one write path of both ``ingest_batch`` and
-        ``dedup_batch``."""
+    def _index_rows(self, assigned: DataFrame, landed: DataFrame | None) -> DataFrame:
+        """Index rows in this writer's layout from (id, vec, cell) rows;
+        ``landed`` is the index as read before the batch. Both
+        ``ingest_batch`` and ``dedup_batch`` append what this returns."""
         my_layout = (
             "pq" if self.store_pq else "int8" if self.store_quantized else "float"
         )
@@ -257,8 +250,7 @@ class IncrementalIvfIndex:
                     "index before ingesting (the quantizer fallback fit "
                     "covers them only when fit runs through this writer)"
                 )
-        rows = self._encode(assigned, my_layout, cbs)
-        rows.write.mode("append").partitionBy("cell").parquet(self.path)
+        return self._encode(assigned, my_layout, cbs)
 
     def _assign(self, df: DataFrame, cents: list[list[float]]) -> DataFrame:
         """(id, vec, cell): ``df`` assigned to its ``n_assign`` nearest cells."""
@@ -335,8 +327,6 @@ class IncrementalIvfIndex:
             )
         if df.isEmpty():
             return df
-        from pyspark import StorageLevel
-
         cents = self._centroids() or self.fit(df)
         # assigned ONCE: the pair searches read it and the survivors'
         # index rows are its rows for the kept ids
@@ -372,20 +362,19 @@ class IncrementalIvfIndex:
                 )
                 rejected = rejected.unionByName(dropped_landed)
 
-            kept = (
+            kept = cacheutil.materialize(
                 df.join(
                     rejected.distinct(),
                     F.col(self.id_col) == F.col("_rej"),
                     "left_anti",
                 )
-                .localCheckpoint(eager=True)
             )
             with released_on_error(kept):
                 if not kept.isEmpty():
-                    self._append(
-                        assigned.join(kept.select(self.id_col), self.id_col, "left_semi"),
-                        idx,
+                    survivors = assigned.join(
+                        kept.select(self.id_col), self.id_col, "left_semi"
                     )
+                    self._append(self._index_rows(survivors, idx))
             return kept
         finally:
             # released on a refused or failed append too: a retried
@@ -410,7 +399,8 @@ class IncrementalIvfIndex:
         from ..operators.validation import psi_drift
 
         cents = self._centroids()
-        if cents is None or not fs_dir_has_data(self.spark, self.path):
+        idx = self._landed()
+        if cents is None or idx is None:
             raise ValueError(
                 "occupancy_drift needs a fitted, non-empty index — ingest "
                 "at least one batch first"
@@ -425,7 +415,7 @@ class IncrementalIvfIndex:
                 (F.col("n").cast("double") / F.col("_t").cast("double")).alias("frac"),
             )
 
-        landed = occupancy(self.spark.read.parquet(self.path).select("cell"))
+        landed = occupancy(idx.select("cell"))
         batch = occupancy(
             simsearch.ivf_assign(
                 df.select(self.vec_col),
@@ -492,7 +482,8 @@ class IncrementalIvfIndex:
         cents = self._centroids()
         if cents is None:
             raise ValueError(f"no quantizer at {self.centroid_path}: fit() or ingest first")
-        if not fs_dir_has_data(self.spark, self.path):
+        idx = self._landed()
+        if idx is None:
             raise ValueError(
                 f"no index rows at {self.path}: the quantizer exists but nothing "
                 "was ever ingested (or the first append crashed before commit)"
@@ -504,7 +495,6 @@ class IncrementalIvfIndex:
                 "duplicate query ids: each id labels one result group, so a "
                 "repeat would silently fan out the score join"
             )
-        idx = self.spark.read.parquet(self.path)
         layout = _layout(idx.columns)
         if layout == "pq" and rescore_from is None:
             raise ValueError(
@@ -620,11 +610,11 @@ class IncrementalIvfIndex:
         ids dedup) but cell pruning degrades until ``rebuild`` is
         re-run — it is idempotent, re-deriving everything from landed
         rows (or ``vectors``), so re-running converges."""
-        if not fs_dir_has_data(self.spark, self.path):
+        idx = self._landed()
+        if idx is None:
             raise ValueError(
                 f"rebuild needs a non-empty index at {self.path}: nothing to migrate"
             )
-        idx = self.spark.read.parquet(self.path)
         layout = _layout(idx.columns)
         rows = idx.drop("cell").dropDuplicates([self.id_col])
         if vectors is not None:
@@ -655,25 +645,5 @@ class IncrementalIvfIndex:
                     vec_col=self.vec_col, id_col=self.id_col,
                 )
             new_rows = self._encode(assigned, layout, cbs)
-        self._swap_in(new_rows)
+        overwrite_atomic(new_rows, self.path, ["cell"])
         self._save_quantizer(cents, cbs)
-
-    def compact(self) -> None:
-        """Rewrite the index with replay-duplicated rows collapsed per
-        (id, cell), keeping the partitioned layout, under the atomic
-        snapshot swap (a crash leaves the old or the new index, never a
-        half-written one)."""
-        if not fs_dir_has_data(self.spark, self.path):
-            return
-        landed = self.spark.read.parquet(self.path).dropDuplicates([self.id_col, "cell"])
-        self._swap_in(landed)
-
-    def _swap_in(self, rows: DataFrame) -> None:
-        """Replace the index with ``rows``, partitioned by cell, under the
-        atomic snapshot swap: ``sources.io.overwrite_atomic``'s three
-        steps, called through this module's names so the swap step can be
-        replaced to inject a crash between staging and swap."""
-        staging = staging_sibling(self.path)
-        write_staged(rows, staging, ["cell"])
-        fs_recover_tombstone(self.spark, self.path)
-        fs_swap_in(self.spark, staging, self.path)

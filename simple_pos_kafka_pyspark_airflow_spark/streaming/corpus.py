@@ -30,12 +30,15 @@ guard made distributed, bounded, and exactly-once.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import cacheutil
 from ..cacheutil import release, released_on_error
 from ..llm import dedup as dedup_ops
 from ..llm import textops
+from ..sources.io import fs_dir_has_data, overwrite_atomic
 
 
 def _tagged(rows: DataFrame, batch_id: int) -> DataFrame:
@@ -57,11 +60,14 @@ class _IndexLog:
       silently skip landed-corpus dedup. An existing path that fails to
       read as parquet raises.
     - ``_append``: a plain parquet append, tagged with the batch id when
-      one is given. It is not transactional: a batch that ``foreachBatch``
-      replays after a crash between the append and the checkpoint commit
-      lands its rows twice.
-    - Row logs (``value=None``: the minhash and digest indexes) tolerate
-      that because duplicated rows cannot change their decisions — their
+      one is given and laid out ``partitionBy(*partition_by)`` when the
+      log is partitioned. It is not transactional: a batch that
+      ``foreachBatch`` replays after a crash between the append and the
+      checkpoint commit lands its rows twice.
+    - Row logs (``value=None``: the minhash and digest indexes, and
+      ``streaming.ann.IncrementalIvfIndex``, a row log partitioned by
+      ``cell`` so probes prune to the cells they read) tolerate that
+      because duplicated rows cannot change their decisions — their
       probes ignore same-id matches. ``compact`` drops duplicate rows on
       ``keys``.
     - Count logs (``value`` names the count column) are threshold-
@@ -72,23 +78,24 @@ class _IndexLog:
       its first run saw. ``compact`` folds the history into one row per
       key under the sentinel batch -1.
 
-    ``compact`` is an atomic snapshot swap (``sources.io.overwrite_atomic``).
+    ``compact`` is an atomic snapshot swap (``sources.io.overwrite_atomic``)
+    that keeps the log's partition layout.
     Run a count log's ``compact`` only at a quiesced point (stream
     stopped, or the last batch's checkpoint committed): afterwards a replay
     of a pre-compaction batch can no longer exclude its own rows.
     """
 
     def __init__(
-        self, spark: SparkSession, path: str, keys: list[str], value: str | None = None
+        self, spark: SparkSession, path: str, keys: list[str], value: str | None = None,
+        partition_by: list[str] | None = None,
     ) -> None:
         self.spark = spark
         self.path = path
         self._keys = list(keys)
         self._value = value
+        self._partition_by = partition_by or []
 
     def _landed(self) -> DataFrame | None:
-        from ..sources.io import fs_dir_has_data
-
         if not fs_dir_has_data(self.spark, self.path):
             return None
         return self.spark.read.parquet(self.path)
@@ -96,7 +103,7 @@ class _IndexLog:
     def _append(self, rows: DataFrame, batch_id: int | None = None) -> None:
         if batch_id is not None:
             rows = _tagged(rows, batch_id)
-        rows.write.mode("append").parquet(self.path)
+        rows.write.mode("append").partitionBy(*self._partition_by).parquet(self.path)
 
     def _replayed(self, where: Column | None = None) -> DataFrame | None:
         """Landed rows (optionally filtered) with replayed appends
@@ -130,8 +137,6 @@ class _IndexLog:
     def compact(self) -> None:
         """Rewrite the log collapsed (see the class docstring) under the
         atomic snapshot swap; a no-op when nothing has landed."""
-        from ..sources.io import overwrite_atomic
-
         if self._value is None:
             snapshot = self._landed()
             if snapshot is not None:
@@ -141,7 +146,7 @@ class _IndexLog:
             if snapshot is not None:
                 snapshot = snapshot.withColumn("_batch", F.lit(-1).cast("long"))
         if snapshot is not None:
-            overwrite_atomic(snapshot, self.path)
+            overwrite_atomic(snapshot, self.path, self._partition_by)
 
 
 def corpus_ingest(
@@ -334,8 +339,6 @@ class IncrementalMinhashIndex(_IndexLog):
         explicitly unpersisted before return — per-batch state must not
         accrete in the executor block manager.
         """
-        from pyspark import StorageLevel
-
         jac_ok = F.col("jaccard") >= self.threshold
 
         # ONE signature pass per batch (r15 fusion): the explode→64-agg
@@ -348,7 +351,7 @@ class IncrementalMinhashIndex(_IndexLog):
         doc_tbl = dedup_ops.minhash_doc_table(
             docs, self.text_col, self.id_col, self.n_shingle, self.num_hashes
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        idx = dup_ids = None
+        idx = dup_ids = components = None
         try:
             # within-batch: connected components over the pair list; each
             # component keeps its min id (exact cluster-representative policy)
@@ -389,14 +392,16 @@ class IncrementalMinhashIndex(_IndexLog):
                 idx_out = idx.join(
                     dup_ids.withColumnRenamed(self.id_col, "doc_id"), "doc_id", "left_anti"
                 )
-            kept = kept.localCheckpoint(eager=True)
+            kept = cacheutil.materialize(kept)
             with released_on_error(kept):
                 self._append(idx_out)
             return kept
         finally:
             # released on a failed append too: a retried batch must not
-            # leave its intermediates cached
-            release(dup_ids, idx, doc_tbl)
+            # leave its intermediates cached; the append was the last
+            # reader of the components (dedup_clusters' label checkpoint
+            # on its distributed path)
+            release(dup_ids, idx, components, doc_tbl)
 
 
 class IncrementalDigestIndex(_IndexLog):
@@ -494,12 +499,16 @@ class IncrementalDigestIndex(_IndexLog):
         landed probe ignores same-id matches).  An all-rejected batch
         writes nothing at all — not even empty part files — so "no doc
         ever claimed this URL" stays observable as an absent index."""
-        rows = docs.select(F.col(self.id_col), self._digest().alias("_dig")).where(
-            F.col("_dig").isNotNull()
-        )
+        rows = self._index_rows(docs)
         if rows.isEmpty():
             return
         self._append(rows)
+
+    def _index_rows(self, docs: DataFrame) -> DataFrame:
+        """(id, digest) index rows of ``docs``; NULL-keyed rows never land."""
+        return docs.select(F.col(self.id_col), self._digest().alias("_dig")).where(
+            F.col("_dig").isNotNull()
+        )
 
     def _dedup(self, docs: DataFrame, record: bool) -> DataFrame:
         # NULL digest = no dedup key (NULL text, or at the URL tier a
@@ -524,13 +533,13 @@ class IncrementalDigestIndex(_IndexLog):
                 .distinct()
             )
             kept = kept.join(dup_ids, self.id_col, "left_anti")
-        kept = kept.unionByName(keyless).localCheckpoint(eager=True)
+        # the returned frame is the checkpoint itself, so a caller frees
+        # it by handle; the append re-derives the digest from it
+        kept = cacheutil.materialize(kept.unionByName(keyless).drop("_dig"))
         if record:
             with released_on_error(kept):
-                self._append(
-                    kept.select(self.id_col, "_dig").where(F.col("_dig").isNotNull())
-                )
-        return kept.drop("_dig")
+                self._append(self._index_rows(kept))
+        return kept
 
 
 class IncrementalUrlIndex(IncrementalDigestIndex):
@@ -624,8 +633,6 @@ class IncrementalSpanIndex(_IndexLog):
         """Return the batch with corpus-lifetime boilerplate spans excised
         (``text_clean`` + ``n_dropped`` per doc), and record the batch's
         span counts in the index."""
-        from pyspark import StorageLevel
-
         seg = dedup_ops.span_segment_rows(
             docs, self.text_col, self.id_col, self.span_tokens, self.delimiter
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -653,7 +660,7 @@ class IncrementalSpanIndex(_IndexLog):
                 ).alias("text_clean"),
                 F.sum(is_boiler.cast("int")).cast("int").alias("n_dropped"),
             )
-            out = (
+            out = cacheutil.materialize(
                 docs.select(self.id_col)
                 .join(cleaned, self.id_col, "left")
                 .select(
@@ -661,7 +668,6 @@ class IncrementalSpanIndex(_IndexLog):
                     F.coalesce("text_clean", F.lit("")).alias("text_clean"),
                     F.coalesce("n_dropped", F.lit(0)).alias("n_dropped"),
                 )
-                .localCheckpoint(eager=True)
             )
             with released_on_error(out):
                 self._append(batch_counts, batch_id)
@@ -727,8 +733,6 @@ class IncrementalLineIndex(_IndexLog):
         """Return ``(id_col, group_col, text_clean, n_dropped)`` with
         corpus-lifetime common lines excised, and record the batch's
         line counts in the index."""
-        from pyspark import StorageLevel
-
         lines = (
             docs.select(
                 F.col(self.id_col),
@@ -771,7 +775,7 @@ class IncrementalLineIndex(_IndexLog):
                 ).alias("text_clean"),
                 F.sum(is_chrome.cast("long")).cast("long").alias("n_dropped"),
             )
-            out = (
+            out = cacheutil.materialize(
                 docs.select(self.id_col, self.group_col)
                 .join(cleaned, self.id_col, "left")
                 .select(
@@ -780,7 +784,6 @@ class IncrementalLineIndex(_IndexLog):
                     F.coalesce("text_clean", F.lit("")).alias("text_clean"),
                     F.coalesce("n_dropped", F.lit(0)).cast("long").alias("n_dropped"),
                 )
-                .localCheckpoint(eager=True)
             )
             with released_on_error(out):
                 self._append(batch_counts, batch_id)
@@ -850,8 +853,6 @@ class IncrementalSubstringIndex(_IndexLog):
         """Return the batch with corpus-lifetime duplicated ≥L-token
         spans excised (``text_clean`` + ``n_removed`` per doc), and
         record the batch's gram counts in the index."""
-        from pyspark import StorageLevel
-
         grams = dedup_ops.anchor_gram_rows(
             docs, self.text_col, self.id_col, self.min_len
         ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -861,9 +862,9 @@ class IncrementalSubstringIndex(_IndexLog):
             dup = combined.where(F.col("_n") >= self.min_count).select("_g")
             marks = grams.join(F.broadcast(dup), "_g", "left_semi")
             spans = dedup_ops.covered_spans(marks, self.id_col, self.min_len)
-            out = dedup_ops.excise_spans(
-                docs, spans, self.text_col, self.id_col
-            ).localCheckpoint(eager=True)
+            out = cacheutil.materialize(
+                dedup_ops.excise_spans(docs, spans, self.text_col, self.id_col)
+            )
             with released_on_error(out):
                 self._append(batch_counts, batch_id)
             return out
@@ -1010,7 +1011,6 @@ class PersistentBloomGate:
         an eval-set release replaces the gate wholesale, and a failed
         refit leaves the previous release readable)."""
         from ..llm.bloom import _CHUNK_BITS, bloom_bitmap
-        from ..sources.io import overwrite_atomic
 
         bitmap = bloom_bitmap(
             probe, text_col, id_col, n=self.n, m_bits=m_bits, n_hashes=self.n_hashes
@@ -1036,7 +1036,6 @@ class PersistentBloomGate:
         import numpy as np
 
         from ..llm.bloom import _CHUNK_BITS
-        from ..sources.io import fs_dir_has_data
 
         if self._cache is not None:
             return self._cache
@@ -1165,7 +1164,6 @@ class CorpusDriftMonitor:
         read leaves the previous release whole; each table then swaps in
         atomically."""
         from ..operators.validation import value_histogram
-        from ..sources.io import overwrite_atomic
 
         g, v = self.group_col, self.value_col
         row = reference.agg(
@@ -1335,94 +1333,117 @@ def ingest_corpus_batch(
     dropped documents never pollute the boilerplate counts because
     ``clean_batch`` only sees survivors.
     """
-    if url_index is not None:
-        # corpus-lifetime canonical-URL dedup FIRST (r13): the recrawl
-        # gate runs before extraction and every text gate — it needs only
-        # the URL column, so a rejected re-crawl pays nothing downstream
-        # (the order every CommonCrawl-class pipeline uses).  READ-ONLY
-        # here (r14, ADVICE): the URL rows land at the END, only for
-        # documents that survived the whole ladder — landing them now
-        # would permanently block recrawls of URLs whose document a
-        # downstream tier rejected, even though nothing ever reached the
-        # corpus (the digest/minhash tiers don't have this hazard: their
-        # survivors are content-equivalent to something landed).
-        docs = url_index.filter_batch(docs)
-    if html_input:
-        # The web-crawl front door (r12): ``text_col`` carries raw
-        # HTML/markup — extract the boilerplate-filtered visible text
-        # BEFORE any gate sees it (quality scoring a <script> body or
-        # deduping on nav chrome certifies garbage). Scan-fused regex
-        # projection (llm.textops.extract_html_text), zero extra
-        # shuffle; everything downstream — gates, digests, minhash,
-        # span indexes — operates on the extracted text, exactly as if
-        # the corpus had arrived pre-extracted (pinned equal in
-        # tests/test_streaming.py).
-        from ..llm.textops import extract_html_text
+    # Cache lifetime: each tier returns its own checkpoint. ``held`` is
+    # the one the batch frame currently reads; it is freed as soon as the
+    # next tier's checkpoint has consumed it, so the caller frees exactly
+    # the returned frame. A failed tier frees what the front door holds.
+    held, excised = None, []
+    try:
+        if url_index is not None:
+            # corpus-lifetime canonical-URL dedup FIRST (r13): the recrawl
+            # gate runs before extraction and every text gate — it needs only
+            # the URL column, so a rejected re-crawl pays nothing downstream
+            # (the order every CommonCrawl-class pipeline uses).  READ-ONLY
+            # here (r14, ADVICE): the URL rows land at the END, only for
+            # documents that survived the whole ladder — landing them now
+            # would permanently block recrawls of URLs whose document a
+            # downstream tier rejected, even though nothing ever reached the
+            # corpus (the digest/minhash tiers don't have this hazard: their
+            # survivors are content-equivalent to something landed).
+            docs = held = url_index.filter_batch(docs)
+        if html_input:
+            # The web-crawl front door (r12): ``text_col`` carries raw
+            # HTML/markup — extract the boilerplate-filtered visible text
+            # BEFORE any gate sees it (quality scoring a <script> body or
+            # deduping on nav chrome certifies garbage). Scan-fused regex
+            # projection (llm.textops.extract_html_text), zero extra
+            # shuffle; everything downstream — gates, digests, minhash,
+            # span indexes — operates on the extracted text, exactly as if
+            # the corpus had arrived pre-extracted (pinned equal in
+            # tests/test_streaming.py).
+            from ..llm.textops import extract_html_text
 
-        docs = docs.withColumn(
-            text_col, extract_html_text(F.col(text_col))["text"]
+            docs = docs.withColumn(
+                text_col, extract_html_text(F.col(text_col))["text"]
+            )
+        gated = corpus_ingest(
+            docs, text_col=text_col, min_quality=min_quality, min_tokens=min_tokens
         )
-    gated = corpus_ingest(
-        docs, text_col=text_col, min_quality=min_quality, min_tokens=min_tokens
-    )
-    if drift_monitor is not None:
-        # monitoring taps the GATED batch (post quality gate, pre dedup):
-        # the accepted distribution is what drifts; floods are still
-        # visible because dedup hasn't collapsed them yet. The report
-        # lands beside the monitor's state — a small per-batch append —
-        # so the gate leaves an audit trail without touching the landed
-        # corpus rows.
-        report = _tagged(drift_monitor.check_batch(gated, batch_id), batch_id)
-        report.write.mode("append").parquet(f"{drift_monitor.path}/reports")
-    if fertility_monitor is not None:
-        # the tokenizer-side drift gate (same tap point and audit-trail
-        # discipline as drift_monitor): fertility of the gated batch
-        # under the FROZEN merge table vs the frozen reference, one
-        # report row per group, appended beside the monitor's state —
-        # never a mutation of the landed rows
-        frep = _tagged(fertility_monitor.check_batch(gated), batch_id)
-        frep.write.mode("append").parquet(f"{fertility_monitor.path}/reports")
-    if bloom_gate is not None:
-        # decontamination ahead of every index: a contaminated document
-        # must never land index rows (the batch ladder decontaminates
-        # last because its indexes are transient; these persist), and the
-        # gate is the cheapest stage after the projection — a read-only
-        # broadcast-bitmap gather
-        gated = bloom_gate.clean_batch(gated, text_col=text_col, id_col=id_col)
-    if digest_index is not None:
-        gated = digest_index.dedup_batch(gated)
-    kept = minhash_index.dedup_batch(gated)
-    if ann_index is not None:
-        # semantic tier LAST of the dedup ladder (r13, the batch
-        # curation order): the costliest comparison only prices documents
-        # every lexical tier already passed. Requires the batch to carry
-        # the ann_index's vec_col (the post-encoder pipeline shape);
-        # dedup_batch also ingests the survivors' vectors, so the ANN
-        # store and the corpus store stay row-aligned.
-        kept = ann_index.dedup_batch(kept, threshold=ann_threshold)
-    # excision tiers, in the docstring's order (span, line, substring):
-    # each replaces the text and lands its drop count under its own name,
-    # so every tier's count survives when several run
-    for index, count_col, alias in (
-        (span_index, "n_dropped", "n_dropped"),
-        (line_index, "n_dropped", "n_lines_dropped"),
-        (substring_index, "n_removed", "n_substr_removed"),
-    ):
-        if index is None:
-            continue
-        cleaned = index.clean_batch(kept, batch_id).select(
-            id_col, "text_clean", F.col(count_col).alias(alias)
-        )
-        kept = (
-            kept.drop(text_col)
-            .join(cleaned, id_col)
-            .withColumnRenamed("text_clean", text_col)
-        )
-    if url_index is not None:
-        # deferred URL landing (r14): only full-ladder survivors claim
-        # their canonical URL — see the read-only probe at the top
-        url_index.record_batch(kept)
-    return kept
+        if drift_monitor is not None:
+            # monitoring taps the GATED batch (post quality gate, pre dedup):
+            # the accepted distribution is what drifts; floods are still
+            # visible because dedup hasn't collapsed them yet. The report
+            # lands beside the monitor's state — a small per-batch append —
+            # so the gate leaves an audit trail without touching the landed
+            # corpus rows.
+            report = _tagged(drift_monitor.check_batch(gated, batch_id), batch_id)
+            report.write.mode("append").parquet(f"{drift_monitor.path}/reports")
+        if fertility_monitor is not None:
+            # the tokenizer-side drift gate (same tap point and audit-trail
+            # discipline as drift_monitor): fertility of the gated batch
+            # under the FROZEN merge table vs the frozen reference, one
+            # report row per group, appended beside the monitor's state —
+            # never a mutation of the landed rows
+            frep = _tagged(fertility_monitor.check_batch(gated), batch_id)
+            frep.write.mode("append").parquet(f"{fertility_monitor.path}/reports")
+        if bloom_gate is not None:
+            # decontamination ahead of every index: a contaminated document
+            # must never land index rows (the batch ladder decontaminates
+            # last because its indexes are transient; these persist), and the
+            # gate is the cheapest stage after the projection — a read-only
+            # broadcast-bitmap gather
+            gated = bloom_gate.clean_batch(gated, text_col=text_col, id_col=id_col)
+        if digest_index is not None:
+            gated = digest_index.dedup_batch(gated)
+            release(held)
+            held = gated
+        kept = minhash_index.dedup_batch(gated)
+        release(held)
+        held = kept
+        if ann_index is not None:
+            # semantic tier LAST of the dedup ladder (r13, the batch
+            # curation order): the costliest comparison only prices documents
+            # every lexical tier already passed. Requires the batch to carry
+            # the ann_index's vec_col (the post-encoder pipeline shape);
+            # dedup_batch also ingests the survivors' vectors, so the ANN
+            # store and the corpus store stay row-aligned.
+            kept = ann_index.dedup_batch(kept, threshold=ann_threshold)
+            if kept is not held:  # an empty batch comes back as it went in
+                release(held)
+                held = kept
+        # excision tiers, in the docstring's order (span, line, substring):
+        # each replaces the text and lands its drop count under its own name,
+        # so every tier's count survives when several run
+        for index, count_col, alias in (
+            (span_index, "n_dropped", "n_dropped"),
+            (line_index, "n_dropped", "n_lines_dropped"),
+            (substring_index, "n_removed", "n_substr_removed"),
+        ):
+            if index is None:
+                continue
+            excised.append(index.clean_batch(kept, batch_id))
+            cleaned = excised[-1].select(
+                id_col, "text_clean", F.col(count_col).alias(alias)
+            )
+            kept = (
+                kept.drop(text_col)
+                .join(cleaned, id_col)
+                .withColumnRenamed("text_clean", text_col)
+            )
+        if excised:
+            # the excised batch is a lazy join over the tiers' checkpoints:
+            # materialize it once, then free them
+            kept = cacheutil.materialize(kept)
+            release(held, *excised)
+            held, excised = kept, []
+        if url_index is not None:
+            # deferred URL landing (r14): only full-ladder survivors claim
+            # their canonical URL — see the read-only probe at the top
+            url_index.record_batch(kept)
+        return kept
+    except BaseException:
+        release(held, *excised)
+        raise
 
 
 class TokenizerFertilityMonitor:
@@ -1477,8 +1498,6 @@ class TokenizerFertilityMonitor:
         and the merge table itself (atomic overwrites — one freeze per
         tokenizer/reference release). The stats go first: a reference
         that fails to compute leaves the previous release whole."""
-        from ..sources.io import overwrite_atomic
-
         if not merges:
             raise ValueError("freeze needs a non-empty merge table")
         overwrite_atomic(self._group_stats(reference, merges), self._ref_path)
@@ -1488,8 +1507,6 @@ class TokenizerFertilityMonitor:
         overwrite_atomic(mdf.coalesce(1), self._merges_path)
 
     def _merges(self) -> list[tuple[str, str]]:
-        from ..sources.io import fs_dir_has_data
-
         if not fs_dir_has_data(self.spark, self._merges_path):
             raise ValueError(f"no frozen merge table at {self._merges_path}: freeze() first")
         rows = self.spark.read.parquet(self._merges_path).collect()
@@ -1513,8 +1530,6 @@ class TokenizerFertilityMonitor:
         """(group, n_words, n_tokens, fertility, ref_fertility, drifted)
         — one row per group present in the batch; groups absent from the
         reference report drifted=1 (an unseen source IS the alarm)."""
-        from ..sources.io import fs_dir_has_data
-
         if not fs_dir_has_data(self.spark, self._ref_path):
             raise ValueError(f"no frozen reference at {self._ref_path}: freeze() first")
         b = self._group_stats(batch, self._merges())

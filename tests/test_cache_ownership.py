@@ -46,6 +46,23 @@ def test_library_never_diffs_the_session_caches():
     assert not hits, hits
 
 
+def test_only_cacheutil_checkpoints():
+    """Every eager checkpoint goes through ``cacheutil.materialize``, the
+    one switch the cluster profile (``spark.graft.materialize=reliable``)
+    acts on: no other library module calls ``localCheckpoint`` or
+    ``checkpoint``."""
+    hits = [
+        f"{path.relative_to(PACKAGE)}:{node.lineno} {node.func.attr}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != PACKAGE / "cacheutil.py"
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8")))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in {"localCheckpoint", "checkpoint"}
+    ]
+    assert not hits, hits
+
+
 def _cotenant(spark, monkeypatch, tag: str) -> set[int]:
     """Make the first ``cacheutil.materialize`` call also persist an
     unrelated frame, as a concurrent query sharing the session would

@@ -1560,7 +1560,8 @@ def test_incremental_writes_release_only_their_own_frames(spark, tmp_path):
     after each sink batch no new RDD stays persisted, after each tier
     batch only the returned checkpoint does, after a failed append
     (digest tier included) none does, and a frame persisted beforehand
-    survives it all."""
+    survives it all. It asserts on its own frames only: RDDs that earlier
+    tests left persisted may be freed by Spark while it runs."""
     from simple_pos_kafka_pyspark_airflow_spark.cacheutil import (
         persistent_rdd_ids,
         release_caches,
@@ -1574,9 +1575,11 @@ def test_incremental_writes_release_only_their_own_frames(spark, tmp_path):
         IncrementalSubstringIndex,
     )
 
+    pre = persistent_rdd_ids(spark)
     unrelated = spark.range(50).persist()
     unrelated.count()
     before = persistent_rdd_ids(spark)
+    (unrelated_id,) = before - pre
 
     t = datetime.datetime
     ev_schema = f"id long, name string, {cdc.OP_COL} string, ts timestamp"
@@ -1594,7 +1597,8 @@ def test_incremental_writes_release_only_their_own_frames(spark, tmp_path):
     for b, rows in enumerate(batches):
         for sink in sinks:
             sink.foreach_batch(spark.createDataFrame(rows, ev_schema), b)
-            assert persistent_rdd_ids(spark) == before, (type(sink).__name__, b)
+            assert persistent_rdd_ids(spark) - before == set(), (type(sink).__name__, b)
+            assert unrelated_id in persistent_rdd_ids(spark)
 
     base = "the quick brown fox jumps over the lazy dog while rain falls on the quiet town square"
     fresh = "fresh new words entirely distinct from anything landed so far today"
@@ -1638,7 +1642,7 @@ def test_incremental_writes_release_only_their_own_frames(spark, tmp_path):
             new = persistent_rdd_ids(spark) - before
             checkpoint = kept._jdf.queryExecution().logical().rdd().id()
             assert new == {checkpoint}, (type(tier).__name__, b, new, checkpoint)
-            assert before <= persistent_rdd_ids(spark)
+            assert unrelated_id in persistent_rdd_ids(spark)
             release_caches(spark, new)  # the caller owns kept
 
     # a failed append (here: injected) releases the tier's intermediates
@@ -1655,9 +1659,254 @@ def test_incremental_writes_release_only_their_own_frames(spark, tmp_path):
             call(rows, 2)
         assert persistent_rdd_ids(spark) - before == set(), type(tier).__name__
 
-    assert before <= persistent_rdd_ids(spark)
+    assert unrelated_id in persistent_rdd_ids(spark)
     assert unrelated.storageLevel.useMemory
     unrelated.unpersist()
+
+
+def _rdd_id(df) -> int:
+    """Id of the RDD behind a checkpoint-backed frame."""
+    return df._jdf.queryExecution().logical().rdd().id()
+
+
+_BASE = "the quick brown fox jumps over the lazy dog while rain falls on the quiet town square"
+_FRESH = "fresh new words entirely distinct from anything landed so far today"
+_OTHER = "completely unrelated content about databases indexes and shuffles"
+_FOOTER = "subscribe to our newsletter for weekly stories"
+
+
+def _ladder_batches() -> list[list[tuple]]:
+    """Three front-door micro-batches of (doc_id, text, source, url,
+    embedding) that give every tier a reject: batch 1 holds a landed
+    near-dup (10), a within-batch near-dup (12), a landed URL (13), a
+    landed exact copy (14) and a landed embedding near-dup (15); batch 2
+    is one exact copy that never reaches the ANN tier."""
+    return [
+        [
+            (1, _BASE, "web", "http://a.example/1", _unit(0)),
+            (2, f"{_OTHER}\n{_FOOTER}", "web", "http://a.example/2", _unit(1)),
+        ],
+        [
+            (10, _BASE.replace("square", "plaza"), "web", "http://b.example/10", _unit(0, eps=0.02, j=4)),
+            (11, _FRESH, "web", "http://b.example/11", _unit(2)),
+            (12, _FRESH + " again", "web", "http://b.example/12", _unit(2, eps=0.02, j=5)),
+            (13, f"a recrawl of page one with new words\n{_FOOTER}", "web", "http://a.example/1", _unit(3)),
+            (14, f"{_OTHER}\n{_FOOTER}", "web", "http://b.example/14", _unit(4)),
+            (15, "an essay about rivers mountains and long winter evenings", "web", "http://b.example/15",
+             _unit(1, eps=0.05, j=6)),
+        ],
+        [(20, _BASE, "web", "http://c.example/20", _unit(5))],
+    ]
+
+
+def _ladder_indexes(spark, root, all_tiers: bool) -> dict:
+    """``ingest_corpus_batch`` index keywords under ``root``: the minhash and
+    ANN tiers, plus the URL, digest, span, line and substring tiers."""
+    from simple_pos_kafka_pyspark_airflow_spark.streaming.ann import IncrementalIvfIndex
+    from simple_pos_kafka_pyspark_airflow_spark.streaming.corpus import (
+        IncrementalDigestIndex,
+        IncrementalLineIndex,
+        IncrementalMinhashIndex,
+        IncrementalSpanIndex,
+        IncrementalSubstringIndex,
+        IncrementalUrlIndex,
+    )
+
+    idx = {
+        "minhash_index": IncrementalMinhashIndex(spark, f"{root}/lsh", num_hashes=16, bands=8),
+        "ann_index": IncrementalIvfIndex(spark, f"{root}/ivf", n_cells=2, id_col="doc_id"),
+    }
+    if all_tiers:
+        idx.update(
+            url_index=IncrementalUrlIndex(spark, f"{root}/url"),
+            digest_index=IncrementalDigestIndex(spark, f"{root}/digest"),
+            span_index=IncrementalSpanIndex(spark, f"{root}/span"),
+            line_index=IncrementalLineIndex(spark, f"{root}/line", min_docs=2),
+            substring_index=IncrementalSubstringIndex(spark, f"{root}/substr", min_len=3),
+        )
+    return idx
+
+
+def _ingest_ladder(spark, idx: dict, b: int, rows: list[tuple]):
+    from simple_pos_kafka_pyspark_airflow_spark.streaming.corpus import ingest_corpus_batch
+
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, source string, url string, embedding array<double>"
+    )
+    kwargs = dict(idx)
+    minhash = kwargs.pop("minhash_index")
+    return ingest_corpus_batch(docs, b, minhash, min_quality=0.0, min_tokens=1, **kwargs)
+
+
+@pytest.mark.parametrize("tiers", ["minhash+ann", "all"])
+def test_ingest_corpus_batch_leaves_one_checkpoint(spark, tmp_path, tiers):
+    """The front door frees every tier checkpoint it chains: after each
+    micro-batch the only new persisted RDD is the one behind the returned
+    frame, and releasing that frame frees it. Covered with the minhash and
+    ANN tiers alone, and with every tier on, where the excision tiers'
+    lazy join over several checkpoints is materialized once. The last
+    batch is rejected before the ANN tier, which then hands back its
+    input unchanged. When a late step fails (the ANN tier, the last
+    excision tier, the deferred URL landing), the front door frees the
+    checkpoints it held."""
+    from simple_pos_kafka_pyspark_airflow_spark.cacheutil import (
+        persistent_rdd_ids,
+        release,
+    )
+
+    idx = _ladder_indexes(spark, tmp_path, all_tiers=tiers == "all")
+    want = [{1, 2}, {11} if tiers == "all" else {11, 13}, set()]
+    for b, rows in enumerate(_ladder_batches()):
+        before = persistent_rdd_ids(spark)
+        out = _ingest_ladder(spark, idx, b, rows)
+        assert persistent_rdd_ids(spark) - before == {_rdd_id(out)}, (tiers, b)
+        assert {r["doc_id"] for r in out.collect()} == want[b], (tiers, b)
+        release(out)
+        assert persistent_rdd_ids(spark) - before == set(), (tiers, b)
+
+    def refuse(*a, **k):
+        raise ValueError("tier refused")
+
+    steps = (
+        [("substring_index", "clean_batch"), ("url_index", "record_batch")]
+        if tiers == "all"
+        else [("ann_index", "dedup_batch")]
+    )
+    for b, (tier, method) in enumerate(steps, start=3):
+        setattr(idx[tier], method, refuse)
+        before = persistent_rdd_ids(spark)
+        with pytest.raises(ValueError, match="tier refused"):
+            _ingest_ladder(
+                spark, idx, b, [(30 + b, f"{_FRESH} {b}", "web", f"http://d.example/{b}", _unit(6))]
+            )
+        assert persistent_rdd_ids(spark) - before == set(), (tier, method)
+        del idx[tier].__dict__[method]
+
+
+def test_minhash_tier_frees_the_distributed_label_checkpoint(spark, tmp_path, monkeypatch):
+    """On ``dedup_clusters``' distributed path (taken when a batch has more
+    than ``max_driver_edges`` near-dup edges; forced here) the components
+    are backed by a label checkpoint. The minhash tier frees it once its
+    index append has read it: the only new persisted RDD is the returned
+    frame's."""
+    from simple_pos_kafka_pyspark_airflow_spark.cacheutil import (
+        persistent_rdd_ids,
+        release,
+    )
+    from simple_pos_kafka_pyspark_airflow_spark.llm import dedup
+    from simple_pos_kafka_pyspark_airflow_spark.streaming.corpus import IncrementalMinhashIndex
+
+    real = dedup.dedup_clusters
+    calls = []
+
+    def distributed(pairs, **kw):
+        calls.append(pairs)
+        return real(pairs, **{**kw, "max_driver_edges": 0})
+
+    monkeypatch.setattr(dedup, "dedup_clusters", distributed)
+    idx = IncrementalMinhashIndex(spark, str(tmp_path / "lsh"), num_hashes=16, bands=8)
+    docs = spark.createDataFrame(
+        [(1, _BASE), (2, _BASE.replace("square", "plaza")), (3, _FRESH)], "doc_id long, text string"
+    )
+    before = persistent_rdd_ids(spark)
+    kept = idx.dedup_batch(docs)
+    assert calls
+    assert persistent_rdd_ids(spark) - before == {_rdd_id(kept)}
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 3]
+    release(kept)
+    assert persistent_rdd_ids(spark) - before == set()
+
+
+def test_digest_tiers_return_their_own_checkpoint(spark, tmp_path):
+    """``IncrementalDigestIndex.dedup_batch`` and the URL tier's read-only
+    ``filter_batch`` return the checkpoint itself, not a projection over
+    it, so releasing the result frees everything the call left."""
+    from simple_pos_kafka_pyspark_airflow_spark.cacheutil import (
+        persistent_rdd_ids,
+        release,
+    )
+    from simple_pos_kafka_pyspark_airflow_spark.streaming.corpus import (
+        IncrementalDigestIndex,
+        IncrementalUrlIndex,
+    )
+
+    digest = IncrementalDigestIndex(spark, str(tmp_path / "digest"))
+    url = IncrementalUrlIndex(spark, str(tmp_path / "url"))
+    batches = [
+        [(1, _BASE, "http://a.example/1"), (2, _BASE, "http://a.example/2"), (3, None, None)],
+        [(10, _BASE, "http://a.example/1"), (11, _FRESH, "http://a.example/11")],
+    ]
+    want = {"dedup_batch": [{1, 3}, {11}], "filter_batch": [{1, 2, 3}, {11}]}
+    for name, call in (("dedup_batch", digest.dedup_batch), ("filter_batch", url.filter_batch)):
+        for b, rows in enumerate(batches):
+            before = persistent_rdd_ids(spark)
+            out = call(spark.createDataFrame(rows, "doc_id long, text string, url string"))
+            assert "_dig" not in out.columns
+            assert {r["doc_id"] for r in out.collect()} == want[name][b], (name, b)
+            if name == "filter_batch":
+                url.record_batch(out)  # the deferred landing the front door does
+            release(out)
+            assert persistent_rdd_ids(spark) - before == set(), (name, b)
+
+
+def test_ingest_ladder_reliable_profile_matches_local(spark, sf_dir, tmp_path):
+    """The cluster profile (``spark.graft.materialize=reliable``) reaches
+    every ingest tier, ``bpe_train`` and ``pq_train`` through
+    ``cacheutil.materialize`` and changes no result. The whole ladder runs
+    under each profile with its own index paths: the returned rows and
+    the index contents are equal, and under ``reliable`` no tier leaves a
+    block-manager checkpoint behind (its checkpoints are files). The
+    trainers return the same merges and codebooks, and under ``reliable``
+    write checkpoint files."""
+    from simple_pos_kafka_pyspark_airflow_spark.cacheutil import (
+        CHECKPOINT_DIR_KEY,
+        MATERIALIZE_MODE_KEY,
+        persistent_rdd_ids,
+        release,
+    )
+    from simple_pos_kafka_pyspark_airflow_spark.llm import simsearch, tokenize
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    def run(root):
+        idx = _ladder_indexes(spark, root, all_tiers=True)
+        before = persistent_rdd_ids(spark)
+        outs = []
+        for b, batch in enumerate(_ladder_batches()[:2]):  # the landed probes run on batch 1
+            out = _ingest_ladder(spark, idx, b, batch)
+            outs.append(rows(out))
+            release(out)
+        leftover = persistent_rdd_ids(spark) - before
+        state = {k: rows(spark.read.parquet(i.path)) for k, i in idx.items()}
+        return outs, state, leftover
+
+    def checkpoint_files():
+        ck = spark.sparkContext.getCheckpointDir()
+        return 0 if ck is None else sum(len(f) for _, _, f in os.walk(ck.removeprefix("file:")))
+
+    local = run(tmp_path / "local")
+    merges = tokenize.bpe_train(docs, n_merges=6)
+    books = simsearch.pq_train(emb, m=8, ks=16)
+    spark.conf.set(MATERIALIZE_MODE_KEY, "reliable")
+    spark.conf.set(CHECKPOINT_DIR_KEY, str(tmp_path / "ck"))
+    try:
+        reliable = run(tmp_path / "reliable")
+        n_files = checkpoint_files()
+        assert tokenize.bpe_train(docs, n_merges=6) == merges
+        assert checkpoint_files() > n_files
+        n_files = checkpoint_files()
+        assert simsearch.pq_train(emb, m=8, ks=16) == books
+        assert checkpoint_files() > n_files
+    finally:
+        spark.conf.unset(MATERIALIZE_MODE_KEY)
+        spark.conf.unset(CHECKPOINT_DIR_KEY)
+    assert reliable[0] == local[0]
+    assert reliable[1] == local[1]
+    assert reliable[2] == set()
 
 
 def test_null_payload_tombstone_routes_to_dead_letter(spark):
@@ -1973,7 +2222,7 @@ def test_incremental_ivf_compact_crash_between_staging_and_swap(spark, tmp_path)
     snapshot swap must leave the live index untouched (probes read the old
     rows) and a re-run must converge — the same crash contract the minhash
     index's compact carries."""
-    from simple_pos_kafka_pyspark_airflow_spark.streaming import ann as ann_mod
+    from simple_pos_kafka_pyspark_airflow_spark.sources import io as io_mod
     from simple_pos_kafka_pyspark_airflow_spark.streaming.ann import IncrementalIvfIndex
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(60)
@@ -1986,12 +2235,12 @@ def test_incremental_ivf_compact_crash_between_staging_and_swap(spark, tmp_path)
     want = [(r["vec_id"], r["score"]) for r in idx.probe(q, k=8, nprobe=4).collect()]
     n_dup = spark.read.parquet(path).count()
 
-    real_swap = ann_mod.fs_swap_in
+    real_swap = io_mod.fs_swap_in
 
     def crash_swap(spark_, staging, dest):
         raise RuntimeError("injected crash before swap")
 
-    ann_mod.fs_swap_in = crash_swap
+    io_mod.fs_swap_in = crash_swap
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
             idx.compact()
@@ -2001,7 +2250,7 @@ def test_incremental_ivf_compact_crash_between_staging_and_swap(spark, tmp_path)
             (r["vec_id"], r["score"]) for r in idx.probe(q, k=8, nprobe=4).collect()
         ]
     finally:
-        ann_mod.fs_swap_in = real_swap
+        io_mod.fs_swap_in = real_swap
 
     idx.compact()  # re-run converges over the leftover staging dir
     assert spark.read.parquet(path).count() == 120  # 60 ids × n_assign 2
