@@ -12,8 +12,9 @@ long-lived service accumulates dead blocks and leans on eviction
 
 Library code frees what it created by the frame's own handle:
 ``release(df)`` unpersists a ``persist()`` cache or the RDD behind a
-``localCheckpoint``, and ``computed`` persists and counts a frame for a
-``with`` block. Iterative operators (``llm.dedup.dedup_clusters``,
+``localCheckpoint``, or deletes the files of a reliable ``checkpoint``,
+and ``computed`` persists and counts a frame for a ``with`` block.
+Iterative operators (``llm.dedup.dedup_clusters``,
 ``operators.graph.pagerank``) release each superseded round as soon as
 the next one is materialized; per-batch sinks and ingest tiers release
 their intermediates in ``finally``. Freeing by handle touches nothing
@@ -30,11 +31,11 @@ unpersisting before the action simply makes the action recompute.
 
 One asymmetry to respect: a ``persist()``-backed frame re-computes
 transparently after release (blocks are an optimization), but a
-``localCheckpoint``-backed frame CANNOT — its lineage was truncated at
-checkpoint time (Spark logs a WARN at release), so re-collecting such a
-frame after its blocks are freed raises instead of recomputing. Consume
-iterative operators' results before releasing them, never
-re-materialize them after release.
+checkpoint-backed frame (local or reliable) CANNOT — its lineage was
+truncated at checkpoint time (Spark logs a WARN at release), so
+re-collecting such a frame after its blocks or files are freed raises
+instead of recomputing. Consume iterative operators' results before
+releasing them, never re-materialize them after release.
 """
 
 from __future__ import annotations
@@ -43,6 +44,8 @@ import contextlib
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+
+from .sources.io import _fs_for
 
 #: Session conf key selecting how ``materialize`` cuts lineage.
 MATERIALIZE_MODE_KEY = "spark.graft.materialize"
@@ -78,9 +81,9 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     job. At 100 TB the pagerank edge list is (nodes+edges)-sized — not
     small — and a multi-hour iterative job must survive executor churn;
     see docs/SCALE.md "Materialization fault tolerance". Reliable
-    checkpoints are files, not persisted RDDs: ``release`` sees nothing
-    to free (cleanup = checkpoint-dir lifecycle), which is the correct
-    ownership shape on a cluster.
+    checkpoints are files, not persisted RDDs: ``release`` on the
+    returned frame deletes its ``rdd-N`` directory under the checkpoint
+    directory, so a long-lived stream does not grow it per batch.
     The eager reliable checkpoint computes the frame in ONE job that
     writes the checkpoint files (Spark 4.1: no separate count job), so
     observe nodes below it fire once and no persist is needed in front
@@ -108,11 +111,12 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
 
 
 def release(*frames: DataFrame | None) -> None:
-    """Free the blocks each frame itself holds: its ``persist()`` cache,
-    or the RDD behind its ``localCheckpoint``. ``None`` entries are
-    skipped, and a reliable checkpoint (files, not blocks) holds nothing
-    to free. Only these frames' blocks go, never another query's.
-    Non-blocking; no job runs."""
+    """Free what each frame itself holds: its ``persist()`` cache, the
+    RDD behind its ``localCheckpoint``, or the files of its reliable
+    ``checkpoint`` (deleted through the Hadoop FileSystem of the file's
+    own scheme). ``None`` entries are skipped. Only these frames' blocks
+    and files go, never another query's. Block removal is non-blocking;
+    no job runs."""
     for df in frames:
         if df is None:
             continue
@@ -120,8 +124,16 @@ def release(*frames: DataFrame | None) -> None:
             df.unpersist()
             continue
         plan = df._jdf.queryExecution().logical()
-        if plan.nodeName() == "LogicalRDD" and plan.rdd().getStorageLevel().isValid():
-            plan.rdd().unpersist(False)
+        if plan.nodeName() != "LogicalRDD":
+            continue
+        rdd = plan.rdd()
+        if rdd.getStorageLevel().isValid():
+            rdd.unpersist(False)
+            continue
+        ckpt = rdd.getCheckpointFile()
+        if ckpt.isDefined():
+            fs, path = _fs_for(df.sparkSession, ckpt.get())
+            fs.delete(path, True)
 
 
 @contextlib.contextmanager

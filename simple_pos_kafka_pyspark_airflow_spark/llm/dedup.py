@@ -206,9 +206,8 @@ def shingle_rows(
 def _seeded_min_aggs(num_hashes: int) -> list[Column]:
     """The seeded min-hash aggregate list over a ``_h0`` shingle-hash
     column — THE hash-of-hash scheme, defined once so the per-document
-    (``minhash_signatures_df``, ``minhash_doc_table``) and per-group
-    (``group_overlap_minhash``) signature paths can never
-    de-synchronize."""
+    (``minhash_doc_table``) and per-group (``group_overlap_minhash``)
+    signature paths can never de-synchronize."""
     return [
         F.min(F.xxhash64(F.col("_h0"), F.lit(i))).alias(f"_m{i}")
         for i in range(num_hashes)
@@ -234,28 +233,6 @@ def _min_signature_by(rows: DataFrame, key_col: str, num_hashes: int) -> DataFra
     )
 
 
-def minhash_signatures_df(
-    df: DataFrame, text_col: str, id_col: str, n_shingle: int = 3, num_hashes: int = 64
-) -> DataFrame:
-    """(id, signature) per document, the whole-stage-codegen way:
-
-    ``shingle_rows`` → ``num_hashes`` seeded ``min(xxhash64(s, i))``
-    aggregates in ONE groupBy → pack into an array column.
-
-    Why this shape: ``xxhash64``/``min`` are codegen intrinsics, so the
-    hot loop (docs × shingles × seeds hash evaluations) runs in generated
-    JVM code; the equivalent nested-``transform`` expression is interpreted
-    and ~100× slower. The groupBy shuffles docs×shingles rows, but partial
-    (map-side) aggregation collapses each doc to one 64-long row before the
-    exchange — at 100 TB the shuffle carries 8·64 bytes per doc, not the
-    shingle text. Min over duplicate shingles equals min over the distinct
-    set, so no dedup pass is needed. Returns columns (``_id``, ``_sig``).
-    """
-    return _min_signature_by(
-        shingle_rows(df, text_col, id_col, n_shingle), "_id", num_hashes
-    )
-
-
 def group_overlap_minhash(
     df: DataFrame,
     group_col: str = "source",
@@ -270,7 +247,8 @@ def group_overlap_minhash(
     unordered pair.
 
     Because min distributes over union, a group's signature is just
-    ``minhash_signatures_df`` keyed by the group instead of the doc id:
+    ``minhash_doc_table``'s signature keyed by the group instead of the
+    doc id:
     ONE scan, one partial-aggregated shuffle carrying 8·k bytes per
     group. The pairwise compare is a crossJoin of the S-row signature
     table (S = #groups — hundreds-to-thousands of domains at 100 TB, so
@@ -340,7 +318,7 @@ def group_overlap_minhash(
 
 def shingle_hash_sets_df(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
     """(id, set of xxhash64(shingle)) per document — the verification-side
-    companion to ``minhash_signatures_df``. Jaccard over the hashed sets
+    companion to the MinHash signature. Jaccard over the hashed sets
     equals Jaccard over the string sets (64-bit collisions among a doc's
     ~10²-10³ shingles are negligible), and long arrays intersect far
     cheaper than string arrays. Returns (``_id``, ``_sh``)."""
@@ -354,10 +332,18 @@ def shingle_hash_sets_df(df: DataFrame, text_col: str, id_col: str, n: int = 3) 
 def minhash_doc_table(
     df: DataFrame, text_col: str, id_col: str, n_shingle: int = 3, num_hashes: int = 64
 ) -> DataFrame:
-    """(id, signature, shingle-hash set) in ONE pass: the min-aggregates
-    of ``minhash_signatures_df`` and the ``collect_set`` of
+    """(id, signature, shingle-hash set) in ONE pass: the ``num_hashes``
+    seeded ``min(xxhash64(h, i))`` aggregates and the ``collect_set`` of
     ``shingle_hash_sets_df`` share a single groupBy, so the corpus is
     scanned once and the exploded shingle rows shuffle once.
+
+    Why aggregates: ``xxhash64``/``min`` are codegen intrinsics, so the
+    hot loop (docs × shingles × seeds hash evaluations) runs in generated
+    JVM code; the equivalent nested-``transform`` expression
+    (``minhash_signature``) is interpreted and ~100× slower. Partial
+    (map-side) aggregation collapses each doc to one row before the
+    exchange, and min over duplicate shingles equals min over the
+    distinct set, so no dedup pass is needed.
 
     Alternatives measured and rejected at sf0.1: a two-level
     seed-exploded aggregation (explode seeds → min per (doc, seed) →
@@ -600,7 +586,7 @@ def simhash_df(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ONE groupBy with 64 conditional-count aggregates (ones per bit) + a
     total count → majority vote per bit → OR the masks together.
 
-    Same rationale as ``minhash_signatures_df``: conditional counts are
+    Same rationale as ``minhash_doc_table``: conditional counts are
     codegen'd and partially aggregated map-side, so the shuffle carries 65
     longs per doc. Returns columns (``_id``, ``_sim``).
     """

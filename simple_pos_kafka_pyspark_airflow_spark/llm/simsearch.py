@@ -75,7 +75,6 @@ def cosine_topk_batch(
     id_col: str = "vec_id",
     q_id_col: str = "query_id",
     q_vec_col: str = "query_vec",
-    arrow: bool = False,
 ) -> DataFrame:
     """Batched exact top-k retrieval: every query vector gets its ``k``
     nearest corpus vectors by cosine — the realistic shape for
@@ -98,57 +97,16 @@ def cosine_topk_batch(
     Determinism: scores are rounded to 6 dp BEFORE selection on both
     engines and ties break on the corpus id, so the result is unique and
     oracle-comparable (same discipline as ``cosine_topk``).
-
-    ``arrow=True`` swaps the per-(row × query) JVM fold — an interpreted
-    higher-order expression, O(n_queries × dim) lambda calls per corpus
-    row — for ONE (batch × dim) @ (dim × n_queries) BLAS matmul per
-    Arrow batch (the ``ivf_assign`` discipline). Same results on
-    well-separated data (pinned by test), but the rounding tie-mode is
-    numpy's half-even rather than Spark's half-up, so the oracle-checked
-    contract query keeps the JVM form; use the Arrow form when the query
-    batch grows past ~tens of vectors and the fold dominates the scan
-    (measured at 64 queries × 5000 vectors, sf0.1: 0.8 s Arrow vs 2.7 s
-    JVM fold — the gap widens linearly with n_queries).
     """
-    if arrow:
-        qrows = queries.select(q_id_col, q_vec_col).collect()  # broadcast-small by contract
-        if not qrows:
-            # the JVM twin yields an empty frame here (empty broadcast
-            # side); np.stack([]) would crash — the two documented-
-            # interchangeable forms must agree on the degenerate input
-            return _empty_topk(df, queries, q_id_col, id_col)
-        qids = [r[q_id_col] for r in qrows]
-        qmat = np.stack([np.asarray(r[q_vec_col], dtype="float64") for r in qrows])
-        q_hat = qmat / np.maximum(np.linalg.norm(qmat, axis=1, keepdims=True), 1e-12)
-
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("array<double>")
-        def all_scores(col: pd.Series) -> pd.Series:
-            if col.empty:  # empty Arrow batch (empty corpus partition)
-                return pd.Series([], dtype=object)
-            m = np.stack(col.to_numpy()).astype("float64")
-            m_hat = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-            return pd.Series(np.round(m_hat @ q_hat.T, 6).tolist())
-
-        qid_arr = F.array(*[F.lit(q) for q in qids])
-        scored = (
-            df.select(id_col, all_scores(F.col(vec_col)).alias("_s"))
-            .select(id_col, F.posexplode("_s").alias("_qi", "score"))
-            .select(
-                F.element_at(qid_arr, F.col("_qi") + 1).alias(q_id_col), id_col, "score"
-            )
+    scored = (
+        df.select(id_col, vec_col)
+        .crossJoin(F.broadcast(queries.select(q_id_col, q_vec_col)))
+        .select(
+            q_id_col,
+            id_col,
+            F.round(cosine(F.col(vec_col), F.col(q_vec_col)), 6).alias("score"),
         )
-    else:
-        scored = (
-            df.select(id_col, vec_col)
-            .crossJoin(F.broadcast(queries.select(q_id_col, q_vec_col)))
-            .select(
-                q_id_col,
-                id_col,
-                F.round(cosine(F.col(vec_col), F.col(q_vec_col)), 6).alias("score"),
-            )
-        )
+    )
     return top_per_query(scored, k, q_id_col, id_col)
 
 
@@ -602,62 +560,18 @@ def normalize_embeddings_by_group(
     group_col: str = "label",
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    method: str = "grouped",
 ) -> DataFrame:
     """Per-group whitening: subtract the group's per-dimension mean and
     divide by its per-dimension std (population).
 
-    ``method="grouped"`` (default): **grouped-map ``applyInPandas``** —
-    the canonical shape for 'the computation needs the whole group as one
-    matrix' (group statistics + elementwise transform in two BLAS passes
-    per group). One shuffle on ``group_col``; each group must fit a
-    worker's memory — fine for label-sharded corpora (groups are
-    ~corpus/n_labels).
-
-    ``method="agg"``: the giant-group escape hatch. When one label
-    dominates a 100 TB corpus, its group cannot land on one worker, so
-    the moments are computed distributed — posexplode to (group, pos,
-    val) rows, a partial-aggregable groupBy for per-dimension mean /
-    stddev_pop, the per-group stat ARRAYS broadcast back (O(n_groups ×
-    dim) — tiny), and an elementwise ``zip_with`` transform. No group
-    ever materializes on a single worker; memory is bounded by the stats
-    table, not the largest group. The zip_with lambdas are interpreted
-    (CodegenFallback), so the grouped form is faster when groups fit —
-    pick "agg" for memory safety, not speed. Both methods agree to fp
-    tolerance (pinned by test); results are NOT guaranteed bit-identical
-    (numpy pairwise summation vs Spark's sequential/Welford moments).
+    A **grouped-map ``applyInPandas``** — the canonical shape for 'the
+    computation needs the whole group as one matrix' (group statistics +
+    elementwise transform in two BLAS passes per group). One shuffle on
+    ``group_col``; each group must fit a worker's memory — fine for
+    label-sharded corpora (groups are ~corpus/n_labels).
 
     Zero-variance dimensions pass through unscaled (std clamped to 1) so
-    constant dims don't produce NaN/Inf — both methods."""
-    if method == "agg":
-        exploded = df.select(group_col, F.posexplode(vec_col).alias("_pos", "_val"))
-        stats = exploded.groupBy(group_col, "_pos").agg(
-            F.avg(F.col("_val").cast("double")).alias("_mu"),
-            F.stddev_pop(F.col("_val").cast("double")).alias("_sd"),
-        )
-        per_group = stats.groupBy(group_col).agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "_mu"))), lambda s: s["_mu"]
-            ).alias("_mus"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_pos", "_sd"))), lambda s: s["_sd"]
-            ).alias("_sds"),
-        )
-        centered = F.zip_with(
-            F.col(vec_col), F.col("_mus"), lambda x, m: x.cast("double") - m
-        )
-        whitened = F.zip_with(
-            centered,
-            F.col("_sds"),
-            lambda x, s: (x / F.when(s == 0.0, F.lit(1.0)).otherwise(s)).cast("float"),
-        )
-        return (
-            df.select(id_col, group_col, vec_col)
-            .join(F.broadcast(per_group), group_col)
-            .select(id_col, group_col, whitened.alias(vec_col))
-        )
-    if method != "grouped":
-        raise ValueError(f"method must be 'grouped' or 'agg', got {method!r}")
+    constant dims don't produce NaN/Inf."""
     out_schema = df.select(id_col, group_col, vec_col).schema
 
     def whiten(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -13,10 +13,13 @@ corpus-sized groupBy. Each merge round is then
   1. pair count: explode each word's adjacent symbol pairs, groupBy
      (left, right), sum the word counts — a VOCABULARY-sized shuffle
      (rows ≤ Σ per-word symbol count), partial-aggregable;
-  2. argmax: one driver-side row (max count, lexicographic tiebreak —
-     deterministic, unlike the reference implementation's dict order);
+  2. argmax: the top-``TOPK_WINDOW`` pairs collected to the driver (max
+     count, lexicographic tiebreak — deterministic, unlike the reference
+     implementation's dict order), from which ``_select_merge_batch``
+     accepts up to ``MAX_BATCH`` merges only when the batch provably
+     equals that many sequential argmax rounds;
   3. merge apply: rewrite the symbol arrays of the words that contain
-     the chosen pair (Arrow-batched pandas UDF over the pair-containing
+     an accepted pair (Arrow-batched pandas UDF over the pair-containing
      subset; everything else passes through untouched);
   4. an eager checkpoint (``cacheutil.materialize``) to truncate the
      iterative lineage (the same discipline as ``dedup.dedup_clusters`` —
@@ -24,7 +27,7 @@ corpus-sized groupBy. Each merge round is then
      data at small rounds).
 
 The corpus itself is touched exactly ONCE (the initial word count);
-everything after is O(n_merges) vocabulary-sized rounds. This is the
+everything after is at most n_merges vocabulary-sized rounds. This is the
 published distributed formulation (the Sennrich reference trains on a
 word-count dict in memory; the DataFrame form is the same algebra).
 
@@ -58,6 +61,11 @@ from pyspark.sql import functions as F
 
 from .. import cacheutil
 from ..cacheutil import release
+
+# Distributed training: at most MAX_BATCH merges per round, chosen from the
+# TOPK_WINDOW most frequent pairs (see ``_select_merge_batch``).
+MAX_BATCH = 8
+TOPK_WINDOW = 64
 
 # ---------------------------------------------------------------------------
 # Python twins — the semantic ground truth (pure, deterministic)
@@ -118,7 +126,6 @@ def _select_merge_batch(
     window_full: bool,
     max_batch: int,
     min_count: int,
-    exact_order: bool = True,
 ) -> list[tuple[str, str]]:
     """Pick a batch of merges PROVABLY identical to applying them one
     sequential argmax at a time — the fix for the one-Spark-job-per-merge
@@ -151,20 +158,13 @@ def _select_merge_batch(
       so verification runs to a fixpoint.
 
     Pinned batched == sequential on randomized vocabularies in
-    tests/test_tokenize.py; falls back to batch size 1 (the plain
-    argmax) when counts are too flat to dominate.
-
-    ``exact_order=False`` drops the dominance guard and accepts the
-    whole greedy disjoint prefix — the published parallel-BPE
-    compromise (measured: ~14× fewer rounds at max_batch=16 for ~1%
-    worse compression on a Zipf letter-frequency corpus; see
-    docs/SCALE.md). The exact rule almost never batches on natural
+    tests/test_tokenize.py, over a sweep of ``max_batch`` and window
+    sizes; falls back to batch size 1 (the plain argmax) when counts are
+    too flat to dominate. The rule almost never batches on natural
     single-script text (every frequent pair shares a frequent letter
     with the argmax's neighborhood, so the guard binds); it DOES batch
     on multi-script corpora whose alphabets are disjoint symbol
-    families. Fast-mode merges are still valid BPE state (each accepted
-    pair existed in the vocabulary at its round, count ≥ min_count) —
-    only the sequential ORDER is approximated."""
+    families (docs/SCALE.md has the round counts)."""
     if not rows or rows[0][2] < min_count:
         return []
     c_out = 0 if window_full else rows[-1][2]
@@ -179,8 +179,6 @@ def _select_merge_batch(
                 continue
             acc.append((l, r, c))
             syms.update((l, r, l + r))
-        if not exact_order:
-            return [(l, r) for l, r, _ in acc]
         accset = {(l, r) for l, r, _ in acc}
         guard = c_out
         for l, r, c in rows:
@@ -193,43 +191,6 @@ def _select_merge_batch(
         if bad is None:
             return [(l, r) for l, r, _ in acc]
         m = max(1, bad)
-
-
-def bpe_train_python_batched(
-    word_counts: dict[str, int],
-    n_merges: int,
-    min_count: int = 2,
-    max_batch: int = 8,
-    topk_window: int = 64,
-    exact_order: bool = True,
-) -> list[tuple[str, str]]:
-    """Batched twin of ``bpe_train_python`` — same selection logic as the
-    distributed trainer (``_select_merge_batch`` over a top-K window), so
-    hypothesis can fuzz batched == sequential without a SparkSession."""
-    vocab = {tuple(w): c for w, c in word_counts.items() if w}
-    merges: list[tuple[str, str]] = []
-    while len(merges) < n_merges:
-        counts = _pair_counts(vocab)
-        if not counts:
-            break
-        ordered = sorted(
-            ((l, r, c) for (l, r), c in counts.items()),
-            key=lambda t: (-t[2], t[0], t[1]),
-        )
-        rows = ordered[:topk_window]
-        batch = _select_merge_batch(
-            rows, len(ordered) <= topk_window, min(max_batch, n_merges - len(merges)),
-            min_count, exact_order=exact_order,
-        )
-        if not batch:
-            break
-        merges.extend(batch)
-        for a, b in batch:
-            vocab = {
-                (_merge_word(s, a, b) if a in s else s): cnt
-                for s, cnt in vocab.items()
-            }
-    return merges
 
 
 def bpe_ranks(merges: list[tuple[str, str]]) -> dict[tuple[str, str], int]:
@@ -297,15 +258,12 @@ def bpe_train_from_counts(
     word_counts: DataFrame,
     n_merges: int = 50,
     min_count: int = 2,
-    max_batch: int = 8,
-    topk_window: int = 64,
-    exact_order: bool = True,
 ) -> list[tuple[str, str]]:
     """Distributed BPE training from a ``(word, count)`` table; returns
     the merge list (training order).
 
     Each ROUND is one vocabulary-sized pair-count shuffle + a top-K
-    driver collect (K = ``topk_window`` tiny rows, never a vocabulary) +
+    driver collect (K = ``TOPK_WINDOW`` tiny rows, never a vocabulary) +
     ONE Arrow-batched merge apply for the whole accepted batch. The
     batch is chosen by ``_select_merge_batch`` — provably identical to
     sequential argmax training (fully symbol-disjoint merges whose
@@ -314,10 +272,9 @@ def bpe_train_from_counts(
     while the ROUND COUNT drops by the realized batch factor. This is
     what makes a production 32k-vocab train feasible: scheduling
     latency scales with rounds, not merges (docs/SCALE.md prices the
-    envelope); ``max_batch=1`` recovers the strict one-merge-per-round
-    form.
+    envelope). At most ``MAX_BATCH`` merges are accepted per round.
 
-    Driver materialization per round: ≤ ``topk_window`` (count, left,
+    Driver materialization per round: ≤ ``TOPK_WINDOW`` (count, left,
     right) rows."""
     from pyspark.sql.types import ArrayType, StringType
 
@@ -330,7 +287,6 @@ def bpe_train_from_counts(
     )
     vocab = cacheutil.materialize(vocab)
 
-    k = 1 if max_batch <= 1 else max(2, topk_window)
     merges: list[tuple[str, str]] = []
     while len(merges) < n_merges:
         rows = (
@@ -347,15 +303,14 @@ def bpe_train_from_counts(
             .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
             .agg(F.sum("count").alias("c"))
             .orderBy(F.desc("c"), F.asc("l"), F.asc("r"))
-            .limit(k)
+            .limit(TOPK_WINDOW)
             .collect()
         )
         batch = _select_merge_batch(
             [(x["l"], x["r"], x["c"]) for x in rows],
-            window_full=len(rows) < k,
-            max_batch=min(max_batch, n_merges - len(merges)),
+            window_full=len(rows) < TOPK_WINDOW,
+            max_batch=min(MAX_BATCH, n_merges - len(merges)),
             min_count=min_count,
-            exact_order=exact_order,
         )
         if not batch:
             break

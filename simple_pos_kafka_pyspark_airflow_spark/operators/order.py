@@ -20,13 +20,6 @@ def topk(df: DataFrame, k: int, *order: Column) -> DataFrame:
     return df.orderBy(*order).limit(k)
 
 
-def sorted_output(df: DataFrame, *cols: str) -> DataFrame:
-    """Global ORDER BY for final output. At scale prefer
-    ``sortWithinPartitions`` + partitioned sink (the reference's per-file
-    key sort is exactly sort-within-partition semantics)."""
-    return df.orderBy(*cols)
-
-
 def zorder_key(a: Column, b: Column, bits: int = 16) -> Column:
     """Morton (Z-order) interleave of two non-negative int columns into
     one long sort key: bit i of ``a`` lands at position 2i, bit i of

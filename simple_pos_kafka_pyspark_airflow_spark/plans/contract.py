@@ -29,7 +29,7 @@ from __future__ import annotations
 import importlib
 import os
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 

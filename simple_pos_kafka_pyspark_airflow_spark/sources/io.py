@@ -24,8 +24,6 @@ produces splittable output.
 
 from __future__ import annotations
 
-import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession

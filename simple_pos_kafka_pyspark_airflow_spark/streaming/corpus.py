@@ -198,7 +198,6 @@ def banded_index_rows(
     (doc, band) carrying the band's bucket hash and the doc's shingle-hash
     set — everything a later batch needs to near-dup against this corpus
     WITHOUT re-reading its text. Schema: (doc_id, band, bucket, sh)."""
-    rows = num_hashes // bands
     doc_tbl = dedup_ops.minhash_doc_table(docs, text_col, id_col, n_shingle, num_hashes)
     return banded_index_rows_from_table(doc_tbl, num_hashes, bands)
 

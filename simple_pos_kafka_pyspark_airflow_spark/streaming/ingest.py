@@ -123,15 +123,3 @@ def file_json_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.json(path)
-
-
-def with_event_time(
-    df: DataFrame, ts_col: str, fmt: str = "yyyy-MM-dd HH:mm:ss", watermark: str | None = None
-) -> DataFrame:
-    """Parse the reference's string timestamps (``kafka_producer.py:125``)
-    into an event-time column; optionally bound lateness with a watermark
-    (T8 — the reference has no late-data story at all)."""
-    out = df.withColumn(ts_col, F.to_timestamp(F.col(ts_col), fmt))
-    if watermark is not None:
-        out = out.withWatermark(ts_col, watermark)
-    return out

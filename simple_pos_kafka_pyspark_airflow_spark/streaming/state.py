@@ -31,50 +31,12 @@ from collections.abc import Iterable, Iterator
 from typing import Any
 
 import pandas as pd
-
-# GroupStateTimeout lives in pyspark.sql.streaming.state (public API).
-try:  # pragma: no cover - import shape varies across pyspark minor versions
-    from pyspark.sql.streaming.state import GroupStateTimeout
-except ImportError:  # pragma: no cover
-    GroupStateTimeout = None  # type: ignore[assignment]
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 STOCK_STATE_SCHEMA = "stock_level double, seeded boolean"
 STOCK_OUTPUT_SCHEMA = "product_id long, stock_level double"
 SEQ_STATE_SCHEMA = "last_id long"
 SEQ_OUTPUT_SCHEMA = "event_key long, assigned_id long"
-
-
-def _fold_stock(
-    prior: tuple[float, bool] | None, batches: Iterable[pd.DataFrame]
-) -> tuple[float, bool]:
-    """The per-key batch fold shared by BOTH stateful APIs (GroupState
-    ``update_stock`` and Spark-4 ``StockProcessor``), so the semantics
-    cannot drift between them: accumulate quantity decrements and apply
-    the ``initial_stock`` seed.
-
-    Seeding is tracked with an explicit ``seeded`` flag, NOT "level is
-    set": a key whose first processed events are sales (stream started
-    mid-topic, seed event landing in a later micro-batch) accumulates a
-    negative level, and the late seed is then applied ADDITIVELY —
-    retroactively correct — instead of being silently ignored forever.
-    Several distinct seed values in one batch resolve to the maximum
-    (deterministic under shuffle row order; duplicates from at-least-once
-    delivery agree anyway).
-    """
-    level, seeded = prior if prior is not None else (0.0, False)
-    sold = 0.0
-    seed = None
-    for pdf in batches:
-        if not seeded and "initial_stock" in pdf.columns:
-            init = pdf["initial_stock"].dropna()
-            if len(init):
-                m = float(init.max())
-                seed = m if seed is None else max(seed, m)
-        sold += float(pdf["quantity"].sum())
-    if seed is not None:
-        level += seed
-        seeded = True
-    return level - sold, seeded
 
 
 def update_stock(
@@ -87,12 +49,32 @@ def update_stock(
     (``kafka_consumer.py:111-117``).
 
     Initial stock arrives as an ``initial_stock`` column on the seeding
-    event (NULL on the rest); a seed arriving AFTER the key's first sales
-    still applies (see ``_fold_stock``).
+    event (NULL on the rest). Seeding is tracked with an explicit
+    ``seeded`` flag, NOT "level is set": a key whose first processed
+    events are sales (stream started mid-topic, seed event landing in a
+    later micro-batch) accumulates a negative level, and the late seed is
+    then applied ADDITIVELY — retroactively correct — instead of being
+    silently ignored forever. Several distinct seed values in one batch
+    resolve to the maximum (deterministic under shuffle row order;
+    duplicates from at-least-once delivery agree anyway).
     """
     (product_id,) = key
-    prior = (state.get[0], bool(state.get[1])) if state.exists else None
-    level, seeded = _fold_stock(prior, batches)
+    level, seeded = (0.0, False)
+    if state.exists:
+        level, seeded = state.get[0], bool(state.get[1])
+    sold = 0.0
+    seed = None
+    for pdf in batches:
+        if not seeded and "initial_stock" in pdf.columns:
+            init = pdf["initial_stock"].dropna()
+            if len(init):
+                m = float(init.max())
+                seed = m if seed is None else max(seed, m)
+        sold += float(pdf["quantity"].sum())
+    if seed is not None:
+        level += seed
+        seeded = True
+    level -= sold
     state.update((level, seeded))
     yield pd.DataFrame({"product_id": [product_id], "stock_level": [level]})
 
@@ -119,12 +101,6 @@ def assign_ids(
 
 def stock_stream(grouped_events: Any) -> Any:
     """Wire ``update_stock`` onto ``df.groupBy('product_id')`` of a stream."""
-    if GroupStateTimeout is None:
-        raise ImportError(
-            "pyspark.sql.streaming.state.GroupStateTimeout is unavailable in "
-            "this pyspark build — applyInPandasWithState cannot be wired; "
-            "use stock_stream_tws (transformWithStateInPandas) instead"
-        )
     return grouped_events.applyInPandasWithState(
         update_stock,
         outputStructType=STOCK_OUTPUT_SCHEMA,
@@ -157,56 +133,6 @@ class FakeGroupState:
 
 
 # ---------------------------------------------------------------------------
-# transformWithState (Spark 4.x arbitrary-state API)
-# ---------------------------------------------------------------------------
-
-try:  # pragma: no cover - Spark 4.x only
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-except ImportError:  # pragma: no cover
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = None  # type: ignore[assignment]
-
-
-class StockProcessor(StatefulProcessor):
-    """``update_stock`` on the Spark 4 ``transformWithStateInPandas`` API.
-
-    Same semantics as the GroupState version above (T3: running per-product
-    stock with ``initial_stock`` seeding and quantity decrements), but on
-    the arbitrary-state processor model: named ``ValueState`` handles
-    (typed, TTL-capable, schema-evolvable) instead of one opaque state
-    tuple. This is the API Spark is consolidating stateful processing on —
-    the engine exposes both so pipelines can migrate incrementally.
-    """
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._level = handle.getValueState("stock_level", STOCK_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-        got = self._level.get() if self._level.exists() else None
-        prior = (got[0], bool(got[1])) if got is not None else None
-        level, seeded = _fold_stock(prior, rows)
-        self._level.update((level, seeded))
-        yield pd.DataFrame({"product_id": [key[0]], "stock_level": [level]})
-
-    def close(self) -> None:
-        pass
-
-
-def stock_stream_tws(grouped_events: Any) -> Any:
-    """Wire ``StockProcessor`` onto ``df.groupBy('product_id')`` of a
-    stream via the Spark 4 API (update mode, no timers)."""
-    return grouped_events.transformWithStateInPandas(
-        statefulProcessor=StockProcessor(),
-        outputStructType=STOCK_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-# ---------------------------------------------------------------------------
 # streaming CUSUM (the sequential monitor from operators/timeseries)
 # ---------------------------------------------------------------------------
 
@@ -224,9 +150,9 @@ def _fold_cusum(
     ``C = max(0, C + dev)`` recursion from the prior state. Returns the
     final C and the per-row (order_key, c_scaled, alarm) frame.
 
-    Shared shape with ``_fold_stock``: pure pandas, unit-testable without
-    a stream, and the ONLY place the recursion lives — the streaming
-    wrapper and tests call this same function."""
+    Pure pandas, unit-testable without a stream, and the ONLY place the
+    recursion lives — the streaming wrapper and tests call this same
+    function."""
     frames = [pdf for pdf in batches if len(pdf)]
     if not frames:
         empty = pd.DataFrame({"order_key": [], "c_scaled": [], "alarm": []})
@@ -275,11 +201,6 @@ def make_cusum_update(threshold_scaled: int):
 def cusum_stream(grouped: Any, threshold_scaled: int) -> Any:
     """Wire streaming CUSUM onto ``df.groupBy(<key>)`` of a stream whose
     rows carry integer ``dev`` and ``order_key`` columns."""
-    if GroupStateTimeout is None:
-        raise ImportError(
-            "pyspark.sql.streaming.state.GroupStateTimeout is unavailable "
-            "in this pyspark build"
-        )
     return grouped.applyInPandasWithState(
         make_cusum_update(threshold_scaled),
         outputStructType=CUSUM_OUTPUT_SCHEMA,

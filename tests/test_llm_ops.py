@@ -19,7 +19,7 @@ def minhash_signature(shingle_arr, num_hashes: int = 64):
     as ONE nested higher-order expression (outer transform over seed ids,
     inner transform hashing each shingle with that seed). The pipelines
     compute the identical signature through exploded rows and codegen
-    min aggregates (``dedup.minhash_signatures_df``)."""
+    min aggregates (``dedup.minhash_doc_table``)."""
     return F.transform(
         F.sequence(F.lit(0), F.lit(num_hashes - 1)),
         lambda i: F.array_min(F.transform(shingle_arr, lambda s: F.xxhash64(s, i))),
@@ -680,45 +680,21 @@ def test_simhash_planted_pair_oracle_survives_whitespace_doc(spark, tmp_path):
     assert res.ok, str(res)
 
 
-def test_normalize_agg_method_agrees_with_grouped(spark):
-    """The giant-group escape hatch (method='agg': distributed
-    posexplode+groupBy moments, no group ever on one worker) must agree
-    with the grouped-map form to 1e-6 on real data — including the
-    zero-variance clamp and single-row groups."""
-    import numpy as np
-
+def test_normalize_grouped_whitening_edge_cases(spark):
+    """Grouped-map whitening clamps a zero-variance dimension's std to 1
+    (no NaN/Inf) and whitens a single-row group to zeros."""
     from simple_pos_kafka_pyspark_airflow_spark.llm import simsearch
 
-    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    grouped = {
-        r["vec_id"]: np.array(r["embedding"], dtype="float64")
-        for r in simsearch.normalize_embeddings_by_group(e).collect()
-    }
-    agg = {
-        r["vec_id"]: np.array(r["embedding"], dtype="float64")
-        for r in simsearch.normalize_embeddings_by_group(e, method="agg").collect()
-    }
-    assert set(grouped) == set(agg) and len(grouped) == e.count()
-    worst = max(float(np.abs(grouped[k] - agg[k]).max()) for k in grouped)
-    assert worst <= 1e-6, worst
-
-    # constant dim + single-row group: std clamps to 1 on both paths
     edge = spark.createDataFrame(
         [(1, "solo", [2.0, 5.0]), (2, "duo", [1.0, 5.0]), (3, "duo", [3.0, 5.0])],
         "vec_id long, label string, embedding array<float>",
     )
-    for method in ("grouped", "agg"):
-        got = {
-            r["vec_id"]: list(r["embedding"])
-            for r in simsearch.normalize_embeddings_by_group(edge, method=method).collect()
-        }
-        assert got[1] == [0.0, 0.0]  # single-row group whitens to zeros
-        assert got[2] == [-1.0, 0.0] and got[3] == [1.0, 0.0]
-
-    with pytest.raises(ValueError, match="grouped.*agg"):
-        simsearch.normalize_embeddings_by_group(edge, method="nope")
-        nonconst = grp.std(axis=0)[:2]
-        assert np.allclose(nonconst, 1.0, atol=1e-5)
+    got = {
+        r["vec_id"]: list(r["embedding"])
+        for r in simsearch.normalize_embeddings_by_group(edge).collect()
+    }
+    assert got[1] == [0.0, 0.0]  # single-row group whitens to zeros
+    assert got[2] == [-1.0, 0.0] and got[3] == [1.0, 0.0]
 
 
 def test_dedup_clusters_known_components(spark):
@@ -1200,32 +1176,9 @@ def test_batch_topk_matches_per_query_topk(spark):
         assert got == want, (qid, got, want)
 
 
-def test_batch_topk_arrow_path_matches_jvm_path(spark):
-    """The Arrow matmul scoring form must agree with the JVM fold form —
-    same ids, same order, scores equal to the 6 dp the contract rounds to
-    (the two forms differ only in rounding tie-mode, which well-separated
-    data never exercises)."""
-    from pyspark.sql import functions as F
-
-    from simple_pos_kafka_pyspark_airflow_spark.llm import simsearch
-
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = e.where(F.col("vec_id") < 6).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    jvm = simsearch.cosine_topk_batch(e, queries, k=8).collect()
-    arrow = simsearch.cosine_topk_batch(e, queries, k=8, arrow=True).collect()
-    key = lambda r: (r["query_id"], r["rn"])  # noqa: E731
-    assert [(r["query_id"], r["vec_id"], r["score"]) for r in sorted(jvm, key=key)] == [
-        (r["query_id"], r["vec_id"], r["score"]) for r in sorted(arrow, key=key)
-    ]
-
-
-def test_batch_topk_arrow_path_empty_inputs_match_jvm_path(spark):
-    """Degenerate inputs must not split the documented-interchangeable
-    forms: an empty QUERY frame crashed the Arrow path in np.stack while
-    the JVM twin returned an empty frame; both must return empty, with
-    the same columns, for empty queries and for an empty corpus."""
+def test_batch_topk_empty_inputs_yield_empty_frame(spark):
+    """Empty queries and an empty corpus each give an empty batched top-k
+    with the (query_id, vec_id, score, rn) columns."""
     from pyspark.sql import functions as F
 
     from simple_pos_kafka_pyspark_airflow_spark.llm import simsearch
@@ -1234,18 +1187,16 @@ def test_batch_topk_arrow_path_empty_inputs_match_jvm_path(spark):
     no_queries = e.where(F.lit(False)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    jvm = simsearch.cosine_topk_batch(e, no_queries, k=8)
-    arrow = simsearch.cosine_topk_batch(e, no_queries, k=8, arrow=True)
-    assert jvm.columns == arrow.columns == ["query_id", "vec_id", "score", "rn"]
-    assert jvm.count() == arrow.count() == 0
+    got = simsearch.cosine_topk_batch(e, no_queries, k=8)
+    assert got.columns == ["query_id", "vec_id", "score", "rn"]
+    assert got.count() == 0
 
     queries = e.limit(2).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    empty_corpus = e.where(F.lit(False))
-    jvm2 = simsearch.cosine_topk_batch(empty_corpus, queries, k=8)
-    arrow2 = simsearch.cosine_topk_batch(empty_corpus, queries, k=8, arrow=True)
-    assert jvm2.count() == arrow2.count() == 0
+    got2 = simsearch.cosine_topk_batch(e.where(F.lit(False)), queries, k=8)
+    assert got2.columns == ["query_id", "vec_id", "score", "rn"]
+    assert got2.count() == 0
 
 
 def test_quantize_arrow_bit_identical_to_column_form(spark):

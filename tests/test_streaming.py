@@ -634,106 +634,6 @@ def test_interval_join_stream_stream(spark, tmp_path):
     assert got == [(k, float(k)) for k in range(0, 40, 10)]
 
 
-def _protobuf_available() -> bool:
-    """transformWithStateInPandas spawns a streaming Python runner that
-    imports google.protobuf; without it the JVM-side query crashes
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE — observed live)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas needs google.protobuf in the Python "
-    "worker; not installed in this container (no pip allowed) — the "
-    "GroupState twin test_stock_stream_end_to_end covers the semantics",
-)
-def test_stock_stream_transform_with_state(spark, tmp_path):
-    """The Spark 4 transformWithStateInPandas stock processor: same
-    end state as the GroupState path across two incremental drains."""
-    src = tmp_path / "tws_sales"
-    src.mkdir()
-    with open(src / "b1.json", "w") as f:
-        f.write(json.dumps({"product_id": 1, "quantity": 2.0, "initial_stock": 50.0}) + "\n")
-        f.write(json.dumps({"product_id": 1, "quantity": 3.0, "initial_stock": None}) + "\n")
-        f.write(json.dumps({"product_id": 2, "quantity": 1.0, "initial_stock": 10.0}) + "\n")
-    stream = ingest.file_json_stream(
-        spark, str(src), "product_id long, quantity double, initial_stock double"
-    )
-    out = state.stock_stream_tws(stream.groupBy("product_id"))
-    ckpt = str(tmp_path / "ckpt_tws")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tws_stock")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["product_id"]: r["stock_level"] for r in spark.sql("SELECT * FROM tws_stock").collect()}
-    assert got == {1: 45.0, 2: 9.0}
-    # second drain: state survives the restart via the checkpoint
-    with open(src / "b2.json", "w") as f:
-        f.write(json.dumps({"product_id": 1, "quantity": 5.0, "initial_stock": None}) + "\n")
-    q2 = (
-        state.stock_stream_tws(
-            ingest.file_json_stream(
-                spark, str(src), "product_id long, quantity double, initial_stock double"
-            ).groupBy("product_id")
-        )
-        .writeStream.format("memory")
-        .queryName("tws_stock2")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    got2 = {r["product_id"]: r["stock_level"] for r in spark.sql("SELECT * FROM tws_stock2").collect()}
-    assert got2.get(1) == 40.0
-
-
-def test_stock_processor_logic_direct():
-    """StockProcessor.handleInputRows against a fake ValueState: the
-    transform logic runs (and is covered) without the streaming runner,
-    which needs protobuf this container lacks."""
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    proc = state.StockProcessor()
-    proc._level = FakeValueState()
-    out1 = list(
-        proc.handleInputRows(
-            (1,),
-            iter([pd.DataFrame({"quantity": [2.0, 3.0], "initial_stock": [50.0, None]})]),
-            None,
-        )
-    )
-    assert out1[0]["stock_level"].iloc[0] == 45.0
-    out2 = list(
-        proc.handleInputRows(
-            (1,), iter([pd.DataFrame({"quantity": [5.0], "initial_stock": [None]})]), None
-        )
-    )
-    assert out2[0]["stock_level"].iloc[0] == 40.0
-
-
 # ---------------------------------------------------------------------------
 # Kafka value-path parity (S4) without a broker: a batch DataFrame shaped
 # EXACTLY like the Kafka source's output (key/value binary, topic,
@@ -1849,15 +1749,17 @@ def test_digest_tiers_return_their_own_checkpoint(spark, tmp_path):
             assert persistent_rdd_ids(spark) - before == set(), (name, b)
 
 
-def test_ingest_ladder_reliable_profile_matches_local(spark, sf_dir, tmp_path):
+def test_ingest_ladder_reliable_profile_matches_local(spark, sf_dir, tmp_path, monkeypatch):
     """The cluster profile (``spark.graft.materialize=reliable``) reaches
     every ingest tier, ``bpe_train`` and ``pq_train`` through
     ``cacheutil.materialize`` and changes no result. The whole ladder runs
     under each profile with its own index paths: the returned rows and
     the index contents are equal, and under ``reliable`` no tier leaves a
-    block-manager checkpoint behind (its checkpoints are files). The
-    trainers return the same merges and codebooks, and under ``reliable``
-    write checkpoint files."""
+    block-manager checkpoint behind (its checkpoints are files) and,
+    once each batch's returned frame is released, no checkpoint file
+    either. The trainers return the same merges and codebooks, and under
+    ``reliable`` they reach reliable ``checkpoint()`` and leave the
+    checkpoint directory as they found it."""
     from simple_pos_kafka_pyspark_airflow_spark.cacheutil import (
         CHECKPOINT_DIR_KEY,
         MATERIALIZE_MODE_KEY,
@@ -1872,21 +1774,23 @@ def test_ingest_ladder_reliable_profile_matches_local(spark, sf_dir, tmp_path):
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
+    def checkpoint_files():
+        ck = spark.sparkContext.getCheckpointDir()
+        return 0 if ck is None else sum(len(f) for _, _, f in os.walk(ck.removeprefix("file:")))
+
     def run(root):
         idx = _ladder_indexes(spark, root, all_tiers=True)
         before = persistent_rdd_ids(spark)
+        n_files = checkpoint_files()
         outs = []
         for b, batch in enumerate(_ladder_batches()[:2]):  # the landed probes run on batch 1
             out = _ingest_ladder(spark, idx, b, batch)
             outs.append(rows(out))
             release(out)
+            assert checkpoint_files() == n_files, b
         leftover = persistent_rdd_ids(spark) - before
         state = {k: rows(spark.read.parquet(i.path)) for k, i in idx.items()}
         return outs, state, leftover
-
-    def checkpoint_files():
-        ck = spark.sparkContext.getCheckpointDir()
-        return 0 if ck is None else sum(len(f) for _, _, f in os.walk(ck.removeprefix("file:")))
 
     local = run(tmp_path / "local")
     merges = tokenize.bpe_train(docs, n_merges=6)
@@ -1895,12 +1799,22 @@ def test_ingest_ladder_reliable_profile_matches_local(spark, sf_dir, tmp_path):
     spark.conf.set(CHECKPOINT_DIR_KEY, str(tmp_path / "ck"))
     try:
         reliable = run(tmp_path / "reliable")
-        n_files = checkpoint_files()
-        assert tokenize.bpe_train(docs, n_merges=6) == merges
-        assert checkpoint_files() > n_files
-        n_files = checkpoint_files()
-        assert simsearch.pq_train(emb, m=8, ks=16) == books
-        assert checkpoint_files() > n_files
+        checkpoint = type(docs).checkpoint
+        calls = []
+
+        def spy(df, *a, **k):
+            calls.append(1)
+            return checkpoint(df, *a, **k)
+
+        monkeypatch.setattr(type(docs), "checkpoint", spy)
+        for train, want in (
+            (lambda: tokenize.bpe_train(docs, n_merges=6), merges),
+            (lambda: simsearch.pq_train(emb, m=8, ks=16), books),
+        ):
+            n_files, n_calls = checkpoint_files(), len(calls)
+            assert train() == want
+            assert len(calls) > n_calls
+            assert checkpoint_files() == n_files
     finally:
         spark.conf.unset(MATERIALIZE_MODE_KEY)
         spark.conf.unset(CHECKPOINT_DIR_KEY)

@@ -166,6 +166,44 @@ def test_vocab_and_token_ids(spark):
 # ---------------------------------------------------------------------------
 
 
+def _reference_batched_train(
+    word_counts: dict[str, int],
+    n_merges: int,
+    min_count: int = 2,
+    max_batch: int = tk.MAX_BATCH,
+    topk_window: int = tk.TOPK_WINDOW,
+) -> list[tuple[str, str]]:
+    """Batched twin of ``bpe_train_python`` — the distributed trainer's
+    selection logic (``_select_merge_batch`` over a top-K window) without
+    a SparkSession, so batched == sequential can be fuzzed over
+    ``max_batch`` and ``topk_window``."""
+    vocab = {tuple(w): c for w, c in word_counts.items() if w}
+    merges: list[tuple[str, str]] = []
+    while len(merges) < n_merges:
+        counts = tk._pair_counts(vocab)
+        if not counts:
+            break
+        ordered = sorted(
+            ((l, r, c) for (l, r), c in counts.items()),
+            key=lambda t: (-t[2], t[0], t[1]),
+        )
+        batch = tk._select_merge_batch(
+            ordered[:topk_window],
+            len(ordered) <= topk_window,
+            min(max_batch, n_merges - len(merges)),
+            min_count,
+        )
+        if not batch:
+            break
+        merges.extend(batch)
+        for a, b in batch:
+            vocab = {
+                (tk._merge_word(s, a, b) if a in s else s): cnt
+                for s, cnt in vocab.items()
+            }
+    return merges
+
+
 def test_select_batch_rejects_boostable_pair():
     """The counter-example that shows symbol-disjointness ALONE is not
     sequential-safe: merging (a,b) turns every 'x a b' into an (x, ab)
@@ -179,7 +217,7 @@ def test_select_batch_rejects_boostable_pair():
     assert batch == [("a", "b")]
     seq = tk.bpe_train_python(wc, n_merges=2)
     assert seq == [("a", "b"), ("x", "ab")]
-    assert tk.bpe_train_python_batched(wc, n_merges=2, max_batch=8) == seq
+    assert _reference_batched_train(wc, n_merges=2, max_batch=8) == seq
 
 
 def test_select_batch_accepts_dominating_disjoint_pairs():
@@ -187,7 +225,7 @@ def test_select_batch_accepts_dominating_disjoint_pairs():
     batch = tk._select_merge_batch(rows, window_full=True, max_batch=8, min_count=2)
     assert batch == [("a", "b"), ("c", "d")]
     wc = {"ab": 100, "cd": 20}
-    assert tk.bpe_train_python_batched(wc, 2) == tk.bpe_train_python(wc, 2)
+    assert _reference_batched_train(wc, 2) == tk.bpe_train_python(wc, 2)
 
 
 def test_batched_python_twin_equals_sequential_fuzz():
@@ -204,16 +242,16 @@ def test_batched_python_twin_equals_sequential_fuzz():
         n_merges = rng.randint(1, 10)
         seq = tk.bpe_train_python(wc, n_merges)
         for max_batch, topk in ((2, 64), (4, 8), (8, 3), (8, 64)):
-            got = tk.bpe_train_python_batched(
+            got = _reference_batched_train(
                 wc, n_merges, max_batch=max_batch, topk_window=topk
             )
             assert got == seq, (trial, wc, max_batch, topk, got, seq)
 
 
 def test_distributed_batched_equals_sequential_modes(spark):
-    """Spark batched (default max_batch=8) == Spark strict one-per-round
-    (max_batch=1) == python sequential, on a corpus engineered with both
-    dominating-disjoint and boostable-interacting pairs."""
+    """Spark batched training (up to MAX_BATCH merges per round) == python
+    sequential, on a corpus engineered with both dominating-disjoint and
+    boostable-interacting pairs."""
     docs = spark.createDataFrame(
         [("ab ab ab xab cd cd ef ef ef ef",), ("xab xab cd ab ef gh gh",)],
         ["text"],
@@ -221,60 +259,3 @@ def test_distributed_batched_equals_sequential_modes(spark):
     wc = {r["word"]: r["count"] for r in tk.word_count_table(docs).collect()}
     seq = tk.bpe_train_python(wc, 10)
     assert tk.bpe_train(docs, n_merges=10) == seq
-    got_strict = tk.bpe_train_from_counts(
-        tk.word_count_table(docs), n_merges=10, max_batch=1
-    )
-    assert got_strict == seq
-
-
-def test_fast_mode_batches_and_stays_valid():
-    """exact_order=False (parallel-BPE compromise): big round-count
-    reduction on a Zipf corpus, merges stay a valid BPE table (lossless
-    encode), compression within a few % of sequential."""
-    rng = random.Random(7)
-    letters = "etaoinshrdlcu"
-    words = set()
-    while len(words) < 400:
-        words.add(
-            "".join(rng.choice(letters) for _ in range(max(1, int(rng.gauss(5, 2)))))
-        )
-    wc = {w: max(1, 10000 // (i + 1)) for i, w in enumerate(sorted(words))}
-    n = 150
-    seq = tk.bpe_train_python(wc, n)
-    fast = tk.bpe_train_python_batched(
-        wc, n, max_batch=16, topk_window=128, exact_order=False
-    )
-    assert len(fast) == len(seq) == n
-
-    def total_tokens(merges):
-        ranks = tk.bpe_ranks(merges)
-        return sum(len(tk.bpe_encode_python(w, ranks)) * c for w, c in wc.items())
-
-    t_seq, t_fast = total_tokens(seq), total_tokens(fast)
-    # tight 13-letter alphabet = worst case for order deviation; the
-    # 5000-word natural-frequency measurement in docs/SCALE.md is ~1%
-    assert t_fast <= t_seq * 1.10, (t_fast, t_seq)
-    # lossless under the fast table
-    ranks = tk.bpe_ranks(fast)
-    for w in list(wc)[:50]:
-        assert "".join(tk.bpe_encode_python(w, ranks)) == w
-
-
-def test_distributed_fast_mode_matches_python_fast_twin(spark):
-    """exact_order=False on the Spark trainer must equal the python fast
-    twin exactly (same selection code path, same window semantics) —
-    the production batched mode is pinned, not just the exact default."""
-    docs = spark.createDataFrame(
-        [("ab ab ab xab cd cd ef ef ef ef gh gh ij ij",),
-         ("xab xab cd ab ef gh kl kl kl mn mn op",)],
-        ["text"],
-    )
-    wc = {r["word"]: r["count"] for r in tk.word_count_table(docs).collect()}
-    want = tk.bpe_train_python_batched(
-        wc, 12, max_batch=8, topk_window=64, exact_order=False
-    )
-    got = tk.bpe_train_from_counts(
-        tk.word_count_table(docs), n_merges=12, max_batch=8, topk_window=64,
-        exact_order=False,
-    )
-    assert got == want
