@@ -45,7 +45,7 @@ import contextlib
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
-from .sources.io import _fs_for
+from .sources.io import fs_delete
 
 #: Session conf key selecting how ``materialize`` cuts lineage.
 MATERIALIZE_MODE_KEY = "spark.graft.materialize"
@@ -132,8 +132,7 @@ def release(*frames: DataFrame | None) -> None:
             continue
         ckpt = rdd.getCheckpointFile()
         if ckpt.isDefined():
-            fs, path = _fs_for(df.sparkSession, ckpt.get())
-            fs.delete(path, True)
+            fs_delete(df.sparkSession, ckpt.get())
 
 
 @contextlib.contextmanager

@@ -20,6 +20,16 @@ Scale notes: every writer here is executor-parallel (no driver funnel); the
 daily-partition layout turns the reference's filename games into partition
 pruning; ``maxRecordsPerFile`` bounds file sizes so a hot date still
 produces splittable output.
+
+Committed state: this module is the only owner of directory surgery on
+the engine's parquet state (CDC snapshots, incremental index logs,
+quantizer tables, frozen monitor references). ``overwrite_atomic`` swaps
+a snapshot in through a tombstone; ``read_committed`` is the owner's
+(single-writer) read, and it and ``append_parquet`` first heal a swap
+that crashed between its two renames, so the old snapshot comes back
+before anyone reads or appends beside it; ``fs_delete`` is the one
+recursive delete. Every call goes through the Hadoop FileSystem of the
+path's own scheme.
 """
 
 from __future__ import annotations
@@ -58,10 +68,32 @@ def read_jsonl(spark: SparkSession, path: str | list[str], schema: StructType | 
     return spark.read.schema(schema).json(paths)
 
 
-def append_parquet(df: DataFrame, path: str) -> None:
+def read_committed(
+    spark: SparkSession, path: str, schema: StructType | str | None = None
+) -> DataFrame | None:
+    """The owner's (single-writer) read of a parquet state directory:
+    heal a crashed tombstone swap (``fs_recover_tombstone``), then scan
+    the committed rows (typed by ``schema`` when given). None ONLY for a
+    never-committed path: missing, empty, or hidden-only debris
+    (``fs_dir_has_data``). An existing path that fails to read as parquet
+    raises. Healing renames directories, so only the state's single
+    writer may call this; a concurrent reader would race its swaps."""
+    fs_recover_tombstone(spark, path)
+    if not fs_dir_has_data(spark, path):
+        return None
+    return read_parquet(spark, path, schema)
+
+
+def append_parquet(
+    df: DataFrame, path: str, partition_by: list[str] | None = None
+) -> None:
     """Append sink (S6): the daily-append pipeline's terminal write —
-    executors write directly, nothing returns to the driver."""
-    df.write.mode("append").parquet(path)
+    executors write directly, nothing returns to the driver — laid out
+    ``partitionBy(*partition_by)`` when given. A crashed swap is healed
+    first: an append beside a tombstone would create a live directory
+    that the next swap's recovery keeps, dropping the tombstoned rows."""
+    fs_recover_tombstone(df.sparkSession, path)
+    df.write.mode("append").partitionBy(*(partition_by or [])).parquet(path)
 
 
 def write_partitioned(
@@ -144,17 +176,15 @@ def fs_swap_in(spark: SparkSession, staging: str, live: str) -> None:
     s = hpath(staging)
     t = hpath(base + ".__tombstone__")
     parent = p.getParent()
-    if parent is not None and not fs.exists(parent):
+    if parent is not None:
         fs.mkdirs(parent)
     if fs.exists(p):
-        if fs.exists(t):
-            fs.delete(t, True)
+        fs.delete(t, True)
         if not _fs_rename(fs, p, t):
             raise OSError(f"atomic swap: tombstone rename failed for {live}")
     if not _fs_rename(fs, s, p):
         raise OSError(f"atomic swap: staging rename failed for {live}")
-    if fs.exists(t):
-        fs.delete(t, True)
+    fs.delete(t, True)
 
 
 def staging_sibling(path: str) -> str:
@@ -171,9 +201,10 @@ def overwrite_atomic(
     ``partition_by`` when given), tombstone-rename the live dir, move
     staging in, drop the tombstone. Readers never observe a
     half-written table; a crash leaves either the old or the new snapshot
-    (plus at worst a tombstone the next writer reclaims). All directory
-    surgery goes through the Hadoop FileSystem of the path's own scheme
-    (``fs_swap_in``) — local paths, ``file:`` URIs, HDFS and ABFS alike."""
+    (plus at worst a tombstone that the owner's next read, append or
+    swap heals). All directory surgery goes through the Hadoop
+    FileSystem of the path's own scheme (``fs_swap_in``) — local paths,
+    ``file:`` URIs, HDFS and ABFS alike."""
     spark = df.sparkSession
     staging = staging_sibling(path)
     write_staged(df, staging, partition_by)
@@ -195,10 +226,15 @@ def write_staged(
     try:
         writer.parquet(staging)
     except Exception:
-        fs, p = _fs_for(df.sparkSession, staging)
-        if fs.exists(p):
-            fs.delete(p, True)
+        fs_delete(df.sparkSession, staging)
         raise
+
+
+def fs_delete(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path`` through the Hadoop FileSystem of its
+    own scheme; a missing path is a no-op."""
+    fs, p = _fs_for(spark, path)
+    fs.delete(p, True)
 
 
 def write_bucketed_table(
@@ -415,9 +451,11 @@ def compact_parquet(
     ``repartition``) avoids a shuffle: parquet row groups concatenate
     fine, and output skew only matters if the input was already skewed —
     callers with skewed inputs should repartition upstream. Returns the
-    number of output files requested."""
+    number of output files requested: 0, and no write, when nothing was
+    ever committed at ``path``."""
+    df = read_committed(spark, path)
+    if df is None:
+        return 0
     n_files = max(1, -(-dir_bytes(spark, path) // target_file_bytes))  # ceil
-    df = spark.read.parquet(path)
-    compacted = df.coalesce(n_files)
-    overwrite_atomic(compacted, path)
+    overwrite_atomic(df.coalesce(n_files), path)
     return n_files

@@ -65,7 +65,7 @@ from pyspark.sql import functions as F
 from .. import cacheutil
 from ..cacheutil import release, released_on_error
 from ..llm import simsearch
-from ..sources.io import fs_dir_has_data, overwrite_atomic
+from ..sources.io import overwrite_atomic, read_committed
 from .corpus import _IndexLog
 
 
@@ -175,13 +175,16 @@ class IncrementalIvfIndex(_IndexLog):
 
     def _read_table(self, path: str, keys: list[str]) -> dict[tuple, list[float]] | None:
         """A persisted quantizer table's (keys..., pos, value) rows as
-        {key tuple: vector}, or None when never written. Discovery goes
-        through the Hadoop FS of the path's scheme (object-store safe,
-        same discipline as the other incremental indexes)."""
-        if not fs_dir_has_data(self.spark, path):
+        {key tuple: vector}, or None when never written. Read through
+        ``sources.io.read_committed`` like the index rows: a ``fit`` or
+        ``rebuild`` that crashed inside its swap is healed back to the
+        previous quantizer, never mistaken for "never fit" (which would
+        refit the quantizer from the next batch)."""
+        table = read_committed(self.spark, path)
+        if table is None:
             return None
         by: dict[tuple, dict[int, float]] = {}
-        for r in self.spark.read.parquet(path).collect():
+        for r in table.collect():
             by.setdefault(tuple(r[k] for k in keys), {})[r["pos"]] = r["value"]
         return {key: [vec[p] for p in range(len(vec))] for key, vec in by.items()}
 

@@ -41,10 +41,9 @@ from pyspark.sql import functions as F
 from ..cacheutil import computed
 from ..operators import upsert as upsert_ops
 from ..sources.io import (
-    _fs_for,
-    fs_dir_has_data,
-    fs_recover_tombstone,
+    fs_delete,
     fs_swap_in,
+    read_committed,
     staging_sibling,
     write_staged,
 )
@@ -151,10 +150,11 @@ class ParquetCdcSink:
         self.schema = schema  # DDL string: snapshot columns (no _op / order col)
 
     def read(self) -> DataFrame:
-        fs_recover_tombstone(self.spark, self.path)
-        if fs_dir_has_data(self.spark, self.path):
-            return self.spark.read.schema(self.schema).parquet(self.path)
-        return self.spark.createDataFrame([], self.schema)
+        """The committed snapshot (``sources.io.read_committed``, the
+        owner's read, which heals a crashed swap); an empty frame of
+        ``schema`` before the first commit."""
+        committed = read_committed(self.spark, self.path, self.schema)
+        return committed or self.spark.createDataFrame([], self.schema)
 
     def foreach_batch(self, events: DataFrame, batch_id: int) -> None:
         # the final event per key, computed once: its row count is the
@@ -170,7 +170,7 @@ class ParquetCdcSink:
         # dir is touched (the plan reads the live dir). The swap itself
         # (live → tombstone, staging → live, drop tombstone) and its
         # crash-window recovery live in sources.io.fs_swap_in /
-        # fs_recover_tombstone — Hadoop-FS surgery, valid on any scheme.
+        # read_committed — Hadoop-FS surgery, valid on any scheme.
         staging = staging_sibling(self.path)
         write_staged(new_snapshot, staging)
         fs_swap_in(self.spark, staging, self.path)
@@ -233,10 +233,9 @@ class ScdParquetCdcSink(ParquetCdcSink):
         self.history_schema = f"{schema}, valid_from {order_type}, valid_to {order_type}"
 
     def read_history(self) -> DataFrame:
-        fs_recover_tombstone(self.spark, self.history_path)
-        if fs_dir_has_data(self.spark, self.history_path):
-            return self.spark.read.schema(self.history_schema).parquet(self.history_path)
-        return self.spark.createDataFrame([], self.history_schema)
+        """The committed SCD2 history, read as ``read`` reads the snapshot."""
+        committed = read_committed(self.spark, self.history_path, self.history_schema)
+        return committed or self.spark.createDataFrame([], self.history_schema)
 
     def _apply(self, final: DataFrame) -> None:
         current = self.read()
@@ -283,9 +282,7 @@ class ScdParquetCdcSink(ParquetCdcSink):
             except Exception:
                 # the snapshot staging already landed — reclaim it too, or the
                 # pair of failed stagings leaks per retry
-                fs, p = _fs_for(self.spark, snap_staging)
-                if fs.exists(p):
-                    fs.delete(p, True)
+                fs_delete(self.spark, snap_staging)
                 raise
             # swap HISTORY first, snapshot second (see class docstring)
             fs_swap_in(self.spark, hist_staging, self.history_path)

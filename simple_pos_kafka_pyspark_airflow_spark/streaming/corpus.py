@@ -38,7 +38,7 @@ from .. import cacheutil
 from ..cacheutil import release, released_on_error
 from ..llm import dedup as dedup_ops
 from ..llm import textops
-from ..sources.io import fs_dir_has_data, overwrite_atomic
+from ..sources.io import append_parquet, overwrite_atomic, read_committed
 
 
 def _tagged(rows: DataFrame, batch_id: int) -> DataFrame:
@@ -46,20 +46,36 @@ def _tagged(rows: DataFrame, batch_id: int) -> DataFrame:
     return rows.withColumn("_batch", F.lit(int(batch_id)).cast("long"))
 
 
+def _committed(spark: SparkSession, path: str, first: str) -> DataFrame:
+    """State a gate or monitor cannot run without: its committed rows
+    (``sources.io.read_committed``, the owner's read, which heals a
+    crashed re-fit or re-freeze swap), or a ValueError naming the call to
+    run ``first`` when it was never committed."""
+    committed = read_committed(spark, path)
+    if committed is None:
+        raise ValueError(f"nothing committed at {path}: {first} first")
+    return committed
+
+
 class _IndexLog:
     """The state of one incremental index: a parquet directory of
     append-only rows. Every index in this module shares this lifecycle,
     so its replay policy is written once, here.
 
-    - ``_landed``: the committed rows, or None ONLY for a never-committed
-      index — a missing path, an empty directory, or hidden-only debris
-      (parquet's ``_temporary`` from a crashed first append, ``_SUCCESS``
-      markers). Existence is probed through the Hadoop FileSystem of the
-      path's own scheme (file:/S3A/HDFS/ABFS alike), never a driver-local
-      ``os`` probe, which would report "no index" on an object store and
+    - ``_landed``: the committed rows (``sources.io.read_committed``, the
+      owner's read), or None ONLY for a never-committed index — a missing
+      path, an empty directory, or hidden-only debris (parquet's
+      ``_temporary`` from a crashed first append, ``_SUCCESS`` markers).
+      It first heals a ``compact`` that crashed between the two renames
+      of its swap, so the tombstoned rows are read, not mistaken for an
+      empty index. Probes go through the Hadoop FileSystem of the path's
+      own scheme (file:/S3A/HDFS/ABFS alike), never a driver-local ``os``
+      probe, which would report "no index" on an object store and
       silently skip landed-corpus dedup. An existing path that fails to
       read as parquet raises.
-    - ``_append``: a plain parquet append, tagged with the batch id when
+    - ``_append``: a plain parquet append (``sources.io.append_parquet``,
+      which heals a crashed swap first, so an append never creates a
+      live directory beside a tombstone), tagged with the batch id when
       one is given and laid out ``partitionBy(*partition_by)`` when the
       log is partitioned. It is not transactional: a batch that
       ``foreachBatch`` replays after a crash between the append and the
@@ -96,14 +112,12 @@ class _IndexLog:
         self._partition_by = partition_by or []
 
     def _landed(self) -> DataFrame | None:
-        if not fs_dir_has_data(self.spark, self.path):
-            return None
-        return self.spark.read.parquet(self.path)
+        return read_committed(self.spark, self.path)
 
     def _append(self, rows: DataFrame, batch_id: int | None = None) -> None:
         if batch_id is not None:
             rows = _tagged(rows, batch_id)
-        rows.write.mode("append").partitionBy(*self._partition_by).parquet(self.path)
+        append_parquet(rows, self.path, self._partition_by)
 
     def _replayed(self, where: Column | None = None) -> DataFrame | None:
         """Landed rows (optionally filtered) with replayed appends
@@ -1007,8 +1021,10 @@ class PersistentBloomGate:
         m_bits: int = 1 << 24,
     ) -> None:
         """Build the probe set's bitmap and persist it (atomic overwrite —
-        an eval-set release replaces the gate wholesale, and a failed
-        refit leaves the previous release readable)."""
+        an eval-set release replaces the gate wholesale). A failed refit
+        leaves the previous release readable: a crash inside the swap
+        leaves it under the tombstone, and the next ``_bitmap`` load
+        (``sources.io.read_committed``) restores it."""
         from ..llm.bloom import _CHUNK_BITS, bloom_bitmap
 
         bitmap = bloom_bitmap(
@@ -1038,11 +1054,7 @@ class PersistentBloomGate:
 
         if self._cache is not None:
             return self._cache
-        if not fs_dir_has_data(self.spark, self.path):
-            raise ValueError(
-                f"no Bloom gate at {self.path}: fit() it with the eval set first"
-            )
-        rows = self.spark.read.parquet(self.path).collect()
+        rows = _committed(self.spark, self.path, "fit() the gate with the eval set").collect()
         if not rows:
             raise ValueError(
                 f"Bloom gate at {self.path} is committed but empty — refit"
@@ -1187,7 +1199,7 @@ class CorpusDriftMonitor:
         overwrite_atomic(meta, self._meta_path)
 
     def _frozen_meta(self) -> tuple[float, float]:
-        row = self.spark.read.parquet(self._meta_path).first()
+        row = _committed(self.spark, self._meta_path, "freeze()").first()
         return float(row["lo"]), float(row["hi"])
 
     def check_batch(self, batch: DataFrame, batch_id: int) -> DataFrame:
@@ -1203,13 +1215,13 @@ class CorpusDriftMonitor:
         live_counts = batch.groupBy(g, F.col(v).cast("long").alias("value")).agg(
             F.count("*").cast("long").alias("n")
         )
-        ref_counts = self.spark.read.parquet(self._counts_path)
+        ref_counts = _committed(self.spark, self._counts_path, "freeze()")
         ks = ks_drift_counts(ref_counts, live_counts, g).select(
             g, "n_ref", "n_live", "ks"
         )
         lo, hi = self._frozen_meta()
         live_hist = value_histogram(batch, v, g, self.n_bins, lo=lo, hi=hi)
-        ref_hist = self.spark.read.parquet(self._hist_path)
+        ref_hist = _committed(self.spark, self._hist_path, "freeze()")
         psi = psi_drift(ref_hist, live_hist, g).select(g, "psi")
 
         sk = batch.groupBy(g).agg(
@@ -1506,9 +1518,7 @@ class TokenizerFertilityMonitor:
         overwrite_atomic(mdf.coalesce(1), self._merges_path)
 
     def _merges(self) -> list[tuple[str, str]]:
-        if not fs_dir_has_data(self.spark, self._merges_path):
-            raise ValueError(f"no frozen merge table at {self._merges_path}: freeze() first")
-        rows = self.spark.read.parquet(self._merges_path).collect()
+        rows = _committed(self.spark, self._merges_path, "freeze()").collect()
         return [(r["l"], r["r"]) for r in sorted(rows, key=lambda r: r["rank"])]
 
     def _group_stats(self, df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
@@ -1529,14 +1539,12 @@ class TokenizerFertilityMonitor:
         """(group, n_words, n_tokens, fertility, ref_fertility, drifted)
         — one row per group present in the batch; groups absent from the
         reference report drifted=1 (an unseen source IS the alarm)."""
-        if not fs_dir_has_data(self.spark, self._ref_path):
-            raise ValueError(f"no frozen reference at {self._ref_path}: freeze() first")
-        b = self._group_stats(batch, self._merges())
-        ref = self.spark.read.parquet(self._ref_path).select(
+        ref = _committed(self.spark, self._ref_path, "freeze()").select(
             self.group_col,
             F.col("n_words").alias("_rw"),
             F.col("n_tokens").alias("_rt"),
         )
+        b = self._group_stats(batch, self._merges())
         num, den = self.tol
         joined = b.join(F.broadcast(ref), self.group_col, "left")
         # |nt_b·nw_r − nt_r·nw_b|·den > num·nt_r·nw_b  (exact int64)

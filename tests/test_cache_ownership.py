@@ -46,6 +46,39 @@ def test_library_never_diffs_the_session_caches():
     assert not hits, hits
 
 
+STATE_IO = {"_fs_for", "fs_dir_has_data", "fs_recover_tombstone"}
+
+
+def test_only_sources_io_touches_committed_state():
+    """``sources/io.py`` owns committed parquet state: no other library
+    module imports its FileSystem probes (every state read goes through
+    ``read_committed``, which heals a crashed swap before it probes), and
+    no streaming module scans parquet with ``spark.read.parquet`` or
+    ``spark.read.schema`` directly."""
+    hits = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path == PACKAGE / "sources" / "io.py":
+            continue
+        streaming = path.parent.name == "streaming"
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.ImportFrom):
+                hits += [
+                    f"{path.relative_to(PACKAGE)}:{node.lineno} {a.name}"
+                    for a in node.names
+                    if a.name in STATE_IO
+                ]
+            elif (
+                streaming
+                and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in {"parquet", "schema"}
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "read"
+            ):
+                hits.append(f"{path.relative_to(PACKAGE)}:{node.lineno} read.{node.func.attr}")
+    assert not hits, hits
+
+
 def test_only_cacheutil_checkpoints():
     """Every eager checkpoint goes through ``cacheutil.materialize``, the
     one switch the cluster profile (``spark.graft.materialize=reliable``)

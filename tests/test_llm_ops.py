@@ -2465,8 +2465,11 @@ def test_materialize_reliable_mode_matches_local(spark, sf_dir, tmp_path):
     (fault-tolerant files in the checkpoint dir) and produce results
     IDENTICAL to the default localCheckpoint path — exercised through
     the two iterative consumers the switch exists for (pagerank,
-    dedup_clusters' distributed loop) and the curation ladder's audited
-    report. A reliable eager checkpoint must compute its frame once:
+    dedup_clusters' distributed loop), the curation ladder's audited
+    report, and the contract queries that checkpoint a graph edge set or
+    a customer table (q_graph_triangles, q_graph_triangles_oriented,
+    q_graph_linkpred, q_seg_rfm), each of which must write a reliable
+    checkpoint. A reliable eager checkpoint must compute its frame once:
     recomputing it for the checkpoint-file write would run the observe
     nodes under a curation hub twice (a counting UDF pins it)."""
     from simple_pos_kafka_pyspark_airflow_spark.cacheutil import (
@@ -2477,6 +2480,17 @@ def test_materialize_reliable_mode_matches_local(spark, sf_dir, tmp_path):
     from simple_pos_kafka_pyspark_airflow_spark.llm import curation
     from simple_pos_kafka_pyspark_airflow_spark.llm.dedup import dedup_clusters
     from simple_pos_kafka_pyspark_airflow_spark.operators.graph import pagerank
+    from simple_pos_kafka_pyspark_airflow_spark.plans import queries_analytics as qa
+
+    queries = [
+        qa.q_graph_triangles, qa.q_graph_triangles_oriented, qa.q_graph_linkpred, qa.q_seg_rfm,
+    ]
+
+    def rows(q):
+        return sorted(map(tuple, q(spark, sf_dir).collect()), key=repr)
+
+    def n_checkpoints():
+        return sum(1 for _ in (tmp_path / "ck").rglob("rdd-*"))
 
     edges = spark.createDataFrame(
         [(1, 2, 3), (2, 3, 1), (3, 1, 2), (1, 3, 1), (4, 1, 5)],
@@ -2500,6 +2514,7 @@ def test_materialize_reliable_mode_matches_local(spark, sf_dir, tmp_path):
     pr_local = sorted(map(tuple, pagerank(edges, iters=3).collect()))
     cc_local = sorted(map(tuple, dedup_clusters(pairs, max_driver_edges=0).collect()))
     _, report_local = curation.curate_corpus(docs, cfg, counts=True)
+    q_local = [rows(q) for q in queries]
 
     spark.conf.set(MATERIALIZE_MODE_KEY, "reliable")
     spark.conf.set(CHECKPOINT_DIR_KEY, str(tmp_path / "ck"))
@@ -2516,12 +2531,18 @@ def test_materialize_reliable_mode_matches_local(spark, sf_dir, tmp_path):
         hub = materialize(spark.range(50).select(F.udf(counted, "long")("id")))
         assert hub.count() == 50 and calls.value == 50
         _, report_rel = curation.curate_corpus(docs, cfg, counts=True)
+        q_rel = []
+        for q in queries:
+            before = n_checkpoints()
+            q_rel.append(rows(q))
+            assert n_checkpoints() > before, q.__name__
     finally:
         spark.conf.unset(MATERIALIZE_MODE_KEY)
         spark.conf.unset(CHECKPOINT_DIR_KEY)
     assert pr_rel == pr_local
     assert cc_rel == cc_local
     assert report_rel == report_local
+    assert q_rel == q_local
 
 
 def test_funnel_counts_order_matters(spark):

@@ -3598,7 +3598,8 @@ def test_failed_refreeze_leaves_previous_release_readable(spark, sf_dir, tmp_pat
     """A re-freeze whose reference fails mid-write (an ``assert_true``
     poison, the staged-write crash pattern) must leave the first release
     whole: both monitors' ``check_batch`` still answer exactly as they
-    did before the failed attempt."""
+    did before the failed attempt. Before the first freeze, both refuse
+    with the same "freeze() first" ValueError."""
     from simple_pos_kafka_pyspark_airflow_spark.llm import tokenize as tk
     from simple_pos_kafka_pyspark_airflow_spark.streaming.corpus import (
         CorpusDriftMonitor,
@@ -3622,13 +3623,16 @@ def test_failed_refreeze_leaves_previous_release_readable(spark, sf_dir, tmp_pat
         return sorted(tuple(r) for r in df.collect())
 
     drift = CorpusDriftMonitor(spark, str(tmp_path / "drift"), n_bins=4)
+    fert = TokenizerFertilityMonitor(spark, str(tmp_path / "fert"))
+    for check in (lambda: drift.check_batch(batch, 0), lambda: fert.check_batch(batch)):
+        with pytest.raises(ValueError, match=r"freeze\(\) first"):
+            check()
     drift.freeze(ref)
     want = report(drift.check_batch(batch, 0))
     with pytest.raises(Exception):
         drift.freeze(poison)
     assert report(drift.check_batch(batch, 0)) == want
 
-    fert = TokenizerFertilityMonitor(spark, str(tmp_path / "fert"))
     fert.freeze(ref, tk.FROZEN_MERGES)
     want = report(fert.check_batch(batch))
     with pytest.raises(Exception):

@@ -12,9 +12,6 @@ from __future__ import annotations
 
 import random
 
-import pytest
-from pyspark.sql import functions as F
-
 from simple_pos_kafka_pyspark_airflow_spark.llm import tokenize as tk
 
 
