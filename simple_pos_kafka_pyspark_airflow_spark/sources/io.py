@@ -24,12 +24,13 @@ produces splittable output.
 Committed state: this module is the only owner of directory surgery on
 the engine's parquet state (CDC snapshots, incremental index logs,
 quantizer tables, frozen monitor references). ``overwrite_atomic`` swaps
-a snapshot in through a tombstone; ``read_committed`` is the owner's
-(single-writer) read, and it and ``append_parquet`` first heal a swap
-that crashed between its two renames, so the old snapshot comes back
-before anyone reads or appends beside it; ``fs_delete`` is the one
-recursive delete. Every call goes through the Hadoop FileSystem of the
-path's own scheme.
+a snapshot, or a release of several tables, in through a tombstone.
+``read_committed`` reads the committed state with no side effects: when
+a swap crashed between its two renames, the previous snapshot is read
+where it lies, under the tombstone. Writers heal that swap before they
+write (``append_parquet``, ``overwrite_atomic``), so nothing is ever
+appended beside a tombstone. ``fs_delete`` is the one recursive delete.
+Every call goes through the Hadoop FileSystem of the path's own scheme.
 """
 
 from __future__ import annotations
@@ -69,16 +70,23 @@ def read_jsonl(spark: SparkSession, path: str | list[str], schema: StructType | 
 
 
 def read_committed(
-    spark: SparkSession, path: str, schema: StructType | str | None = None
+    spark: SparkSession, path: str, schema: StructType | str | None = None, part: str | None = None
 ) -> DataFrame | None:
-    """The owner's (single-writer) read of a parquet state directory:
-    heal a crashed tombstone swap (``fs_recover_tombstone``), then scan
-    the committed rows (typed by ``schema`` when given). None ONLY for a
-    never-committed path: missing, empty, or hidden-only debris
-    (``fs_dir_has_data``). An existing path that fails to read as parquet
-    raises. Healing renames directories, so only the state's single
-    writer may call this; a concurrent reader would race its swaps."""
-    fs_recover_tombstone(spark, path)
+    """The committed rows of a parquet state directory (typed by
+    ``schema`` when given), read with no side effects, so any reader may
+    call it. A swap that crashed between its two renames left the live
+    directory missing and the previous snapshot under the tombstone; that
+    snapshot is read in place (writers heal the swap before they write).
+    ``part`` names one table of a release committed as one directory
+    (``overwrite_atomic`` given a dict). None ONLY for a never-committed
+    path: missing, empty, or hidden-only debris (``fs_dir_has_data``). An
+    existing path that fails to read as parquet raises."""
+    path = path.rstrip("/")
+    fs, p = _fs_for(spark, path)
+    if not fs.exists(p):
+        path += ".__tombstone__"
+    if part is not None:
+        path = f"{path}/{part}"
     if not fs_dir_has_data(spark, path):
         return None
     return read_parquet(spark, path, schema)
@@ -91,7 +99,10 @@ def append_parquet(
     executors write directly, nothing returns to the driver — laid out
     ``partitionBy(*partition_by)`` when given. A crashed swap is healed
     first: an append beside a tombstone would create a live directory
-    that the next swap's recovery keeps, dropping the tombstoned rows."""
+    that the next swap's recovery keeps, dropping the tombstoned rows.
+    The heal moves the tombstone's files, so a frame read from them
+    (``read_committed``) must be computed before the append; the index
+    logs compute what they read (checkpoint or cache) before they append."""
     fs_recover_tombstone(df.sparkSession, path)
     df.write.mode("append").partitionBy(*(partition_by or [])).parquet(path)
 
@@ -176,15 +187,17 @@ def fs_swap_in(spark: SparkSession, staging: str, live: str) -> None:
     s = hpath(staging)
     t = hpath(base + ".__tombstone__")
     parent = p.getParent()
-    if parent is not None:
+    if parent is not None and not fs.exists(parent):
         fs.mkdirs(parent)
     if fs.exists(p):
-        fs.delete(t, True)
+        if fs.exists(t):
+            fs.delete(t, True)
         if not _fs_rename(fs, p, t):
             raise OSError(f"atomic swap: tombstone rename failed for {live}")
     if not _fs_rename(fs, s, p):
         raise OSError(f"atomic swap: staging rename failed for {live}")
-    fs.delete(t, True)
+    if fs.exists(t):
+        fs.delete(t, True)
 
 
 def staging_sibling(path: str) -> str:
@@ -194,20 +207,30 @@ def staging_sibling(path: str) -> str:
 
 
 def overwrite_atomic(
-    df: DataFrame, path: str, partition_by: list[str] | None = None
+    df: DataFrame | dict[str, DataFrame], path: str, partition_by: list[str] | None = None
 ) -> None:
     """Full-snapshot overwrite with the same crash discipline as
     ``streaming.cdc.ParquetCdcSink``: write to staging (partitioned by
     ``partition_by`` when given), tombstone-rename the live dir, move
     staging in, drop the tombstone. Readers never observe a
     half-written table; a crash leaves either the old or the new snapshot
-    (plus at worst a tombstone that the owner's next read, append or
-    swap heals). All directory surgery goes through the Hadoop
-    FileSystem of the path's own scheme (``fs_swap_in``) — local paths,
-    ``file:`` URIs, HDFS and ABFS alike."""
-    spark = df.sparkSession
+    (plus at worst a tombstone that ``read_committed`` reads through and
+    the next write heals). A dict ``{part: DataFrame}`` commits several
+    tables as ONE release: each is staged as the subdirectory ``part``
+    (read back with ``read_committed(..., part=)``) and the whole
+    directory swaps in with one rename, so a crash never leaves one
+    table of the new release beside another of the old. All directory
+    surgery goes through the Hadoop FileSystem of the path's own scheme
+    (``fs_swap_in``) — local paths, ``file:`` URIs, HDFS and ABFS alike."""
+    parts = df if isinstance(df, dict) else {None: df}
+    spark = next(iter(parts.values())).sparkSession
     staging = staging_sibling(path)
-    write_staged(df, staging, partition_by)
+    try:
+        for part, table in parts.items():
+            write_staged(table, staging if part is None else f"{staging}/{part}", partition_by)
+    except Exception:
+        fs_delete(spark, staging)
+        raise
     fs_recover_tombstone(spark, path)
     fs_swap_in(spark, staging, path)
 

@@ -110,8 +110,9 @@ class IncrementalIvfIndex(_IndexLog):
         if store_quantized and store_pq:
             raise ValueError("store_quantized and store_pq are mutually exclusive tiers")
         super().__init__(spark, path.rstrip("/"), [id_col, "cell"], partition_by=["cell"])
+        # the quantizer release: its centroid table and, for a PQ index,
+        # its codebook table, committed together by one atomic swap
         self.centroid_path = self.path + "_centroids"
-        self.pq_path = self.path + "_pq_codebooks"
         self.n_cells = n_cells
         self.n_assign = n_assign
         self.vec_col = vec_col
@@ -154,13 +155,15 @@ class IncrementalIvfIndex(_IndexLog):
     def _save_quantizer(
         self, cents: list[list[float]], cbs: list[list[list[float]]] | None
     ) -> None:
-        """Write the centroid table and, for a PQ index, the codebook
-        table, each through the atomic snapshot swap."""
+        """Commit the centroid table and, for a PQ index, the codebook
+        table as ONE release (one atomic swap): a crash leaves the whole
+        previous quantizer or the whole new one, never new centroids
+        beside old codebooks."""
         cdf = self.spark.createDataFrame(
             [(c, p, float(v)) for c, row in enumerate(cents) for p, v in enumerate(row)],
             "cell INT, pos INT, value DOUBLE",
         )
-        overwrite_atomic(cdf.coalesce(1), self.centroid_path)
+        release = {"centroids": cdf.coalesce(1)}
         if cbs is not None:
             cb_df = self.spark.createDataFrame(
                 [
@@ -171,16 +174,17 @@ class IncrementalIvfIndex(_IndexLog):
                 ],
                 "s INT, c INT, pos INT, value DOUBLE",
             )
-            overwrite_atomic(cb_df.coalesce(1), self.pq_path)
+            release["pq_codebooks"] = cb_df.coalesce(1)
+        overwrite_atomic(release, self.centroid_path)
 
-    def _read_table(self, path: str, keys: list[str]) -> dict[tuple, list[float]] | None:
-        """A persisted quantizer table's (keys..., pos, value) rows as
-        {key tuple: vector}, or None when never written. Read through
-        ``sources.io.read_committed`` like the index rows: a ``fit`` or
-        ``rebuild`` that crashed inside its swap is healed back to the
-        previous quantizer, never mistaken for "never fit" (which would
-        refit the quantizer from the next batch)."""
-        table = read_committed(self.spark, path)
+    def _read_table(self, part: str, keys: list[str]) -> dict[tuple, list[float]] | None:
+        """A quantizer table's (keys..., pos, value) rows as {key tuple:
+        vector}, or None when never written. Read through
+        ``sources.io.read_committed`` like the index rows: after a ``fit``
+        or ``rebuild`` that crashed inside its swap, the previous
+        quantizer is read from the tombstone, never mistaken for "never
+        fit" (which would refit the quantizer from the next batch)."""
+        table = read_committed(self.spark, self.centroid_path, part=part)
         if table is None:
             return None
         by: dict[tuple, dict[int, float]] = {}
@@ -190,7 +194,7 @@ class IncrementalIvfIndex(_IndexLog):
 
     def _centroids(self) -> list[list[float]] | None:
         """The persisted quantizer, or None when never fit."""
-        by = self._read_table(self.centroid_path, ["cell"])
+        by = self._read_table("centroids", ["cell"])
         if by is None:
             return None
         cells = sorted(c for c, in by)
@@ -201,13 +205,13 @@ class IncrementalIvfIndex(_IndexLog):
     def _pq_codebooks(self) -> list[list[list[float]]] | None:
         """The persisted PQ codebooks, or None when never fit with
         ``store_pq``."""
-        by = self._read_table(self.pq_path, ["s", "c"])
+        by = self._read_table("pq_codebooks", ["s", "c"])
         if by is None:
             return None
         n_s = max(k[0] for k in by) + 1
         n_c = max(k[1] for k in by) + 1
         if sorted(by) != [(s, c) for s in range(n_s) for c in range(n_c)]:
-            raise ValueError(f"corrupt PQ codebook table at {self.pq_path}")
+            raise ValueError(f"corrupt PQ codebook table at {self.centroid_path}")
         return [[by[(s, c)] for c in range(n_c)] for s in range(n_s)]
 
     # -- ingest ------------------------------------------------------------
@@ -249,7 +253,7 @@ class IncrementalIvfIndex(_IndexLog):
             cbs = self._pq_codebooks()
             if cbs is None:
                 raise ValueError(
-                    f"no PQ codebooks at {self.pq_path}: fit() this store_pq "
+                    f"no PQ codebooks at {self.centroid_path}: fit() this store_pq "
                     "index before ingesting (the quantizer fallback fit "
                     "covers them only when fit runs through this writer)"
                 )
@@ -524,7 +528,7 @@ class IncrementalIvfIndex(_IndexLog):
         if layout == "pq":
             cbs = self._pq_codebooks()
             if cbs is None:
-                raise ValueError(f"no PQ codebooks at {self.pq_path}")
+                raise ValueError(f"no PQ codebooks at {self.centroid_path}")
             # ADC: the per-query tables stack into one (nq, m, ks)
             # closure-broadcast array; each (query, code) row scores
             # through one Arrow gather — no vector bytes read
@@ -606,13 +610,13 @@ class IncrementalIvfIndex(_IndexLog):
 
         Atomicity: the new index is staged completely first
         (``compact()``'s tombstone discipline — a crash during staging
-        leaves the live index untouched), then the index, the centroid
-        table, and (PQ) the codebooks swap in sequence.  A crash
-        BETWEEN swaps leaves a new layout under the old quantizer (or
-        vice versa): probes stay well-formed (scores are real cosines,
-        ids dedup) but cell pruning degrades until ``rebuild`` is
-        re-run — it is idempotent, re-deriving everything from landed
-        rows (or ``vectors``), so re-running converges."""
+        leaves the live index untouched), then the index swaps in, then
+        the quantizer release (centroids and, PQ, codebooks: one swap).
+        A crash BETWEEN the two swaps leaves the new index under the old
+        quantizer: probes stay well-formed (scores are real cosines, ids
+        dedup) but cell pruning degrades until ``rebuild`` is re-run — it
+        is idempotent, re-deriving everything from landed rows (or
+        ``vectors``), so re-running converges."""
         idx = self._landed()
         if idx is None:
             raise ValueError(

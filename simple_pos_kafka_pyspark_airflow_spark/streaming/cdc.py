@@ -150,9 +150,10 @@ class ParquetCdcSink:
         self.schema = schema  # DDL string: snapshot columns (no _op / order col)
 
     def read(self) -> DataFrame:
-        """The committed snapshot (``sources.io.read_committed``, the
-        owner's read, which heals a crashed swap); an empty frame of
-        ``schema`` before the first commit."""
+        """The committed snapshot (``sources.io.read_committed``: after a
+        swap that crashed between its renames, the previous snapshot
+        under the tombstone); an empty frame of ``schema`` before the
+        first commit."""
         committed = read_committed(self.spark, self.path, self.schema)
         return committed or self.spark.createDataFrame([], self.schema)
 
@@ -168,9 +169,10 @@ class ParquetCdcSink:
         # Stage as a SIBLING of the live dir (same filesystem, so the
         # promotion is a rename, never a copy), written BEFORE the live
         # dir is touched (the plan reads the live dir). The swap itself
-        # (live → tombstone, staging → live, drop tombstone) and its
-        # crash-window recovery live in sources.io.fs_swap_in /
-        # read_committed — Hadoop-FS surgery, valid on any scheme.
+        # (live → tombstone, staging → live, drop tombstone) lives in
+        # sources.io.fs_swap_in; after a crash between its renames,
+        # read_committed reads the tombstone and the next swap replaces
+        # it — Hadoop-FS surgery, valid on any scheme.
         staging = staging_sibling(self.path)
         write_staged(new_snapshot, staging)
         fs_swap_in(self.spark, staging, self.path)

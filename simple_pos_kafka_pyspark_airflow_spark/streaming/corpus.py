@@ -46,12 +46,12 @@ def _tagged(rows: DataFrame, batch_id: int) -> DataFrame:
     return rows.withColumn("_batch", F.lit(int(batch_id)).cast("long"))
 
 
-def _committed(spark: SparkSession, path: str, first: str) -> DataFrame:
+def _committed(spark: SparkSession, path: str, first: str, part: str | None = None) -> DataFrame:
     """State a gate or monitor cannot run without: its committed rows
-    (``sources.io.read_committed``, the owner's read, which heals a
-    crashed re-fit or re-freeze swap), or a ValueError naming the call to
-    run ``first`` when it was never committed."""
-    committed = read_committed(spark, path)
+    (``sources.io.read_committed``: after a re-fit or re-freeze that
+    crashed inside its swap, the previous release), or a ValueError
+    naming the call to run ``first`` when it was never committed."""
+    committed = read_committed(spark, path, part=part)
     if committed is None:
         raise ValueError(f"nothing committed at {path}: {first} first")
     return committed
@@ -62,17 +62,18 @@ class _IndexLog:
     append-only rows. Every index in this module shares this lifecycle,
     so its replay policy is written once, here.
 
-    - ``_landed``: the committed rows (``sources.io.read_committed``, the
-      owner's read), or None ONLY for a never-committed index — a missing
-      path, an empty directory, or hidden-only debris (parquet's
-      ``_temporary`` from a crashed first append, ``_SUCCESS`` markers).
-      It first heals a ``compact`` that crashed between the two renames
-      of its swap, so the tombstoned rows are read, not mistaken for an
-      empty index. Probes go through the Hadoop FileSystem of the path's
-      own scheme (file:/S3A/HDFS/ABFS alike), never a driver-local ``os``
-      probe, which would report "no index" on an object store and
-      silently skip landed-corpus dedup. An existing path that fails to
-      read as parquet raises.
+    - ``_landed``: the committed rows (``sources.io.read_committed``, a
+      read with no side effects, so probes may call it too), or None ONLY
+      for a never-committed index — a missing path, an empty directory,
+      or hidden-only debris (parquet's ``_temporary`` from a crashed
+      first append, ``_SUCCESS`` markers). After a ``compact`` that
+      crashed between the two renames of its swap, it reads the rows
+      under the tombstone, never mistaking them for an empty index.
+      Probes go through the Hadoop FileSystem of the path's own scheme
+      (file:/S3A/HDFS/ABFS alike), never a driver-local ``os`` probe,
+      which would report "no index" on an object store and silently skip
+      landed-corpus dedup. An existing path that fails to read as parquet
+      raises.
     - ``_append``: a plain parquet append (``sources.io.append_parquet``,
       which heals a crashed swap first, so an append never creates a
       live directory beside a tombstone), tagged with the batch id when
@@ -1023,8 +1024,8 @@ class PersistentBloomGate:
         """Build the probe set's bitmap and persist it (atomic overwrite —
         an eval-set release replaces the gate wholesale). A failed refit
         leaves the previous release readable: a crash inside the swap
-        leaves it under the tombstone, and the next ``_bitmap`` load
-        (``sources.io.read_committed``) restores it."""
+        leaves it under the tombstone, where the next ``_bitmap`` load
+        (``sources.io.read_committed``) reads it."""
         from ..llm.bloom import _CHUNK_BITS, bloom_bitmap
 
         bitmap = bloom_bitmap(
@@ -1127,9 +1128,10 @@ class CorpusDriftMonitor:
     Crash/replay: the sketches are an ``_IndexLog`` keyed by group, so
     a replayed append (identical sketch bytes) is read once. Reports are
     derived, not state: replaying a batch reproduces its report rather
-    than corrupting anything. Each ``freeze`` table is an atomic
-    snapshot write, so a failed re-freeze leaves the previous release
-    readable.
+    than corrupting anything. ``freeze`` commits its three tables
+    (counts, histogram, edges) as one release with one atomic swap, so a
+    failed re-freeze leaves the whole previous release readable, never a
+    histogram binned on one release's edges beside another's.
     """
 
     def __init__(
@@ -1152,19 +1154,8 @@ class CorpusDriftMonitor:
         self.window_batches = int(window_batches)
         self.lg_k = int(lg_k)
         self._sketches = _IndexLog(spark, f"{self.path}/sketches", [group_col])
-
-    # -- state paths -------------------------------------------------
-    @property
-    def _counts_path(self) -> str:
-        return f"{self.path}/ref_counts"
-
-    @property
-    def _hist_path(self) -> str:
-        return f"{self.path}/ref_hist"
-
-    @property
-    def _meta_path(self) -> str:
-        return f"{self.path}/ref_meta"
+        # the frozen release: parts counts, hist and meta
+        self._ref_path = f"{self.path}/ref"
 
     def freeze(self, reference: DataFrame) -> None:
         """Compute and persist the reference stats (atomic overwrite —
@@ -1172,8 +1163,8 @@ class CorpusDriftMonitor:
         ``reference`` must carry ``group_col`` and an integer-lattice
         ``value_col`` (the ``corpus_ingest`` gated form qualifies). The
         edges are computed before any write, so a reference that fails to
-        read leaves the previous release whole; each table then swaps in
-        atomically."""
+        read leaves the previous release whole; the three tables then
+        swap in together."""
         from ..operators.validation import value_histogram
 
         g, v = self.group_col, self.value_col
@@ -1190,16 +1181,14 @@ class CorpusDriftMonitor:
         counts = reference.groupBy(g, F.col(v).cast("long").alias("value")).agg(
             F.count("*").cast("long").alias("n")
         )
-        overwrite_atomic(counts, self._counts_path)
         hist = value_histogram(reference, v, g, self.n_bins, lo=lo, hi=hi)
-        overwrite_atomic(hist, self._hist_path)
         meta = self.spark.createDataFrame(
             [(lo, hi, self.n_bins)], "lo double, hi double, n_bins int"
         )
-        overwrite_atomic(meta, self._meta_path)
+        overwrite_atomic({"counts": counts, "hist": hist, "meta": meta}, self._ref_path)
 
     def _frozen_meta(self) -> tuple[float, float]:
-        row = _committed(self.spark, self._meta_path, "freeze()").first()
+        row = _committed(self.spark, self._ref_path, "freeze()", "meta").first()
         return float(row["lo"]), float(row["hi"])
 
     def check_batch(self, batch: DataFrame, batch_id: int) -> DataFrame:
@@ -1215,13 +1204,13 @@ class CorpusDriftMonitor:
         live_counts = batch.groupBy(g, F.col(v).cast("long").alias("value")).agg(
             F.count("*").cast("long").alias("n")
         )
-        ref_counts = _committed(self.spark, self._counts_path, "freeze()")
+        ref_counts = _committed(self.spark, self._ref_path, "freeze()", "counts")
         ks = ks_drift_counts(ref_counts, live_counts, g).select(
             g, "n_ref", "n_live", "ks"
         )
         lo, hi = self._frozen_meta()
         live_hist = value_histogram(batch, v, g, self.n_bins, lo=lo, hi=hi)
-        ref_hist = _committed(self.spark, self._hist_path, "freeze()")
+        ref_hist = _committed(self.spark, self._ref_path, "freeze()", "hist")
         psi = psi_drift(ref_hist, live_hist, g).select(g, "psi")
 
         sk = batch.groupBy(g).agg(
@@ -1495,30 +1484,25 @@ class TokenizerFertilityMonitor:
         self.text_col = text_col
         self.id_col = id_col
         self.tol = (int(tol[0]), int(tol[1]))
-
-    @property
-    def _merges_path(self) -> str:
-        return f"{self.path}/merges"
-
-    @property
-    def _ref_path(self) -> str:
-        return f"{self.path}/ref_fertility"
+        # the frozen release: parts fertility and merges
+        self._ref_path = f"{self.path}/ref"
 
     def freeze(self, reference: DataFrame, merges: list[tuple[str, str]]) -> None:
         """Persist the reference's per-group token stats under ``merges``
-        and the merge table itself (atomic overwrites — one freeze per
-        tokenizer/reference release). The stats go first: a reference
-        that fails to compute leaves the previous release whole."""
+        and the merge table itself as ONE release (one atomic swap — one
+        freeze per tokenizer/reference release), so a failed re-freeze
+        leaves the whole previous release, never a reference built with
+        one merge table beside another."""
         if not merges:
             raise ValueError("freeze needs a non-empty merge table")
-        overwrite_atomic(self._group_stats(reference, merges), self._ref_path)
         mdf = self.spark.createDataFrame(
             [(i, l, r) for i, (l, r) in enumerate(merges)], "rank INT, l STRING, r STRING"
         )
-        overwrite_atomic(mdf.coalesce(1), self._merges_path)
+        stats = self._group_stats(reference, merges)
+        overwrite_atomic({"fertility": stats, "merges": mdf.coalesce(1)}, self._ref_path)
 
     def _merges(self) -> list[tuple[str, str]]:
-        rows = _committed(self.spark, self._merges_path, "freeze()").collect()
+        rows = _committed(self.spark, self._ref_path, "freeze()", "merges").collect()
         return [(r["l"], r["r"]) for r in sorted(rows, key=lambda r: r["rank"])]
 
     def _group_stats(self, df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
@@ -1539,7 +1523,7 @@ class TokenizerFertilityMonitor:
         """(group, n_words, n_tokens, fertility, ref_fertility, drifted)
         — one row per group present in the batch; groups absent from the
         reference report drifted=1 (an unseen source IS the alarm)."""
-        ref = _committed(self.spark, self._ref_path, "freeze()").select(
+        ref = _committed(self.spark, self._ref_path, "freeze()", "fertility").select(
             self.group_col,
             F.col("n_words").alias("_rw"),
             F.col("n_tokens").alias("_rt"),
@@ -1589,9 +1573,9 @@ class TokenizerFertilityMonitor:
         describes the shifted distribution.
 
         Run at a quiesced point (stream stopped, or between triggers):
-        ``freeze`` overwrites the merge table and the reference stats
-        as two separate per-table commits, so a check racing the
-        refreeze could mix old merges with new stats.  An un-actionable
+        ``freeze`` commits the merge table and the reference stats as one
+        release, but a check racing the refreeze reads them in two scans
+        and could still pair old merges with new stats.  An un-actionable
         alarm is a pager, not a pipeline — this is the action.
 
         Returns the new merge table, which is also the production

@@ -51,10 +51,10 @@ STATE_IO = {"_fs_for", "fs_dir_has_data", "fs_recover_tombstone"}
 
 def test_only_sources_io_touches_committed_state():
     """``sources/io.py`` owns committed parquet state: no other library
-    module imports its FileSystem probes (every state read goes through
-    ``read_committed``, which heals a crashed swap before it probes), and
-    no streaming module scans parquet with ``spark.read.parquet`` or
-    ``spark.read.schema`` directly."""
+    module imports or reaches (``io._fs_for``) its FileSystem probes, so
+    every state read goes through ``read_committed``, which finds a
+    crashed swap's tombstone, and no streaming module scans parquet with
+    ``spark.read.parquet`` or ``spark.read.schema`` directly."""
     hits = []
     for path in sorted(PACKAGE.rglob("*.py")):
         if path == PACKAGE / "sources" / "io.py":
@@ -67,6 +67,8 @@ def test_only_sources_io_touches_committed_state():
                     for a in node.names
                     if a.name in STATE_IO
                 ]
+            elif isinstance(node, ast.Attribute) and node.attr in STATE_IO:
+                hits.append(f"{path.relative_to(PACKAGE)}:{node.lineno} .{node.attr}")
             elif (
                 streaming
                 and isinstance(node, ast.Call)

@@ -2,9 +2,12 @@
 
 ``sources.io.fs_swap_in`` renames the live directory to a tombstone, then
 the staging copy into place. A crash between those two renames leaves the
-previous state only under the tombstone. Each owner's next read or append
-must heal it (``sources.io.read_committed`` / ``append_parquet``), so the
-owner's next operation answers exactly as it would have without the crash.
+previous state only under the tombstone. Each owner's next read must find
+it there (``sources.io.read_committed``) and its next write must heal the
+swap (``append_parquet``, ``overwrite_atomic``). An operation that commits
+a release of several tables commits them with one swap, so a crash at its
+LAST staging rename must leave the previous release whole too, never a mix
+of old and new tables.
 """
 
 from __future__ import annotations
@@ -34,14 +37,15 @@ from simple_pos_kafka_pyspark_airflow_spark.streaming.corpus import (
 class Arm:
     """One state owner: ``open`` builds it over a root directory (a fresh
     object, as a restarted driver would), ``setup`` commits its first
-    state, ``op`` is the operation the crash hits, ``swapped`` names the
-    directory whose swap ``op`` crashes first, and ``next_op`` is the
-    owner's next operation, returning what it decided."""
+    state, ``op`` is the operation the crash hits (a release ``op``
+    commits different state from ``setup``'s, so a mix of the two shows),
+    and ``next_op`` is the owner's next operation, returning what it
+    decided. Where ``op`` is redone after a crash (``foreachBatch``
+    re-delivers a batch; ``rebuild`` is re-run), ``next_op`` redoes it."""
 
     open: Callable[[str], Any]
     setup: Callable[[Any], None]
     op: Callable[[Any], None]
-    swapped: Callable[[Any], str]
     next_op: Callable[[Any], Any]
 
 
@@ -64,55 +68,60 @@ def _minhash(spark, sf_dir) -> Arm:
         open=lambda root: IncrementalMinhashIndex(spark, f"{root}/lsh", num_hashes=16, bands=8),
         setup=lambda idx: idx.dedup_batch(docs).collect(),
         op=lambda idx: idx.compact(),
-        swapped=lambda idx: idx.path,
         next_op=next_op,
     )
 
 
-def _ivf(spark, sf_dir, op: str) -> Arm:
+def _ivf(spark, sf_dir, op: str, store_pq: bool = False) -> Arm:
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
     landed = e.where(F.col("vec_id") < 60)
+    refit = e.where(F.col("vec_id").between(100, 199))
     batch = landed.where(F.col("vec_id") < 10).withColumn(
         "vec_id", F.col("vec_id") + 1000
     ).unionByName(e.where(F.col("vec_id").between(60, 64)))
 
     def setup(idx):
-        idx.fit(landed)
+        # fit on a slice, so that rebuild's refit over every landed row moves cells
+        idx.fit(landed.where(F.col("vec_id") < 20))
         idx.ingest_batch(landed)
 
     def next_op(idx):
+        if op == "rebuild":
+            idx.rebuild()
+        if store_pq:
+            return idx._centroids(), idx._pq_codebooks()
         kept = sorted(r["vec_id"] for r in idx.dedup_batch(batch).collect())
         return kept, idx._centroids()
 
     return Arm(
-        open=lambda root: IncrementalIvfIndex(spark, f"{root}/ivf", n_cells=4),
+        open=lambda root: IncrementalIvfIndex(
+            spark, f"{root}/ivf", n_cells=4, store_pq=store_pq, pq_m=4, pq_ks=4
+        ),
         setup=setup,
-        op=(lambda idx: idx.rebuild()) if op == "rebuild" else (lambda idx: idx.fit(landed)),
-        swapped=lambda idx: idx.path if op == "rebuild" else idx.centroid_path,
+        op=(lambda idx: idx.rebuild()) if op == "rebuild" else (lambda idx: idx.fit(refit)),
         next_op=next_op,
     )
 
 
 def _bloom(spark, sf_dir) -> Arm:
-    evalset = spark.createDataFrame(
-        [(900, "the canary benchmark answer is purple giraffe today")], "doc_id long, text string"
-    )
+    def evalset(answer):
+        return spark.createDataFrame(
+            [(900, f"the canary benchmark answer is {answer} today")], "doc_id long, text string"
+        )
+
     batch = spark.createDataFrame(
         [
             (1, "clean document about procedural terrain generation methods here"),
             (2, "leaky doc quoting the canary benchmark answer is purple giraffe"),
+            (3, "leaky doc quoting the canary benchmark answer is green walrus"),
         ],
         "doc_id long, text string",
     )
 
-    def fit(gate):
-        gate.fit(evalset, m_bits=1 << 20)
-
     return Arm(
         open=lambda root: PersistentBloomGate(spark, f"{root}/gate"),
-        setup=fit,
-        op=fit,
-        swapped=lambda gate: gate.path,
+        setup=lambda gate: gate.fit(evalset("purple giraffe"), m_bits=1 << 20),
+        op=lambda gate: gate.fit(evalset("green walrus"), m_bits=1 << 20),
         next_op=lambda gate: _sorted_rows(gate.flag_batch(batch)),
     )
 
@@ -125,15 +134,12 @@ def _gated_reference(spark, sf_dir):
 def _fertility(spark, sf_dir) -> Arm:
     ref = _gated_reference(spark, sf_dir)
     batch = ref.where(F.col("doc_id") % 3 == 0)
-
-    def freeze(mon):
-        mon.freeze(ref, tk.FROZEN_MERGES)
+    merges = tk.FROZEN_MERGES
 
     return Arm(
         open=lambda root: TokenizerFertilityMonitor(spark, f"{root}/fert"),
-        setup=freeze,
-        op=freeze,
-        swapped=lambda mon: mon._ref_path,
+        setup=lambda mon: mon.freeze(ref, merges),
+        op=lambda mon: mon.freeze(ref.where(F.col("doc_id") % 2 == 0), merges[: len(merges) // 4]),
         next_op=lambda mon: _sorted_rows(mon.check_batch(batch)),
     )
 
@@ -141,20 +147,17 @@ def _fertility(spark, sf_dir) -> Arm:
 def _drift(spark, sf_dir) -> Arm:
     ref = _gated_reference(spark, sf_dir)
     batch = ref.where(F.col("doc_id") % 3 == 0)
-
-    def freeze(mon):
-        mon.freeze(ref)
+    median = ref.approxQuantile("n_tokens", [0.5], 0.0)[0]
 
     return Arm(
         open=lambda root: CorpusDriftMonitor(spark, f"{root}/drift", n_bins=4),
-        setup=freeze,
-        op=freeze,
-        swapped=lambda mon: mon._counts_path,
+        setup=lambda mon: mon.freeze(ref),
+        op=lambda mon: mon.freeze(ref.where(F.col("n_tokens") <= median)),
         next_op=lambda mon: _sorted_rows(mon.check_batch(batch, 0)),
     )
 
 
-def _cdc(spark, sf_dir) -> Arm:
+def _cdc(spark, sf_dir, scd2: bool = False) -> Arm:
     t = datetime.datetime
     ev_schema = f"id long, name string, {cdc.OP_COL} string, ts timestamp"
     b0 = spark.createDataFrame(
@@ -166,17 +169,25 @@ def _cdc(spark, sf_dir) -> Arm:
         ev_schema,
     )
 
+    def open_sink(root):
+        if scd2:
+            return cdc.ScdParquetCdcSink(
+                spark, f"{root}/warehouse", f"{root}/history", pk="id", order_col="ts",
+                schema="id long, name string",
+            )
+        return cdc.ParquetCdcSink(
+            spark, f"{root}/warehouse", pk="id", order_col="ts", schema="id long, name string"
+        )
+
     def next_op(sink):
         sink.foreach_batch(b1, 1)  # foreachBatch re-delivers the uncommitted batch
-        return _sorted_rows(sink.read())
+        history = _sorted_rows(sink.read_history()) if scd2 else None
+        return _sorted_rows(sink.read()), history
 
     return Arm(
-        open=lambda root: cdc.ParquetCdcSink(
-            spark, f"{root}/warehouse", pk="id", order_col="ts", schema="id long, name string"
-        ),
+        open=open_sink,
         setup=lambda sink: sink.foreach_batch(b0, 0),
         op=lambda sink: sink.foreach_batch(b1, 1),
-        swapped=lambda sink: sink.path,
         next_op=next_op,
     )
 
@@ -185,40 +196,64 @@ ARMS = {
     "minhash-compact": _minhash,
     "ivf-rebuild": lambda spark, sf_dir: _ivf(spark, sf_dir, "rebuild"),
     "ivf-fit": lambda spark, sf_dir: _ivf(spark, sf_dir, "fit"),
+    "ivf-pq-fit": lambda spark, sf_dir: _ivf(spark, sf_dir, "fit", store_pq=True),
     "bloom-refit": _bloom,
     "fertility-freeze": _fertility,
     "drift-freeze": _drift,
     "cdc-batch": _cdc,
+    "scd2-batch": lambda spark, sf_dir: _cdc(spark, sf_dir, scd2=True),
 }
 
 
-@pytest.mark.parametrize("arm", list(ARMS))
-def test_crash_at_staging_rename_heals_on_next_operation(spark, sf_dir, tmp_path, monkeypatch, arm):
-    """Crash ``op`` at its first staging rename (live already tombstoned,
-    staging not yet moved in), reopen the owner, and its next operation
-    must decide exactly as a run where ``op`` completed."""
-    a = ARMS[arm](spark, sf_dir)
-
-    clean = a.open(str(tmp_path / "clean"))
-    a.setup(clean)
-    a.op(clean)
-    want = a.next_op(a.open(str(tmp_path / "clean")))
-
-    owner = a.open(str(tmp_path / "crashed"))
-    a.setup(owner)
+def _run_op(a: Arm, owner, monkeypatch, crash_at: int | None = None) -> list[str]:
+    """Run ``a.op`` and return the live directory of each staging rename
+    it reached, raising at the ``crash_at``-th (1-based) when given."""
     real = io_mod._fs_rename
+    lives: list[str] = []
 
-    def crash(fs, src, dst):
-        if "__staging__" in src.toString():
-            raise RuntimeError("injected crash at the staging rename")
+    def rename(fs, src, dst):
+        if "__staging__" in src.getName():
+            lives.append(dst.toUri().getPath())
+            if len(lives) == crash_at:
+                raise RuntimeError("injected crash at a staging rename")
         return real(fs, src, dst)
 
-    monkeypatch.setattr(io_mod, "_fs_rename", crash)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        a.op(owner)
-    monkeypatch.setattr(io_mod, "_fs_rename", real)
-    live = a.swapped(owner)
-    # the crash landed inside the swap: only the tombstone holds the state
-    assert not os.path.exists(live) and os.path.isdir(live + ".__tombstone__")
+    monkeypatch.setattr(io_mod, "_fs_rename", rename)
+    try:
+        if crash_at is None:
+            a.op(owner)
+        else:
+            with pytest.raises(RuntimeError, match="injected crash"):
+                a.op(owner)
+    finally:
+        monkeypatch.setattr(io_mod, "_fs_rename", real)
+    return lives
 
-    assert a.next_op(a.open(str(tmp_path / "crashed"))) == want
+
+@pytest.mark.parametrize("arm", list(ARMS))
+def test_crash_at_a_staging_rename_leaves_the_previous_state(
+    spark, sf_dir, tmp_path, monkeypatch, arm
+):
+    """Crash ``op`` at its first and at its last staging rename (live
+    already tombstoned, staging not yet moved in) and reopen the owner:
+    its next operation must decide exactly as after ``setup`` alone. A
+    crashed release commits none of its tables; a crashed batch or
+    rebuild is redone by ``next_op``."""
+    a = ARMS[arm](spark, sf_dir)
+
+    def committed(name: str):
+        owner = a.open(str(tmp_path / name))
+        a.setup(owner)
+        return owner
+
+    committed("before")
+    want = a.next_op(a.open(str(tmp_path / "before")))
+    n_swaps = len(_run_op(a, committed("counted"), monkeypatch))
+    assert n_swaps >= 1
+
+    for crash_at in sorted({1, n_swaps}):
+        name = f"crashed-at-{crash_at}"
+        live = _run_op(a, committed(name), monkeypatch, crash_at)[-1]
+        # the crash landed inside a swap: only the tombstone holds that state
+        assert not os.path.exists(live) and os.path.isdir(live + ".__tombstone__")
+        assert a.next_op(a.open(str(tmp_path / name))) == want, f"crash at swap {crash_at}"

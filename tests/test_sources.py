@@ -123,6 +123,25 @@ def test_overwrite_atomic_crash_between_stage_and_swap_is_recoverable(
     assert not os.path.isdir(tombstone)
 
 
+def test_read_committed_reads_a_crashed_release_in_place(spark, tmp_path):
+    """A release of several tables commits as one directory. After a crash
+    between its swap's two renames, ``read_committed`` reads each table of
+    the previous release from the tombstone and moves nothing: a reader
+    must never rename directories under the writer's swap."""
+    from simple_pos_kafka_pyspark_airflow_spark.sources.io import read_committed
+
+    path = str(tmp_path / "release")
+    tombstone = path + ".__tombstone__"
+    v1 = spark.createDataFrame([(1, "a", 1.0)], SCHEMA)
+    sources.overwrite_atomic({"a": v1, "b": v1.withColumn("id", F.lit(7).cast("long"))}, path)
+    assert read_committed(spark, str(tmp_path / "never")) is None
+    os.rename(path, tombstone)  # the crash window
+    assert [r["id"] for r in read_committed(spark, path, part="a").collect()] == [1]
+    assert [r["id"] for r in read_committed(spark, path, SCHEMA, part="b").collect()] == [7]
+    assert read_committed(spark, path, part="c") is None
+    assert not os.path.exists(path) and os.path.isdir(tombstone)
+
+
 def test_kafka_payload_roundtrips_through_parse(spark):
     df = spark.createDataFrame(ROWS, SCHEMA)
     payload = sources.to_kafka_payload(df, key_col="id")
