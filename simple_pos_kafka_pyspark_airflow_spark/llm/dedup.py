@@ -329,6 +329,36 @@ def shingle_hash_sets_df(df: DataFrame, text_col: str, id_col: str, n: int = 3) 
     )
 
 
+def _set_table(
+    df: DataFrame, text_col: str, id_col: str, n: int, carry: list[str] | None = None
+) -> DataFrame:
+    """``shingle_hash_sets_df`` plus the set size ``_sz`` and the ``carry``
+    columns of ``df`` (joined back by id), persisted: every set-similarity
+    join reads it at least twice (postings or one pair side, and the
+    other pair side), and Catalyst would otherwise re-run the
+    explode→window→agg pipeline per read."""
+    from pyspark import StorageLevel
+
+    sets_df = shingle_hash_sets_df(df, text_col, id_col, n)
+    if carry:
+        sets_df = sets_df.join(df.select(F.col(id_col).alias("_id"), *carry), "_id")
+    return sets_df.withColumn("_sz", F.size("_sh")).persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _with_overlap(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """``pairs`` plus the overlap of its two hash-set columns ``a`` and
+    ``b``: ``_i`` = |A∩B|, ``_u`` = |A∪B| and ``_j`` = the Jaccard
+    |A∩B| / |A∪B| as ONE division of exact ints (correctly rounded IEEE,
+    so bit-identical across engines). The sets are ``collect_set``s, so
+    |A∪B| = |A| + |B| − |A∩B| exactly and no union array is built per
+    pair; the intersection is computed once, as a column."""
+    return (
+        pairs.withColumn("_i", F.size(F.array_intersect(a, b)))
+        .withColumn("_u", F.size(a) + F.size(b) - F.col("_i"))
+        .withColumn("_j", F.col("_i") / F.greatest("_u", F.lit(1)))
+    )
+
+
 def minhash_doc_table(
     df: DataFrame, text_col: str, id_col: str, n_shingle: int = 3, num_hashes: int = 64
 ) -> DataFrame:
@@ -467,11 +497,9 @@ def near_dup_pairs_from_doc_table(
     pairs = cand.join(
         sh_df.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")), "id_a"
     ).join(sh_df.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")), "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = inter / F.greatest(union, F.lit(1))
     return (
-        pairs.withColumn("jaccard", F.round(jac, 4))
+        _with_overlap(pairs, "sh_a", "sh_b")
+        .withColumn("jaccard", F.round("_j", 4))
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -745,47 +773,17 @@ def ngram_jaccard_pairs_blocked(
 
     Per-pair cost discipline (this is the quadratic rung, so the constant
     matters): set sizes are computed ONCE per doc, the union size is
-    derived arithmetically (|A∪B| = |A|+|B|−|A∩B| — sets, so exact)
-    instead of materializing ``array_union`` per pair, and the size-ratio
+    derived arithmetically (``_with_overlap``), and the size-ratio
     bound ``min ≥ t·max`` (implied by J ≥ t: I ≤ min and I ≥ t·U ≥ t·max)
     filters pairs BEFORE the intersect — plain long comparisons versus a
     hash-set build per pair. The per-doc set table is persisted so the
     self-join's two sides read one materialization instead of re-running
     the explode→agg pipeline each. Measured 16.8s → well under half at
     sf0.1 with identical output."""
-    from pyspark import StorageLevel
-
-    sets_df = shingle_hash_sets_df(df, text_col, id_col, n)
-    base = (
-        sets_df.join(
-            df.select(F.col(id_col).alias("_id"), *[F.col(c) for c in block_cols]), "_id"
-        )
-        .withColumn("_sz", F.size("_sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    a = base.select(
-        F.col("_id").alias("id_a"),
-        F.col("_sh").alias("sh_a"),
-        F.col("_sz").alias("sz_a"),
-        *[F.col(c) for c in block_cols],
-    )
-    b = base.select(
-        F.col("_id").alias("id_b"),
-        F.col("_sh").alias("sh_b"),
-        F.col("_sz").alias("sz_b"),
-        *[F.col(c).alias(f"{c}_b") for c in block_cols],
-    )
-    cond = (a.id_a < b.id_b) & (
-        F.least(a.sz_a, b.sz_b) >= F.lit(threshold) * F.greatest(a.sz_a, b.sz_b)
-    )
-    for c in block_cols:
-        cond = cond & (a[c] == b[f"{c}_b"])
-    pairs = a.join(b, cond)
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    pairs = pairs.withColumn("_i", inter)
-    jac = F.col("_i") / F.greatest(F.col("sz_a") + F.col("sz_b") - F.col("_i"), F.lit(1))
+    size_ok = F.least("sz_a", "sz_b") >= F.lit(threshold) * F.greatest("sz_a", "sz_b")
+    pairs = _blocked_pairs(df, text_col, id_col, block_cols, n, size_ok)
     return (
-        pairs.withColumn("jaccard", F.round(jac, 4))
+        pairs.withColumn("jaccard", F.round("_j", 4))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -814,16 +812,39 @@ def containment_pairs_blocked(
     No reference analogue (its dedup guard is an exact-match driver scan,
     ``kafka_producer.py:41-58``); north-star extension per BASELINE.json.
     """
-    from pyspark import StorageLevel
+    from fractions import Fraction
 
-    sets_df = shingle_hash_sets_df(df, text_col, id_col, n)
-    base = (
-        sets_df.join(
-            df.select(F.col(id_col).alias("_id"), *[F.col(c) for c in block_cols]), "_id"
+    # exact rational form of the threshold (0.55 → 11/20) so the cut is
+    # TRUE integer cross-multiplication: den·I ≥ num·min. ceil(t·min) on
+    # the float would misclassify exact-boundary pairs (ceil(0.55·20) =
+    # ceil(11.000000000000002) = 12 drops a pair at exactly 0.55).
+    frac = Fraction(str(threshold)).limit_denominator(10**9)
+    pairs = _blocked_pairs(df, text_col, id_col, block_cols, n)
+    min_sz = F.greatest(F.least("sz_a", "sz_b"), F.lit(1))
+    return (
+        pairs.where(F.lit(frac.denominator) * F.col("_i") >= F.lit(frac.numerator) * min_sz)
+        .select(
+            "id_a",
+            "id_b",
+            F.round(F.col("_i") / min_sz, 4).alias("containment"),
         )
-        .withColumn("_sz", F.size("_sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
+
+
+def _blocked_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    block_cols: list[str],
+    n: int,
+    size_ok: Column | None = None,
+) -> DataFrame:
+    """The blocked self-join of the shingle-hash sets: every pair
+    ``id_a < id_b`` equal on all ``block_cols`` and passing ``size_ok``
+    (a condition on the set sizes ``sz_a``/``sz_b``, applied in the join
+    before any intersection), with its overlap (``_with_overlap``). Both
+    sides read one persisted (id, set, size, block cols) table."""
+    base = _set_table(df, text_col, id_col, n, block_cols)
     a = base.select(
         F.col("_id").alias("id_a"),
         F.col("_sh").alias("sh_a"),
@@ -839,23 +860,9 @@ def containment_pairs_blocked(
     cond = a.id_a < b.id_b
     for c in block_cols:
         cond = cond & (a[c] == b[f"{c}_b"])
-    from fractions import Fraction
-
-    # exact rational form of the threshold (0.55 → 11/20) so the cut is
-    # TRUE integer cross-multiplication: den·I ≥ num·min. ceil(t·min) on
-    # the float would misclassify exact-boundary pairs (ceil(0.55·20) =
-    # ceil(11.000000000000002) = 12 drops a pair at exactly 0.55).
-    frac = Fraction(str(threshold)).limit_denominator(10**9)
-    pairs = a.join(b, cond).withColumn("_i", F.size(F.array_intersect("sh_a", "sh_b")))
-    min_sz = F.greatest(F.least("sz_a", "sz_b"), F.lit(1))
-    return (
-        pairs.where(F.lit(frac.denominator) * F.col("_i") >= F.lit(frac.numerator) * min_sz)
-        .select(
-            "id_a",
-            "id_b",
-            F.round(F.col("_i") / min_sz, 4).alias("containment"),
-        )
-    )
+    if size_ok is not None:
+        cond = cond & size_ok
+    return _with_overlap(a.join(b, cond), "sh_a", "sh_b")
 
 
 def exact_ngram_collisions(
@@ -1424,33 +1431,25 @@ def jaccard_pairs_prefix(
     stopword grams.
 
     Scale shape: one corpus scan into the persisted (id, set, size)
-    table; a partial-aggregable dfreq shuffle; a per-doc rank window
-    (same id-keyed exchange the set build already paid); the candidate
-    join ships only (hash, id, size) rows from the ~(1−t)·|set| prefixes.
-    ``max_posting_docs`` caps any degenerate posting group (same contract
-    as minhash's ``max_bucket``: drop + document, never O(n²) one task);
-    a size-ratio prefilter (min ≥ t·max, implied by J ≥ t) cuts
-    candidates before the exact verify, which re-joins the two set
-    columns by id and intersects once per surviving pair.
+    table, then the SSJoin core shared with ``fuzzy_join_jaccard`` and
+    ``fuzzy_join_editdist`` (``_prefix_candidates``): a partial-
+    aggregable dfreq shuffle broadcast back onto the id-partitioned
+    postings, a per-doc rank window on that same partitioning, and a
+    candidate join that ships only (hash, id, size) rows from the
+    ~(1−t)·|set| prefixes. ``max_posting_docs`` caps any degenerate posting group
+    (same contract as minhash's ``max_bucket``: drop + document, never
+    O(n²) one task); a size-ratio prefilter (min ≥ t·max, implied by
+    J ≥ t) cuts candidates before the exact verify, which re-joins the
+    two set columns by id and intersects once per surviving pair.
 
     Determinism: sizes and intersections are exact ints; ``jaccard`` is
     ONE division of exact ints — correctly-rounded IEEE, shipped RAW
     (never ROUND a quotient across engines). Returns
     (``id_a``, ``id_b``, ``jaccard``).
     """
-    from fractions import Fraction
-
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
-
-    sets_df = (
-        shingle_hash_sets_df(df, text_col, id_col, n)
-        .withColumn("_sz", F.size("_sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Eager fill (r12, bench adjudication): the set table feeds FOUR plan
-    # branches (postings→dfreq, postings→prefix, verify side a, verify
-    # side b) inside one action — racing tasks block on the cache's
+    sets_df = _set_table(df, text_col, id_col, n)
+    # Eager fill (r12, bench adjudication): the set table feeds three plan
+    # branches (postings, verify side a, verify side b) inside one action — racing tasks block on the cache's
     # compute-or-wait lock while the first fills it, and a loaded host
     # amplifies that stall (the r11 driver sweep: 8.2s flat vs 2.2s
     # committed at calibration drift only 1.29). Filling the cache in a
@@ -1460,57 +1459,104 @@ def jaccard_pairs_prefix(
     # composing callers; execute-now call sites opt in).
     if eager_cache:
         sets_df.count()
-    postings = sets_df.select("_id", "_sz", F.explode("_sh").alias("_h"))
-    # dfreq stays the groupBy+join-back form, NOT a count window over _h
-    # (r14 A/B): locally the two are noise-equal (the tiny dfreq table
-    # broadcasts, so the join costs no postings exchange at all), and at
-    # scale the aggregate is the SKEW-SAFE form — partial map-side agg
-    # collapses stopword-gram hot keys and AQE can split a skewed join
-    # partition, while WindowExec must hold a hot gram's entire posting
-    # list in one task before the cap can prune it.
-    dfreq = postings.groupBy("_h").agg(F.count("*").cast("long").alias("_df"))
-    w = Window.partitionBy("_id").orderBy("_df", "_h")
-    # exact rational threshold so ⌈t·m⌉ is true integer arithmetic
-    # (ceil on the float would misplace exact-boundary prefix lengths)
+    return _jaccard_prefix_join(sets_df, None, threshold, max_posting_docs).select(
+        F.col("_la").alias("id_a"), F.col("_rb").alias("id_b"), F.col("_j").alias("jaccard")
+    )
+
+
+def _prefix_candidates(
+    postings: DataFrame, prefix_len: Column, max_posting_docs: int | None, self_join: bool
+) -> DataFrame:
+    """Candidate pairs of the SSJoin prefix filter (Chaudhuri et al.,
+    ICDE 2006), shared by the Jaccard joins and the q-gram path of
+    ``fuzzy_join_editdist``.
+
+    ``postings`` holds one row per distinct token ``_h`` of a row ``_id``
+    of side ``_side`` (0 = left, 1 = right; every row of a self-join is
+    side 0) with the row's size ``_sz``. Every row indexes its first
+    ``prefix_len`` tokens (a Column over ``_sz``) under ONE common total
+    order: document frequency over the postings of BOTH sides, rarest
+    first, then the token. The prefix theorem needs that common order —
+    a per-side order would let a qualifying pair's prefixes miss each
+    other — and rarity puts the prefixes in the corpus's small posting
+    groups. Prefix tokens holding more than ``max_posting_docs`` rows of
+    one side are dropped (None = lossless), the degenerate-key cap of
+    minhash's ``max_bucket``. Left and right prefix postings then
+    equi-join on the token (a self-join keeps ``_la < _rb``).
+
+    Returns (``_la``, ``_sza``, ``_rb``, ``_szb``) — one row per shared
+    prefix token, so the caller filters on the sizes and dedups."""
+    from pyspark.sql import Window
+
+    def counted(rows: DataFrame, keys: list[str], name: str) -> DataFrame:
+        # Form by A/B (docs/SCALE.md "Prefix-filtered set-similarity
+        # joins"): one table's postings keep the set table's id
+        # partitioning through a groupBy with a broadcast join-back, so
+        # the rank window and the pair dedup need no exchange; a count
+        # window would shuffle them away. A union of two tables has lost
+        # that partitioning, and there the count window wins.
+        if self_join:
+            return rows.join(rows.groupBy(*keys).agg(F.count("*").alias(name)), keys)
+        return rows.withColumn(name, F.count("*").over(Window.partitionBy(*keys)))
+
+    w = Window.partitionBy("_side", "_id").orderBy("_df", "_h")
+    prefix = (
+        counted(postings, ["_h"], "_df")
+        .withColumn("_rk", F.row_number().over(w))
+        .where(F.col("_rk") <= prefix_len)
+        .select("_side", "_id", "_sz", "_h")
+    )
+    if max_posting_docs is not None:
+        # postings count per side; a self-join has one side, and its
+        # constant side key would hide the broadcast from the planner
+        keys = ["_h"] if self_join else ["_side", "_h"]
+        prefix = counted(prefix, keys, "_pc").where(F.col("_pc") <= max_posting_docs)
+    a = prefix.where(F.col("_side") == 0).select(
+        "_h", F.col("_id").alias("_la"), F.col("_sz").alias("_sza")
+    )
+    b = prefix.where(F.col("_side") == (0 if self_join else 1)).select(
+        F.col("_h").alias("_hb"), F.col("_id").alias("_rb"), F.col("_sz").alias("_szb")
+    )
+    on = a["_h"] == b["_hb"]
+    if self_join:
+        on = on & (a["_la"] < b["_rb"])
+    return a.join(b, on).select("_la", "_sza", "_rb", "_szb")
+
+
+def _jaccard_prefix_join(
+    left: DataFrame, right: DataFrame | None, threshold: float, max_posting_docs: int
+) -> DataFrame:
+    """All (``_la``, ``_rb``) pairs of the set tables ``left`` and
+    ``right`` (``_set_table``; None = the self-join of ``left``) with
+    exact Jaccard ``_j`` ≥ ``threshold``. A set of size m indexes its
+    ``m − ⌈t·m⌉ + 1`` prefix: J ≥ t forces overlap I ≥ t·max(|A|,|B|) ≥
+    ⌈t·|A|⌉, and a prefix of that length cannot avoid all I common
+    elements. The size-ratio bound (J ≥ t ⇒ min ≥ t·max) cuts candidates
+    before the exact verify re-joins the full sets by id. ``threshold``
+    is taken as an exact rational, so ⌈t·m⌉ and both cuts are integer
+    arithmetic (a float ceil would misplace exact-boundary pairs)."""
+    from fractions import Fraction
+
     frac = Fraction(str(threshold)).limit_denominator(10**9)
     tn, td = frac.numerator, frac.denominator
+
+    def postings(sets: DataFrame, side: int) -> DataFrame:
+        return sets.select(F.lit(side).alias("_side"), "_id", "_sz", F.explode("_sh").alias("_h"))
+
+    self_join = right is None
+    right = left if self_join else right
+    allp = postings(left, 0) if self_join else postings(left, 0).unionByName(postings(right, 1))
     ceil_tm = -F.floor((F.col("_sz") * F.lit(-tn)) / F.lit(td))  # ⌈tn·m/td⌉
-    prefix = (
-        postings.join(dfreq, "_h")
-        .withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= F.col("_sz") - ceil_tm + 1)
-        .select("_h", "_id", "_sz")
-    )
-    hot = prefix.groupBy("_h").agg(F.count("*").cast("long").alias("_pc"))
-    pruned = prefix.join(hot, "_h").where(F.col("_pc") <= max_posting_docs)
-    a = pruned.select("_h", F.col("_id").alias("id_a"), F.col("_sz").alias("sz_a"))
-    b = pruned.select(
-        F.col("_h").alias("_hb"), F.col("_id").alias("id_b"), F.col("_sz").alias("sz_b")
-    )
     cand = (
-        a.join(b, (a["_h"] == b["_hb"]) & (a["id_a"] < b["id_b"]))
-        # size-ratio bound: J ≥ t ⇒ td·min ≥ tn·max (integer cross-mult)
-        .where(
-            F.lit(td) * F.least("sz_a", "sz_b") >= F.lit(tn) * F.greatest("sz_a", "sz_b")
-        )
-        .select("id_a", "id_b")
+        _prefix_candidates(allp, F.col("_sz") - ceil_tm + 1, max_posting_docs, self_join)
+        .where(F.lit(td) * F.least("_sza", "_szb") >= F.lit(tn) * F.greatest("_sza", "_szb"))
+        .select("_la", "_rb")
         .distinct()
     )
-    va = sets_df.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a"), F.col("_sz").alias("va_sz"))
-    vb = sets_df.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b"), F.col("_sz").alias("vb_sz"))
-    verified = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("_i", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("_u", F.col("va_sz") + F.col("vb_sz") - F.col("_i"))
-        # threshold cut as integer cross-multiplication: td·I ≥ tn·U
-        .where(F.lit(td) * F.col("_i") >= F.lit(tn) * F.col("_u"))
-    )
-    return verified.select(
-        "id_a",
-        "id_b",
-        (F.col("_i").cast("double") / F.col("_u").cast("double")).alias("jaccard"),
-    )
+    va = left.select(F.col("_id").alias("_la"), F.col("_sh").alias("_sha"))
+    vb = right.select(F.col("_id").alias("_rb"), F.col("_sh").alias("_shb"))
+    pairs = _with_overlap(cand.join(va, "_la").join(vb, "_rb"), "_sha", "_shb")
+    return pairs.where(F.lit(td) * F.col("_i") >= F.lit(tn) * F.col("_u"))
 
 
 # ---------------------------------------------------------------------------
@@ -1784,7 +1830,7 @@ def fuzzy_join_editdist(
     short_cand = sa.join(sb, "_k").select("_la", "_rb")
 
     # -- gram path: rare-gram prefixes over the ≥ lmin slice --
-    def grams(df: DataFrame, txt: str, idc: str, side: int) -> DataFrame:
+    def grams(df: DataFrame, txt: str, idc: str, nc: str, side: int) -> DataFrame:
         g = F.array_distinct(
             F.transform(
                 F.sequence(F.lit(1), F.length(txt) - (q - 1)),
@@ -1792,42 +1838,24 @@ def fuzzy_join_editdist(
             )
         )
         return df.select(
-            F.lit(side).alias("_side"), F.col(idc).alias("_id"), F.explode(g).alias("_g")
+            F.lit(side).alias("_side"), F.col(idc).alias("_id"), F.col(nc).alias("_sz"),
+            F.explode(g).alias("_h"),
         )
 
-    ga = grams(la.where(F.col("_na") >= lmin), "_ta", "_la", 0)
-    gb = grams(rb.where(F.col("_nb") >= lmin), "_tb", "_rb", 1)
-    allg = ga.unionByName(gb)
-    # dfreq stays groupBy+join-back, not a count window (r14 A/B: noise-
-    # equal locally, and the aggregate+join form is skew-splittable at
-    # scale — see jaccard_pairs_prefix for the full argument)
-    dfreq = allg.groupBy("_g").agg(F.count("*").cast("long").alias("_df"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("_side", "_id").orderBy("_df", "_g")
-    k = q * max_dist + 1
-    prefix = (
-        allg.join(dfreq, "_g")
-        .withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= k)
-        .select("_side", "_id", "_g")
+    allg = grams(la.where(F.col("_na") >= lmin), "_ta", "_la", "_na", 0).unionByName(
+        grams(rb.where(F.col("_nb") >= lmin), "_tb", "_rb", "_nb", 1)
     )
-    if max_posting_docs is not None:
-        hot = prefix.groupBy("_side", "_g").agg(F.count("*").cast("long").alias("_pc"))
-        prefix = prefix.join(hot, ["_side", "_g"]).where(
-            F.col("_pc") <= max_posting_docs
-        )
-    pa = prefix.where(F.col("_side") == 0).select(F.col("_id").alias("_la"), "_g")
-    pb = prefix.where(F.col("_side") == 1).select(
-        F.col("_id").alias("_rb"), F.col("_g").alias("_gb")
+    gram_cand = (
+        _prefix_candidates(allg, F.lit(q * max_dist + 1), max_posting_docs, self_join=False)
+        .where(F.abs(F.col("_sza") - F.col("_szb")) <= max_dist)
+        .select("_la", "_rb")
     )
-    gram_cand = pa.join(pb, pa["_g"] == pb["_gb"]).select("_la", "_rb")
 
+    # short-path pairs have |Δlen| ≤ d by construction
     cand = short_cand.unionByName(gram_cand).distinct()
     verified = (
         cand.join(la, "_la")
         .join(rb, "_rb")
-        .where(F.abs(F.col("_na") - F.col("_nb")) <= max_dist)
         .withColumn("dist", F.levenshtein("_ta", "_tb", max_dist).cast("int"))
         .where(F.col("dist") >= 0)
     )
@@ -1865,74 +1893,10 @@ def fuzzy_join_jaccard(
 
     Exact ints throughout; jaccard is one division of exact ints,
     shipped raw. Returns (l_id, r_id, jaccard)."""
-    from fractions import Fraction
-
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
-
-    ls = (
-        shingle_hash_sets_df(left, l_text, l_id, n)
-        .withColumn("_sz", F.size("_sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    rs = (
-        shingle_hash_sets_df(right, r_text, r_id, n)
-        .withColumn("_sz", F.size("_sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    lp = ls.select(F.lit(0).alias("_side"), "_id", "_sz", F.explode("_sh").alias("_h"))
-    rp = rs.select(F.lit(1).alias("_side"), "_id", "_sz", F.explode("_sh").alias("_h"))
-    allp = lp.unionByName(rp)
-    # COMMON rarity order: document frequency over BOTH sides' postings, one count
-    # window over _h (A/B at sf0.1: groupBy + broadcast join-back 20-30% slower).
-    frac = Fraction(str(threshold)).limit_denominator(10**9)
-    tn, td = frac.numerator, frac.denominator
-    ceil_tm = -F.floor((F.col("_sz") * F.lit(-tn)) / F.lit(td))
-    w = Window.partitionBy("_side", "_id").orderBy("_df", "_h")
-    with_df = allp.withColumn(
-        "_df", F.count("*").over(Window.partitionBy("_h")).cast("long")
-    )
-    prefix = (
-        with_df.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") <= F.col("_sz") - ceil_tm + 1)
-        .select("_side", "_h", "_id", "_sz")
-    )
-    # per-side posting cap: a count window over PREFIX entries, which are
-    # safe where the raw postings were not — rarity ordering puts a
-    # shingle in a document's prefix only when it is among that
-    # document's RAREST, so corpus-hot shingles are pushed out of
-    # prefixes by construction and the (_side,_h) window keys are
-    # rarity-filtered.
-    pruned = prefix.withColumn(
-        "_pc", F.count("*").over(Window.partitionBy("_side", "_h")).cast("long")
-    ).where(F.col("_pc") <= max_posting_docs)
-    a = pruned.where(F.col("_side") == 0).select(
-        "_h", F.col("_id").alias("_la"), F.col("_sz").alias("_sza")
-    )
-    b = pruned.where(F.col("_side") == 1).select(
-        F.col("_h").alias("_hb"), F.col("_id").alias("_rb"), F.col("_sz").alias("_szb")
-    )
-    cand = (
-        a.join(b, a["_h"] == b["_hb"])
-        .where(
-            F.lit(td) * F.least("_sza", "_szb") >= F.lit(tn) * F.greatest("_sza", "_szb")
-        )
-        .select("_la", "_rb")
-        .distinct()
-    )
-    va = ls.select(F.col("_id").alias("_la"), F.col("_sh").alias("_sha"), F.col("_sz").alias("_na"))
-    vb = rs.select(F.col("_id").alias("_rb"), F.col("_sh").alias("_shb"), F.col("_sz").alias("_nb"))
-    verified = (
-        cand.join(va, "_la")
-        .join(vb, "_rb")
-        .withColumn("_i", F.size(F.array_intersect("_sha", "_shb")))
-        .withColumn("_u", F.col("_na") + F.col("_nb") - F.col("_i"))
-        .where(F.lit(td) * F.col("_i") >= F.lit(tn) * F.col("_u"))
-    )
-    return verified.select(
-        F.col("_la").alias(l_id),
-        F.col("_rb").alias(r_id),
-        (F.col("_i").cast("double") / F.col("_u").cast("double")).alias("jaccard"),
+    ls = _set_table(left, l_text, l_id, n)
+    rs = _set_table(right, r_text, r_id, n)
+    return _jaccard_prefix_join(ls, rs, threshold, max_posting_docs).select(
+        F.col("_la").alias(l_id), F.col("_rb").alias(r_id), F.col("_j").alias("jaccard")
     )
 
 

@@ -67,7 +67,6 @@ def distributed_total_rank(
     n_buckets: int = 2048,
     prefix: str = "",
     group_cols: list[str] | None = None,
-    small_input_threshold: int | None = None,
 ) -> DataFrame:
     """Exact global rank + running sum under the total order
     ``(x ASC|DESC, key ASC)`` with NO single-partition sort of the data.
@@ -113,15 +112,6 @@ def distributed_total_rank(
     first non-null ``x`` — a total column beats replicating SQL's
     empty-frame NULL (pinned in tests/test_rank_scale.py).
 
-    ``small_input_threshold`` (r12, optional): size-adaptive dispatch.
-    When set and ``df.count() <= threshold``, the plain window form runs
-    instead — row-identical (pinned both ways incl. NULLs), ~0.7s less
-    constant overhead per call at test scale (the r11 rewires' measured
-    price), and the single-partition sort it implies is exactly what the
-    threshold certifies as safe. Costs one counting pass over ``df``
-    (cheap when ``df`` is already an aggregate, which is every in-repo
-    caller; persist first if ``df`` is an expensive plan). The DEFAULT
-    (None) stays the scale-safe ranked path — never guess at 100 TB.
     Output: input columns + ``{prefix}rank`` (1-based long),
     ``{prefix}cum`` (running sum of x, long), ``{prefix}n_total``,
     ``{prefix}x_total``. With ``group_cols`` every stage partitions by
@@ -144,27 +134,6 @@ def distributed_total_rank(
         raise ValueError(
             f"distributed_total_rank: input columns collide with internal/"
             f"output names {sorted(clash)}; rename them or set prefix="
-        )
-    if small_input_threshold is not None and df.count() <= small_input_threshold:
-        order = [x.desc() if descending else x.asc(), key.asc()]
-        wo = Window.partitionBy(*g).orderBy(*order) if g else Window.orderBy(*order)
-        wr = wo.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        wp = (
-            Window.partitionBy(*g)
-            if g
-            else Window.partitionBy()
-        ).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        return (
-            df.withColumn(f"{prefix}rank", F.row_number().over(wo).cast("long"))
-            .withColumn(
-                f"{prefix}cum",
-                F.coalesce(F.sum(x.cast("long")).over(wr), F.lit(0)).cast("long"),
-            )
-            .withColumn(f"{prefix}n_total", F.count("*").over(wp).cast("long"))
-            .withColumn(
-                f"{prefix}x_total",
-                F.coalesce(F.sum(x.cast("long")).over(wp), F.lit(0)).cast("long"),
-            )
         )
     o = (-x).cast("long") if descending else x.cast("long")
     # NULLS FIRST (asc) / NULLS LAST (desc) — after the DESC negation

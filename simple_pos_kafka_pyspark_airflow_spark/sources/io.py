@@ -176,7 +176,8 @@ def fs_swap_in(spark: SparkSession, staging: str, live: str) -> None:
     """Atomically promote ``staging`` to ``live``: live → tombstone,
     staging → live, drop tombstone. A crash at any point leaves either
     the old or the new snapshot (plus at worst a tombstone that
-    ``fs_recover_tombstone`` reclaims). ``staging`` must be a sibling on
+    ``fs_recover_tombstone`` reclaims, or a staging sibling that the
+    path's next swap deletes). ``staging`` must be a sibling on
     the SAME filesystem — a cross-filesystem rename is a copy, not a
     swap. Atomicity inherits the filesystem's rename: real on
     POSIX/HDFS/ABFS; on S3A rename is copy+delete, so use a
@@ -198,6 +199,13 @@ def fs_swap_in(spark: SparkSession, staging: str, live: str) -> None:
         raise OSError(f"atomic swap: staging rename failed for {live}")
     if fs.exists(t):
         fs.delete(t, True)
+    # a swap that crashed at its staging rename left a complete staging
+    # snapshot; each path has one writer, so every staging sibling left
+    # now is such debris
+    stale = p.getName() + ".__staging__"
+    for st in fs.listStatus(parent):
+        if st.getPath().getName().startswith(stale):
+            fs.delete(st.getPath(), True)
 
 
 def staging_sibling(path: str) -> str:
@@ -241,8 +249,8 @@ def write_staged(
     """Write a staging snapshot (partitioned by ``partition_by`` when
     given), deleting the half-written directory if the write itself
     fails — otherwise every failed attempt leaks a uuid-named
-    ``.__staging__*`` sibling next to the live table that no recovery path
-    would ever reclaim (a flaky nightly job accretes them without bound)."""
+    ``.__staging__*`` sibling next to the live table until the next swap
+    (a flaky nightly job that never swaps accretes them without bound)."""
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)

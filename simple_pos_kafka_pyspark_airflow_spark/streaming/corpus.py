@@ -315,10 +315,8 @@ class IncrementalMinhashIndex(_IndexLog):
             )
             .dropDuplicates(["doc_id", "old_id"])
         )
-        inter = F.size(F.array_intersect("sh_new", "sh_old"))
-        union = F.size("sh_new") + F.size("sh_old") - inter
-        return cand.select(
-            "doc_id", "old_id", (inter / F.greatest(union, F.lit(1))).alias("jaccard")
+        return dedup_ops._with_overlap(cand, "sh_new", "sh_old").select(
+            "doc_id", "old_id", F.col("_j").alias("jaccard")
         )
 
     def probe(self, docs: DataFrame) -> DataFrame:

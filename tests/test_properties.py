@@ -1089,6 +1089,64 @@ def test_fuzzy_join_editdist_property(spark, ls, rs):
     assert got == want
 
 
+# tiny-vocabulary documents: shingle sets overlap heavily across docs
+docs_strategy = st.lists(
+    st.lists(st.sampled_from(["a", "b", "c", "d", "e"]), min_size=1, max_size=10).map(" ".join),
+    min_size=1,
+    max_size=7,
+)
+
+
+@given(docs_strategy, docs_strategy, st.sampled_from([0.5, 0.55, 0.8]), st.sampled_from([1, 2, 3]))
+@SETTINGS
+def test_prefix_jaccard_joins_property(spark, ls, rs, threshold, n):
+    """The prefix-filtered Jaccard joins equal the brute-force string-set
+    Jaccard (exact cut, exact doubles), and the self-join equals the
+    two-table join of a frame with itself restricted to l_id < r_id."""
+    from fractions import Fraction
+
+    def sh(text):
+        toks = text.split()
+        if len(toks) < n:
+            return {" ".join(toks)}
+        return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+    def brute(a_docs, b_docs, keep):
+        out = set()
+        for i, a in a_docs:
+            for j, b in b_docs:
+                inter, union = len(sh(a) & sh(b)), len(sh(a) | sh(b))
+                if keep(i, j) and Fraction(inter, union) >= Fraction(str(threshold)):
+                    out.add((i, j, inter / union))
+        return out
+
+    l_docs = list(enumerate(ls))
+    r_docs = [(100 + j, t) for j, t in enumerate(rs)]
+    left = spark.createDataFrame(l_docs, "lid long, s string")
+    right = spark.createDataFrame(r_docs, "rid long, t string")
+
+    self_pairs = {
+        tuple(r)
+        for r in dedup.jaccard_pairs_prefix(left, "s", "lid", n=n, threshold=threshold).collect()
+    }
+    assert self_pairs == brute(l_docs, l_docs, lambda i, j: i < j)
+    two = {
+        tuple(r)
+        for r in dedup.fuzzy_join_jaccard(
+            left, right, "s", "t", l_id="lid", r_id="rid", n=n, threshold=threshold
+        ).collect()
+    }
+    assert two == brute(l_docs, r_docs, lambda i, j: True)
+    mirror = {
+        tuple(r)
+        for r in dedup.fuzzy_join_jaccard(
+            left, left, "s", "s", l_id="lid", r_id="lid", n=n, threshold=threshold
+        ).collect()
+    }
+    assert self_pairs == {p for p in mirror if p[0] < p[1]}
+    spark.catalog.clearCache()
+
+
 @given(
     st.lists(
         st.tuples(st.sampled_from(["g1", "g2"]), st.integers(-50, 50)),

@@ -156,31 +156,3 @@ def test_null_x_ranked_like_window(spark, desc):
     assert len(one) == 1
     assert one[0]["n_total"] == len(rows)
     assert one[0]["x_total"] == sum(x for _, x in rows if x is not None)
-
-
-@pytest.mark.parametrize("desc", [False, True], ids=["asc", "desc"])
-@pytest.mark.parametrize("grouped", [False, True], ids=["global", "grouped"])
-def test_small_input_dispatch_row_identical(spark, desc, grouped):
-    """size-adaptive dispatch (r12): under small_input_threshold the
-    window form runs — output must be ROW-IDENTICAL to the ranked path,
-    including NULL x and grouped mode, and the small plan must actually
-    be the window form (no lattice join-back)."""
-    rows = [
-        (i, None if i % 7 == 0 else (i * 7919) % 23 - 11, i % 3)
-        for i in range(120)
-    ]
-    df = spark.createDataFrame(rows, "key int, x long, grp int")
-    g = ["grp"] if grouped else None
-    big = distributed_total_rank(
-        df, F.col("x"), F.col("key"), descending=desc, n_buckets=7, group_cols=g
-    )
-    small = distributed_total_rank(
-        df, F.col("x"), F.col("key"), descending=desc, n_buckets=7, group_cols=g,
-        small_input_threshold=1000,
-    )
-    cols = ["key", "rank", "cum", "n_total", "x_total"]
-    as_map = lambda d: {r["key"]: tuple(r[c] for c in cols[1:]) for r in d.collect()}
-    assert as_map(big) == as_map(small)
-    # the dispatched plan is the window form: no value-lattice join-back
-    small_plan = small._jdf.queryExecution().executedPlan().toString()
-    assert "row_number" in small_plan

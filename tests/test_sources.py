@@ -121,6 +121,8 @@ def test_overwrite_atomic_crash_between_stage_and_swap_is_recoverable(
     sources.overwrite_atomic(v2, path)
     assert [r["id"] for r in sources.read_parquet(spark, path).collect()] == [2]
     assert not os.path.isdir(tombstone)
+    # the crashed swap's complete staging snapshot is reclaimed too
+    assert not [n for n in os.listdir(tmp_path) if ".__staging__" in n]
 
 
 def test_read_committed_reads_a_crashed_release_in_place(spark, tmp_path):
