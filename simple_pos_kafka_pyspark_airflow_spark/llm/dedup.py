@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .textops import tokens
+from .textops import _cut_repeated, _ordered_text, tokens
 
 def exact_dup_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact-duplicate groups: canonical (min) id + multiplicity per
@@ -992,6 +992,12 @@ def span_segment_rows(
     )
 
 
+def span_joiner(delimiter: str | None) -> str:
+    """The separator survivors of ``span_segment_rows`` rejoin with: the
+    literal ``delimiter``, or one space between token windows."""
+    return delimiter if delimiter is not None else " "
+
+
 def boilerplate_span_dedup(
     df: DataFrame,
     text_col: str,
@@ -1023,12 +1029,15 @@ def boilerplate_span_dedup(
     3. reassembly groups segments by doc id: one shuffle of surviving span
        text, upper-bounded by corpus size.
 
+    Steps 2-3 are the excision core (``textops._cut_repeated``) that
+    ``streaming.corpus.IncrementalSpanIndex`` also runs, fed there with
+    the batch's counts plus the landed history.
+
     The reference has no in-document transformation beyond column maps;
     north-star extension per BASELINE.json.
     """
     from pyspark import StorageLevel
 
-    joiner = delimiter if delimiter is not None else " "
     # both the boilerplate-count branch and the flag/reassembly branch
     # read the segmented corpus; persist it so tokenize+segment+sha2 runs
     # once, not once per consumer (same discipline as the minhash/ngram
@@ -1042,30 +1051,9 @@ def boilerplate_span_dedup(
         .where(F.col("_nd") >= min_docs)
         .select("_dig")
     )
-    flagged = seg.join(F.broadcast(boiler.withColumn("_b", F.lit(True))), "_dig", "left")
-    is_boiler = F.coalesce(F.col("_b"), F.lit(False))
-    cleaned = flagged.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(~is_boiler, F.struct(F.col("_i"), F.col("_seg")))
-                    )
-                ),
-                lambda s: s["_seg"],
-            ),
-            joiner,
-        ).alias("text_clean"),
-        F.sum(is_boiler.cast("int")).cast("int").alias("n_dropped"),
-    )
-    return (
-        df.select(id_col)
-        .join(cleaned, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-            F.coalesce("n_dropped", F.lit(0)).alias("n_dropped"),
-        )
+    return _cut_repeated(
+        df.select(id_col), seg, F.broadcast(boiler), id_col, ["_dig"],
+        "_i", "_seg", span_joiner(delimiter), "text_clean", "int",
     )
 
 
@@ -1101,7 +1089,6 @@ def intra_doc_span_dedup(
     The reference has no in-document transformation; north-star extension
     per BASELINE.json (same family as boilerplate_span_dedup).
     """
-    joiner = delimiter if delimiter is not None else " "
     seg = span_segment_rows(df, text_col, id_col, span_tokens, delimiter)
     per_span = seg.groupBy(id_col, "_dig").agg(
         F.min("_i").alias("_keep_i"),
@@ -1111,13 +1098,7 @@ def intra_doc_span_dedup(
         F.count("*").alias("_n_occ"),
     )
     cleaned = per_span.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_keep_i", "_seg"))),
-                lambda s: s["_seg"],
-            ),
-            joiner,
-        ).alias("text_clean"),
+        _ordered_text("_keep_i", "_seg", span_joiner(delimiter)).alias("text_clean"),
         F.sum("_n_occ").cast("int").alias("n_spans"),
         (F.sum("_n_occ") - F.count("*")).cast("int").alias("n_dup_spans"),
     )
@@ -1712,9 +1693,8 @@ def exact_substring_dedup(
 
     Plan: the span table explodes to covered positions (output-bounded:
     Σ span_len per doc ≤ doc length), anti-joins the token positions,
-    and survivors reassemble per document — the
-    ``boilerplate_span_dedup`` reassembly discipline (order preserved
-    via array_sort on (pos, tok) structs)."""
+    and survivors reassemble per document in token order
+    (``textops._ordered_text``, the one ordered rebuild)."""
     spans = exact_substring_spans(df, text_col, id_col, min_len, min_count)
     return excise_spans(df, spans, text_col, id_col)
 
@@ -1739,15 +1719,7 @@ def excise_spans(
     )
     kept = toks.join(covered, [id_col, "pos"], "left_anti")
     removed = covered.groupBy(id_col).agg(F.count("*").cast("int").alias("n_removed"))
-    clean = kept.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "_tok"))),
-                lambda s: s["_tok"],
-            ),
-            " ",
-        ).alias("text_clean")
-    )
+    clean = kept.groupBy(id_col).agg(_ordered_text("pos", "_tok", " ").alias("text_clean"))
     return (
         df.select(id_col)
         .join(clean, id_col, "left")

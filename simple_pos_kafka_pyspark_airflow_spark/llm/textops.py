@@ -1154,7 +1154,7 @@ def retrieval_metrics_at_k(
 
 
 # ---------------------------------------------------------------------------
-# HTML / markup text extraction (r12) — the web-crawl front door
+# HTML / markup text extraction — the web-crawl front door
 # ---------------------------------------------------------------------------
 
 #: HTML entities the extractor decodes, applied IN ORDER after tag
@@ -1212,73 +1212,16 @@ def strip_markup(html: Column) -> Column:
     stripped, entities decoded, whitespace collapsed. No boilerplate
     judgment: this is the conservative extraction (RefinedWeb's
     "trafilatura-then-filter" step 1) for callers that run their own
-    line rules; ``extract_html_text`` adds the C4/jusText-shape rule.
+    line rules; ``extract_html_text_rows`` adds the C4/jusText-shape rule.
     Pure codegen regex — no UDF, embarrassingly parallel, and the exact
     chain replays in DuckDB RE2 (q_text_extract_html)."""
     h = _remove_nonvisible(html)
     return _visible(h)
 
 
-def extract_html_text(
-    html: Column,
-    min_words: int = 3,
-    max_link_density: float = 0.5,
-) -> Column:
-    """Boilerplate-filtered visible text of an HTML document — the
-    missing first rung of the web-crawl pipeline (every dedup/quality
-    gate downstream assumes extraction already happened; C4 and
-    RefinedWeb both start here). Returns a struct
-    ``(text, n_lines, n_kept)``:
-
-      1. remove non-rendering content (``<script>``/``<style>`` with
-         bodies, comments — ``(?is)`` dotall+case-insensitive, lazy
-         quantifier so adjacent blocks don't merge);
-      2. segment into LINES at block-element boundaries (``<p>``,
-         ``<div>``, ``<br>``, headings, list items, table cells … —
-         structure-following segmentation, not source newlines);
-      3. per line, the two classic boilerplate signals: word count of
-         the visible text (C4 drops short fragments) and LINK DENSITY —
-         visible characters inside ``<a>`` anchors over all visible
-         characters (jusText's core rule; nav bars and footers are
-         link-dense, body prose is not). Keep when words ≥ ``min_words``
-         AND link_chars ≤ ``max_link_density``·total_chars — the
-         threshold compares as an exact integer cross-multiplication
-         (``Fraction`` of the float, same discipline as the dedup
-         thresholds) so engines can't disagree on the boundary;
-      4. join kept lines with ``\\n``, entities decoded, whitespace
-         collapsed per line.
-
-    ``n_lines`` counts NONEMPTY visible lines (segmentation artifacts
-    don't inflate the denominator); ``n_kept`` the survivors. Whole
-    chain is regexp + higher-order array functions (``transform`` /
-    ``filter`` / ``array_join``) — whole-stage codegen, zero UDF, zero
-    shuffle; an ``<a>`` spanning a block boundary counts per-fragment
-    (documented approximation — real extractors parse, this scores).
-    The same algebra replays in DuckDB (list_transform/list_filter) for
-    the q_text_extract_html oracle."""
-    frac = Fraction(str(max_link_density)).limit_denominator(10**9)
-    tn, td = frac.numerator, frac.denominator
-    lines = _html_lines(html)
-
-    def line_struct(x: Column) -> Column:
-        vis, keep = _html_line_scored(x, min_words, tn, td)
-        return F.struct(vis.alias("t"), keep.alias("k"))
-
-    scored = F.transform(lines, line_struct)
-    nonempty = F.filter(scored, lambda s: s["t"] != "")
-    kept = F.filter(nonempty, lambda s: s["k"])
-    return F.struct(
-        F.array_join(F.transform(kept, lambda s: s["t"]), "\n").alias("text"),
-        F.size(nonempty).cast("long").alias("n_lines"),
-        F.size(kept).cast("long").alias("n_kept"),
-    )
-
-
 def _html_lines(html: Column) -> Column:
     """Stages 1-2 of the extraction: strip non-rendering content, then
-    segment into lines at block-element boundaries. ONE definition under
-    both the Column form (``extract_html_text``) and the row form
-    (``extract_html_text_rows``) so the algebra cannot drift."""
+    segment into lines at block-element boundaries."""
     h = _remove_nonvisible(html)
     h = F.regexp_replace(h, r"(?i)</?(?:" + _BLOCK_TAGS + r")\b[^>]*>", "\n")
     return F.split(h, "\n")
@@ -1288,8 +1231,7 @@ def _html_line_scored(
     x: Column, min_words: int, tn: int, td: int
 ) -> tuple[Column, Column]:
     """Stage 3, per line: (visible text, keep?) — word count ≥ min_words
-    AND link density ≤ tn/td by exact integer cross-multiplication.
-    Shared by both extraction forms (see ``_html_lines``)."""
+    AND link density ≤ tn/td by exact integer cross-multiplication."""
     vis = _visible(x)
     anchor_vis = _visible(
         F.array_join(
@@ -1311,25 +1253,44 @@ def extract_html_text_rows(
     min_words: int = 3,
     max_link_density: float = 0.5,
 ) -> DataFrame:
-    """DataFrame form of ``extract_html_text`` — identical output
-    algebra (shared helpers, pinned bit-equal in tests), different
-    physical shape: lines are EXPLODED to rows, scored by plain
-    whole-stage-codegen expressions, and re-assembled with one doc-keyed
-    partial-aggregable groupBy.
+    """Boilerplate-filtered visible text of HTML documents — the first
+    rung of the web-crawl pipeline (every dedup/quality gate downstream
+    assumes extraction already happened; C4 and RefinedWeb both start
+    here):
 
-    Why it exists (r15, guide §4.1/verify-skill gotcha): higher-order
-    array functions (``transform``/``filter``) are CodegenFallback —
-    every per-line regex runs through interpreted expression dispatch,
-    element by element. The row form keeps the exact same regexes but
-    evaluates them inside generated code: interleaved A/B at sf0.1
-    measured 2.0 s → 0.70 s (2.9×) for the extraction projection, output
-    bit-identical across all 5000 docs. The price is one exchange of the
-    extracted line rows keyed by document — size-bounded (a page's
-    visible text), skew-free (group = one page), partial-aggregable —
-    where the Column form has none; use the Column form where a plan
-    must stay a pure projection (the streaming ingest front door keeps
-    it: its batch frame would otherwise be consumed twice or ship its
-    full row width through the line exchange).
+      1. remove non-rendering content (``<script>``/``<style>``/``<title>``
+         with bodies, comments — ``(?is)`` dotall+case-insensitive, lazy
+         quantifier so adjacent blocks don't merge);
+      2. segment into LINES at block-element boundaries (``<p>``,
+         ``<div>``, ``<br>``, headings, list items, table cells … —
+         structure-following segmentation, not source newlines);
+      3. per line, the two classic boilerplate signals: word count of
+         the visible text (C4 drops short fragments) and LINK DENSITY —
+         visible characters inside ``<a>`` anchors over all visible
+         characters (jusText's core rule; nav bars and footers are
+         link-dense, body prose is not). Keep when words ≥ ``min_words``
+         AND link_chars ≤ ``max_link_density``·total_chars — the
+         threshold compares as an exact integer cross-multiplication
+         (``Fraction`` of the float, same discipline as the dedup
+         thresholds) so engines can't disagree on the boundary;
+      4. join kept lines with ``\\n`` in page order (``_ordered_text``),
+         entities decoded, whitespace collapsed per line.
+
+    ``n_lines`` counts NONEMPTY visible lines (segmentation artifacts
+    don't inflate the denominator); ``n_kept`` the survivors. An ``<a>``
+    spanning a block boundary counts per fragment (documented
+    approximation — real extractors parse, this scores). The same
+    algebra replays in DuckDB for the q_text_extract_html oracle.
+
+    Physical shape: lines are EXPLODED to rows, scored by plain
+    whole-stage-codegen regex expressions, and re-assembled with one
+    doc-keyed partial-aggregable groupBy — size-bounded (a page's
+    visible text), skew-free (group = one page). A per-row projection
+    over the line array would need higher-order functions, which are
+    CodegenFallback (interpreted per element): that form measured 2.9×
+    slower on q_text_extract_html and slower again at the streaming
+    front door (docs/SCALE.md "Markup extraction front door"); it lives
+    on in tests/test_llm_ops.py as the reference this form is pinned to.
 
     ``html`` is a Column over ``df``; ``id_cols`` must uniquely key
     ``df``'s rows (they become the group key; a caller without a natural
@@ -1338,7 +1299,7 @@ def extract_html_text_rows(
     never crosses plan branches; see q_crawl_e2e). Returns
     ``id_cols + (text, n_lines, n_kept)``, one row per input row: a NULL
     ``html`` explodes (``posexplode_outer``) to one NULL line that adds no
-    text, and the row comes back as the Column form's (NULL, NULL, NULL)."""
+    text, and the row comes back as (NULL, NULL, NULL)."""
     if not id_cols:
         raise ValueError("id_cols must uniquely key the rows")
     frac = Fraction(str(max_link_density)).limit_denominator(10**9)
@@ -1353,20 +1314,9 @@ def extract_html_text_rows(
     nonempty = F.col("__t") != ""
     has_html = F.count("__pos") > 0
     return scored.groupBy(*keys).agg(
-        F.when(has_html, F.array_join(
-            F.transform(
-                F.filter(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(nonempty, F.struct("__pos", "__t", "__k"))
-                        )
-                    ),
-                    lambda s: s["__k"],
-                ),
-                lambda s: s["__t"],
-            ),
-            "\n",
-        )).alias("text"),
+        F.when(
+            has_html, _ordered_text("__pos", "__t", "\n", nonempty & F.col("__k"))
+        ).alias("text"),
         F.sum(nonempty.cast("long")).cast("long").alias("n_lines"),
         F.sum((nonempty & F.col("__k")).cast("long")).cast("long").alias("n_kept"),
     )
@@ -1416,6 +1366,72 @@ def strip_markdown(md: Column) -> Column:
     return F.trim(F.regexp_replace(t, r"\s+", " "))
 
 
+# ---------------------------------------------------------------------------
+# Excision core: every ordered reassembly and every repeated-piece cut
+# ---------------------------------------------------------------------------
+
+
+def _ordered_text(pos: str, piece: str, joiner: str, keep: Column | None = None) -> Column:
+    """Aggregate that rebuilds a document from its piece rows: the
+    group's ``piece`` values (only those where ``keep`` holds, when
+    given) joined by ``joiner`` in ``pos`` order —
+    ``array_join(transform(array_sort(collect_list(struct(pos, piece))),
+    piece), joiner)``. ``pos`` must be unique per group. The collect is
+    partial-aggregable and the sort runs per group over one document's
+    pieces, so a doc-keyed groupBy over it costs one exchange of the
+    surviving piece rows. Every reassembly of the library is this one
+    expression: HTML line extraction, line, span and token excision."""
+    row = F.struct(F.col(pos), F.col(piece))
+    if keep is not None:
+        row = F.when(keep, row)
+    return F.array_join(
+        F.transform(F.array_sort(F.collect_list(row)), lambda s: s[piece]), joiner
+    )
+
+
+def _cut_repeated(
+    docs: DataFrame,
+    pieces: DataFrame,
+    repeated: DataFrame,
+    id_col: str,
+    keys: list[str],
+    pos: str,
+    piece: str,
+    joiner: str,
+    text_out: str,
+    n_type: str,
+) -> DataFrame:
+    """The flag-and-rebuild step of every repeated-piece excision: the
+    ``pieces`` rows ``(id_col, *keys, pos, piece)`` left-join the
+    ``repeated`` key frame, flagged pieces are cut, and the survivors
+    rebuild each document in order (``_ordered_text``). Returns
+    ``docs``' columns plus ``text_out`` and ``n_dropped`` (the cut count,
+    cast to ``n_type``), one row per ``docs`` row: a document with no
+    piece rows comes back as ``('', 0)``.
+
+    The batch operators (``strip_common_lines``,
+    ``llm.dedup.boilerplate_span_dedup``) feed it the keys repeated in
+    their own frame; the incremental indexes
+    (``streaming.corpus.IncrementalLineIndex`` / ``IncrementalSpanIndex``)
+    feed it the keys repeated in the batch plus the landed history, so an
+    index's first batch on a fresh path IS the batch operator. The caller
+    builds ``repeated`` and so picks the join: the span tiers broadcast
+    their digest set, the line tiers leave the planner to choose. The
+    join is a LEFT join, so a piece whose key has a NULL part never
+    matches and survives (no key, no claim)."""
+    flagged = pieces.join(repeated.withColumn("__cut", F.lit(True)), keys, "left")
+    cut = F.coalesce(F.col("__cut"), F.lit(False))
+    cleaned = flagged.groupBy(id_col).agg(
+        _ordered_text(pos, piece, joiner, ~cut).alias("__text"),
+        F.sum(cut.cast("long")).alias("__n_cut"),
+    )
+    return docs.join(cleaned, id_col, "left").select(
+        *docs.columns,
+        F.coalesce(F.col("__text"), F.lit("")).alias(text_out),
+        F.coalesce(F.col("__n_cut"), F.lit(0)).cast(n_type).alias("n_dropped"),
+    )
+
+
 def strip_common_lines(
     docs: DataFrame,
     text_col: str = "text",
@@ -1429,27 +1445,28 @@ def strip_common_lines(
     (domain/dump) is chrome — cookie banners, copyright footers,
     subscribe prompts — not content, however prose-like a single
     instance looks. This is the corpus-statistical complement of
-    ``extract_html_text``'s per-page link-density rule (which cannot see
+    ``extract_html_text_rows``'s per-page link-density rule (which cannot see
     that a clean-looking sentence repeats on every page of the site).
 
     Plan: line posexplode → per-(group, line) distinct-doc count (one
     partial-aggregable shuffle keyed by the line — the hot keys ARE the
-    boilerplate, bounded by Spark's two-phase distinct agg) → count join
-    back (a second shuffle on the same key) → per-doc rebuild via
-    array_sort(collect_list(struct(pos, line))) so kept lines return in
-    ORIGINAL order. Fully-stripped docs keep their row with empty text
-    (silently dropping them would hide the most boilerplate-heavy
-    pages). Group-local counting matters at 100 TB: a global count
-    would strip legitimate cross-domain idioms, and the group key keeps
-    the count shuffle partition-pruned per domain.
+    boilerplate, bounded by Spark's two-phase distinct agg) → the
+    repeated lines flag the line rows (a left join on the same key) →
+    per-doc rebuild in ORIGINAL order (``_cut_repeated``, the excision
+    core shared with the span tiers and both incremental indexes).
+    Fully-stripped docs keep their row with empty text (silently dropping
+    them would hide the most boilerplate-heavy pages); a NULL-text doc
+    comes back as ``('', 0)``, and a doc whose group is NULL passes
+    through untouched (its lines match no repeated key). Group-local
+    counting matters at 100 TB: a global count would strip legitimate
+    cross-domain idioms, and the group key keeps the count shuffle
+    partition-pruned per domain.
 
     Streaming note: this is the BATCH form (counts within the frame it
     is given); the cross-micro-batch twin is the persistent LINE index
-    (``streaming.corpus.IncrementalLineIndex``, r13) — same group-local
-    line counting carried across batches with the span-index replay
-    discipline, so a footer planted one-copy-per-micro-batch is excised
-    at ingest (pinned row-identical to this operator on the one-batch
-    case in tests/test_streaming.py).
+    (``streaming.corpus.IncrementalLineIndex``) — the same core fed with
+    group-local line counts carried across batches, so a footer planted
+    one-copy-per-micro-batch is excised at ingest.
 
     Output: ``(id_col, group_col, text_col cleaned, n_dropped)``."""
     lines = docs.select(
@@ -1457,34 +1474,14 @@ def strip_common_lines(
         F.col(group_col),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("__pos", "__line"),
     )
-    freq = lines.groupBy(group_col, "__line").agg(
-        F.countDistinct(id_col).alias("__nd")
+    keys = [group_col, "__line"]
+    repeated = (
+        lines.groupBy(*keys)
+        .agg(F.countDistinct(id_col).alias("__nd"))
+        .where(F.col("__nd") >= min_docs)
+        .select(*keys)
     )
-    kept = lines.join(freq, [group_col, "__line"]).where(F.col("__nd") < min_docs)
-    reb = kept.groupBy(id_col).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__pos", "__line"))),
-                lambda s: s["__line"],
-            ),
-            "\n",
-        ).alias("__t"),
-        F.count("*").cast("long").alias("__nk"),
-    )
-    # NULL text consistency (r13, ADVICE): split(NULL) drops the doc from
-    # the line frame, so its cleaned text coalesces to '' — the count must
-    # agree: a NULL-text doc comes back as ('', 0), never ('', NULL).
-    n_lines = F.when(
-        F.col(text_col).isNull(), F.lit(0)
-    ).otherwise(F.size(F.split(F.col(text_col), "\n"))).cast("long")
-    return (
-        docs.join(reb, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.col(group_col),
-            F.coalesce(F.col("__t"), F.lit("")).alias(text_col),
-            (n_lines - F.coalesce(F.col("__nk"), F.lit(0))).cast("long").alias(
-                "n_dropped"
-            ),
-        )
+    return _cut_repeated(
+        docs.select(id_col, group_col), lines, repeated, id_col, keys,
+        "__pos", "__line", "\n", text_col, "long",
     )

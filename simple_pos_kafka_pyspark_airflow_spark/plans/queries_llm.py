@@ -4661,7 +4661,7 @@ def q_text_extract_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     notes="extension (r12): the COMPOSED web front door as one "
     "value-verified query — raw HTML (planted, the shared "
-    "_HTML_PIPE_SQL definition) -> extract_html_text -> "
+    "_HTML_PIPE_SQL definition) -> extract_html_text_rows -> "
     "classify_quality linear gate ON THE EXTRACTED TEXT -> exact-text "
     "dedup among the passers — i.e. the q_curation_e2e discipline "
     "applied to the new extraction rung: what lands after extraction "
@@ -4909,7 +4909,7 @@ def _warc_fixture(spark: SparkSession, sf_dir: str) -> str:
     notes="extension (r12): the WARC ingest edge — the FIRST hop of the "
     "web-crawl story (CommonCrawl delivers WARC; downstream of this "
     "source the repo's pipeline is complete: canonical_url dedup -> "
-    "extract_html_text -> gates -> dedup ladder). Fixture: one .warc "
+    "extract_html_text_rows -> gates -> dedup ladder). Fixture: one .warc "
     "file per source (written once per sf_dir, executor-side via "
     "write_warc_files_distributed — never a driver collect), each a "
     "warcinfo record + one HTTP response record per document whose "
@@ -5024,7 +5024,7 @@ def q_text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bytes on disk through the whole front door: the q_scan_warc "
     "fixture files (real WARC records whose HTTP bodies are the shared "
     "planted HTML) are read back via the warc DataSource, 200-status "
-    "text/html responses decode to pages, extract_html_text reduces "
+    "text/html responses decode to pages, extract_html_text_rows reduces "
     "them to prose, and the per-source line/kept/char totals must equal "
     "the SAME numbers the oracle computes purely in SQL from the plant "
     "algebra (filtered to the non-404 docs, doc_id%7<>0). q_scan_warc "

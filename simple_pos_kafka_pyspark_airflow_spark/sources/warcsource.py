@@ -7,7 +7,7 @@ header block (``WARC/1.0`` + named fields + ``Content-Length``) followed
 by a content block that is, for ``WARC-Type: response`` records, a full
 HTTP response (status line, headers, body). Downstream of this source
 the repo's pipeline is already complete: ``llm.dedup.canonical_url``
-(URL dedup) → ``llm.textops.extract_html_text`` (markup extraction) →
+(URL dedup) → ``llm.textops.extract_html_text_rows`` (markup extraction) →
 quality gates → the dedup ladder.
 
 Design (same discipline as ``pydatasource.PosStateFileDataSource``):

@@ -38,6 +38,7 @@ from .. import cacheutil
 from ..cacheutil import release, released_on_error
 from ..llm import dedup as dedup_ops
 from ..llm import textops
+from ..llm.textops import _cut_repeated
 from ..sources.io import append_parquet, overwrite_atomic, read_committed
 
 
@@ -603,7 +604,10 @@ class IncrementalSpanIndex(_IndexLog):
     2. combined count per digest = this batch's distinct-doc count + the
        landed index's count; spans at ``>= min_docs`` are boilerplate;
     3. boilerplate digests broadcast back against the batch's segment
-       rows; surviving spans reassemble each document in order;
+       rows; surviving spans reassemble each document in order — the
+       excision core (``llm.textops._cut_repeated``) the batch operator
+       runs, so the first batch on a fresh path equals
+       ``boilerplate_span_dedup`` of that batch;
     4. the batch's per-digest counts append to the index keyed by
        ``batch_id``.
 
@@ -654,31 +658,11 @@ class IncrementalSpanIndex(_IndexLog):
             )
             combined = self._with_history(batch_counts, batch_id)
             boiler = combined.where(F.col("_n") >= self.min_docs).select("_dig")
-
-            flagged = seg.join(F.broadcast(boiler.withColumn("_b", F.lit(True))), "_dig", "left")
-            is_boiler = F.coalesce(F.col("_b"), F.lit(False))
-            joiner = self.delimiter if self.delimiter is not None else " "
-            cleaned = flagged.groupBy(self.id_col).agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.when(~is_boiler, F.struct(F.col("_i"), F.col("_seg")))
-                            )
-                        ),
-                        lambda s: s["_seg"],
-                    ),
-                    joiner,
-                ).alias("text_clean"),
-                F.sum(is_boiler.cast("int")).cast("int").alias("n_dropped"),
-            )
             out = cacheutil.materialize(
-                docs.select(self.id_col)
-                .join(cleaned, self.id_col, "left")
-                .select(
-                    self.id_col,
-                    F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-                    F.coalesce("n_dropped", F.lit(0)).alias("n_dropped"),
+                _cut_repeated(
+                    docs.select(self.id_col), seg, F.broadcast(boiler), self.id_col,
+                    ["_dig"], "_i", "_seg", dedup_ops.span_joiner(self.delimiter),
+                    "text_clean", "int",
                 )
             )
             with released_on_error(out):
@@ -697,8 +681,8 @@ class IncrementalLineIndex(_IndexLog):
     as soon as its CORPUS-LIFETIME count crosses the threshold. The
     streaming twin of ``llm.textops.strip_common_lines`` (which counts
     within the frame it is given and cannot see a footer planted across
-    micro-batches); r13, VERDICT item 4. An ``_IndexLog`` count log
-    keyed by (group, digest), so replays are exactly-once.
+    micro-batches). An ``_IndexLog`` count log keyed by (group, digest),
+    so replays are exactly-once.
 
     Per batch (``clean_batch(docs, batch_id)``):
 
@@ -712,14 +696,16 @@ class IncrementalLineIndex(_IndexLog):
     3. chrome digests join back against the batch's line rows (no
        forced broadcast — the chrome set is corpus-lifetime and
        unbounded; AQE broadcasts while it is small); surviving lines
-       rebuild each document in ORIGINAL order;
+       rebuild each document in ORIGINAL order — the excision core
+       (``llm.textops._cut_repeated``) the batch operator runs;
     4. the batch's per-(group, digest) counts append keyed by batch id.
 
     Forward-looking semantics (the span index's documented contract): a
     line crossing the threshold at batch N is removed from batch N
     onward; copies already landed stay until a compaction-era batch
-    rewrite re-runs the batch operator over the corpus. NULL-text docs
-    come back as ``('', 0)`` — the batch operator's r13 contract.
+    rewrite re-runs the batch operator over the corpus. As in the batch
+    operator, NULL-text docs come back as ``('', 0)`` and NULL-group docs
+    pass through untouched.
 
     Scale: the index shuffles (group, 8-byte digest) rows with map-side
     partial aggregation; the hot keys ARE the boilerplate, bounded by
@@ -761,40 +747,18 @@ class IncrementalLineIndex(_IndexLog):
                 F.count_distinct(F.col(self.id_col)).alias("_n")
             )
             combined = self._with_history(batch_counts, batch_id)
+            # no broadcast hint: the chrome set is CORPUS-LIFETIME and
+            # unbounded (every ≥min_docs line per group — huge for real web
+            # corpora), so forcing it driver-side would blow the broadcast
+            # limit exactly when the index matters most. AQE picks broadcast
+            # on its own while the set is small — the batch twin
+            # strip_common_lines leaves the same join unhinted.
             chrome = combined.where(F.col("_n") >= self.min_docs).select("_grp", "_dig")
-
-            # no broadcast hint (r14, ADVICE): the chrome set is CORPUS-
-            # LIFETIME and unbounded (every ≥min_docs line per group — huge
-            # for real web corpora), so forcing it driver-side would blow the
-            # broadcast limit exactly when the index matters most.  AQE picks
-            # broadcast on its own while the set is small — the batch twin
-            # strip_common_lines uses the same plain join.
-            flagged = lines.join(
-                chrome.withColumn("_b", F.lit(True)), ["_grp", "_dig"], "left"
-            )
-            is_chrome = F.coalesce(F.col("_b"), F.lit(False))
-            cleaned = flagged.groupBy(self.id_col).agg(
-                F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.when(~is_chrome, F.struct(F.col("_pos"), F.col("_line")))
-                            )
-                        ),
-                        lambda s: s["_line"],
-                    ),
-                    "\n",
-                ).alias("text_clean"),
-                F.sum(is_chrome.cast("long")).cast("long").alias("n_dropped"),
-            )
             out = cacheutil.materialize(
-                docs.select(self.id_col, self.group_col)
-                .join(cleaned, self.id_col, "left")
-                .select(
-                    self.id_col,
-                    self.group_col,
-                    F.coalesce("text_clean", F.lit("")).alias("text_clean"),
-                    F.coalesce("n_dropped", F.lit(0)).cast("long").alias("n_dropped"),
+                _cut_repeated(
+                    docs.select(self.id_col, self.group_col), lines, chrome,
+                    self.id_col, ["_grp", "_dig"], "_pos", "_line", "\n",
+                    "text_clean", "long",
                 )
             )
             with released_on_error(out):
@@ -1266,11 +1230,11 @@ def ingest_corpus_batch(
        land in step 5, only for full-ladder survivors, so a document
        rejected downstream never blocks its URL's future recrawls;
        NULL/missing URLs pass through ungated (no key, no claim);
-    0. optional HTML extraction (``html_input=True``, r12): ``text_col``
-       is raw markup — ``llm.textops.extract_html_text`` replaces it
+    0. optional HTML extraction (``html_input=True``): ``text_col``
+       is raw markup — ``llm.textops.extract_html_text_rows`` replaces it
        with boilerplate-filtered visible text ahead of EVERY gate, so
        quality scores and dedup signatures never see script bodies or
-       nav chrome;
+       nav chrome (``id_col`` must key the batch's rows);
     1. quality gate + within-batch exact dedup (``corpus_ingest`` batch
        path — attaches ``quality``/``n_tokens``/``text_sha``);
     1a. optional drift monitoring (``CorpusDriftMonitor.check_batch``
@@ -1350,20 +1314,21 @@ def ingest_corpus_batch(
             # survivors are content-equivalent to something landed).
             docs = held = url_index.filter_batch(docs)
         if html_input:
-            # The web-crawl front door (r12): ``text_col`` carries raw
+            # The web-crawl front door: ``text_col`` carries raw
             # HTML/markup — extract the boilerplate-filtered visible text
             # BEFORE any gate sees it (quality scoring a <script> body or
-            # deduping on nav chrome certifies garbage). Scan-fused regex
-            # projection (llm.textops.extract_html_text), zero extra
-            # shuffle; everything downstream — gates, digests, minhash,
-            # span indexes — operates on the extracted text, exactly as if
-            # the corpus had arrived pre-extracted (pinned equal in
-            # tests/test_streaming.py).
-            from ..llm.textops import extract_html_text
-
-            docs = docs.withColumn(
-                text_col, extract_html_text(F.col(text_col))["text"]
-            )
+            # deduping on nav chrome certifies garbage). The row form
+            # (lines exploded, scored in codegen, rebuilt by one doc-keyed
+            # exchange) joins back on ``id_col``; it measured faster than
+            # the interpreted higher-order-function projection at sf0.1
+            # (docs/SCALE.md "Markup extraction front door"). Everything
+            # downstream — gates, digests, minhash, span indexes —
+            # operates on the extracted text, exactly as if the corpus had
+            # arrived pre-extracted (pinned equal in tests/test_streaming.py).
+            extracted = textops.extract_html_text_rows(
+                docs, F.col(text_col), [id_col]
+            ).select(id_col, F.col("text").alias(text_col))
+            docs = docs.drop(text_col).join(extracted, id_col).select(*docs.columns)
         gated = corpus_ingest(
             docs, text_col=text_col, min_quality=min_quality, min_tokens=min_tokens
         )

@@ -98,6 +98,38 @@ def test_only_cacheutil_checkpoints():
     assert not hits, hits
 
 
+def _called(node: ast.AST, name: str) -> bool:
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, (ast.Attribute, ast.Name))
+        and (node.func.attr if isinstance(node.func, ast.Attribute) else node.func.id) == name
+    )
+
+
+def test_ordered_rebuild_is_written_once():
+    """Rebuilding a document from ordered piece rows
+    (``array_sort(collect_list(...))``) is written in exactly one library
+    function, ``llm.textops._ordered_text``; every line, span, token and
+    HTML-line reassembly calls it. Query plans (``plans/``) may compose
+    their own."""
+    owners = set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE)
+        if rel.parts[0] == "plans":
+            continue
+
+        def visit(node, owner):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                owner = node.name
+            if _called(node, "array_sort") and node.args and _called(node.args[0], "collect_list"):
+                owners.add((str(rel), owner))
+            for child in ast.iter_child_nodes(node):
+                visit(child, owner)
+
+        visit(ast.parse(path.read_text(encoding="utf-8")), None)
+    assert owners == {("llm/textops.py", "_ordered_text")}, owners
+
+
 def _cotenant(spark, monkeypatch, tag: str) -> set[int]:
     """Make the first ``cacheutil.materialize`` call also persist an
     unrelated frame, as a concurrent query sharing the session would

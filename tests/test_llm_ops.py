@@ -3668,13 +3668,42 @@ def test_classify_quality_scores_and_gate(spark):
     assert got[5][0] == QUALITY_WEIGHTS["the"] * 3 + QUALITY_WEIGHTS["table"] + b
 
 
+def _extract_html_text_reference(html, min_words=3, max_link_density=0.5):
+    """The HTML extractor as one per-row Column projection over the line
+    array (higher-order ``transform``/``filter``): the reference the
+    library's row form, ``textops.extract_html_text_rows``, is pinned
+    against. The same line segmentation and scoring (``_html_lines``,
+    ``_html_line_scored``); returns a struct ``(text, n_lines, n_kept)``."""
+    from fractions import Fraction
+
+    from simple_pos_kafka_pyspark_airflow_spark.llm.textops import (
+        _html_line_scored,
+        _html_lines,
+    )
+
+    frac = Fraction(str(max_link_density)).limit_denominator(10**9)
+
+    def line_struct(x):
+        vis, keep = _html_line_scored(x, min_words, frac.numerator, frac.denominator)
+        return F.struct(vis.alias("t"), keep.alias("k"))
+
+    scored = F.transform(_html_lines(html), line_struct)
+    nonempty = F.filter(scored, lambda s: s["t"] != "")
+    kept = F.filter(nonempty, lambda s: s["k"])
+    return F.struct(
+        F.array_join(F.transform(kept, lambda s: s["t"]), "\n").alias("text"),
+        F.size(nonempty).cast("long").alias("n_lines"),
+        F.size(kept).cast("long").alias("n_kept"),
+    )
+
+
 def test_extract_html_text_edge_cases(spark):
     """Planted extraction behaviors beyond the contract row: each case
-    isolates one rule of the C4/jusText-shape extractor. The row form
-    (``extract_html_text_rows``) must agree case by case, including a
-    NULL ``html`` row, which both forms keep."""
+    isolates one rule of the C4/jusText-shape extractor. The library's
+    row form (``extract_html_text_rows``) must agree with the per-row
+    reference case by case, including a NULL ``html`` row, which both
+    keep."""
     from simple_pos_kafka_pyspark_airflow_spark.llm.textops import (
-        extract_html_text,
         extract_html_text_rows,
     )
 
@@ -3709,7 +3738,7 @@ def test_extract_html_text_edge_cases(spark):
     df = spark.createDataFrame(
         [(i, h) for i, (h, *_ ) in enumerate(cases)], "i long, html string"
     )
-    e = extract_html_text(F.col("html"))
+    e = _extract_html_text_reference(F.col("html"))
     got = {
         r["i"]: (r["t"], r["nl"], r["nk"])
         for r in df.select(
@@ -3741,17 +3770,23 @@ def test_extract_html_link_density_boundary(spark):
     """The link-density cut is an exact integer cross-multiplication:
     anchor_chars * td <= chars * tn. At max_link_density=0.5 a line whose
     anchor text is exactly half its visible chars is KEPT (<=); one char
-    more drops it."""
-    from simple_pos_kafka_pyspark_airflow_spark.llm.textops import extract_html_text
+    more drops it. Checked on the row form and on the per-row reference."""
+    from simple_pos_kafka_pyspark_airflow_spark.llm.textops import (
+        extract_html_text_rows,
+    )
 
     # visible "aaaa bb cc" = 10 chars; anchor "aaaa" = 4 -> 8<=10 keep
     keep = '<p><a href="/">aaaa</a> bb cc</p>'
     # visible "aaaaaa bb c" = 11 chars; anchor "aaaaaa" = 6 -> 12>11 drop
     drop = '<p><a href="/">aaaaaa</a> bb c</p>'
     df = spark.createDataFrame([(0, keep), (1, drop)], ["i", "h"])
-    e = extract_html_text(F.col("h"), min_words=3, max_link_density=0.5)
+    e = _extract_html_text_reference(F.col("h"), min_words=3, max_link_density=0.5)
     got = {r["i"]: r["nk"] for r in df.select("i", e["n_kept"].alias("nk")).collect()}
     assert got == {0: 1, 1: 0}, got
+    rows = extract_html_text_rows(
+        df, F.col("h"), ["i"], min_words=3, max_link_density=0.5
+    ).collect()
+    assert {r["i"]: r["n_kept"] for r in rows} == got
 
 
 def test_video_container_roundtrip_and_corrupt(spark):
@@ -3896,6 +3931,38 @@ def test_strip_common_lines_order_and_empty(spark):
     }
     assert got_null[7] == ("", 0)
     assert got_null[1] == got[1]  # everything else unchanged
+
+
+def test_strip_common_lines_passes_null_group_docs_through(spark):
+    """A document whose group is NULL has no group to count against, so
+    nothing in it is common: it comes back untouched with n_dropped 0
+    (no key, no claim — the incremental twin's behaviour), even when a
+    line repeats across several NULL-group documents. Grouped documents
+    are cut as before."""
+    from simple_pos_kafka_pyspark_airflow_spark.llm.textops import strip_common_lines
+
+    footer = "copyright acme inc"
+    rows = [
+        (1, None, f"unique body one\n{footer}"),
+        (2, None, f"unique body two\n{footer}"),
+        (3, None, f"{footer}\nunique body three"),
+        (4, "a", f"a body one\n{footer}"),
+        (5, "a", f"a body two\n{footer}"),
+        (6, "a", f"{footer}\na body three"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    got = {
+        r["doc_id"]: (r["source"], r["text"], r["n_dropped"])
+        for r in strip_common_lines(df, min_docs=3).collect()
+    }
+    assert got == {
+        1: (None, f"unique body one\n{footer}", 0),
+        2: (None, f"unique body two\n{footer}", 0),
+        3: (None, f"{footer}\nunique body three", 0),
+        4: ("a", "a body one", 1),
+        5: ("a", "a body two", 1),
+        6: ("a", "a body three", 1),
+    }, got
 
 
 def test_prefix_and_overlap_plans_are_lazy_by_default(spark):

@@ -1860,3 +1860,109 @@ def test_distributed_rank_matches_python_oracle(spark, rows, desc, n_buckets):
     assert len(got) == len(rows)
     for r in got:
         assert (r["rank"], r["cum"]) == want[r["key"]], (r, desc, n_buckets)
+
+
+# (group, text) corpora for the excision twins: a tiny vocabulary so spans
+# and lines repeat across documents, NULL texts and NULL groups included
+excision_corpus = st.lists(
+    st.tuples(
+        st.sampled_from([None, "a", "b"]),
+        st.one_of(st.none(), st.text(alphabet="xy z\n", min_size=0, max_size=24)),
+    ),
+    min_size=0,
+    max_size=7,
+)
+
+
+def _excision_frame(spark, corpus):
+    return spark.createDataFrame(
+        [(i, g, t) for i, (g, t) in enumerate(corpus)],
+        "doc_id long, source string, text string",
+    )
+
+
+def _keyed(df, text_col, n_col):
+    """``{doc_id: (text, count)}`` plus the two columns' types."""
+    rows = {r["doc_id"]: (r[text_col], r[n_col]) for r in df.collect()}
+    types = dict(df.dtypes)
+    return rows, (types[text_col], types[n_col])
+
+
+@given(excision_corpus, st.sampled_from([None, "\n"]))
+@SETTINGS
+def test_boilerplate_span_dedup_matches_python_oracle(spark, corpus, delimiter):
+    """A span (fixed 2-token window, or a non-empty ``delimiter`` piece)
+    shared by ≥ 2 documents is cut from every one of them; survivors keep
+    their order; a document with no spans comes back as ('', 0)."""
+    df = _excision_frame(spark, corpus)
+    got, _ = _keyed(
+        dedup.boilerplate_span_dedup(df, "text", "doc_id", 2, 2, delimiter),
+        "text_clean", "n_dropped",
+    )
+
+    def spans(t):
+        if t is None:
+            return []
+        if delimiter is not None:
+            return [s for s in t.split(delimiter) if s]
+        toks = t.split()
+        return [" ".join(toks[j : j + 2]) for j in range(0, len(toks), 2)]
+
+    segs = {i: spans(t) for i, (_, t) in enumerate(corpus)}
+    n_docs: dict[str, int] = {}
+    for ss in segs.values():
+        for s in set(ss):
+            n_docs[s] = n_docs.get(s, 0) + 1
+    joiner = delimiter if delimiter is not None else " "
+    want = {}
+    for i, ss in segs.items():
+        kept = [s for s in ss if n_docs[s] < 2]
+        want[i] = (joiner.join(kept), len(ss) - len(kept))
+    assert got == want
+
+
+@given(excision_corpus)
+@SETTINGS
+def test_excision_batch_operators_equal_their_indexes_first_batch(
+    spark, tmp_path_factory, corpus
+):
+    """Each incremental excision index, fed one batch on a fresh path, is
+    its batch operator over that batch: same rows and same column types,
+    for the span tiers (token windows and ``delimiter`` lines), the
+    common-line tiers (NULL-group documents pass through both) and the
+    exact-substring tiers."""
+    from simple_pos_kafka_pyspark_airflow_spark.llm.textops import strip_common_lines
+    from simple_pos_kafka_pyspark_airflow_spark.streaming.corpus import (
+        IncrementalLineIndex,
+        IncrementalSpanIndex,
+        IncrementalSubstringIndex,
+    )
+
+    df = _excision_frame(spark, corpus)
+    root = tmp_path_factory.mktemp("excision_twin")
+    for delimiter in (None, "\n"):
+        idx = IncrementalSpanIndex(
+            spark, str(root / f"span_{delimiter is None}"), span_tokens=2, min_docs=2,
+            delimiter=delimiter,
+        )
+        batch = dedup.boilerplate_span_dedup(df, "text", "doc_id", 2, 2, delimiter)
+        assert _keyed(idx.clean_batch(df, 0), "text_clean", "n_dropped") == _keyed(
+            batch, "text_clean", "n_dropped"
+        )
+
+    line = IncrementalLineIndex(spark, str(root / "line"), min_docs=2)
+    got = line.clean_batch(df, 0)
+    want = strip_common_lines(df, min_docs=2)
+    want_rows = _keyed(want, "text", "n_dropped")
+    assert _keyed(got, "text_clean", "n_dropped") == want_rows
+    assert {r["doc_id"]: r["source"] for r in got.collect()} == {
+        r["doc_id"]: r["source"] for r in want.collect()
+    }
+    for i, (g, t) in enumerate(corpus):
+        if g is None:
+            assert want_rows[0][i] == (t or "", 0)
+
+    sub = IncrementalSubstringIndex(spark, str(root / "substr"), min_len=2)
+    assert _keyed(sub.clean_batch(df, 0), "text_clean", "n_removed") == _keyed(
+        dedup.exact_substring_dedup(df, min_len=2), "text_clean", "n_removed"
+    )
